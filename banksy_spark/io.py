@@ -126,9 +126,9 @@ def upsert_batch(
     """Idempotent keyed upsert (last-write-wins merge): rows in ``df``
     replace same-key rows at ``path``; other rows survive. Because the
     result is a pure function of (current state, batch contents),
-    REPLAYING a batch converges to the identical state — the
-    exactly-once property a ``foreachBatch`` streaming sink needs under
-    Structured Streaming's at-least-once batch redelivery. Use as:
+    REPLAYING a batch converges to the identical state — what a
+    ``foreachBatch`` sink needs under Structured Streaming's
+    at-least-once batch redelivery. Use as:
     ``q.writeStream.foreachBatch(lambda b, _id: upsert_batch(b, path,
     keys))``.
 
@@ -138,14 +138,18 @@ def upsert_batch(
     within a key). Without it, the batch must hold at most one row per
     key or the merged table keeps all of them.
 
-    Durability: existence is probed and the swap performed through the
-    Hadoop FileSystem API of ``path`` (works on HDFS/S3A/local alike —
-    a driver-local ``os.path`` check would silently truncate remote
-    tables). The merge writes to a staging directory first, then
-    delete+rename: the crash window shrinks to the two metadata ops
-    (atomic on HDFS; object stores narrow it further with committers).
-    A table format (Delta/Iceberg MERGE) replaces the whole
-    read-union-rewrite with a transactional merge, same semantics.
+    Durability: ``path`` stays a plain parquet directory, and no crash
+    point leaves a reader that runs ``recover_table`` (as
+    ``read_committed`` does) with a missing or partial table. The only
+    copy of the table is never deleted — Hadoop's local-FS recursive
+    delete removes files one at a time. A commit is four steps, each
+    through the Hadoop FileSystem API of ``path`` (HDFS/S3A/local
+    alike — a driver-local ``os.path`` check would silently truncate
+    remote tables): (1) write the merge to ``path__staging__``, where Spark
+    writes ``_SUCCESS`` last; (2) rename ``path`` to ``path__old__``;
+    (3) rename staging to ``path``; (4) delete ``__old__``. The renames
+    are single metadata ops on HDFS/local; object stores need a
+    committer or a table format (Delta/Iceberg MERGE), same semantics.
 
     Scale: the anti-join keys on ``key_cols`` (broadcastable for a
     micro-batch-sized ``df``)."""
@@ -162,147 +166,65 @@ def upsert_batch(
         )
     df = df.localCheckpoint(eager=True)  # sever lineage from `path` pre-read
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    target = jvm.org.apache.hadoop.fs.Path(path)
-    fs = target.getFileSystem(hconf)
-    staging_recover = jvm.org.apache.hadoop.fs.Path(path + "__staging__")
-    if fs.exists(staging_recover) and not fs.exists(target):
-        # a previous call died between delete(target) and rename: the
-        # ONLY copy of the table is the staging dir. Complete the
-        # interrupted swap before reading/merging — without this, the
-        # merge below would take the new batch as the full state and
-        # the staging delete would erase the orphaned table.
-        if not fs.rename(staging_recover, target):
-            raise IOError(
-                f"upsert_batch: crash recovery rename {staging_recover} "
-                f"-> {target} failed"
-            )
-    if fs.exists(target):
-        current = spark.read.parquet(path)
+    current = read_committed(spark, path)
+    if current is not None:
         keep = current.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
         merged = keep.unionByName(df)
     else:
         merged = df
-    staging = jvm.org.apache.hadoop.fs.Path(path + "__staging__")
-    fs.delete(staging, True)
+    fs, target, staging, old = _commit_paths(spark, path)
     merged.write.mode("overwrite").parquet(path + "__staging__")
-    fs.delete(target, True)
-    if not fs.rename(staging, target):
-        raise IOError(f"upsert_batch: rename {staging} -> {target} failed")
+    if current is not None:
+        _rename(fs, target, old)
+    _rename(fs, staging, target)
+    fs.delete(old, True)
 
 
-def upsert_versioned(
-    df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    version_col: str | None = None,
-    keep_versions: int = 2,
-) -> int:
-    """``upsert_batch`` with a manifest-pointer commit: NO window in
-    which the table does not exist.
-
-    Layout: ``path/v{N}/`` parquet snapshot dirs plus ``path/_CURRENT``
-    — a one-line pointer file naming the live snapshot.  A commit is
-    (1) write ``v{N+1}`` fully, (2) atomically swing ``_CURRENT`` via
-    a sibling temp file + rename (a single metadata op on HDFS/local;
-    object stores give read-after-write PUT semantics for the tiny
-    pointer).  A reader (``read_current``) that resolves the pointer
-    at ANY instant sees a complete snapshot: either the old one or the
-    new one — never a half-written directory, unlike delete+rename
-    whose two-op window leaves no table at all.  A crash before the
-    swing leaves an orphan ``v{N+1}`` that the next commit simply
-    overwrites-past; replaying a batch converges (same merge
-    function).  This is the hand-rolled form of what Delta/Iceberg's
-    transaction log does — production tables should use those formats'
-    MERGE, same semantics.
-
-    Returns the committed version number.  Old snapshots beyond
-    ``keep_versions`` are deleted AFTER the pointer swing (readers of
-    ancient pointers are the same hazard Delta's VACUUM documents).
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    if version_col:
-        w = Window.partitionBy(*key_cols).orderBy(F.col(version_col).desc())
-        df = (
-            df.withColumn("_ub_rn", F.row_number().over(w))
-            .filter(F.col("_ub_rn") == 1)
-            .drop("_ub_rn")
-        )
-    df = df.localCheckpoint(eager=True)
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-    cur = _read_pointer(spark, path)
-    if cur is not None:
-        current = spark.read.parquet(f"{path}/v{cur}")
-        keep = current.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = keep.unionByName(df)
-        nxt = cur + 1
-    else:
-        merged, nxt = df, 1
-    merged.write.mode("overwrite").parquet(f"{path}/v{nxt}")
-    # atomic pointer swing: write sibling temp, then rename over
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_CURRENT.tmp")
-    out = fs.create(tmp, True)
-    out.write(bytearray(str(nxt).encode("ascii")))
-    out.close()
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{path}/_CURRENT")
-    fs.delete(ptr, False)
-    if not fs.rename(tmp, ptr):
-        raise IOError(f"upsert_versioned: pointer swing failed at {path}")
-    for v in range(nxt - keep_versions, 0, -1):
-        old = jvm.org.apache.hadoop.fs.Path(f"{path}/v{v}")
-        if not fs.delete(old, True):
-            break
-    return nxt
+def _commit_paths(spark: SparkSession, path: str):
+    """(FileSystem, table, staging, old) Hadoop paths of an
+    ``upsert_batch`` table."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    target = Path(path)
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, target, Path(path + "__staging__"), Path(path + "__old__")
 
 
-def _read_pointer(spark: SparkSession, path: str) -> int | None:
-    """Resolve the live snapshot version: the ``_CURRENT`` pointer,
-    or — if a crash landed exactly inside the pointer's own
-    delete+rename window — the highest version dir carrying a
-    ``_SUCCESS`` marker (every complete snapshot has one; taking a
-    fully-written-but-unswung snapshot commits it post-hoc, which the
-    idempotent merge converges over on replay).  Either way, no state
-    leads back to an empty table while snapshot dirs exist."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{path}/_CURRENT")
-    fs = ptr.getFileSystem(hconf)
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            data = bytes(stream.readAllBytes()).decode("ascii").strip()
-        finally:
-            stream.close()
-        return int(data)
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(root):
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise IOError(f"rename {src} -> {dst} failed")
+
+
+def recover_table(spark: SparkSession, path: str) -> bool:
+    """Finish or undo an ``upsert_batch`` commit a crash interrupted;
+    returns whether a table exists at ``path`` afterwards.
+
+    With ``path`` absent, a staging directory holding ``_SUCCESS`` is a
+    complete merge cut before step 3 renamed it into place: roll it
+    forward. Otherwise an ``__old__`` directory is the last committed
+    table (a partial staging never gets past step 1): roll it back.
+    Neither means no table was ever committed. Once ``path`` exists,
+    leftover staging and old directories are deleted. Assumes one
+    writer, and no reader concurrent with its commit."""
+    fs, target, staging, old = _commit_paths(spark, path)
+    if not fs.exists(target):
+        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(staging, "_SUCCESS")):
+            _rename(fs, staging, target)
+        elif fs.exists(old):
+            _rename(fs, old, target)
+        else:
+            return False
+    fs.delete(staging, True)
+    fs.delete(old, True)
+    return True
+
+
+def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
+    """The committed ``upsert_batch`` table at ``path`` after crash
+    recovery, or None when no table has been committed. Any other read
+    error propagates."""
+    if not recover_table(spark, path):
         return None
-    best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            v = int(name[1:])
-            ok = jvm.org.apache.hadoop.fs.Path(f"{path}/v{v}/_SUCCESS")
-            if fs.exists(ok) and (best is None or v > best):
-                best = v
-    return best
-
-
-def read_current(spark: SparkSession, path: str) -> DataFrame:
-    """Resolve the ``_CURRENT`` pointer of an ``upsert_versioned``
-    table and read the live snapshot."""
-    cur = _read_pointer(spark, path)
-    if cur is None:
-        raise FileNotFoundError(f"read_current: no _CURRENT pointer at {path}")
-    return spark.read.parquet(f"{path}/v{cur}")
+    return spark.read.parquet(path)
 
 
 def write_sorted_shards(

@@ -12,25 +12,29 @@ WIRING and its replay story:
  - analytics: ``pipelines.normalize_odds`` / ``find_arbitrage`` /
    ``decide_alerts`` — pure DataFrame functions, identical in batch and
    inside ``foreachBatch``;
- - state: the alert log lives in a parquet table maintained by
-   ``io.upsert_batch`` (staging-rename swap + crash recovery);
+ - state: the alert log lives in a plain parquet table committed by
+   ``io.upsert_batch`` and read through ``io.read_committed``, which
+   first finishes or undoes any commit a crash interrupted;
  - delivery: ``adapters.send_notifications`` (min-batch rule) through
    an injected ``post`` callable.
 
-Exactly-once under replay: Structured Streaming redelivers a failed
-micro-batch, so ``process_scan_epoch`` must converge when re-run with
-the same (pages, alert_ts).  The gate is the alert log itself: an
-epoch's new log rows are keyed (Team, updated_at=alert_ts), so a
-replayed epoch's candidates anti-join away against the state the first
-delivery already committed — nothing re-sends, the upsert re-merges to
-the identical table (tests/test_streaming.py proves stream == batch
-over 3 micro-batches plus a replayed epoch).
+Replay: Structured Streaming redelivers a failed micro-batch, so
+``process_scan_epoch`` must converge when re-run with the same
+(pages, alert_ts).  The gate is the alert log itself: an epoch's new
+log rows are keyed (Team, updated_at=alert_ts), so a replayed epoch's
+candidates anti-join away against the state the first delivery
+already committed — nothing re-sends, the upsert re-merges to the
+identical table (tests/test_streaming.py proves stream == batch over 3
+micro-batches plus a replayed epoch, and a replay after a crash
+inside the commit).  Delivery is at-least-once with convergent state,
+not exactly-once: the epoch posts before it commits, so a crash
+between the two re-sends that epoch's alerts on replay (an outbox
+would close that window; it is not built).
 
 Scale: the scrape edge is driver-side by nature (one page fetch per
 sport per tick); everything from ``normalize_odds`` on is a distributed
 plan, and the state table is rows-per-alert tiny.  A fact-grain state
-would swap ``upsert_batch`` for ``upsert_versioned`` or a table format
-— same call shape.
+would move to a table format's MERGE — same call shape.
 """
 
 from __future__ import annotations
@@ -68,12 +72,16 @@ def pages_to_raw(spark: SparkSession, pages: dict[str, str]) -> DataFrame:
 
 
 def read_alert_log(spark: SparkSession, state_path: str) -> DataFrame:
-    """Current alert-log state; empty frame with the log schema before
-    the first commit."""
-    try:
-        return spark.read.parquet(state_path).select("Team", "updated_at", "combined")
-    except Exception:
+    """Current alert-log state, after crash recovery; an empty frame
+    with the log schema before the first commit.  Any read error
+    propagates rather than reading as "no alerts sent yet", which
+    would reset the daily cap."""
+    from banksy_spark.io import read_committed
+
+    log = read_committed(spark, state_path)
+    if log is None:
         return spark.createDataFrame([], LOG_SCHEMA)
+    return log.select("Team", "updated_at", "combined")
 
 
 def process_scan_epoch(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from banksy_spark.io import read_csv_dim, write_append, write_overwrite
 from banksy_spark.sources import (
     blob_to_df,
@@ -354,6 +356,7 @@ def test_upsert_batch_version_col_picks_deterministic_winner(spark, tmp_path):
         got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
         assert got == {(1, "new"), (2, "upd")}
     assert not os.path.exists(p + "__staging__")
+    assert not os.path.exists(p + "__old__")
 
 
 def test_html_table_parse_matches_declared_rows():
@@ -396,66 +399,62 @@ def test_html_header_promotion_reference_semantics():
     assert promote_header([["banner"]]) == ([], [])
 
 
-def test_upsert_batch_recovers_interrupted_swap(spark, tmp_path):
-    """Round-7 (ADVICE r6): a crash between delete(target) and
-    rename(staging, target) leaves the ONLY copy of the table in the
-    staging dir. The next call must complete the interrupted swap —
-    not treat the batch as the full state and erase the orphan."""
-    import shutil
-
-    from banksy_spark.io import upsert_batch
-
-    p = str(tmp_path / "crash_state")
-    b1 = spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string")
-    upsert_batch(b1, p, ["id"])
-    # inject the crash window: target deleted, staging holds the table
-    shutil.move(p, p + "__staging__")
-    assert not __import__("os").path.exists(p)
-    # replay the NEXT batch — must merge against the recovered state
-    b2 = spark.createDataFrame([(3, "z")], "id int, v string")
-    upsert_batch(b2, p, ["id"])
-    got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-    assert got == {(1, "x"), (2, "y"), (3, "z")}, "orphaned rows were lost"
+# Every state a crash can leave an upsert_batch commit in. The steps:
+# (1) write the merge to __staging__ (_SUCCESS last), (2) rename the
+# table to __old__, (3) rename staging to the table, (4) delete __old__.
+# Each case: (staging, table, old) contents — "pre"/"post" commit rows
+# or None — and whether staging is complete, plus what a reader sees.
+_CRASH_STATES = {
+    "staging_partial_first_commit": ("post", None, None, False, "pre"),
+    "first_commit_before_step3": ("post", None, None, True, "post"),
+    "staging_partial": ("post", "pre", None, False, "pre"),
+    "staging_complete_before_step2": ("post", "pre", None, True, "pre"),
+    "between_steps_2_and_3": ("post", None, "pre", True, "post"),
+    "after_step3_before_cleanup": (None, "post", "pre", True, "post"),
+}
 
 
-def test_upsert_versioned_pointer_commit(spark, tmp_path):
-    """Manifest-pointer sink: a reader resolving _CURRENT at any
-    instant sees a complete snapshot; an interrupted commit (snapshot
-    written, pointer never swung, pointer even deleted) recovers to
-    the newest complete snapshot and converges on replay."""
+@pytest.mark.parametrize("crash", sorted(_CRASH_STATES))
+def test_upsert_batch_recovers_every_crash_state(spark, tmp_path, crash):
+    """A crash at any step of an upsert_batch commit leaves a state in
+    which a reader running recovery sees the complete pre-commit or
+    post-commit rows — never a missing or partial table — and replaying
+    the batch converges to the post-commit rows with nothing left over."""
     import os
     import shutil
 
-    from banksy_spark.io import read_current, upsert_versioned
+    from banksy_spark.io import read_committed, upsert_batch
 
-    p = str(tmp_path / "vtable")
+    staging, table, old, complete, seen = _CRASH_STATES[crash]
     b1 = spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string")
-    assert upsert_versioned(b1, p, ["id"]) == 1
     b2 = spark.createDataFrame([(2, "y2"), (3, "z")], "id int, v string")
-    assert upsert_versioned(b2, p, ["id"]) == 2
-    want = {(1, "x"), (2, "y2"), (3, "z")}
-    got = {(r["id"], r["v"]) for r in read_current(spark, p).collect()}
-    assert got == want
-    # crash injection 1: pointer lost entirely (the pointer's own
-    # delete+rename window) — recovery scans for the newest _SUCCESS
-    os.remove(f"{p}/_CURRENT")
-    got = {(r["id"], r["v"]) for r in read_current(spark, p).collect()}
-    assert got == want
-    # and the next commit proceeds from the recovered snapshot
-    b3 = spark.createDataFrame([(4, "w")], "id int, v string")
-    v = upsert_versioned(b3, p, ["id"])
-    assert v == 3
-    got = {(r["id"], r["v"]) for r in read_current(spark, p).collect()}
-    assert got == want | {(4, "w")}
-    # crash injection 2: a fully-written orphan snapshot without a
-    # pointer swing — replaying the SAME batch converges (the orphan
-    # is simply overwritten-past)
-    shutil.copytree(f"{p}/v3", f"{p}/v4")
-    upsert_versioned(b3, p, ["id"])
-    got = {(r["id"], r["v"]) for r in read_current(spark, p).collect()}
-    assert got == want | {(4, "w")}
-    # old snapshots beyond keep_versions are gone
-    assert not os.path.exists(f"{p}/v1")
+    # committed snapshots of both sides, copied into the crash layout
+    pre, post = str(tmp_path / "pre"), str(tmp_path / "post")
+    upsert_batch(b1, pre, ["id"])
+    upsert_batch(b1, post, ["id"])
+    if table is None and old is None:  # the first commit: b1 into nothing
+        batch, want = b1, {"pre": None, "post": {(1, "x"), (2, "y")}}
+    else:
+        upsert_batch(b2, post, ["id"])
+        batch, want = b2, {"pre": {(1, "x"), (2, "y")}, "post": {(1, "x"), (2, "y2"), (3, "z")}}
+    p = str(tmp_path / "state")
+    for suffix, side in (("__staging__", staging), ("", table), ("__old__", old)):
+        if side is not None:
+            shutil.copytree({"pre": pre, "post": post}[side], p + suffix)
+    if not complete:
+        os.remove(p + "__staging__/_SUCCESS")
+
+    def read():
+        df = read_committed(spark, p)
+        return None if df is None else {(r["id"], r["v"]) for r in df.collect()}
+
+    assert read() == want[seen]
+    upsert_batch(batch, p, ["id"])
+    assert read() == want["post"]
+    upsert_batch(batch, p, ["id"])
+    assert read() == want["post"]
+    assert not os.path.exists(p + "__staging__")
+    assert not os.path.exists(p + "__old__")
 
 
 def test_write_sorted_shards_range_disjoint_and_balanced(spark, tmp_path):

@@ -3,21 +3,11 @@
 from banksy_spark.sources.adapters import (
     blob_to_df,
     poll_until_valid,
-    rows_to_df,
     send_notifications,
-)
-from banksy_spark.sources.scrape_stream import (
-    read_payloads,
-    scrape_until_valid,
-    start_scrape_stream,
 )
 
 __all__ = [
     "poll_until_valid",
     "blob_to_df",
-    "rows_to_df",
     "send_notifications",
-    "start_scrape_stream",
-    "scrape_until_valid",
-    "read_payloads",
 ]

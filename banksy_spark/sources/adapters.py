@@ -54,12 +54,6 @@ def blob_to_df(spark: SparkSession, payload: str | None) -> DataFrame:
     return spark.createDataFrame(rows, "payload string")
 
 
-def rows_to_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """S1/S5: parsed scrape rows → DataFrame (the HTML-table scrape's
-    list-of-lists at arbitrage_scanner.py:44-58)."""
-    return spark.createDataFrame(rows, schema)
-
-
 # --- S1: HTML <table> → rows (arbitrage_scanner.py:44-58) -------------------
 
 _TABLE_RE = re.compile(r"<table\b.*?</table\s*>", re.I | re.S)
@@ -127,28 +121,49 @@ def scrape_tables_to_df(
     pages: dict[str, str],
     schema: str,
     label_col: str = "Sport",
+    seq_col: str | None = None,
 ) -> DataFrame:
     """S1 end-to-end: one HTML page per label (the reference's
     per-sport scrape loop, arbitrage_scanner.py:45-58) → first table →
     header promotion → one labelled DataFrame.  ``schema`` names the
-    expected post-promotion columns plus the label column; pages whose
-    promoted header disagrees raise rather than silently misalign."""
+    wanted columns; each is filled with the page label (``label_col``),
+    the 1-based row number within its page (``seq_col``), or the
+    promoted-header column of that name.  A page whose header lacks a
+    wanted column raises ``ValueError`` naming the page and the missing
+    columns, rather than silently misaligning."""
     want = [f.split()[0].strip("`") for f in schema.split(",")]
-    data_cols = [c for c in want if c != label_col]
+    data_cols = [c for c in want if c not in (label_col, seq_col)]
     out: list[tuple] = []
     for label, html in pages.items():
         header, data = promote_header(first_table_rows(html))
-        if header[: len(data_cols)] != data_cols:
+        missing = [c for c in data_cols if c not in header]
+        if missing:
             raise ValueError(
-                f"scrape_tables_to_df: page {label!r} header {header} "
-                f"does not match expected columns {data_cols}"
+                f"scrape_tables_to_df: page {label!r} is missing columns "
+                f"{missing} (header {header})"
             )
-        for r in data:
+        for seq, r in enumerate(data, start=1):
             vals = dict(zip(header, r))
-            out.append(
-                tuple(label if c == label_col else vals.get(c) for c in want)
-            )
+            vals[label_col] = label
+            if seq_col is not None:
+                vals[seq_col] = seq
+            out.append(tuple(vals[c] for c in want))
     return spark.createDataFrame(out, schema)
+
+
+def push_lines(
+    lines: Iterable[str], post: Callable[[str], None], min_batch: int = 2
+) -> int:
+    """K3's push rule (arbitrage_scanner.py:434, 493-502): sort the
+    alert lines, send nothing below ``min_batch``, else POST them as
+    ONE newline-joined message.  Sorting makes the push independent of
+    the order rows arrive in (partition or task-completion order).
+    Returns the number of lines sent (0 = nothing sent)."""
+    ordered = sorted(lines)
+    if len(ordered) < min_batch:
+        return 0
+    post("\n".join(ordered))
+    return len(ordered)
 
 
 def send_notifications(
@@ -163,17 +178,8 @@ def send_notifications(
 
     The collect here is intentional and bounded: decide_alerts already
     reduced to the per-day rate-limited alert set; a sink that POSTs to
-    a phone is driver-side by nature. Lines are sorted before joining —
-    a bare collect()'s row order is partition order, which differs
-    between batch and foreachBatch contexts for the same alert set.
-    Returns the number of alert lines sent (0 = below min_batch,
-    nothing sent).
+    a phone is driver-side by nature.  Returns the number of alert
+    lines sent (0 = below min_batch, nothing sent).
     """
-    lines: Iterable[str] = sorted(
-        r[message_col] for r in alerts.select(message_col).collect()
-    )
-    lines = list(lines)
-    if len(lines) < min_batch:
-        return 0
-    post("\n".join(lines))
-    return len(lines)
+    rows = alerts.select(message_col).collect()
+    return push_lines((r[message_col] for r in rows), post, min_batch)

@@ -3,10 +3,11 @@ push-notification sink (SURVEY §2.1 K3, arbitrage_scanner.py:478-502)
 as a real ``df.writeStream.format("notify")`` target, completing the
 DSv2 story in both directions (source: sources/scrape_source.py).
 
-Semantics contract (mirrors ``adapters.send_notifications`` exactly,
-tested in tests/test_sources.py):
-- per micro-batch, ALL alert lines are combined into ONE message
-  joined by newlines (the reference posts one push per scan);
+Semantics contract (``adapters.push_lines``, the rule
+``adapters.send_notifications`` also applies; tested in
+tests/test_sources.py):
+- per micro-batch, ALL alert lines are sorted and combined into ONE
+  message joined by newlines (the reference posts one push per scan);
 - the min-batch rule: fewer than ``min_batch`` (default 2,
   arbitrage_scanner.py:434) alert rows in the epoch → nothing sent;
 - delivery is an append of the combined message to the notification
@@ -35,6 +36,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from banksy_spark.sources.adapters import push_lines
+
 
 @dataclass
 class _Lines(WriterCommitMessage):
@@ -53,17 +56,13 @@ class _NotifyStreamWriter(DataSourceStreamWriter):
         return _Lines(lines=[row[self._col] for row in iterator])
 
     def commit(self, messages, batchId: int) -> None:
-        # sorted: partition-task completion order is nondeterministic,
-        # and the push content must not depend on it (same rule as
-        # adapters.send_notifications)
-        lines = sorted(
-            ln for m in messages if m is not None for ln in m.lines
-        )
-        if len(lines) < self._min_batch:
-            return  # reference's >1-row rule: below quota, no send
+        lines = (ln for m in messages if m is not None for ln in m.lines)
+        push_lines(lines, self._append_push, self._min_batch)
+
+    def _append_push(self, message: str) -> None:
         os.makedirs(os.path.dirname(self._path) or ".", exist_ok=True)
         with open(self._path, "a", encoding="utf-8") as f:
-            f.write("\n".join(lines) + "\n\x1e\n")  # RS-delimited pushes
+            f.write(message + "\n\x1e\n")  # RS-delimited pushes
 
     def abort(self, messages, batchId: int) -> None:
         pass  # nothing was externally visible before commit

@@ -2,9 +2,9 @@
 item 6): the reference's ``while True`` scrape-retry loop
 (bovada_pull.py:14-42) as an honest rate-limited custom DataSource —
 ``spark.read.format("scrape")`` for the one-shot batch form and
-``spark.readStream.format("scrape")`` for the incremental form — in
-place of (and alongside) the foreachBatch adapter in
-``sources.scrape_stream``.
+``spark.readStream.format("scrape")`` for the incremental form.  The
+attempt rule is written once, in the stream reader's step; the batch
+reader drives that step to its terminal offset.
 
 Semantics contract (mirrors ``adapters.poll_until_valid`` exactly,
 stream==batch tested in tests/test_sources.py):
@@ -85,7 +85,9 @@ def _make_valid(options: dict) -> Callable[[str], bool]:
 
 class _ScrapeBatchReader(DataSourceReader):
     """One-shot form: the whole retry loop inside a single read() —
-    the DSv2 twin of ``blob_to_df(poll_until_valid(fetch, ...))``."""
+    the DSv2 twin of ``blob_to_df(poll_until_valid(fetch, ...))`` —
+    run as the stream reader's steps from the initial offset until one
+    is terminal."""
 
     def __init__(self, options: dict) -> None:
         self._options = dict(options)
@@ -94,22 +96,11 @@ class _ScrapeBatchReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition) -> Iterator[tuple]:
-        opts = self._options
-        fetch = _resolve_fetch(opts)
-        is_valid = _make_valid(opts)
-        timeout_s = float(opts.get("timeout_s", "60"))
-        interval_s = float(opts.get("interval_s", "2"))
-        attempt = 0
-        while True:
-            attempt += 1
-            payload = fetch()
-            if payload is not None and is_valid(payload):
-                yield (attempt, payload)
-                return
-            if (attempt - 1) * interval_s >= timeout_s:
-                return  # give up: zero rows (reference's skip arm)
-            if interval_s > 0:
-                time.sleep(interval_s)
+        stream = _ScrapeStreamReader(self._options)
+        offset = stream.initialOffset()
+        while not offset["done"]:
+            rows, offset = stream.read(offset)
+            yield from rows
 
 
 class _ScrapeStreamReader(SimpleDataSourceStreamReader):

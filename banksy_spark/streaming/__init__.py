@@ -7,7 +7,6 @@ from banksy_spark.streaming.core import (
     hopping_hourly_sums,
     ohlc_candles,
     session_window_counts,
-    rate_limited_alert_stream,
     read_events_stream,
     tumbling_daily_counts,
 )
@@ -20,6 +19,5 @@ __all__ = [
     "hopping_hourly_sums",
     "ohlc_candles",
     "session_window_counts",
-    "rate_limited_alert_stream",
     "attribution_join",
 ]

@@ -7,8 +7,9 @@ alert-log state.
 Composition of already-verified parts — the point of this module is the
 WIRING and its replay story:
 
- - parse: ``sources.adapters`` S1 extractor (first table, header
-   promotion), driver-side like the reference's BeautifulSoup loop;
+ - parse: ``sources.adapters.scrape_tables_to_df`` (first table,
+   header promotion, columns picked by header name), driver-side like
+   the reference's BeautifulSoup loop;
  - analytics: ``pipelines.normalize_odds`` / ``find_arbitrage`` /
    ``decide_alerts`` — pure DataFrame functions, identical in batch and
    inside ``foreachBatch``;
@@ -58,17 +59,13 @@ def pages_to_raw(spark: SparkSession, pages: dict[str, str]) -> DataFrame:
     """Scraped HTML pages → the wide raw odds frame normalize_odds
     consumes (the reference's original_df, arbitrage_scanner.py:44-70):
     first table, header promoted, per-page row sequence for the
-    adjacent-pair game ids."""
-    from banksy_spark.sources.adapters import first_table_rows, promote_header
+    adjacent-pair game ids.  A page whose header lacks a needed column
+    raises ``ValueError`` naming the sport and the columns."""
+    from banksy_spark.sources import adapters
 
-    rows: list[tuple] = []
-    for sport, html in pages.items():
-        header, data = promote_header(first_table_rows(html))
-        cols = {name: idx for idx, name in enumerate(header)}
-        take = [cols[b] for b in ["Team"] + BOOKIES]
-        for i, r in enumerate(data, start=1):
-            rows.append((i, r[take[0]], sport, r[take[1]], r[take[2]], r[take[3]]))
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return adapters.scrape_tables_to_df(
+        spark, pages, RAW_SCHEMA, label_col="Sport", seq_col="_seq"
+    )
 
 
 def read_alert_log(spark: SparkSession, state_path: str) -> DataFrame:

@@ -1,9 +1,11 @@
 """Structured Streaming forms of the reference's stateful-over-time
 behaviors (SURVEY.md §2.9): the tumbling 1-day aggregation
-(arbitrage_scanner.py:447) and the daily notification rate limit
-(:434-461) as an incremental foreachBatch pipeline that shares its
+(arbitrage_scanner.py:447) and its window/join relatives, sharing their
 logic with the batch layer — the same DataFrame functions run in both
-modes, which is the §3.3 design goal.
+modes, which is the §3.3 design goal.  The daily notification rate
+limit (:434-461) has two stream forms elsewhere: the scan app's
+committed alert log (``streaming.app``) and the state-store limiter
+for event streams (``streaming.stateful.rate_limit_stateful``).
 
 Scale: the streaming state keys are (user_id, day) — the same shuffle
 keys as the batch queries, so a 1000-executor cluster partitions state
@@ -121,72 +123,6 @@ def session_window_counts(events: "DataFrame", watermark: str = "2 hours") -> "D
             F.col("sw.end").alias("session_end"),
             "n_events",
         )
-    )
-
-
-def rate_limited_alert_stream(
-    events: DataFrame,
-    log_path: str,
-    out_path: str,
-    checkpoint: str,
-    max_per_day: int = 3,
-):
-    """Daily rate limit (<N per user per calendar day,
-    arbitrage_scanner.py:434-461) run incrementally: each micro-batch
-    consults the persisted send log, forwards only events whose
-    (user_id, day) has remaining quota, and appends what it sent back
-    to the log — exactly the reference's Sheets-log protocol
-    (:439-442 read, :507-514 append) with parquet as the log table.
-
-    Within a batch, quota is assigned deterministically by (ts,
-    event_id) rank so a burst can't overshoot the limit.
-
-    Returns the StreamingQuery (caller awaits termination).
-    """
-    from pyspark.sql import Window
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        day = F.to_date("ts")
-        try:
-            log = spark.read.parquet(log_path)
-            sent = log.groupBy("user_id", "day").agg(F.count("*").alias("n_sent"))
-        except AnalysisException as e:
-            # only a genuinely absent log means "first batch"; any other
-            # read error must fail the batch, not silently reset quotas
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            sent = None
-
-        cand = batch.withColumn("day", day)
-        if sent is not None:
-            cand = cand.join(sent, ["user_id", "day"], "left").withColumn(
-                "n_sent", F.coalesce(F.col("n_sent"), F.lit(0))
-            )
-        else:
-            cand = cand.withColumn("n_sent", F.lit(0))
-
-        w = Window.partitionBy("user_id", "day").orderBy("ts", "event_id")
-        picked = (
-            cand.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("n_sent") + F.col("rnk") <= max_per_day)
-            .select("event_id", "user_id", "day", "ts", "event_type")
-        ).localCheckpoint()
-        # log FIRST: if the batch dies between the two writes and replays,
-        # a log-ahead entry suppresses the resend (quota can under-send by
-        # one batch but never over-send — the safe direction for alerts)
-        picked.select("user_id", "day", "event_id").write.mode("append").parquet(log_path)
-        picked.select("event_id", "user_id", "day", "ts", "event_type").write.mode(
-            "append"
-        ).parquet(out_path)
-
-    return (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -8,6 +8,8 @@ reference's semantics), not by re-running the pipeline.
 from __future__ import annotations
 
 import datetime
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -218,22 +220,27 @@ def test_decide_alerts_sign_audit(spark):
     assert {"Gamma", "Delta"} <= teams                   # ML passes the audit
 
 
+def flaky_bovada_fetch():
+    """Fetcher factory for ``format("scrape")`` (option
+    ``fetcher=module:function``): two bad attempts, then BLOB."""
+    calls = {"n": 0}
+
+    def fetch():
+        calls["n"] += 1
+        return [None, "too short", BLOB][min(calls["n"], 3) - 1]
+
+    return fetch
+
+
 def test_end_to_end_scrape_to_alerts_stream_equals_batch(spark, raw, tmp_path):
     """The reference's whole run, composed on the engine: flaky scrape
     (2 bad attempts, then a valid payload) → bovada parse → enrichment
     join onto the normalized scanner table → arbitrage scan over all 4
-    bookies → rate-limited alert decision. The streaming-sourced run
-    must produce byte-identical alerts to the driver-side-poll run."""
-    from banksy_spark.sources import blob_to_df, poll_until_valid, scrape_until_valid
-
-    def make_fetch():
-        calls = {"n": 0}
-
-        def fetch():
-            calls["n"] += 1
-            return [None, "too short", BLOB][min(calls["n"], 3) - 1]
-
-        return fetch
+    bookies → rate-limited alert decision. The run fed by the streaming
+    ``format("scrape")`` source must produce byte-identical alerts to
+    the driver-side-poll run."""
+    from banksy_spark.sources import blob_to_df, poll_until_valid
+    from banksy_spark.sources.scrape_source import register_scrape_source
 
     def downstream(payload_df):
         bov = parse_bovada(payload_df).select("Team", "bet_type", "info", "Bovada")
@@ -248,16 +255,32 @@ def test_end_to_end_scrape_to_alerts_stream_equals_batch(spark, raw, tmp_path):
         to_send, _ = decide_alerts(opps, empty_log, odds=odds, bookies=all_bookies)
         return to_send
 
-    streamed = downstream(
-        scrape_until_valid(
-            spark,
-            make_fetch(),
-            out_path=str(tmp_path / "payloads"),
-            checkpoint=str(tmp_path / "ckpt"),
-            interval_s=0.2,
-        ).select("payload")
+    register_scrape_source(spark)
+    # the source's Python runner imports this module (from tests/) and,
+    # through it, banksy_spark (from the repo root)
+    here = Path(__file__).resolve()
+    q = (
+        spark.readStream.format("scrape")
+        .option("fetcher", f"{__name__}:flaky_bovada_fetch")
+        .option("sys_path", os.pathsep.join(map(str, here.parents[:2])))
+        .option("interval_s", "0.01")
+        .load()
+        .writeStream.format("memory")
+        .queryName("e2e_scrape_payloads")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
-    batch = downstream(blob_to_df(spark, poll_until_valid(make_fetch(), interval_s=0)))
+    try:
+        # the source's offset stops moving once it is terminal
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    payloads = spark.sql("SELECT * FROM e2e_scrape_payloads")
+    assert [r.attempt for r in payloads.collect()] == [3]
+    streamed = downstream(payloads.select("payload"))
+    batch = downstream(
+        blob_to_df(spark, poll_until_valid(flaky_bovada_fetch(), interval_s=0))
+    )
 
     cols = sorted(streamed.columns)
     got = sorted(map(tuple, streamed.select(*cols).collect()))

@@ -2,13 +2,14 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from banksy_spark.io import read_csv_dim, write_append, write_overwrite
 from banksy_spark.sources import (
     blob_to_df,
     poll_until_valid,
-    rows_to_df,
     send_notifications,
 )
 
@@ -51,7 +52,7 @@ def test_blob_and_rows_sources(spark):
     assert blob_to_df(spark, "hello").count() == 1
     empty = blob_to_df(spark, None)
     assert empty.count() == 0 and empty.columns == ["payload"]
-    df = rows_to_df(spark, [("A", 1), ("B", 2)], "team string, n int")
+    df = spark.createDataFrame([("A", 1), ("B", 2)], "team string, n int")
     assert df.count() == 2
 
 
@@ -64,6 +65,10 @@ def test_send_notifications_min_batch(spark):
     one = spark.createDataFrame([("only",)], "combined string")
     assert send_notifications(one, posted.append) == 0
     assert len(posted) == 1
+    # row order does not reach the push: lines are sorted before joining
+    unsorted = spark.createDataFrame([("a2",), ("a1",)], "combined string")
+    assert send_notifications(unsorted, posted.append) == 2
+    assert posted[-1] == "a1\na2"
 
 
 def test_csv_dim_and_parquet_sinks(spark, tmp_path):
@@ -78,60 +83,6 @@ def test_csv_dim_and_parquet_sinks(spark, tmp_path):
     write_overwrite(dim, str(out))
     write_append(dim, str(out))
     assert spark.read.parquet(str(out)).count() == 2  # K1 overwrite + K2 append
-
-
-def _scripted_fetch(payloads):
-    """A fresh scripted fetch per run — last payload repeats forever."""
-    seq = list(payloads)
-    calls = []
-
-    def fetch():
-        p = seq[min(len(calls), len(seq) - 1)]
-        calls.append(p)
-        return p
-
-    return fetch, calls
-
-
-def test_scrape_stream_equals_batch_poll(spark, tmp_path):
-    """Stream twin of poll_until_valid: same scripted fetch sequence →
-    the sink holds exactly the payload the batch poll returns, with the
-    same attempt count."""
-    from banksy_spark.sources import blob_to_df, scrape_until_valid
-
-    script = ["", "short", "x" * 300]
-
-    fetch_b, calls_b = _scripted_fetch(script)
-    clock = FakeClock()
-    batch_payload = poll_until_valid(fetch_b, sleep=clock.sleep, clock=clock)
-
-    fetch_s, calls_s = _scripted_fetch(script)
-    got = scrape_until_valid(
-        spark, fetch_s,
-        str(tmp_path / "payloads"), str(tmp_path / "ckpt"),
-        interval_s=0.05,
-    )
-    rows = got.collect()
-    assert [r.payload for r in rows] == [batch_payload]
-    assert rows[0].attempt == len(calls_b) == 3
-    assert calls_s == calls_b
-
-
-def test_scrape_stream_gives_up_like_batch(spark, tmp_path):
-    """Give-up parity: an always-invalid fetch times out with ZERO rows
-    in the sink — the same empty frame blob_to_df(None) seeds."""
-    from banksy_spark.sources import blob_to_df, scrape_until_valid
-
-    fetch, calls = _scripted_fetch(["nope"])
-    got = scrape_until_valid(
-        spark, fetch,
-        str(tmp_path / "payloads"), str(tmp_path / "ckpt"),
-        interval_s=0.05, timeout_s=0.3,
-    )
-    assert got.count() == 0
-    assert got.columns == ["payload", "attempt"]
-    assert len(calls) >= 1
-    assert blob_to_df(spark, None).count() == 0  # the batch give-up twin
 
 
 def test_jsonl_tolerant_quarantines_bad_lines(spark, tmp_path):
@@ -193,7 +144,7 @@ def test_dsv2_scrape_source_stream_equals_batch(spark, tmp_path):
             .option("min_len", "50")
             .option("timeout_s", str(timeout_s))
             .option("interval_s", "0.01")
-            .option("sys_path", "/root/repo")
+            .option("sys_path", str(Path(__file__).resolve().parents[1]))
         )
 
     def run_stream(factory, timeout_s, name):
@@ -397,6 +348,62 @@ def test_html_header_promotion_reference_semantics():
     assert jets[4] is None  # ragged row padded like pd.DataFrame NaN
     assert promote_header([]) == ([], [])
     assert promote_header([["banner"]]) == ([], [])
+
+
+def _table(rows):
+    trs = "".join(
+        "<tr>" + "".join(f"<td>{c}</td>" for c in r) + "</tr>" for r in rows
+    )
+    return f"<table><tr><td>banner</td></tr>{trs}</table>"
+
+
+def test_scrape_tables_to_df_picks_columns_by_header_name(spark):
+    """The one page parser picks each wanted column by its promoted
+    header name, so pages whose bookie columns come in different
+    orders land aligned; ``seq_col`` numbers rows from 1 within each
+    page, and without it no sequence column is added."""
+    from banksy_spark.sources.adapters import scrape_tables_to_df
+
+    pages = {
+        "NFL": _table([["Team", "FanDuel", "DraftKings"], ["Jets", "+110", "+120"],
+                       ["Bills", "-105", "+100"]]),
+        "MLB": _table([["Team", "DraftKings", "Extra", "FanDuel"],
+                       ["Mets", "+130", "x", "+125"]]),
+    }
+    df = scrape_tables_to_df(
+        spark, pages, "Sport string, _seq int, Team string, DraftKings string, FanDuel string",
+        seq_col="_seq",
+    )
+    assert df.columns == ["Sport", "_seq", "Team", "DraftKings", "FanDuel"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("MLB", 1, "Mets", "+130", "+125"),
+        ("NFL", 1, "Jets", "+120", "+110"),
+        ("NFL", 2, "Bills", "+100", "-105"),
+    ]
+    plain = scrape_tables_to_df(spark, pages, "Sport string, Team string, FanDuel string")
+    assert plain.columns == ["Sport", "Team", "FanDuel"]
+    assert sorted(tuple(r) for r in plain.collect()) == [
+        ("MLB", "Mets", "+125"), ("NFL", "Bills", "-105"), ("NFL", "Jets", "+110"),
+    ]
+
+
+def test_scrape_tables_to_df_names_page_and_missing_columns(spark):
+    """A page whose header lost a wanted column raises ValueError
+    naming that page and every missing column, not a bare KeyError or
+    a silently misaligned frame."""
+    from banksy_spark.sources.adapters import scrape_tables_to_df
+
+    pages = {
+        "NFL": _table([["Team", "DraftKings", "FanDuel"], ["Jets", "+120", "+110"]]),
+        "NBA": _table([["Team", "Caesars"], ["Knicks", "+140"]]),
+    }
+    with pytest.raises(ValueError) as err:
+        scrape_tables_to_df(
+            spark, pages, "Sport string, Team string, DraftKings string, FanDuel string"
+        )
+    msg = str(err.value)
+    assert "'NBA'" in msg and "['DraftKings', 'FanDuel']" in msg
+    assert "'NFL'" not in msg
 
 
 # Every state a crash can leave an upsert_batch commit in. The steps:

@@ -15,6 +15,8 @@ hash/date-partitioned instead of as one directory of files.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -117,114 +119,110 @@ def write_partition_overwrite(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+# data files before an upsert_batch commit compacts the table: a scan
+# epoch's read grows ~1.5 ms per file (SCALE.md "Sinks at scale")
+COMPACT_AT = 64
+
+
 def upsert_batch(
     df: DataFrame,
     path: str,
     key_cols: list[str],
-    version_col: str | None = None,
+    *,
+    keys: list[tuple] | None = None,
 ) -> None:
-    """Idempotent keyed upsert (last-write-wins merge): rows in ``df``
-    replace same-key rows at ``path``; other rows survive. Because the
-    result is a pure function of (current state, batch contents),
-    REPLAYING a batch converges to the identical state — what a
-    ``foreachBatch`` sink needs under Structured Streaming's
-    at-least-once batch redelivery. Use as:
-    ``q.writeStream.foreachBatch(lambda b, _id: upsert_batch(b, path,
-    keys))``.
+    """Write-once append of one batch to the log table at ``path``, the
+    reference's append to a notification sheet (arbitrage_scanner.py:
+    507-514).  The batch lands as ONE file, ``path/part-<name>.parquet``,
+    ``<name>`` a digest of its ``key_cols`` values (``keys``, if the
+    caller collected them, saves that job).  Replaying the last batch
+    finds its file and an empty batch writes nothing, so a foreachBatch
+    sink converges under at-least-once redelivery.  The caller keeps
+    keys new (the scan app anti-joins its batch against the log).
 
-    ``version_col``: when a batch can carry MULTIPLE rows per key, pass
-    the column naming the winner — the highest version per key survives
-    (per-key partitioned window, deterministic when versions are unique
-    within a key). Without it, the batch must hold at most one row per
-    key or the merged table keeps all of them.
+    Once the table holds ``COMPACT_AT`` data files, the commit writes
+    them and the batch as that one file and deletes the others
+    (compaction), so a read lists at most ``COMPACT_AT`` + 1 files.
 
-    Durability: ``path`` stays a plain parquet directory, and no crash
-    point leaves a reader that runs ``recover_table`` (as
-    ``read_committed`` does) with a missing or partial table. The only
-    copy of the table is never deleted — Hadoop's local-FS recursive
-    delete removes files one at a time. A commit is four steps, each
-    through the Hadoop FileSystem API of ``path`` (HDFS/S3A/local
-    alike — a driver-local ``os.path`` check would silently truncate
-    remote tables): (1) write the merge to ``path__staging__``, where Spark
-    writes ``_SUCCESS`` last; (2) rename ``path`` to ``path__old__``;
-    (3) rename staging to ``path``; (4) delete ``__old__``. The renames
-    are single metadata ops on HDFS/local; object stores need a
-    committer or a table format (Delta/Iceberg MERGE), same semantics.
-
-    Scale: the anti-join keys on ``key_cols`` (broadcastable for a
-    micro-batch-sized ``df``)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    if version_col:
-        w = Window.partitionBy(*key_cols).orderBy(F.col(version_col).desc())
-        df = (
-            df.withColumn("_ub_rn", F.row_number().over(w))
-            .filter(F.col("_ub_rn") == 1)
-            .drop("_ub_rn")
-        )
-    df = df.localCheckpoint(eager=True)  # sever lineage from `path` pre-read
-
-    current = read_committed(spark, path)
-    if current is not None:
-        keep = current.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = keep.unionByName(df)
+    Durability: the file is written to a ``_``-prefixed staging
+    directory under ``path``, renamed to its name, then the files it
+    replaces and the staging are deleted, through the Hadoop FileSystem
+    API of ``path``.  Spark's listing skips ``_``-prefixed paths, so a
+    plain read sees each batch whole or not at all; a compaction cut
+    after its rename leaves rows twice until the next commit finishes
+    it (``read_appended`` reads them once).  A one-file rename is a
+    metadata op on HDFS/local; object stores need a committer for the
+    same guarantee.  Assumes one writer."""
+    if keys is None:
+        keys = df.select(*key_cols).collect()
+    names = sorted({repr(tuple(k)) for k in keys})
+    fs, Path = _fs(df.sparkSession, path)
+    _settle(fs, Path, path)  # a commit cut by a crash
+    if not names:
+        return
+    name = hashlib.sha256("\n".join(names).encode()).hexdigest()[:32]
+    target = Path(path, f"part-{name}.parquet")
+    if fs.exists(target):
+        return
+    if len(_data_files(fs, Path, path)) < COMPACT_AT:
+        staging, rows = f"{path}/_staging-{name}", df
     else:
-        merged = df
-    fs, target, staging, old = _commit_paths(spark, path)
-    merged.write.mode("overwrite").parquet(path + "__staging__")
-    if current is not None:
-        _rename(fs, target, old)
-    _rename(fs, staging, target)
-    fs.delete(old, True)
+        staging = f"{path}/_compact-{name}"
+        rows = df.sparkSession.read.schema(df.schema).parquet(path).unionByName(df)
+    rows.coalesce(1).write.mode("overwrite").parquet(staging)
+    (part,) = fs.globStatus(Path(staging, "part-*"))
+    _rename(fs, part.getPath(), target)
+    _settle(fs, Path, path)
 
 
-def _commit_paths(spark: SparkSession, path: str):
-    """(FileSystem, table, staging, old) Hadoop paths of an
-    ``upsert_batch`` table."""
+def read_appended(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The rows of an ``upsert_batch`` table, read with ``schema`` (no
+    inference job), once each; empty before the first commit.  An absent
+    table with a ``<path>__*`` sibling (a directory swap of earlier
+    versions, cut mid-commit) raises instead of reading as empty."""
+    fs, Path = _fs(spark, path)
+    if not fs.exists(Path(path)):
+        left = fs.globStatus(Path(path + "__*"))
+        if left:
+            raise IOError(f"{path} is absent but {left[0].getPath()} exists")
+        return spark.createDataFrame([], schema)
+    rows = spark.read.schema(schema).parquet(path)
+    return rows.distinct() if fs.globStatus(Path(path, "_compact-*")) else rows
+
+
+def _settle(fs, Path, path: str) -> None:
+    """Finish a compaction whose file is in place (it replaces every
+    other data file) and delete staging; one writer, so any staging left
+    is the current commit's or a crashed one's."""
+    for st in fs.globStatus(Path(path, "_compact-*")) or []:
+        done = "part-" + st.getPath().getName()[len("_compact-"):] + ".parquet"
+        if fs.exists(Path(path, done)):
+            for f in _data_files(fs, Path, path):
+                if f.getName() != done:
+                    fs.delete(f, False)
+        fs.delete(st.getPath(), True)
+    for st in fs.globStatus(Path(path, "_staging-*")) or []:
+        fs.delete(st.getPath(), True)
+
+
+def _data_files(fs, Path, path: str) -> list:
+    """The paths a Spark read of ``path`` lists (not ``_``/``.``-prefixed)."""
+    return [
+        st.getPath()
+        for st in fs.globStatus(Path(path, "*")) or []
+        if not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem of ``path``, the Hadoop ``Path`` class)."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    target = Path(path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, target, Path(path + "__staging__"), Path(path + "__old__")
+    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
 
 
 def _rename(fs, src, dst) -> None:
     if not fs.rename(src, dst):
         raise IOError(f"rename {src} -> {dst} failed")
-
-
-def recover_table(spark: SparkSession, path: str) -> bool:
-    """Finish or undo an ``upsert_batch`` commit a crash interrupted;
-    returns whether a table exists at ``path`` afterwards.
-
-    With ``path`` absent, a staging directory holding ``_SUCCESS`` is a
-    complete merge cut before step 3 renamed it into place: roll it
-    forward. Otherwise an ``__old__`` directory is the last committed
-    table (a partial staging never gets past step 1): roll it back.
-    Neither means no table was ever committed. Once ``path`` exists,
-    leftover staging and old directories are deleted. Assumes one
-    writer, and no reader concurrent with its commit."""
-    fs, target, staging, old = _commit_paths(spark, path)
-    if not fs.exists(target):
-        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(staging, "_SUCCESS")):
-            _rename(fs, staging, target)
-        elif fs.exists(old):
-            _rename(fs, old, target)
-        else:
-            return False
-    fs.delete(staging, True)
-    fs.delete(old, True)
-    return True
-
-
-def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
-    """The committed ``upsert_batch`` table at ``path`` after crash
-    recovery, or None when no table has been committed. Any other read
-    error propagates."""
-    if not recover_table(spark, path):
-        return None
-    return spark.read.parquet(path)
 
 
 def write_sorted_shards(

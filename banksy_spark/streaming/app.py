@@ -13,9 +13,9 @@ WIRING and its replay story:
  - analytics: ``pipelines.normalize_odds`` / ``find_arbitrage`` /
    ``decide_alerts`` — pure DataFrame functions, identical in batch and
    inside ``foreachBatch``;
- - state: the alert log lives in a plain parquet table committed by
-   ``io.upsert_batch`` and read through ``io.read_committed``, which
-   first finishes or undoes any commit a crash interrupted;
+ - state: the alert log is an append-only parquet table, one file per
+   committing epoch (compacted at 64) written by ``io.upsert_batch``
+   and read by ``io.read_appended`` (each epoch whole or not at all);
  - delivery: ``adapters.send_notifications`` (min-batch rule) through
    an injected ``post`` callable.
 
@@ -24,13 +24,13 @@ Replay: Structured Streaming redelivers a failed micro-batch, so
 (pages, alert_ts).  The gate is the alert log itself: an epoch's new
 log rows are keyed (Team, updated_at=alert_ts), so a replayed epoch's
 candidates anti-join away against the state the first delivery
-already committed — nothing re-sends, the upsert re-merges to the
-identical table (tests/test_streaming.py proves stream == batch over 3
-micro-batches plus a replayed epoch, and a replay after a crash
-inside the commit).  Delivery is at-least-once with convergent state,
-not exactly-once: the epoch posts before it commits, so a crash
-between the two re-sends that epoch's alerts on replay (an outbox
-would close that window; it is not built).
+already committed — nothing re-sends and nothing is appended
+(tests/test_streaming.py proves stream == batch over 3 micro-batches
+plus a replayed epoch, and replays after a crash at each step of the
+epoch).  Delivery is at-least-once with convergent state, not
+exactly-once: the epoch posts before it commits, so a crash between
+the send and the rename of the epoch's file re-sends that epoch's
+alerts on replay (an outbox would close that window; it is not built).
 
 Scale: the scrape edge is driver-side by nature (one page fetch per
 sport per tick); everything from ``normalize_odds`` on is a distributed
@@ -69,16 +69,13 @@ def pages_to_raw(spark: SparkSession, pages: dict[str, str]) -> DataFrame:
 
 
 def read_alert_log(spark: SparkSession, state_path: str) -> DataFrame:
-    """Current alert-log state, after crash recovery; an empty frame
-    with the log schema before the first commit.  Any read error
-    propagates rather than reading as "no alerts sent yet", which
-    would reset the daily cap."""
-    from banksy_spark.io import read_committed
+    """Current alert-log state, read with the log schema (no inference
+    job); an empty frame with that schema before the first commit.  Any
+    read error propagates rather than reading as "no alerts sent yet",
+    which would reset the daily cap."""
+    from banksy_spark.io import read_appended
 
-    log = read_committed(spark, state_path)
-    if log is None:
-        return spark.createDataFrame([], LOG_SCHEMA)
-    return log.select("Team", "updated_at", "combined")
+    return read_appended(spark, state_path, LOG_SCHEMA)
 
 
 def process_scan_epoch(
@@ -110,14 +107,16 @@ def process_scan_epoch(
     )
     # replay gate: a redelivered epoch re-presents the same alert_ts;
     # rows the first delivery already committed anti-join away, so the
-    # send count drops to 0 and the upsert re-merges to the same table
+    # send count drops to 0 and the commit appends nothing.  The key
+    # collect is the epoch's one decision action: it fills the
+    # checkpoint that the send and the commit read, and names the
+    # commit's file.
     fresh = new_log.join(
         log, ["Team", "updated_at", "combined"], "left_anti"
-    ).localCheckpoint(eager=True)
-    if fresh.isEmpty():
-        return 0
-    sent = send_notifications(fresh, post, min_batch=min_batch)
-    upsert_batch(fresh, state_path, ["Team", "updated_at"])
+    ).localCheckpoint(eager=False)
+    keys = [tuple(r) for r in fresh.select("Team", "updated_at").collect()]
+    sent = send_notifications(fresh, post, min_batch=min_batch) if keys else 0
+    upsert_batch(fresh, state_path, ["Team", "updated_at"], keys=keys)
     return sent
 
 

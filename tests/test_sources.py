@@ -263,51 +263,32 @@ def test_dynamic_partition_overwrite_backfills_one_day(spark, tmp_path):
 
 
 def test_upsert_batch_is_idempotent_under_replay(spark, tmp_path):
-    """Replaying the same micro-batch through upsert_batch must
-    converge to the identical state (the foreachBatch exactly-once
-    contract under at-least-once redelivery)."""
+    """upsert_batch appends each batch of new keys as one file; replaying
+    a batch writes nothing and an empty batch writes nothing, so the
+    table converges under at-least-once redelivery."""
     from banksy_spark.io import upsert_batch
 
-    p = str(tmp_path / "state")
+    p = tmp_path / "state"
     b1 = spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string")
-    upsert_batch(b1, p, ["id"])
-    b2 = spark.createDataFrame([(2, "y2"), (3, "z")], "id int, v string")
-    upsert_batch(b2, p, ["id"])
-    want = {(1, "x"), (2, "y2"), (3, "z")}
-    got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-    assert got == want
-    # replay batch 2 — state must not change
-    upsert_batch(b2, p, ["id"])
-    got2 = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-    assert got2 == want
+    b2 = spark.createDataFrame([(3, "z"), (4, "w")], "id int, v string")
+    empty = spark.createDataFrame([], "id int, v string")
 
+    def listing():
+        return {f.name: f.stat().st_mtime_ns for f in p.iterdir()}
 
-def test_upsert_batch_version_col_picks_deterministic_winner(spark, tmp_path):
-    """A batch with duplicate keys + version_col keeps exactly the
-    highest-version row per key (the documented last-write-wins
-    contract), and no staging directory is left behind."""
-    import os
-
-    from banksy_spark.io import upsert_batch
-
-    p = str(tmp_path / "vstate")
-    b = spark.createDataFrame(
-        [(1, "old", 1), (1, "new", 2), (2, "only", 7)],
-        "id int, v string, ver int",
-    )
-    upsert_batch(b, p, ["id"], version_col="ver")
-    got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-    assert got == {(1, "new"), (2, "only")}
-    # merge against existing state, replayed twice — still converges
-    b2 = spark.createDataFrame(
-        [(2, "upd", 8), (2, "stale", 3)], "id int, v string, ver int"
-    )
-    for _ in range(2):
-        upsert_batch(b2, p, ["id"], version_col="ver")
-        got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-        assert got == {(1, "new"), (2, "upd")}
-    assert not os.path.exists(p + "__staging__")
-    assert not os.path.exists(p + "__old__")
+    upsert_batch(b1, str(p), ["id"])
+    assert len(list(p.glob("part-*.parquet"))) == 1
+    upsert_batch(b2, str(p), ["id"])
+    assert len(list(p.glob("part-*.parquet"))) == 2
+    want = {(1, "x"), (2, "y"), (3, "z"), (4, "w")}
+    assert {(r["id"], r["v"]) for r in spark.read.parquet(str(p)).collect()} == want
+    before = listing()
+    for batch in (b2, b1, empty):
+        upsert_batch(batch, str(p), ["id"])
+    assert listing() == before
+    assert {(r["id"], r["v"]) for r in spark.read.parquet(str(p)).collect()} == want
+    upsert_batch(empty, str(tmp_path / "none"), ["id"])
+    assert not (tmp_path / "none").exists()
 
 
 def test_html_table_parse_matches_declared_rows():
@@ -407,61 +388,146 @@ def test_scrape_tables_to_df_names_page_and_missing_columns(spark):
 
 
 # Every state a crash can leave an upsert_batch commit in. The steps:
-# (1) write the merge to __staging__ (_SUCCESS last), (2) rename the
-# table to __old__, (3) rename staging to the table, (4) delete __old__.
-# Each case: (staging, table, old) contents — "pre"/"post" commit rows
-# or None — and whether staging is complete, plus what a reader sees.
+# (1) Spark writes the batch to _staging-<name>/ (_SUCCESS last),
+# (2) its one part file is renamed to part-<name>.parquet, (3) the
+# staging directory is deleted. Each case: what a reader sees.
 _CRASH_STATES = {
-    "staging_partial_first_commit": ("post", None, None, False, "pre"),
-    "first_commit_before_step3": ("post", None, None, True, "post"),
-    "staging_partial": ("post", "pre", None, False, "pre"),
-    "staging_complete_before_step2": ("post", "pre", None, True, "pre"),
-    "between_steps_2_and_3": ("post", None, "pre", True, "post"),
-    "after_step3_before_cleanup": (None, "post", "pre", True, "post"),
+    "staging_partial": "pre",
+    "staging_complete_not_renamed": "pre",
+    "renamed_staging_left": "post",
 }
 
 
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("first", [True, False], ids=["first_commit", "later_commit"])
 @pytest.mark.parametrize("crash", sorted(_CRASH_STATES))
-def test_upsert_batch_recovers_every_crash_state(spark, tmp_path, crash):
-    """A crash at any step of an upsert_batch commit leaves a state in
-    which a reader running recovery sees the complete pre-commit or
-    post-commit rows — never a missing or partial table — and replaying
-    the batch converges to the post-commit rows with nothing left over."""
-    import os
-    import shutil
+def test_upsert_batch_survives_every_crash_state(spark, tmp_path, monkeypatch, crash, first):
+    """A crash at any step of an upsert_batch commit leaves a table in
+    which a plain schema'd read sees the complete pre-commit or
+    post-commit rows — never a partial batch — and replaying the batch
+    converges to the post-commit rows with no staging directory left."""
+    from banksy_spark import io
 
-    from banksy_spark.io import read_committed, upsert_batch
+    schema = "id int, v string"
+    b1 = spark.createDataFrame([(1, "x"), (2, "y")], schema)
+    b2 = spark.createDataFrame([(3, "z")], schema)
+    p = tmp_path / "state"
+    pre = set() if first else {(1, "x"), (2, "y")}
+    post = pre | ({(1, "x"), (2, "y")} if first else {(3, "z")})
+    batch = b1 if first else b2
+    if not first:
+        io.upsert_batch(b1, str(p), ["id"])
 
-    staging, table, old, complete, seen = _CRASH_STATES[crash]
-    b1 = spark.createDataFrame([(1, "x"), (2, "y")], "id int, v string")
-    b2 = spark.createDataFrame([(2, "y2"), (3, "z")], "id int, v string")
-    # committed snapshots of both sides, copied into the crash layout
-    pre, post = str(tmp_path / "pre"), str(tmp_path / "post")
-    upsert_batch(b1, pre, ["id"])
-    upsert_batch(b1, post, ["id"])
-    if table is None and old is None:  # the first commit: b1 into nothing
-        batch, want = b1, {"pre": None, "post": {(1, "x"), (2, "y")}}
-    else:
-        upsert_batch(b2, post, ["id"])
-        batch, want = b2, {"pre": {(1, "x"), (2, "y")}, "post": {(1, "x"), (2, "y2"), (3, "z")}}
-    p = str(tmp_path / "state")
-    for suffix, side in (("__staging__", staging), ("", table), ("__old__", old)):
-        if side is not None:
-            shutil.copytree({"pre": pre, "post": post}[side], p + suffix)
-    if not complete:
-        os.remove(p + "__staging__/_SUCCESS")
+    rename = io._rename
+
+    def crash_rename(fs, src, dst):
+        if crash == "renamed_staging_left":
+            rename(fs, src, dst)
+        raise _Crash(crash)
+
+    with monkeypatch.context() as m:
+        m.setattr(io, "_rename", crash_rename)
+        with pytest.raises(_Crash):
+            io.upsert_batch(batch, str(p), ["id"])
+    (staging,) = p.glob("_staging-*")
+    if crash == "staging_partial":  # cut before the job commit: a torn part file
+        (staging / "_SUCCESS").unlink()
+        (part,) = staging.glob("part-*")
+        part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
 
     def read():
-        df = read_committed(spark, p)
-        return None if df is None else {(r["id"], r["v"]) for r in df.collect()}
+        return {(r["id"], r["v"]) for r in spark.read.schema(schema).parquet(str(p)).collect()}
 
-    assert read() == want[seen]
-    upsert_batch(batch, p, ["id"])
-    assert read() == want["post"]
-    upsert_batch(batch, p, ["id"])
-    assert read() == want["post"]
-    assert not os.path.exists(p + "__staging__")
-    assert not os.path.exists(p + "__old__")
+    assert read() == {"pre": pre, "post": post}[_CRASH_STATES[crash]]
+    for _ in range(2):
+        io.upsert_batch(batch, str(p), ["id"])
+        assert read() == post
+    assert len(list(p.glob("part-*.parquet"))) == (1 if first else 2)
+    assert not list(p.glob("_staging-*"))
+
+
+# Every state a crash can leave a compacting commit in: the table's
+# files and the batch are written as one file to _compact-<name>/,
+# renamed to part-<name>.parquet, then the other data files and the
+# staging are deleted.  Each case: what read_appended sees.
+_COMPACTION_CRASH_STATES = {
+    "staging_partial": "pre",
+    "staging_complete_not_renamed": "pre",
+    "renamed_old_files_left": "post",
+    "renamed_old_files_partly_deleted": "post",
+}
+
+
+@pytest.mark.parametrize("crash", sorted(_COMPACTION_CRASH_STATES))
+def test_upsert_batch_compaction_survives_every_crash_state(spark, tmp_path, monkeypatch, crash):
+    """Once the table holds COMPACT_AT files, a commit rewrites it and
+    the batch as one file.  A crash at any step of that leaves a table
+    read_appended sees as the complete pre- or post-commit rows, and
+    replaying the batch converges to one file and no staging."""
+    from banksy_spark import io
+
+    schema = "id int, v string"
+    batches = [spark.createDataFrame([(i, f"v{i}")], schema) for i in range(3)]
+    p = tmp_path / "state"
+    monkeypatch.setattr(io, "COMPACT_AT", 2)
+    for b in batches[:2]:
+        io.upsert_batch(b, str(p), ["id"])
+    pre = {(0, "v0"), (1, "v1")}
+    post = pre | {(2, "v2")}
+    old = set(p.glob("part-*.parquet"))
+    assert len(old) == 2
+
+    rename = io._rename
+
+    def crash_rename(fs, src, dst):
+        if crash.startswith("renamed"):
+            rename(fs, src, dst)
+        raise _Crash(crash)
+
+    with monkeypatch.context() as m:
+        m.setattr(io, "_rename", crash_rename)
+        with pytest.raises(_Crash):
+            io.upsert_batch(batches[2], str(p), ["id"])
+    (staging,) = p.glob("_compact-*")
+    if crash == "staging_partial":  # cut before the job commit: a torn part file
+        (staging / "_SUCCESS").unlink()
+        (part,) = staging.glob("part-*")
+        part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
+    if crash == "renamed_old_files_partly_deleted":
+        min(old).unlink()
+
+    def read():
+        rows = io.read_appended(spark, str(p), schema).collect()
+        assert len(rows) == len(set(rows))
+        return {(r["id"], r["v"]) for r in rows}
+
+    assert read() == {"pre": pre, "post": post}[_COMPACTION_CRASH_STATES[crash]]
+    for _ in range(2):
+        io.upsert_batch(batches[2], str(p), ["id"])
+        assert read() == post
+    (compacted,) = p.glob("part-*.parquet")
+    assert compacted not in old
+    assert not list(p.glob("_compact-*")) and not list(p.glob("_staging-*"))
+    assert {(r["id"], r["v"]) for r in spark.read.parquet(str(compacted)).collect()} == post
+
+
+def test_read_appended_refuses_a_table_cut_mid_swap(spark, tmp_path):
+    """Before the first commit read_appended gives an empty frame with
+    the schema and creates nothing; a table that is absent while a
+    sibling of the earlier directory-swap commit exists raises instead
+    of reading as empty."""
+    from banksy_spark.io import read_appended
+
+    p = tmp_path / "state"
+    empty = read_appended(spark, str(p), "id int, v string")
+    assert empty.columns == ["id", "v"] and empty.count() == 0
+    assert not p.exists()
+    (tmp_path / "state__old__").mkdir()
+    with pytest.raises(IOError, match="state__old__"):
+        read_appended(spark, str(p), "id int, v string")
 
 
 def test_write_sorted_shards_range_disjoint_and_balanced(spark, tmp_path):

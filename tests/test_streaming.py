@@ -661,7 +661,7 @@ def test_scan_app_stream_equals_batch_with_replay(spark, tmp_path):
     state — over 3 micro-batches, equals the sequential batch form,
     and a REPLAYED epoch (Structured Streaming's at-least-once
     redelivery) delivers nothing and leaves the state identical
-    (exercises upsert_batch's staging-rename swap under replay)."""
+    (exercises upsert_batch's write-once append under replay)."""
     from banksy_spark.streaming.app import process_scan_epoch, run_scan_stream
 
     payload_dir = str(tmp_path / "payloads")
@@ -698,7 +698,7 @@ def test_scan_app_stream_equals_batch_with_replay(spark, tmp_path):
     assert len(_alert_log(spark, state_s)) == 4  # 2 teams x 2 delivered epochs
 
     # replayed epoch: redeliver scan 2 into the stream state — nothing
-    # sends, the upsert path re-merges to the identical table
+    # sends and nothing is appended
     before = _alert_log(spark, state_s)
     ts2, rows2 = _EPOCHS[1]
     sent = process_scan_epoch(
@@ -710,29 +710,118 @@ def test_scan_app_stream_equals_batch_with_replay(spark, tmp_path):
     assert _alert_log(spark, state_s) == before
 
 
-def test_scan_app_replay_after_crash_inside_commit(spark, tmp_path):
-    """A commit cut after its merge is staged in full, and before the
-    merge is renamed into place, can leave the alert log only in
-    ``__staging__``.  Replaying that epoch must roll the commit forward
-    before reading the log, so it posts nothing and the log is the one
-    the first delivery committed."""
-    import os
+class _Crash(Exception):
+    pass
+
+
+# where an epoch is cut -> whether its replay repeats the epoch's post:
+# only a crash between the send and the rename of the epoch's file does
+# (the documented at-least-once window)
+_EPOCH_CRASHES = {
+    "after_decision_checkpoint": False,
+    "after_send": True,
+    "after_staging_write": True,
+    "after_rename": False,
+}
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_scan(spark, tmp_path_factory):
+    """(posts, alert log) of the _EPOCHS run with no crash."""
+    from banksy_spark.streaming.app import process_scan_epoch
+
+    state = str(tmp_path_factory.mktemp("uninterrupted") / "state")
+    posts: list[str] = []
+    for ts, rows in _EPOCHS:
+        process_scan_epoch(spark, {"NFL": _odds_page(rows)}, ts, state, posts.append, max_per_day=2)
+    return posts, _alert_log(spark, state)
+
+
+@pytest.mark.parametrize("crash", sorted(_EPOCH_CRASHES))
+def test_scan_app_replay_after_crash_at_each_step(
+    spark, tmp_path, monkeypatch, uninterrupted_scan, crash
+):
+    """The second of the _EPOCHS is cut at one step and replayed, then
+    the third runs.  The log ends equal to the uninterrupted run's with
+    each (Team, updated_at) once, every expected alert is posted, and
+    the crashed epoch's post repeats only when the crash fell between
+    the send and the rename."""
+    from banksy_spark import io
+    from banksy_spark.sources import adapters
+    from banksy_spark.streaming.app import process_scan_epoch
+
+    want_posts, want_log = uninterrupted_scan
+    send, rename = adapters.send_notifications, io._rename
+
+    def crash_send(alerts, post, **kwargs):
+        if crash == "after_send":
+            send(alerts, post, **kwargs)
+        raise _Crash(crash)
+
+    def crash_rename(fs, src, dst):
+        if crash == "after_rename":
+            rename(fs, src, dst)
+        raise _Crash(crash)
+
+    state = tmp_path / "state"
+    posts: list[str] = []
+    for i, (ts, rows) in enumerate(_EPOCHS):
+        page = {"NFL": _odds_page(rows)}
+        if i == 1:
+            with monkeypatch.context() as m:
+                if crash in ("after_decision_checkpoint", "after_send"):
+                    m.setattr(adapters, "send_notifications", crash_send)
+                else:
+                    m.setattr(io, "_rename", crash_rename)
+                with pytest.raises(_Crash):
+                    process_scan_epoch(spark, page, ts, str(state), posts.append, max_per_day=2)
+        process_scan_epoch(spark, page, ts, str(state), posts.append, max_per_day=2)
+
+    keys = [(r["Team"], r["updated_at"]) for r in spark.read.parquet(str(state)).collect()]
+    assert len(keys) == len(set(keys))
+    assert _alert_log(spark, str(state)) == want_log
+    assert len(want_posts) == 2  # the third epoch is rate-limited away
+    repeated = want_posts[:2] + want_posts[1:]
+    assert posts == (repeated if _EPOCH_CRASHES[crash] else want_posts)
+    assert not list(state.glob("_staging-*"))
+
+
+def test_scan_app_commit_appends_one_file(spark, tmp_path):
+    """An epoch's commit adds one file holding exactly the rows the
+    epoch committed, and leaves the existing log file as it was: the
+    log is appended to, never rewritten."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from banksy_spark.streaming.app import process_scan_epoch
 
-    state = str(tmp_path / "state")
+    state = tmp_path / "state"
+    state.mkdir()
+    seed = state / "part-00000.parquet"
+    t0 = dt.datetime(2024, 4, 1, tzinfo=dt.timezone.utc)
+    pq.write_table(
+        pa.table({
+            "Team": pa.array([f"Seed{i % 50}" for i in range(1000)], pa.string()),
+            "updated_at": pa.array(
+                [t0 + dt.timedelta(minutes=i) for i in range(1000)], pa.timestamp("us", tz="UTC")
+            ),
+            "combined": pa.array([f"seed alert {i}" for i in range(1000)], pa.string()),
+        }),
+        seed,
+    )
+    before = (seed.read_bytes(), seed.stat().st_mtime_ns)
+    seeded = _alert_log(spark, str(state))
     posts: list[str] = []
     ts, rows = _EPOCHS[0]
-    page = {"NFL": _odds_page(rows)}
-    assert process_scan_epoch(spark, page, ts, state, posts.append) > 0
-    assert len(posts) == 1
-    before = _alert_log(spark, state)
-    os.rename(state, state + "__staging__")
-    sent = process_scan_epoch(spark, page, ts, state, posts.append)
-    assert sent == 0
-    assert len(posts) == 1, posts
-    assert _alert_log(spark, state) == before
-    assert not os.path.exists(state + "__staging__")
+    assert process_scan_epoch(spark, {"NFL": _odds_page(rows)}, ts, str(state), posts.append) == 2
+
+    assert (seed.read_bytes(), seed.stat().st_mtime_ns) == before
+    (new,) = [f for f in state.glob("part-*.parquet") if f != seed]
+    committed = _alert_log(spark, str(new))
+    assert committed == _alert_log(spark, str(state)) - seeded
+    assert sorted(c for _, _, c in committed) == posts[0].split("\n")
 
 
 def test_scan_app_corrupt_state_fails_loudly(spark, tmp_path):

@@ -1,172 +1,275 @@
-"""Linear-time ordered folds for the per-series recurrence family
-(w_ewma, w_cusum_changepoint, w_holt_linear, w_capped_sessions,
-a_survival_km).
+"""Ordered per-key folds: each recurrence is written once, as a step
+kernel, and run by one batch driver and one stream driver.
 
-Each of these queries computes a TRUE recurrence — the per-element
-update reads the previous element's state — so no window function can
-express it and both engines define the result as a left fold in
-event order. Until round 14 the Spark side ran the fold with the
-``aggregate`` higher-order function whose accumulator carried the
-per-step outputs in an immutable ARRAY: every step's ``array_append``
-copies the whole accumulator, so a series of length n paid O(n²)
-element copies (guide §5 memory/CPU hazard — invisible at sf0.1 where
-series are short, quadratic for long per-key histories at scale).
+The recurrences here (EWMA, CUSUM, Holt, capped sessions, Kaplan-Meier,
+the capped balance and Markov successor pairing) are left folds whose
+per-row update reads the previous row's state, so no window function
+can express them. Each is one :class:`Fold`:
 
-Here the fold runs inside an Arrow-batched Python UDF (guide §4.2:
-hand whole batches across the boundary once, do the sequential work in
-native code): the carried state is O(1) Python scalars, the output is
-built with an amortized-O(1) ``list.append`` builder the result values
-never see, and each step performs the IDENTICAL IEEE-754 operation
-sequence as the JVM expression it replaces (documented per fold, and
-pinned bit-exact by the DuckDB oracle hashes at every SF plus
-tests/test_folds.py against the old expression). Python floats are
-IEEE binary64 with the same +,-,*,/ rounding as the JVM, so replaying
-the same operation order yields the same bits.
+- ``step(carry, *cols) -> (carry, outs)`` folds ONE key's rows in sort
+  order. ``cols`` are the ``inputs`` columns as Python lists; ``outs``
+  holds one list per ``outputs`` column, aligned with the input rows.
+  The carry is a tuple shaped like ``state``, so the stream driver
+  stores it in ``GroupState`` as is.
+- Python floats are IEEE binary64 with the same +,-,*,/ rounding as the
+  JVM and DuckDB, so a step that replays the oracle's operation order
+  yields the oracle's bits; each step states the order it keeps, and
+  the DuckDB oracle hashes plus tests/test_folds.py pin it.
 
-Scale: one Arrow crossing per series row, carrying exactly the columns
-the fold needs (the callers pass plain numeric arrays, not the full
-struct sequence); state never grows with series length. The arrays
-themselves are the same ``collect_list`` payloads the old expression
-folded over — the per-series-in-one-row posture (and its streaming
-twin for unbounded histories) is unchanged.
+Two drivers run every kernel; both emit the input columns followed by
+the step's outputs:
+
+- :func:`fold_batch` — ``repartition(key)`` → ``sortWithinPartitions(key,
+  *order)`` → ``mapInPandas``. A key's rows sit in one partition, in
+  order, but may span Arrow batches, so the iterator carries the carry
+  across batches and resets it when the key changes. Memory is one
+  Arrow batch whatever the series length: no series is ever collected
+  into one row.
+- :func:`fold_stream` — ``groupBy(key).applyInPandasWithState``. Spark
+  clusters a micro-batch's rows by key but hands a key's chunks over in
+  arbitrary order, so the group is concatenated and sorted before the
+  step; the carry lives in ``GroupState``. Across micro-batches the
+  ingestion contract holds the order: a key's timeline must not
+  interleave across batches (time-split files in modification order
+  locally; a source partitioned by the key in production).
+
+``applyInPandasWithState`` rejects batch frames, hence two drivers.
 """
 
 from __future__ import annotations
 
+import sys
+from collections.abc import Callable, Iterator
+from typing import Any, NamedTuple
+
+import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# Ship this module's kernels and drivers to the Python workers by value:
+# a worker started outside the repo root cannot import banksy_spark.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def _series_udf(ret_type):
-    """pandas_udf factory: per-row sequential folds over array columns."""
+class Fold(NamedTuple):
+    step: Callable[..., tuple[tuple, tuple[list, ...]]]
+    init: tuple  # carry before a key's first row
+    inputs: tuple[str, ...]  # columns handed to ``step``, in this order
+    outputs: str  # DDL of the columns ``step`` returns
+    state: str  # DDL of the carry
 
-    def deco(fn):
-        return F.pandas_udf(fn, returnType=ret_type)
 
-    return deco
+def _names(ddl: str) -> list[str]:
+    return [c.split()[0] for c in ddl.split(",")]
+
+
+def _schema(df: DataFrame, fold: Fold) -> str:
+    cols = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema]
+    return ", ".join([*cols, fold.outputs])
+
+
+def fold_batch(
+    df: DataFrame, fold: Fold, key: str | None, order: tuple[str, ...]
+) -> DataFrame:
+    """Run ``fold`` per ``key`` over a bounded frame in ``order``;
+    ``key=None`` folds the whole frame as one series."""
+    names = _names(fold.outputs)
+
+    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry, last = fold.init, None
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            cols = [pdf[c].tolist() for c in fold.inputs]
+            if key is None:
+                keys, starts = None, [0]
+            else:
+                arr = pdf[key].to_numpy()
+                keys = arr.tolist()
+                starts = [0, *(np.flatnonzero(arr[1:] != arr[:-1]) + 1).tolist()]
+            outs: list[list] = [[] for _ in names]
+            for s, e in zip(starts, [*starts[1:], len(pdf)]):
+                if keys is not None and (s or keys[s] != last):
+                    carry, last = fold.init, keys[s]
+                carry, part = fold.step(carry, *(c[s:e] for c in cols))
+                for o, p in zip(outs, part):
+                    o.extend(p)
+            yield pdf.assign(**dict(zip(names, outs)))
+
+    if key is None:
+        placed = df.repartition(1).sortWithinPartitions(*order)
+    else:
+        placed = df.repartition(key).sortWithinPartitions(key, *order)
+    return placed.mapInPandas(run, _schema(df, fold))
+
+
+def fold_stream(
+    df: DataFrame, fold: Fold, key: str, order: tuple[str, ...]
+) -> DataFrame:
+    """Run ``fold`` per ``key`` over a (possibly streaming) frame, the
+    carry kept in the state store across micro-batches."""
+    names = _names(fold.outputs)
+
+    def group(
+        _key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        carry = tuple(state.get) if state.exists else fold.init
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True)
+            pdf = pdf.sort_values(list(order), ignore_index=True)
+            carry, outs = fold.step(carry, *(pdf[c].tolist() for c in fold.inputs))
+            yield pdf.assign(**dict(zip(names, outs)))
+        state.update(carry)
+
+    return df.groupBy(key).applyInPandasWithState(
+        group,
+        outputStructType=_schema(df, fold),
+        stateStructType=fold.state,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 # --- EWMA: acc = acc*0.75 + 0.25*x, zero-seeded -----------------------------
-# JVM expression replaced: aggregate(lst, 0.0D, (acc, x) -> acc * 0.75D +
-# 0.25D * x) per expanding frame. Op order per step: (acc*0.75) + (0.25*x)
-# — two multiplies then one add, exactly as below. A NULL element never
-# enters the old fold (collect_list drops nulls from the frame) but its
-# row still emits the running acc — replicated by the `is not None` guard.
-@_series_udf(T.ArrayType(T.DoubleType()))
-def ewma_scan(values: pd.Series) -> pd.Series:
-    out_all = []
-    for arr in values:
-        acc = 0.0
-        out = []
-        push = out.append
-        for x in arr:
-            if x is not None:
-                acc = acc * 0.75 + 0.25 * x
-            push(acc)
-        out_all.append(out)
-    return pd.Series(out_all)
+# Op order per step: (acc*0.75) + (0.25*x), the oracle's list_reduce
+# lambda. A NULL value reaches the step as NaN and every later row of
+# the key reads NULL, as in the oracle (its list() keeps the NULL).
+def _ewma(carry, value):
+    (acc,) = carry
+    out = []
+    push = out.append
+    for x in value:
+        acc = acc * 0.75 + 0.25 * x
+        push(acc)
+    return (acc,), (out,)
+
+
+EWMA = Fold(_ewma, (0.0,), ("value",), "ewma double", "acc double")
 
 
 # --- CUSUM: S_t = greatest(0, ((S + x) - mu) - 0.5*sigma) -------------------
-# JVM expression replaced (round5.py): per step
-#   v = st.acc + CAST(x.cents AS DOUBLE) - mu - 0.5D * sigma
-# which parses left-associative as ((acc + x) - mu) - (0.5*sigma), then
-# greatest(0.0, v). Spark's greatest treats NaN as largest, i.e. returns
-# v unless v < 0.0 — the branch below preserves that (NaN < 0.0 is false).
-@_series_udf(T.ArrayType(T.DoubleType()))
-def cusum_scan(xs: pd.Series, mu: pd.Series, sigma: pd.Series) -> pd.Series:
-    out_all = []
-    for arr, m, s in zip(xs, mu, sigma):
-        m = float(m)
-        hs = 0.5 * float(s)
-        acc = 0.0
-        out = []
-        push = out.append
-        for x in arr:
-            v = ((acc + x) - m) - hs
-            acc = 0.0 if v < 0.0 else v
-            push(acc)
-        out_all.append(out)
-    return pd.Series(out_all)
+# Left-associative like the oracle's `acc + x - mu - 0.5e0 * sigma`. The
+# clamp keeps NaN (NaN < 0.0 is false), as Spark's and DuckDB's greatest
+# do; drift is NULL where S is NaN, a NULL compared. mu/sigma are
+# per-key constants carried as columns.
+def _cusum(carry, cents, mu, sigma):
+    (acc,) = carry
+    m, hs, lim = mu[0], 0.5 * sigma[0], 4.0 * sigma[0]
+    s_pos, drift = [], []
+    for x in cents:
+        v = ((acc + float(x)) - m) - hs
+        acc = 0.0 if v < 0.0 else v
+        s_pos.append(acc)
+        drift.append(acc > lim if acc == acc else None)
+    return (acc,), (s_pos, drift)
+
+
+CUSUM = Fold(
+    _cusum,
+    (0.0,),
+    ("cents", "mu", "sigma"),
+    "s_pos double, drift boolean",
+    "acc double",
+)
 
 
 # --- Holt linear: l_1 = x_1, b_1 = 0; then ----------------------------------
 #   l' = 0.5*x + 0.5*(l + b)
-#   b' = 0.5*(l' - l) + 0.5*b     [the JVM form re-inlines l' textually:
-#                                  0.5*(0.5*x + 0.5*(l+b) - l) + 0.5*b —
+#   b' = 0.5*(l' - l) + 0.5*b     [the oracle re-inlines l' textually:
 #                                  same bits, l' is the same rounded value]
-@_series_udf(
-    T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("l", T.DoubleType()),
-                T.StructField("b", T.DoubleType()),
-            ]
-        )
-    )
+def _holt(carry, cents):
+    t, lvl, trd = carry
+    level, trend, fc = [], [], []
+    for x in cents:
+        x = float(x)
+        if t == 0:
+            lvl, trd = x, 0.0
+        else:
+            nl = 0.5 * x + 0.5 * (lvl + trd)
+            trd = 0.5 * (nl - lvl) + 0.5 * trd
+            lvl = nl
+        t += 1
+        level.append(lvl)
+        trend.append(trd)
+        fc.append(lvl + trd)
+    return (t, lvl, trd), (level, trend, fc)
+
+
+HOLT = Fold(
+    _holt,
+    (0, 0.0, 0.0),
+    ("cents",),
+    "level double, trend double, forecast_next double",
+    "t bigint, l double, b double",
 )
-def holt_scan(xs: pd.Series) -> pd.Series:
-    out_all = []
-    for arr in xs:
-        lvl = 0.0
-        trd = 0.0
-        first = True
-        out = []
-        push = out.append
-        for x in arr:
-            if first:
-                lvl, trd, first = x, 0.0, False
-            else:
-                nl = 0.5 * x + 0.5 * (lvl + trd)
-                trd = 0.5 * (nl - lvl) + 0.5 * trd
-                lvl = nl
-            push({"l": lvl, "b": trd})
-        out_all.append(out)
-    return pd.Series(out_all)
 
 
 # --- Capped sessionization: new session iff first event, gap, or cap -------
-# Integer microsecond arithmetic end-to-end — no rounding anywhere, so
-# only the branch structure must match (it is the JVM CASE verbatim).
-@_series_udf(T.ArrayType(T.LongType()))
-def capped_sessions_scan(
-    ts: pd.Series, gap_us: pd.Series, cap_us: pd.Series
-) -> pd.Series:
-    out_all = []
-    for arr, gap, cap in zip(ts, gap_us, cap_us):
-        gap = int(gap)
-        cap = int(cap)
-        sid = 0
-        prev = None
-        anchor = 0
+# Integer microseconds end to end — no rounding, only the branch
+# structure must match the oracle's CASE.
+def capped_sessions(gap_us: int, cap_us: int) -> Fold:
+    def step(carry, ts_us):
+        sid, prev, anchor = carry
         out = []
         push = out.append
-        for t in arr:
-            t = int(t)
-            if prev is None or t - prev > gap or t - anchor > cap:
+        for t in ts_us:
+            if prev is None or t - prev > gap_us or t - anchor > cap_us:
                 sid += 1
                 anchor = t
             prev = t
             push(sid)
-        out_all.append(out)
-    return pd.Series(out_all)
+        return (sid, prev, anchor), (out,)
+
+    return Fold(
+        step,
+        (0, None, None),
+        ("ts_us",),
+        "session_id bigint",
+        "sid bigint, prev_us bigint, anchor_us bigint",
+    )
 
 
 # --- Kaplan-Meier product-limit: S *= (1 - d/n_at_risk) ---------------------
-# Op order per step: q = 1.0 - (d / n); acc = acc * q — the JVM form
-# st.acc * (1.0D - CAST(x.d AS DOUBLE) / x.n_at_risk) evaluates the
-# division first (double / bigint promotes the bigint), then the
-# subtraction, then the multiply; ints < 2^53 convert exactly.
-@_series_udf(T.ArrayType(T.DoubleType()))
-def km_scan(d: pd.Series, n_at_risk: pd.Series) -> pd.Series:
-    out_all = []
-    for darr, narr in zip(d, n_at_risk):
-        acc = 1.0
+# Op order per step: the division first (ints < 2^53 convert exactly),
+# then the subtraction, then the multiply — the oracle's factor order.
+def _km(carry, d, n_at_risk):
+    (acc,) = carry
+    out = []
+    for di, ni in zip(d, n_at_risk):
+        acc = acc * (1.0 - float(di) / float(ni))
+        out.append(acc)
+    return (acc,), (out,)
+
+
+KM = Fold(_km, (1.0,), ("d", "n_at_risk"), "survival double", "acc double")
+
+
+# --- Capped running balance: acc' = clamp(acc + (value - offset), 0, cap) --
+# One IEEE add then min/max per event, the oracle's list_reduce order.
+# The clamp makes the recurrence non-linear (no window frame expresses
+# it) and perfectly state-incremental: the history is one double.
+def capped_balance(cap: float, offset: float) -> Fold:
+    def step(carry, value):
+        (acc,) = carry
         out = []
-        push = out.append
-        for di, ni in zip(darr, narr):
-            acc = acc * (1.0 - float(di) / float(ni))
-            push(acc)
-        out_all.append(out)
-    return pd.Series(out_all)
+        for v in value:
+            acc = max(0.0, min(cap, acc + (v - offset)))
+            out.append(acc)
+        return (acc,), (out,)
+
+    return Fold(step, (0.0,), ("value",), "capped_balance double", "balance double")
+
+
+# --- Markov successor pairing: from_type = the key's previous event_type ----
+# lead() over the per-key order, computed incrementally: the carry is the
+# last event_type, so a key's first row in a later chunk pairs with the
+# last row of the earlier one. NULL from_type marks a row with no pair.
+def _markov(carry, event_type):
+    (last,) = carry
+    return (event_type[-1],), ([last, *event_type[:-1]],)
+
+
+MARKOV = Fold(_markov, (None,), ("event_type",), "from_type string", "last_type string")

@@ -24,6 +24,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from banksy_spark.operators.folds import (
+    CUSUM,
+    EWMA,
+    HOLT,
+    MARKOV,
+    capped_balance,
+    capped_sessions,
+    fold_batch,
+    fold_stream,
+)
+
 _OUT_SCHEMA = "user_id bigint, event_id bigint, day string, nth_today int"
 _STATE_SCHEMA = "day string, n int"
 
@@ -605,45 +616,70 @@ def bollinger_batch(daily: DataFrame, window: int = 20) -> DataFrame:
     return daily.groupBy("pri").applyInPandas(replay, _BB_OUT_SCHEMA)
 
 
-# --- Capped running balance (saturating token bucket) -----------------------
+# --- Ordered per-key folds ----------------------------------------------------
+# Each recurrence is one step kernel in operators/folds.py; fold_stream
+# keeps its carry in the state store, fold_batch replays it over a
+# bounded frame. tests/test_streaming.py proves every stream here equal
+# to its batch twin on a time-split stream.
 
-_CB_OUT_SCHEMA = "event_id bigint, user_id bigint, capped_balance double"
-_CB_STATE_SCHEMA = "balance double"
+
+def ewma_stream(events: DataFrame) -> DataFrame:
+    """Per-user incremental EWMA (alpha=0.25, zero-seeded, (ts,
+    event_id) order) — the streaming twin of ``w_ewma``; state is one
+    double per user."""
+    out = fold_stream(
+        events.select("user_id", "event_id", "ts", "value"),
+        EWMA,
+        "user_id",
+        ("ts", "event_id"),
+    )
+    return out.select("user_id", "event_id", "ewma")
 
 
-def _capped_fold(cap: float, base: float, offset: float):
-    """Per-user saturating-balance fold: acc' = clamp(acc + (value -
-    offset), 0, cap). The clamp makes the recurrence NON-LINEAR — no
-    window frame expresses it — and also makes it PERFECTLY
-    state-incremental: the entire history compresses into one double.
-    The float sequence is the oracle's: one IEEE add then min/max per
-    event, identical operation order to w_capped_running_sum's
-    list_reduce lambda, so batch, replay and stream are bit-exact."""
+def cusum_stream(
+    daily: DataFrame, params: dict[str, tuple[float, float]]
+) -> DataFrame:
+    """Incremental CUSUM over a (pri, day, cents) stream — the twin of
+    ``w_cusum_changepoint``. (mu, sigma) per key are TRAINED on history
+    (``suite.round5.cusum_parts``) and frozen as detector constants: the
+    standard fit-offline/monitor-online split of a sequential test.
+    State is one double per key."""
+    fitted = daily.sparkSession.createDataFrame(
+        [(k, mu, sigma) for k, (mu, sigma) in params.items()],
+        "pri string, mu double, sigma double",
+    )
+    out = fold_stream(
+        daily.select("pri", "day", "cents").join(fitted, "pri"),
+        CUSUM,
+        "pri",
+        ("day",),
+    )
+    return out.select("pri", "day", "cents", "s_pos", "drift")
 
-    def _fold(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        acc = float(state.get[0]) if state.exists else base
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            out: list[float] = []
-            for v in pdf["value"]:
-                acc = max(0.0, min(cap, acc + (float(v) - offset)))
-                out.append(acc)
-            yield pd.DataFrame(
-                {
-                    "event_id": pd.array(pdf["event_id"], dtype="int64"),
-                    "user_id": key[0],
-                    "capped_balance": pd.array(out, dtype="float64"),
-                }
-            )
-        state.update((acc,))
 
-    return _fold
+def holt_stream(daily: DataFrame) -> DataFrame:
+    """Incremental Holt level+trend over a (pri, day, cents) stream —
+    the twin of ``w_holt_linear``; state is (t, level, trend) per key."""
+    return fold_stream(daily.select("pri", "day", "cents"), HOLT, "pri", ("day",))
+
+
+def capped_sessions_stream(events: DataFrame) -> DataFrame:
+    """Per-user incremental gap+cap session assignment — the twin of
+    ``w_capped_sessions``: session id, last-event µs and session-start
+    anchor µs carry across micro-batches, so a session spanning a batch
+    boundary is neither re-opened nor re-capped."""
+    from banksy_spark.suite.round5e import _CAP_US, _GAP_US
+
+    out = fold_stream(
+        events.select("user_id", "event_id", F.unix_micros("ts").alias("ts_us")),
+        capped_sessions(_GAP_US, _CAP_US),
+        "user_id",
+        ("ts_us", "event_id"),
+    )
+    return out.select("user_id", "event_id", "session_id")
+
+
+_CB_COLS = ("event_id", "user_id", "ts", "value")
 
 
 def capped_balance_stateful(
@@ -655,145 +691,59 @@ def capped_balance_stateful(
     so no buffer is ever needed) — the classic streaming primitive:
     rate limiters, inventory levels, prepaid balances. Input columns:
     event_id bigint, user_id bigint, ts timestamp, value double."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _capped_fold(cap, 0.0, offset),
-        outputStructType=_CB_OUT_SCHEMA,
-        stateStructType=_CB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = fold_stream(
+        events.select(*_CB_COLS),
+        capped_balance(cap, offset),
+        "user_id",
+        ("ts", "event_id"),
     )
+    return out.select("event_id", "user_id", "capped_balance")
 
 
 def capped_balance_batch(
     events: DataFrame, cap: float = 100.0, offset: float = 50.0
 ) -> DataFrame:
-    """Batch replay of :func:`capped_balance_stateful`: the identical
-    clamp recurrence (same IEEE op order — one add then min/max per
-    event), run in the ``repartition(user_id) + sortWithinPartitions +
-    mapInPandas`` shape rather than ``groupBy().applyInPandas`` — the
-    same reshape :func:`rate_limit_batch` documents: with ~1.5k users
-    the per-group invocation overhead of applyInPandas dominated
-    (measured 3.25 s vs 1.2 s at sf0.1; the Python fold itself is
-    ~30 ms per 200k rows). A user's rows all land in one partition
-    (hash repartition), so the fold carries (user, balance) across
-    Arrow batches exactly like the state store carries it across
-    micro-batches; partition boundaries never split a user."""
+    """Batch replay of :func:`capped_balance_stateful`: the same kernel
+    through ``fold_batch``, whose mapInPandas shape replaced a per-group
+    ``applyInPandas`` whose invocation overhead dominated at ~1.5k users
+    (3.25 s vs 1.2 s at sf0.1)."""
+    out = fold_batch(
+        events.select(*_CB_COLS),
+        capped_balance(cap, offset),
+        "user_id",
+        ("ts", "event_id"),
+    )
+    return out.select("event_id", "user_id", "capped_balance")
 
-    def fold_map(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_uid, acc = None, 0.0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            uids = pdf["user_id"].to_numpy()
-            vals = pdf["value"].to_numpy().tolist()
-            out: list[float] = []
-            for u, v in zip(uids.tolist(), vals):
-                if u != last_uid:
-                    last_uid, acc = u, 0.0
-                acc = max(0.0, min(cap, acc + (v - offset)))
-                out.append(acc)
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"].to_numpy(),
-                    "user_id": uids,
-                    "capped_balance": pd.array(out, dtype="float64"),
-                }
-            )
 
-    return (
-        events.select("event_id", "user_id", "ts", "value")
-        .repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(fold_map, _CB_OUT_SCHEMA)
+def _markov_pairs(folded: DataFrame) -> DataFrame:
+    return folded.where(F.col("from_type").isNotNull()).select(
+        "from_type", F.col("event_type").alias("to_type")
     )
 
 
-# --- Markov transition pairs (last-event keyed state) ------------------------
-
-_MK_OUT_SCHEMA = "from_type string, to_type string"
-_MK_STATE_SCHEMA = "last_type string"
-
-
-def _markov_fold():
-    """Per-user successor pairing: each event forms the pair
-    (previous event_type, current event_type); state carries ONLY the
-    last event_type per user, so the first event of a later
-    micro-batch pairs with the last event of the previous one —
-    exactly lead() over the per-user total order, computed
-    incrementally. Transition COUNTS need no state at all downstream:
-    they are an ordinary streaming-aggregatable groupBy over the
-    emitted pairs (counts are associative), which is why the operator
-    emits pairs, not counts."""
-
-    def _fold(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last = state.get[0] if state.exists else None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            types = list(pdf["event_type"])
-            seq = ([last] if last is not None else []) + types
-            if len(seq) >= 2:
-                yield pd.DataFrame(
-                    {"from_type": seq[:-1], "to_type": seq[1:]}
-                )
-            last = types[-1]
-        state.update((last,))
-
-    return _fold
+_MK_COLS = ("user_id", "ts", "event_id", "event_type")
 
 
 def markov_pairs_stateful(events: DataFrame) -> DataFrame:
     """Streaming first-order transition pairs per user — the
     state-incremental twin of ``stream_markov_transitions``'s lead()
-    stage. State is one string per user."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _markov_fold(),
-        outputStructType=_MK_OUT_SCHEMA,
-        stateStructType=_MK_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    stage. State is the last event_type per user. Transition COUNTS
+    need no further state: they are an ordinary associative groupBy
+    over the emitted pairs, which is why the operator emits pairs."""
+    folded = fold_stream(
+        events.select(*_MK_COLS), MARKOV, "user_id", ("ts", "event_id")
     )
+    return _markov_pairs(folded)
 
 
 def markov_pairs_batch(events: DataFrame) -> DataFrame:
-    """Batch replay of :func:`markov_pairs_stateful`: identical
-    successor pairing in the mapInPandas carry shape (see
-    :func:`capped_balance_batch` for why) — state is (user, last
-    event_type), carried across Arrow batches within the user-hashed,
-    (user, ts, event_id)-sorted partition."""
-
-    def pair_map(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_uid, last_type = None, None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            uids = pdf["user_id"].to_numpy().tolist()
-            types = list(pdf["event_type"])
-            fr: list[str] = []
-            to: list[str] = []
-            for u, t in zip(uids, types):
-                if u == last_uid and last_type is not None:
-                    fr.append(last_type)
-                    to.append(t)
-                last_uid, last_type = u, t
-            yield pd.DataFrame(
-                {
-                    "from_type": pd.array(fr, dtype="str"),
-                    "to_type": pd.array(to, dtype="str"),
-                }
-            )
-
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(pair_map, _MK_OUT_SCHEMA)
+    """Batch replay of :func:`markov_pairs_stateful`: the same kernel
+    through ``fold_batch``."""
+    folded = fold_batch(
+        events.select(*_MK_COLS), MARKOV, "user_id", ("ts", "event_id")
     )
+    return _markov_pairs(folded)
 
 
 # --- A-ES weighted reservoir (without replacement) ----------------------------

@@ -63,15 +63,12 @@ from banksy_spark.suite import round13b  # noqa: E402,F401
 from banksy_spark.suite import round13c  # noqa: E402,F401
 from banksy_spark.suite import round13d  # noqa: E402,F401
 
-# Rotate the newest / highest-risk queries into the driver's ~50-query
-# verification window (it samples the FIRST 50 registry entries).
-# Round 14 = round-13-born queries first (rotation_plan.R14 — every
-# query registered during round 13, never driver-verified), padded to
-# 50 with the highest-residual-risk re-checks not covered by the R12
-# or R13 windows (rotation_plan.R14_RECHECK_FILL). Applied by
-# tools/rotate.py once CORRECTNESS_r13.json landed.
-# Python dicts preserve insertion order, so rebuilding the dict IS the
-# rotation.
+# The external correctness check samples the FIRST 50 registry
+# entries, so _FRONT names the queries registered first: the last
+# window chosen (round-13-born queries, padded with high-risk
+# re-checks). Every query has since been inside such a window; edit
+# the list by hand to aim a later check. Python dicts preserve
+# insertion order, so rebuilding the dict IS the reordering.
 _FRONT = [
     "ml_cuped_stratified",
     "ml_srm_check",

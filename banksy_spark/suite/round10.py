@@ -13,11 +13,11 @@ twins (round-9 verdict item 6).
 Both follow the round-9 Bollinger discipline — the state store form
 (applyInPandasWithState, cross-micro-batch pytest), the batch replay
 (registered here), and the window-form DuckDB oracle are all
-bit-identical — with one round-10 refinement: the batch replays run
-the identical recurrence in the repartition + sortWithinPartitions +
-mapInPandas carry shape rather than per-group applyInPandas
-(rate_limit_batch's documented reshape; per-group invocation overhead
-dominated at ~1.5k users, measured 3.25→0.75 s and 3.17→1.08 s at
+bit-identical. Each recurrence is one step kernel in
+operators/folds.py: the stream runs it through fold_stream, the batch
+replay through fold_batch (repartition + sortWithinPartitions +
+mapInPandas rather than per-group applyInPandas, whose invocation
+overhead dominated at ~1.5k users: 3.25→0.75 s and 3.17→1.08 s at
 sf0.1). State carried across Arrow batches within a user-hashed
 sorted partition is exactly the state the store carries across
 micro-batches, and the three-SF oracle sweep plus the stream==batch
@@ -56,11 +56,12 @@ from banksy_spark.suite.registry import T, fan_out, query
     "fold applies one IEEE add then min/max per event in the oracle's "
     "operation order, so stream, replay and the window-collect form "
     "are bit-identical; the cross-micro-batch contract is "
-    "tests/test_streaming.py. The batch replay runs the recurrence in "
-    "the repartition+sortWithinPartitions+mapInPandas carry shape "
-    "(rate_limit_batch's documented reshape: per-group applyInPandas "
-    "invocation overhead dominated at ~1.5k users — 3.25 s vs 1.2 s "
-    "at sf0.1 — while the Python fold itself is ~30 ms/200k rows). "
+    "tests/test_streaming.py. Stream and replay run ONE step kernel "
+    "(operators/folds.py); the replay drives it with fold_batch "
+    "(repartition+sortWithinPartitions+mapInPandas: per-group "
+    "applyInPandas invocation overhead dominated at ~1.5k users — "
+    "3.25 s vs 1.2 s at sf0.1 — while the Python fold itself is "
+    "~30 ms/200k rows). "
     "Scale: state is O(active users) doubles, traffic shuffles once "
     "on user_id — strictly cheaper than the batch form's "
     "collect_list frame.",
@@ -98,8 +99,9 @@ def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     "associative aggregation (streamable in update mode with no "
     "further state). Verified against the SAME lead()-window oracle "
     "as stream_markov_transitions; integer counts and one "
-    "BIGINT/BIGINT->DOUBLE division, bit-exact. The batch replay uses "
-    "the same mapInPandas carry shape as capped_balance_batch. Scale: "
+    "BIGINT/BIGINT->DOUBLE division, bit-exact. Stream and replay run "
+    "ONE step kernel (operators/folds.py), the replay through "
+    "fold_batch like capped_balance_batch. Scale: "
     "state is one string per active user; pair traffic shuffles once "
     "on user_id then aggregates map-side onto the tiny |types|^2 "
     "matrix.",

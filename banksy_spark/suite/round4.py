@@ -231,41 +231,24 @@ def llm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     note="Exponentially weighted moving average (alpha=0.25, zero-seeded) per "
     "user in event-time order. EWMA is a recursive definition, which SQL windows "
-    "cannot express directly; both engines compute it as an ordered fold — "
-    "collect the frame into a list, fold acc*0.75 + 0.25*x left-to-right — so "
-    "the IEEE operation sequence is identical and results are bit-exact "
-    "(DuckDB's list_reduce seeds with the first element, so the oracle prepends "
-    "the 0.0 seed to align with Spark's fold; every prefix of a left fold IS "
-    "the shorter fold, so one scan per user emitting each intermediate acc "
-    "equals the oracle's per-row prefix folds). Scale: one exchange on "
-    "user_id; the scan is partition-local, O(1) state, linear time. The "
-    "per-user series list grows with history — at 100 TB bound it with a "
-    "trailing ROWS window (EWMA weights below ~1e-16 of current are dead "
-    "weight, so 128 rows is exact to double precision).",
+    "cannot express directly; both engines compute it as an ordered fold of "
+    "acc*0.75 + 0.25*x left-to-right, so the IEEE operation sequence is "
+    "identical and results are bit-exact (DuckDB's list_reduce seeds with the "
+    "first element, so the oracle prepends the 0.0 seed to align with Spark's "
+    "fold; every prefix of a left fold IS the shorter fold, so one pass per "
+    "user emitting each intermediate acc equals the oracle's per-row prefix "
+    "folds). Spark runs the EWMA step kernel of operators/folds.py through "
+    "fold_batch: repartition by user, sort within partitions, one mapInPandas "
+    "pass carrying the accumulator across Arrow batches. Scale: one exchange "
+    "on user_id; O(1) state per user and O(Arrow batch) memory, linear time, "
+    "whatever a user's history length.",
 )
 def w_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14 opt (guide §4.2, §5): the old form collected an EXPANDING
-    # frame per row (O(n²) list elements per user history) and re-folded
-    # every prefix from scratch (O(n²) flops). One sort + one linear
-    # Arrow scan per user (operators/folds.py) emits the identical
-    # per-prefix values — bit-exact per tests/test_folds.py + the
-    # oracle hash — and explodes back to rows.
-    from banksy_spark.operators.folds import ewma_scan
+    from banksy_spark.operators.folds import EWMA, fold_batch
 
-    e = T(spark, sf_dir, "events")
-    seq = e.groupBy("user_id").agg(
-        F.expr("array_sort(collect_list(struct(ts, event_id, value)))").alias("seq")
-    )
-    ew = ewma_scan(F.expr("transform(seq, x -> x.value)"))
-    z = seq.select(
-        "user_id",
-        F.posexplode(F.arrays_zip(F.col("seq"), ew.alias("ew"))).alias("_i", "z"),
-    )
-    return z.select(
-        F.col("z.seq.event_id").alias("event_id"),
-        "user_id",
-        F.col("z.ew").alias("ewma"),
-    )
+    e = T(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
+    out = fold_batch(e, EWMA, "user_id", ("ts", "event_id"))
+    return out.select("event_id", "user_id", "ewma")
 
 
 # --- Count-min-sketch heavy hitters ----------------------------------------

@@ -421,8 +421,9 @@ def llm_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cusum_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared derivation for the batch query and the streaming twin
-    (streaming/cusum.py test): per-(priority, day) revenue cents and
-    per-priority (mu, sigma) from exact DECIMAL moments."""
+    (streaming/stateful.py:cusum_stream test): per-(priority, day)
+    revenue cents and per-priority (mu, sigma) from exact DECIMAL
+    moments."""
     o = T(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.col("o_orderpriority").alias("pri"),
@@ -491,50 +492,21 @@ def cusum_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     "series, drift flagged when S_t > 4 sigma — the classic sequential "
     "drift test (Page 1954) a pipeline runs on data-quality metrics. CUSUM "
     "is recursive, so like w_ewma both engines compute it as an ordered "
-    "fold over the collected frame — identical IEEE sequence, bit-exact. "
+    "fold — identical IEEE sequence, bit-exact. Spark runs the CUSUM step "
+    "kernel of operators/folds.py through fold_batch (one mapInPandas pass "
+    "per sorted partition, O(1) state per series); its streaming twin "
+    "cusum_stream runs the same kernel through fold_stream. "
     "mu/sigma come from exact DECIMAL(38,0) sums of integer cents "
     "(VARCHAR-routed to double); x_t is integer cents cast to double. "
-    "Scale: one exchange on the series key; the fold is partition-local, "
-    "and a real deployment bounds the frame with a trailing window or the "
-    "stateful streaming fold (streaming/ewma.py shape) instead of the "
-    "full-history list.",
+    "Scale: one exchange on the series key; memory is one Arrow batch "
+    "whatever the series length.",
 )
 def w_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily, stats = cusum_parts(spark, sf_dir)
-    # ONE fold per series, not one per row: collecting an expanding
-    # frame per row is O(n^2) list elements (measured 2.4 s at sf0.1);
-    # instead sort the whole series once, run a single linear scan
-    # (identical IEEE sequence to the oracle's per-row folds — every
-    # prefix of a left fold IS the shorter fold), explode back to rows.
-    seq = (
-        daily.groupBy("pri")
-        .agg(F.expr("array_sort(collect_list(struct(day, cents)))").alias("seq"))
-        .join(stats, "pri")
-    )
-    # r14 opt (guide §4.2, §5): the aggregate-HOF fold appended every
-    # S_t to an immutable accumulator array — O(n²) copies per series.
-    # The Arrow scan (operators/folds.py) carries O(1) state and
-    # replays the identical IEEE op order (((acc + x) - mu) - 0.5σ,
-    # clamped); bit-exact per tests/test_folds.py + the oracle hash.
-    from banksy_spark.operators.folds import cusum_scan
+    from banksy_spark.operators.folds import CUSUM, fold_batch
 
-    s_arr = cusum_scan(
-        F.expr("transform(seq, x -> CAST(x.cents AS DOUBLE))"),
-        F.col("mu"),
-        F.col("sigma"),
-    )
-    z = seq.select(
-        "pri",
-        "sigma",
-        F.posexplode(F.arrays_zip("seq", s_arr.alias("s_arr"))).alias("_i", "z"),
-    )
-    return z.select(
-        "pri",
-        F.col("z.seq.day").alias("day"),
-        F.col("z.seq.cents").alias("cents"),
-        F.col("z.s_arr").alias("s_pos"),
-        (F.col("z.s_arr") > 4.0 * F.col("sigma")).alias("drift"),
-    )
+    daily, stats = cusum_parts(spark, sf_dir)
+    out = fold_batch(daily.join(stats, "pri"), CUSUM, "pri", ("day",))
+    return out.select("pri", "day", "cents", "s_pos", "drift")
 
 
 # --- Interval-set overlap join (bucketed range join) -----------------------

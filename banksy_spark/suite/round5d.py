@@ -211,40 +211,20 @@ def w_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-priority daily revenue series — the trend-aware upgrade of "
     "w_ewma, initialised l₁=x₁, b₁=0, α=β=0.5 (exactly representable, "
     "so both engines' folds are identical IEEE halving sequences). "
-    "Spark runs ONE linear-time fold per series (sort once, scan once "
-    "in an Arrow-batched UDF carrying O(1) state — operators/folds.py; "
-    "no O(n²) expanding frames or accumulator copies), then explodes "
-    "back to rows; the oracle "
+    "Spark runs the HOLT step kernel of operators/folds.py through "
+    "fold_batch: ONE linear-time pass per sorted partition carrying O(1) "
+    "state (t, l, b) across Arrow batches; the oracle "
     "folds each row's expanding prefix, and every prefix of a left fold "
     "IS the shorter fold. forecast_next = l + b is the one-step-ahead "
     "prediction a pipeline alerts on. Scale: one exchange on the series "
-    "key, fold partition-local; unbounded series use the stateful "
-    "streaming twin shape (streaming/ewma.py).",
+    "key, memory one Arrow batch; unbounded series use the streaming "
+    "twin holt_stream (same kernel through fold_stream).",
 )
 def w_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily, _ = cusum_parts(spark, sf_dir)
-    seq = daily.groupBy("pri").agg(
-        F.expr("array_sort(collect_list(struct(day, cents)))").alias("seq")
-    )
-    # r14 opt (guide §4.2, §5): the aggregate-HOF fold appended every
-    # (l, b) pair to an immutable accumulator array — O(n²) copies per
-    # series. The Arrow scan (operators/folds.py) carries O(1) state
-    # and replays the identical IEEE halving sequence; bit-exact per
-    # tests/test_folds.py + the oracle hash.
-    from banksy_spark.operators.folds import holt_scan
+    from banksy_spark.operators.folds import HOLT, fold_batch
 
-    holt = holt_scan(F.expr("transform(seq, x -> CAST(x.cents AS DOUBLE))"))
-    z = seq.select(
-        "pri", F.posexplode(F.arrays_zip("seq", holt.alias("hb"))).alias("_i", "z")
-    )
-    return z.select(
-        "pri",
-        F.col("z.seq.day").alias("day"),
-        F.col("z.seq.cents").alias("cents"),
-        F.col("z.hb.l").alias("level"),
-        F.col("z.hb.b").alias("trend"),
-        (F.col("z.hb.l") + F.col("z.hb.b")).alias("forecast_next"),
-    )
+    daily, _ = cusum_parts(spark, sf_dir)
+    return fold_batch(daily, HOLT, "pri", ("day",))
 
 
 # --- nearest-in-time (bidirectional as-of) join ----------------------------

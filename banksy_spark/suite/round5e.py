@@ -11,8 +11,9 @@ quota sampling, partition-skew diagnostics, and capped sessionization.
 - w_capped_sessions: sessionization with BOTH a 30-min inactivity gap
   and a 4-hour max-session-length cap. The cap makes the recurrence a
   true fold (the running session-start anchor feeds its own update), so
-  Spark runs the one-fold-per-series shape (w_cusum_changepoint) and
-  the oracle is a recursive CTE.
+  Spark runs a step kernel through the batch fold driver
+  (operators/folds.py, as w_cusum_changepoint) and the oracle is a
+  recursive CTE.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from banksy_spark.operators.folds import capped_sessions_scan
+from banksy_spark.operators.folds import capped_sessions, fold_batch
 from banksy_spark.suite.registry import T, query
 
 # --- exact rolling median --------------------------------------------------
@@ -218,37 +219,18 @@ _CAP_US = 4 * 3600 * 1_000_000  # 4-hour max session length
     "this a true recurrence: whether this event starts a new session "
     "depends on the running session-start anchor, which its own updates "
     "feed — NOT expressible as lag + running sum (stream_sessionize's "
-    "shape). Spark runs one linear-time fold per user (sort once, scan "
-    "once in an Arrow-batched UDF carrying O(1) state — "
-    "operators/folds.py — explode back); the oracle walks a recursive "
-    "CTE. Integer-µs comparisons, so both engines branch identically. "
-    "Scale: one exchange on user_id, fold partition-local and O(n); "
-    "the unbounded-history form is the applyInPandasWithState "
-    "streaming twin shape.",
+    "shape). Spark runs the capped-sessions step kernel of "
+    "operators/folds.py through fold_batch (one linear-time mapInPandas "
+    "pass per sorted partition, O(1) state per user); the oracle walks a "
+    "recursive CTE. Integer-µs comparisons, so both engines branch "
+    "identically. Scale: one exchange on user_id, memory one Arrow batch; "
+    "the unbounded-history form is capped_sessions_stream (same kernel "
+    "through fold_stream).",
 )
 def w_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
     )
-    seq = e.groupBy("user_id").agg(
-        F.expr("array_sort(collect_list(struct(ts_us, event_id)))").alias("seq")
-    )
-    # r14 opt (guide §4.2, §5): the aggregate-HOF fold appended every
-    # session id to an immutable accumulator array — O(n²) copies per
-    # user history. The Arrow scan (operators/folds.py) carries O(1)
-    # state and replays the identical integer branch sequence; output
-    # bit-exact (tests/test_folds.py + oracle hash at all SFs).
-    fold = capped_sessions_scan(
-        F.expr("transform(seq, x -> x.ts_us)"),
-        F.lit(_GAP_US),
-        F.lit(_CAP_US),
-    )
-    z = seq.select(
-        "user_id",
-        F.posexplode(F.arrays_zip("seq", fold.alias("sid"))).alias("_i", "z"),
-    )
-    return z.select(
-        F.col("z.seq.event_id").alias("event_id"),
-        "user_id",
-        F.col("z.sid").alias("session_id"),
-    )
+    fold = capped_sessions(_GAP_US, _CAP_US)
+    out = fold_batch(e, fold, "user_id", ("ts_us", "event_id"))
+    return out.select("event_id", "user_id", "session_id")

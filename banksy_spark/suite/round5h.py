@@ -5,8 +5,8 @@ split scoring, signal peak detection, and graph recommendations.
   lifetimes — THE survival/churn curve. The running Π(1 - d/n) is a
   single-scalar ordered fold (safe for DuckDB list_reduce — the
   in-place hazard documented at round5d applies to STRUCT accumulators,
-  not scalars; Spark uses the same linear Arrow scan as EWMA/CUSUM —
-  operators/folds.py).
+  not scalars; Spark runs a step kernel through the same batch fold
+  driver as EWMA/CUSUM — operators/folds.py).
 - ml_gini_split: weighted Gini impurity of candidate split thresholds
   for a numeric feature vs a binary label — the exact split-scoring
   primitive inside decision-tree training, all-rational arithmetic (no
@@ -66,8 +66,9 @@ from banksy_spark.suite.round4d import _BFS_N
     "censoring would subtract a second counter from the risk set): at "
     "each distinct death time S(t) multiplies by (1 - d_t/n_t), with "
     "n_t the suffix-sum of deaths ≥ t. The running product is an "
-    "ordered SCALAR fold — Spark scans once per curve with O(1) state "
-    "(operators/folds.py, linear time), DuckDB folds each row's expanding "
+    "ordered SCALAR fold — Spark runs the KM step kernel once over the "
+    "curve with O(1) state (operators/folds.py fold_batch, one key, linear "
+    "time), DuckDB folds each row's expanding "
     "prefix (a scalar accumulator, so the round5d struct-field hazard "
     "does not apply); both multiply identical IEEE factors in identical "
     "order. Scale: the event table collapses to |users| rows in one "
@@ -88,29 +89,9 @@ def a_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     risk = ev.withColumn("n_at_risk", F.sum("d").over(w_suffix))
-    seq = risk.groupBy().agg(
-        F.expr("array_sort(collect_list(struct(t, d, n_at_risk)))").alias("seq")
-    )
-    # r14 opt (guide §4.2, §5): the aggregate-HOF fold appended every
-    # S(t) to an immutable accumulator array — O(n²) copies over the
-    # curve. The Arrow scan (operators/folds.py) carries O(1) state and
-    # replays the identical IEEE multiply sequence; bit-exact per
-    # tests/test_folds.py + the oracle hash.
-    from banksy_spark.operators.folds import km_scan
+    from banksy_spark.operators.folds import KM, fold_batch
 
-    folded = km_scan(
-        F.expr("transform(seq, x -> x.d)"),
-        F.expr("transform(seq, x -> x.n_at_risk)"),
-    )
-    z = seq.select(
-        F.posexplode(F.arrays_zip("seq", folded.alias("s"))).alias("_i", "z")
-    )
-    return z.select(
-        F.col("z.seq.t").alias("t"),
-        F.col("z.seq.d").alias("d"),
-        F.col("z.seq.n_at_risk").alias("n_at_risk"),
-        F.col("z.s").alias("survival"),
-    )
+    return fold_batch(risk, KM, None, ("t",))
 
 
 # --- Gini split scoring ----------------------------------------------------

@@ -114,102 +114,6 @@ def test_bench_headline_names_are_valid_registry_queries():
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate headline names"
 
 
-def test_rotation_plan_covers_backlog_exactly():
-    """tools/rotation_plan.py pre-commits the r10/r11 windows (round-8
-    verdict item 2). Round-10 state: R10 IS the live _FRONT window
-    (pinned by exact equality, ordering included — the driver samples
-    the FIRST 50 registry entries, so order is part of the contract),
-    R11 is the final window, and verified ∪ _FRONT ∪ R11 covers the
-    ENTIRE registry — so by round 11 every query has been inside a
-    driver CORRECTNESS window. The single permitted re-entry is
-    ml_brier_score (round 9's red row, re-verified after the VARCHAR
-    string-routing fix); every other plan slot must be a first-timer
-    relative to rounds 1-9."""
-    import glob
-    import json
-    import sys
-    from pathlib import Path
-
-    import banksy_spark.suite as suite
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-    import rotation_plan
-
-    r10, r11 = rotation_plan.R10, rotation_plan.R11
-    r12 = rotation_plan.R12
-    assert len(r10) == 50 and len(set(r10)) == 50
-    assert len(r11) == 50 and len(set(r11)) == 50
-    reg = set(suite.REGISTRY)
-    assert set(r10) <= reg and set(r11) <= reg and set(r12) <= reg
-    # R12 holds only post-plan additions — plus the adjudicated
-    # f_array_hof re-entry (its ONLY driver row is R11's red: the
-    # driver canonicalizer crashed on its then-ARRAY<DOUBLE> output;
-    # rewritten round 12 with scalar head_1..head_3, re-probed at three
-    # SFs + ANSI). Same convention as the ml_brier_score r10 re-entry.
-    assert set(r12) & (set(r10) | set(r11)) <= {"f_array_hof"}
-    # The live window must be the next PENDING plan window: R10 until
-    # the driver consumes it (CORRECTNESS_r10.json appears at the next
-    # round boundary), then R11 — tools/rotate.py applies the swap, and
-    # this assertion makes a forgotten round-11 rotation a test failure
-    # instead of a wasted driver window.
-    import os
-
-    # repo-root anchored: a cwd-relative exists() would silently skip
-    # the rotation enforcement when pytest runs from another directory
-    root = Path(__file__).resolve().parents[1]
-
-    if os.path.exists(root / "CORRECTNESS_r14.json"):
-        pass  # pre-committed schedule exhausted; later windows are a fresh call
-    elif os.path.exists(root / "CORRECTNESS_r13.json"):
-        assert list(suite._FRONT) == rotation_plan.window_r14(), (
-            "CORRECTNESS_r13.json landed — run `python tools/rotate.py "
-            "--apply` to rotate the live window to R14 (round-13-born "
-            "queries + risk-ranked re-checks)"
-        )
-    elif os.path.exists(root / "CORRECTNESS_r12.json"):
-        assert list(suite._FRONT) == list(rotation_plan.R13), (
-            "CORRECTNESS_r12.json landed — run `python tools/rotate.py "
-            "--apply` to rotate the live window to R13 (pure re-checks: "
-            "the R12 window completed full-registry driver coverage)"
-        )
-    elif os.path.exists(root / "CORRECTNESS_r11.json"):
-        assert list(suite._FRONT) == rotation_plan.window_r12(), (
-            "CORRECTNESS_r11.json landed — run `python tools/rotate.py "
-            "--apply` to rotate the live window to R12 (post-plan "
-            "additions + risk-ranked re-checks)"
-        )
-    elif os.path.exists(root / "CORRECTNESS_r10.json"):
-        assert list(suite._FRONT) == list(r11), (
-            "CORRECTNESS_r10.json landed — run `python tools/rotate.py "
-            "--apply` to rotate the live window to R11"
-        )
-    else:
-        assert list(suite._FRONT) == list(r10), (
-            "live _FRONT window diverged from the committed R10 plan"
-        )
-    assert not set(r10) & set(r11)
-    verified = set()
-    for f in sorted(glob.glob(str(root / "CORRECTNESS_r*.json"))):
-        verified.update(json.load(open(f)))
-    # names verified in rounds 1-9 must not waste plan slots — except
-    # the adjudicated ml_brier_score re-entry; rounds >= 10 legitimately
-    # consume the plan, so the waste check is pinned to r01-r09 files
-    pre_plan = set()
-    for f in sorted(glob.glob(str(root / "CORRECTNESS_r0[1-9].json"))):
-        pre_plan.update(json.load(open(f)))
-    wasted = (set(r10) | set(r11)) & pre_plan - {"ml_brier_score"}
-    assert not wasted, f"plan wastes slots on verified names: {sorted(wasted)}"
-    # every registry name must sit in SOME window: already verified, a
-    # pre-committed plan window, or the R14 pending bucket (round-12
-    # verdict item 2: round-13-born queries are appended to
-    # rotation_plan.R14 at registration time, never left windowless)
-    uncovered = (
-        reg - verified - set(r10) - set(r11) - set(r12)
-        - set(rotation_plan.R14)
-    )
-    assert not uncovered, f"queries in no window: {sorted(uncovered)}"
-
-
 def test_driver_window_is_exactly_fifty_valid_names():
     """The driver verifies the FIRST ~50 registry entries; suite/__init__
     rebuilds the dict from the _FRONT list to control that window. A
@@ -223,129 +127,3 @@ def test_driver_window_is_exactly_fifty_valid_names():
     missing = [n for n in front if n not in suite.REGISTRY]
     assert not missing, f"_FRONT names not in registry: {missing}"
     assert list(suite.REGISTRY)[:50] == front
-
-
-def test_rotate_tool_schedule_and_block_regex():
-    """tools/rotate.py must work FIRST TRY at round 11 (a broken regex
-    or schedule then would burn the rotation window): pin that (a) the
-    pending-window schedule follows the CORRECTNESS files, and (b) the
-    _FRONT-block regex matches the live suite/__init__.py exactly once
-    with the full 50-name body."""
-    import re
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-    import rotate
-    import rotation_plan
-
-    # (a) schedule: r10 pending → R10; after r10 lands → R11; after r11
-    # lands → R12 (post-plan additions + re-check fill); after r12 →
-    # nothing
-    real_exists = rotate.os.path.exists
-    try:
-        rotate.os.path.exists = lambda p: False
-        assert rotate.pending_window()[0] == "R10"
-        rotate.os.path.exists = lambda p: p.endswith("CORRECTNESS_r10.json")
-        assert rotate.pending_window()[0] == "R11"
-        rotate.os.path.exists = lambda p: p.endswith(
-            ("CORRECTNESS_r10.json", "CORRECTNESS_r11.json")
-        )
-        name, window = rotate.pending_window()
-        assert name == "R12"
-        assert window == rotation_plan.window_r12()
-        rotate.os.path.exists = lambda p: p.endswith(
-            (
-                "CORRECTNESS_r10.json",
-                "CORRECTNESS_r11.json",
-                "CORRECTNESS_r12.json",
-            )
-        )
-        name, window = rotate.pending_window()
-        assert name == "R13"
-        assert window == rotation_plan.R13
-        rotate.os.path.exists = lambda p: p.endswith(
-            (
-                "CORRECTNESS_r10.json",
-                "CORRECTNESS_r11.json",
-                "CORRECTNESS_r12.json",
-                "CORRECTNESS_r13.json",
-            )
-        )
-        name, window = rotate.pending_window()
-        assert name == "R14"
-        assert window == rotation_plan.window_r14()
-        rotate.os.path.exists = lambda p: p.endswith(
-            (
-                "CORRECTNESS_r10.json",
-                "CORRECTNESS_r11.json",
-                "CORRECTNESS_r12.json",
-                "CORRECTNESS_r13.json",
-                "CORRECTNESS_r14.json",
-            )
-        )
-        assert rotate.pending_window() == (None, None)
-    finally:
-        rotate.os.path.exists = real_exists
-
-    # (b) the block regex used by --apply matches the live file once,
-    # and its span contains exactly the 50 live names in order — the
-    # most recently APPLIED rotation (R11 until CORRECTNESS_r11.json
-    # lands and rotate.py --apply runs, then the R12 gap-closing window)
-    src = open(rotate.INIT).read()
-    ms = list(re.finditer(
-        r"# Rotate the newest.*?_FRONT = \[\n(?:    \"[a-z0-9_]+\",\n)+\]\n",
-        src, re.S,
-    ))
-    assert len(ms) == 1, "rotate.py _FRONT-block regex must match exactly once"
-    names = re.findall(r'    "([a-z0-9_]+)",', ms[0].group(0))
-    root = Path(__file__).resolve().parents[1]
-    if (root / "CORRECTNESS_r13.json").exists():
-        assert names == rotation_plan.window_r14()
-    elif (root / "CORRECTNESS_r12.json").exists():
-        assert names == list(rotation_plan.R13)
-    elif (root / "CORRECTNESS_r11.json").exists():
-        assert names == rotation_plan.window_r12()
-    else:
-        assert names == list(rotation_plan.R11)
-
-    # (c) the round-12 window is exactly 50 valid registry names: every
-    # post-plan addition first, no duplicates, fill from the pinned
-    # re-check list
-    import banksy_spark.suite as suite
-
-    w12 = rotation_plan.window_r12()
-    assert len(w12) == 50 and len(set(w12)) == 50
-    assert w12[: len(rotation_plan.R12)] == list(rotation_plan.R12)
-    missing = [n for n in w12 if n not in suite.REGISTRY]
-    assert not missing, f"window_r12 names not in registry: {missing}"
-
-    # (d) the round-13 window is exactly 50 valid registry names, pure
-    # re-checks with no overlap against the live R12 window (it spends
-    # every slot on names the R12 window could NOT re-check)
-    r13 = rotation_plan.R13
-    assert len(r13) == 50 and len(set(r13)) == 50
-    missing13 = [n for n in r13 if n not in suite.REGISTRY]
-    assert not missing13, f"R13 names not in registry: {missing13}"
-    assert not set(r13) & set(w12), "R13 must not repeat the R12 window"
-
-    # (e) the round-14 window is exactly 50 valid registry names: every
-    # round-13-born query first, fill from the pinned re-check list,
-    # and the fill never repeats the R12/R13 re-check coverage
-    w14 = rotation_plan.window_r14()
-    assert len(w14) == 50 and len(set(w14)) == 50
-    assert w14[: len(rotation_plan.R14)] == list(rotation_plan.R14)
-    missing14 = [n for n in w14 if n not in suite.REGISTRY]
-    assert not missing14, f"window_r14 names not in registry: {missing14}"
-    assert not set(rotation_plan.R14_RECHECK_FILL) & set(r13), (
-        "R14 fill must not repeat the R13 window"
-    )
-    assert not set(rotation_plan.R14_RECHECK_FILL) & set(w12), (
-        "R14 fill must not repeat the R12 window"
-    )
-
-    # apply-time header exists for every window rotate can still apply
-    assert "R11" in rotate.HEADER_BY_WINDOW
-    assert "R12" in rotate.HEADER_BY_WINDOW
-    assert "R13" in rotate.HEADER_BY_WINDOW
-    assert "R14" in rotate.HEADER_BY_WINDOW

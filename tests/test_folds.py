@@ -1,14 +1,31 @@
-"""operators/folds.py: the Arrow-batched per-series folds must be
-BIT-IDENTICAL to the aggregate-HOF array_append expressions they
-replaced (r14 optimization — the O(n²) accumulator-copy fix), on
-series far longer than any testdata key produces."""
+"""operators/folds.py: each step kernel, run by ``fold_batch``, must be
+BIT-IDENTICAL to the aggregate-HOF array_append expression the folds
+once were (the JVM reference for the oracle's operation order), on
+series far longer than any testdata key produces; the carry must
+survive Arrow-batch boundaries and reset on key changes; a NULL value
+must read the same through the batch and the stream driver."""
 
 from __future__ import annotations
 
+import datetime
 import math
+import pickle
 import random
+import subprocess
+import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+
+from banksy_spark.operators.folds import (
+    CUSUM,
+    EWMA,
+    HOLT,
+    KM,
+    capped_sessions,
+    fold_batch,
+)
 
 
 def _one_series_df(spark, values):
@@ -17,9 +34,15 @@ def _one_series_df(spark, values):
     )
 
 
-def test_ewma_scan_matches_old_fold(spark):
-    from banksy_spark.operators.folds import ewma_scan
+def _fold_one_series(spark, fold, ddl, rows):
+    """``fold`` through fold_batch over ONE key, rows in list order."""
+    df = spark.createDataFrame(
+        [(1, i, *r) for i, r in enumerate(rows)], f"k INT, i INT, {ddl}"
+    )
+    return fold_batch(df, fold, "k", ("i",)).orderBy("i").collect()
 
+
+def test_ewma_scan_matches_old_fold(spark):
     rng = random.Random(7)
     xs = [rng.uniform(-1e6, 1e6) for _ in range(5000)]
     df = _one_series_df(spark, xs)
@@ -30,15 +53,14 @@ def test_ewma_scan_matches_old_fold(spark):
             "                (acc, x) -> acc * 0.75D + 0.25D * x))"
         ).alias("o")
     ).first()["o"]
-    new = df.select(ewma_scan("xs").alias("n")).first()["n"]
+    rows = _fold_one_series(spark, EWMA, "value DOUBLE", [(x,) for x in xs])
+    new = [r.ewma for r in rows]
     assert len(old) == len(new) == len(xs)
     # bit-exact: compare through repr (shortest round-trip, ±0.0-aware)
     assert [repr(v) for v in old] == [repr(v) for v in new]
 
 
 def test_cusum_scan_matches_old_fold(spark):
-    from banksy_spark.operators.folds import cusum_scan
-
     rng = random.Random(11)
     xs = [float(rng.randrange(10**9)) for _ in range(5000)]
     mu, sigma = 4.87e8, 2.9e8
@@ -56,13 +78,17 @@ def test_cusum_scan_matches_old_fold(spark):
             " st -> st.out)"
         ).alias("o")
     ).first()["o"]
-    new = df.select(cusum_scan("xs", "mu", "sigma").alias("n")).first()["n"]
+    rows = _fold_one_series(
+        spark,
+        CUSUM,
+        "cents DOUBLE, mu DOUBLE, sigma DOUBLE",
+        [(x, mu, sigma) for x in xs],
+    )
+    new = [r.s_pos for r in rows]
     assert [repr(v) for v in old] == [repr(v) for v in new]
 
 
 def test_holt_scan_matches_old_fold(spark):
-    from banksy_spark.operators.folds import holt_scan
-
     rng = random.Random(13)
     xs = [float(rng.randrange(10**12)) for _ in range(4000)]
     df = _one_series_df(spark, xs)
@@ -87,15 +113,13 @@ def test_holt_scan_matches_old_fold(spark):
             " st -> st.out)"
         ).alias("o")
     ).first()["o"]
-    new = df.select(holt_scan("xs").alias("n")).first()["n"]
+    new = _fold_one_series(spark, HOLT, "cents DOUBLE", [(x,) for x in xs])
     assert len(old) == len(new)
     for o, n in zip(old, new):
-        assert repr(o["l"]) == repr(n["l"]) and repr(o["b"]) == repr(n["b"])
+        assert repr(o["l"]) == repr(n["level"]) and repr(o["b"]) == repr(n["trend"])
 
 
 def test_capped_sessions_scan_matches_old_fold(spark):
-    from banksy_spark.operators.folds import capped_sessions_scan
-
     gap, cap = 1_800_000_000, 14_400_000_000
     rng = random.Random(17)
     ts, t = [], 0
@@ -125,15 +149,14 @@ def test_capped_sessions_scan_matches_old_fold(spark):
             f" st -> st.out)"
         ).alias("o")
     ).first()["o"]
-    new = df.select(
-        capped_sessions_scan("ts", F.lit(gap), F.lit(cap)).alias("n")
-    ).first()["n"]
+    rows = _fold_one_series(
+        spark, capped_sessions(gap, cap), "ts_us BIGINT", [(x,) for x in ts]
+    )
+    new = [r.session_id for r in rows]
     assert list(old) == list(new)
 
 
 def test_km_scan_matches_old_fold(spark):
-    from banksy_spark.operators.folds import km_scan
-
     rng = random.Random(19)
     d = [rng.randrange(1, 50) for _ in range(3000)]
     n_total = sum(d)
@@ -154,36 +177,150 @@ def test_km_scan_matches_old_fold(spark):
             " st -> st.out)"
         ).alias("o")
     ).first()["o"]
-    new = df.select(km_scan("d", "n").alias("n2")).first()["n2"]
+    rows = _fold_one_series(
+        spark, KM, "d BIGINT, n_at_risk BIGINT", list(zip(d, n_at_risk))
+    )
+    new = [r.survival for r in rows]
     assert [repr(v) for v in old] == [repr(v) for v in new]
 
 
 def test_scan_edge_cases(spark):
-    """Empty series and length-1 series round-trip through every scan."""
-    from banksy_spark.operators.folds import (
-        capped_sessions_scan,
-        cusum_scan,
-        ewma_scan,
-        holt_scan,
-        km_scan,
+    """Empty series and length-1 series round-trip through every kernel."""
+    ddl = (
+        "k INT, i INT, value DOUBLE, cents DOUBLE, mu DOUBLE, sigma DOUBLE,"
+        " ts_us BIGINT, d BIGINT, n_at_risk BIGINT"
     )
+    folds = {
+        "e": EWMA,
+        "c": CUSUM,
+        "h": HOLT,
+        "s": capped_sessions(10, 100),
+        "m": KM,
+    }
 
-    df = spark.createDataFrame(
-        [(1, [], []), (2, [5.0], [3])],
-        "k INT, xs ARRAY<DOUBLE>, ts ARRAY<BIGINT>",
+    def run(rows):
+        df = spark.createDataFrame(rows, ddl)
+        return {n: fold_batch(df, f, "k", ("i",)).collect() for n, f in folds.items()}
+
+    empty = run([])
+    assert all(len(rows) == 0 for rows in empty.values())
+    (e,), (c,), (h,), (s,), (m,) = run([(2, 0, 5.0, 5.0, 1.0, 1.0, 3, 3, 3)]).values()
+    assert e.ewma == 0.0 * 0.75 + 0.25 * 5.0
+    assert h.level == 5.0 and h.trend == 0.0
+    assert s.session_id == 1
+    assert m.survival == 1.0 * (1.0 - 3.0 / 3.0)
+    assert not math.isnan(c.s_pos)
+
+
+def test_fold_batch_carry_crosses_arrow_batches_and_resets_per_key(spark):
+    """64-row Arrow batches over three interleaved 10k-row keys: each
+    key spans ~157 batches and, in one partition, the key changes
+    mid-batch. A carry reset per batch, or one not reset per key,
+    changes the bits."""
+    gap, cap = 10, 100
+    rng = random.Random(23)
+    rows, t = [], 0
+    for i in range(30_000):
+        t += rng.randrange(1, 15)
+        rows.append((i % 3, i, rng.uniform(-1e3, 1e3), t))
+    want_e, want_s = {}, {}
+    for k in range(3):
+        acc, sid, prev, anchor = 0.0, 0, None, None
+        for _k, i, x, ts in rows[k::3]:
+            acc = acc * 0.75 + 0.25 * x
+            want_e[i] = repr(acc)
+            if prev is None or ts - prev > gap or ts - anchor > cap:
+                sid, anchor = sid + 1, ts
+            prev = ts
+            want_s[i] = sid
+
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+        # one shuffle partition holds all three keys
+        "spark.sql.shuffle.partitions": "1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = spark.createDataFrame(rows, "k INT, i INT, value DOUBLE, ts_us BIGINT")
+        got_e = {
+            r.i: repr(r.ewma)
+            for r in fold_batch(df, EWMA, "k", ("i",)).collect()
+        }
+        got_s = {
+            r.i: r.session_id
+            for r in fold_batch(df, capped_sessions(gap, cap), "k", ("ts_us", "i")).collect()
+        }
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert max(want_s.values()) > 100  # many sessions per key
+    assert got_e == want_e
+    assert got_s == want_s
+
+
+def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
+    """A NULL value reaches the EWMA kernel as NaN: that row and every
+    later row of the key read NULL — the DuckDB oracle's shape (list()
+    keeps the NULL, list_reduce propagates it) — in w_ewma's batch path
+    and in ewma_stream alike; other keys are untouched."""
+    from banksy_spark.streaming.core import read_events_stream
+    from banksy_spark.streaming.stateful import ewma_stream
+    from banksy_spark.suite import REGISTRY
+
+    t0 = datetime.datetime(2024, 1, 1)
+    table = pa.table(
+        {
+            "event_id": pa.array([0, 1, 2, 3], pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(minutes=m) for m in (0, 1, 2, 3)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([1, 1, 1, 2], pa.int64()),
+            "event_type": pa.array(["view"] * 4),
+            "value": pa.array([4.0, None, 8.0, 2.0], pa.float64()),
+            "props": pa.array(["{}"] * 4),
+        }
     )
-    rows = df.select(
-        ewma_scan("xs").alias("e"),
-        cusum_scan("xs", F.lit(1.0), F.lit(1.0)).alias("c"),
-        holt_scan("xs").alias("h"),
-        capped_sessions_scan("ts", F.lit(10), F.lit(100)).alias("s"),
-        km_scan("ts", "ts").alias("m"),
-    ).collect()
-    by_len = {len(r["e"]): r for r in rows}
-    assert len(by_len[0]["h"]) == 0 and len(by_len[0]["s"]) == 0
-    r1 = by_len[1]
-    assert r1["e"] == [0.0 * 0.75 + 0.25 * 5.0]
-    assert r1["h"][0]["l"] == 5.0 and r1["h"][0]["b"] == 0.0
-    assert list(r1["s"]) == [1]
-    assert r1["m"] == [1.0 * (1.0 - 3.0 / 3.0)]
-    assert not math.isnan(r1["c"][0])
+    batch_dir, stream_dir = tmp_path / "batch", tmp_path / "stream"
+    batch_dir.mkdir()
+    stream_dir.mkdir()
+    pq.write_table(table, batch_dir / "events.parquet")
+    pq.write_table(table, stream_dir / "0.parquet")
+    want = {(1, 0): 1.0, (1, 1): None, (1, 2): None, (2, 3): 0.5}
+
+    batch = REGISTRY["w_ewma"].fn(spark, str(batch_dir)).collect()
+    assert {(r.user_id, r.event_id): r.ewma for r in batch} == want
+
+    q = (
+        ewma_stream(read_events_stream(spark, str(stream_dir)))
+        .writeStream.format("memory")
+        .queryName("ewma_null")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish in time"
+    stream = spark.sql("SELECT * FROM ewma_null").collect()
+    assert {(r.user_id, r.event_id): r.ewma for r in stream} == want
+
+
+def test_kernels_reach_workers_that_cannot_import_the_package(tmp_path):
+    """A Python worker started outside the repo root cannot import
+    banksy_spark, so kernels and drivers must travel by value."""
+    from pyspark import cloudpickle
+
+    blob = cloudpickle.dumps((EWMA, capped_sessions(10, 100), fold_batch))
+    code = (
+        "import pickle, sys\n"
+        "e, s, _ = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(pickle.dumps((e.step(e.init, [4.0]), s.step(s.init, [1, 50]))).hex())"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code], input=blob, cwd=tmp_path, capture_output=True
+    )
+    assert run.returncode == 0, run.stderr.decode()[-500:]
+    got = pickle.loads(bytes.fromhex(run.stdout.decode().strip()))
+    assert got == (((1.0,), ([1.0],)), ((2, 50, 50), ([1, 2],)))

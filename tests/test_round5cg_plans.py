@@ -47,16 +47,16 @@ def test_asof_nearest_no_quadratic_join(spark):
 
 def test_holt_single_fold_exchange(spark):
     plan = _plan(spark, "w_holt_linear")
-    # one series-key exchange for the collect+fold; no window per row
+    # one series-key exchange for the fold; no window per row
     assert "CartesianProduct" not in plan
-    assert "Generate" in plan  # posexplode back to rows
+    assert "MapInPandas" in plan  # one fold_batch pass, no explode
 
 
 def test_capped_sessions_fold_shape(spark):
     plan = _plan(spark, "w_capped_sessions")
     n_exch = len(re.findall(r"Exchange hashpartitioning\(user_id", plan))
     assert n_exch == 1, f"expected 1 user_id exchange, saw {n_exch}"
-    assert "Generate" in plan
+    assert "MapInPandas" in plan
 
 
 def test_rolling_median_single_window_pass(spark):

@@ -324,7 +324,7 @@ def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
     in modification order — the acc carries across the batch boundary."""
     import time as _time
 
-    from banksy_spark.streaming.ewma import ewma_stream
+    from banksy_spark.streaming.stateful import ewma_stream
     from banksy_spark.suite.registry import T
 
     batch = T(spark, SF_SMOKE, "events")
@@ -460,7 +460,7 @@ def test_stateful_cusum_stream_equals_batch(spark, tmp_path):
     standard fit-offline/monitor-online sequential-test split."""
     import time as _time
 
-    from banksy_spark.streaming.cusum import cusum_stream
+    from banksy_spark.streaming.stateful import cusum_stream
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.round5 import cusum_parts
 
@@ -524,7 +524,7 @@ def test_stateful_capped_sessions_stream_equals_batch(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from banksy_spark.streaming.sessions import capped_sessions_stream
+    from banksy_spark.streaming.stateful import capped_sessions_stream
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.registry import T
 
@@ -576,7 +576,7 @@ def test_stateful_holt_stream_equals_batch(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from banksy_spark.streaming.holt import holt_stream
+    from banksy_spark.streaming.stateful import holt_stream
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.round5 import cusum_parts
 

@@ -1,16 +1,20 @@
 """Ordered per-key folds: each recurrence is written once, as a step
 kernel, and run by one batch driver and one stream driver.
 
-The recurrences here (EWMA, CUSUM, Holt, capped sessions, Kaplan-Meier,
-the capped balance and Markov successor pairing) are left folds whose
-per-row update reads the previous row's state, so no window function
-can express them. Each is one :class:`Fold`:
+Every operator here that emits one row per input row is a left fold
+whose per-row update reads the previous row's state. For EWMA, CUSUM,
+Holt, capped sessions, Kaplan-Meier and the capped balance no window
+function can express that; the Markov pairing, daily rate limit, SPRT,
+rolling correlation, Bollinger bands, last-touch attribution and
+first-seen flag have window forms (their oracles), and are folds so a
+stream can run them with a bounded carry. Each is one :class:`Fold`:
 
 - ``step(carry, *cols) -> (carry, outs)`` folds ONE key's rows in sort
   order. ``cols`` are the ``inputs`` columns as Python lists; ``outs``
   holds one list per ``outputs`` column, aligned with the input rows.
   The carry is a tuple shaped like ``state``, so the stream driver
-  stores it in ``GroupState`` as is.
+  stores it in ``GroupState`` as is. A step never mutates its carry in
+  place: ``fold_batch`` starts every key from the same ``init`` object.
 - Python floats are IEEE binary64 with the same +,-,*,/ rounding as the
   JVM and DuckDB, so a step that replays the oracle's operation order
   yields the oracle's bits; each step states the order it keeps, and
@@ -38,6 +42,7 @@ the step's outputs:
 
 from __future__ import annotations
 
+import math
 import sys
 from collections.abc import Callable, Iterator
 from typing import Any, NamedTuple
@@ -265,11 +270,175 @@ def capped_balance(cap: float, offset: float) -> Fold:
 
 # --- Markov successor pairing: from_type = the key's previous event_type ----
 # lead() over the per-key order, computed incrementally: the carry is the
-# last event_type, so a key's first row in a later chunk pairs with the
-# last row of the earlier one. NULL from_type marks a row with no pair.
+# last event_type and whether there was one, so a key's first row in a
+# later chunk pairs with the last row of the earlier one. has_prev is
+# false only on a key's first row; from_type may be NULL on a paired row.
 def _markov(carry, event_type):
-    (last,) = carry
-    return (event_type[-1],), ([last, *event_type[:-1]],)
+    last, seen = carry
+    has_prev = [seen, *[True] * (len(event_type) - 1)]
+    return (event_type[-1], True), ([last, *event_type[:-1]], has_prev)
 
 
-MARKOV = Fold(_markov, (None,), ("event_type",), "from_type string", "last_type string")
+MARKOV = Fold(
+    _markov,
+    (None, False),
+    ("event_type",),
+    "from_type string, has_prev boolean",
+    "last_type string, seen boolean",
+)
+
+
+# --- Daily rate limit: nth_today = the row's rank in its run of one day -----
+# The reference's per-key quota counter (arbitrage_scanner.py:434-461):
+# a change of day, an out-of-order regression included, restarts it.
+def _rate_limit(carry, day):
+    cur, n = carry
+    out = []
+    for d in day:
+        n = n + 1 if d == cur else 1
+        cur = d
+        out.append(n)
+    return (cur, n), (out,)
+
+
+RATE_LIMIT = Fold(
+    _rate_limit, (None, 0), ("day",), "nth_today bigint", "day date, n bigint"
+)
+
+
+# --- Wald SPRT: llr = k*ln(p1/p0) + (n-k)*ln((1-p1)/(1-p0)) ----------------
+# The ln factors are computed once here, so every row uses the same IEEE
+# constants as ml_sprt_sequential; int->double conversion is exact below
+# 2^53. decision is set on the one row whose llr first leaves
+# (ln(beta/(1-alpha)), ln((1-beta)/alpha)); later rows keep counting.
+def sprt(p0: float, p1: float, alpha: float, beta: float) -> Fold:
+    l1 = math.log(p1 / p0)
+    l0 = math.log((1 - p1) / (1 - p0))
+    a = math.log((1 - beta) / alpha)
+    b = math.log(beta / (1 - alpha))
+
+    def step(carry, event_type):
+        n, k, decided = carry
+        ns, ks, llrs, decision = [], [], [], []
+        for t in event_type:
+            n += 1
+            k += t == "purchase"
+            llr = k * l1 + (n - k) * l0
+            hit = not decided and (llr >= a or llr <= b)
+            decided = decided or hit
+            ns.append(n)
+            ks.append(k)
+            llrs.append(llr)
+            decision.append(("accept_h1" if llr >= a else "accept_h0") if hit else None)
+        return (n, k, decided), (ns, ks, llrs, decision)
+
+    return Fold(
+        step,
+        (0, 0, False),
+        ("event_type",),
+        "n bigint, k bigint, llr double, decision string",
+        "n bigint, k bigint, decided boolean",
+    )
+
+
+# --- Rolling Pearson correlation over the last `window` (x, y) rows ---------
+# Moments are Python ints (the oracle's DECIMAL(38,0) sums, exactly);
+# the IEEE tail is the oracle's: num and the two centred sums of squares
+# convert int->double independently (correctly rounded), multiply, sqrt
+# (correctly rounded), divide. corr7 is NULL before the window fills
+# (rn < window) and where either variance is 0.
+def rolling_corr(window: int) -> Fold:
+    def step(carry, x, y):
+        xs, ys, rn = carry
+        rns, corr = [], []
+        for xi, yi in zip(x, y):
+            xs, ys = [*xs, xi][-window:], [*ys, yi][-window:]
+            rn += 1
+            rns.append(rn)
+            if rn < window:
+                corr.append(None)
+                continue
+            n, sx, sy = len(xs), sum(xs), sum(ys)
+            da = n * sum(v * v for v in xs) - sx * sx
+            db = n * sum(v * v for v in ys) - sy * sy
+            if da <= 0 or db <= 0:
+                corr.append(None)
+                continue
+            sxy = sum(a * b for a, b in zip(xs, ys))
+            corr.append(float(n * sxy - sx * sy) / math.sqrt(float(da) * float(db)))
+        return (xs[1 - window :], ys[1 - window :], rn), (rns, corr)
+
+    return Fold(
+        step,
+        ([], [], 0),
+        ("x", "y"),
+        "rn bigint, corr7 double",
+        "xs array<bigint>, ys array<bigint>, rn bigint",
+    )
+
+
+# --- Bollinger bands: trailing mean +- 2 sigma over the last `window` rows --
+# Moments are Python ints (the oracle's DECIMAL(38,0) sums); the IEEE
+# tail keeps the oracle's order: correctly rounded int->double, sqrt,
+# then (2.0 * sqrt) / k. Every row emits; a partial leading window uses
+# k = rows so far, as the oracle's ROWS frame does.
+def bollinger(window: int) -> Fold:
+    def step(carry, cents):
+        (vals,) = carry
+        mid, lower, upper, up = [], [], [], []
+        for x in cents:
+            vals = [*vals, x][-window:]
+            k = len(vals)
+            s1 = sum(vals)
+            s2 = sum(v * v for v in vals)
+            m = float(s1) / k
+            sd = 2.0 * math.sqrt(float(k * s2 - s1 * s1)) / k
+            mid.append(m)
+            lower.append(m - sd)
+            upper.append(m + sd)
+            up.append(float(x) > m + sd)
+        return (vals[1 - window :],), (mid, lower, upper, up)
+
+    return Fold(
+        step,
+        ([],),
+        ("cents",),
+        "mid double, lower_band double, upper_band double, breakout_up boolean",
+        "vals array<bigint>",
+    )
+
+
+# --- Last-touch attribution: a purchase takes the key's latest click/view ---
+# The batch query's last(ignorenulls) window over (ts, event_id), run
+# incrementally: the carry is the latest touch's type and µs; a purchase
+# more than 7 days after it reads NULL. Integer µs, no rounding.
+_LOOKBACK_US = 7 * 24 * 3600 * 1_000_000
+
+
+def _attribution(carry, event_type, ts_us):
+    ch, ch_ts = carry
+    out = []
+    for t, ts in zip(event_type, ts_us):
+        hit = t == "purchase" and ch is not None and ts <= ch_ts + _LOOKBACK_US
+        out.append(ch if hit else None)
+        if t == "click" or t == "view":
+            ch, ch_ts = t, ts
+    return (ch, ch_ts), (out,)
+
+
+ATTRIBUTION = Fold(
+    _attribution,
+    (None, None),
+    ("event_type", "ts_us"),
+    "channel string",
+    "ch_type string, ch_ts_us bigint",
+)
+
+
+# --- First seen: true on a key's first row over the life of the stream -----
+def _first_seen(carry, event_id):
+    (seen,) = carry
+    return (True,), ([not seen, *[False] * (len(event_id) - 1)],)
+
+
+FIRST_SEEN = Fold(_first_seen, (False,), ("event_id",), "first boolean", "seen boolean")

@@ -92,8 +92,9 @@ def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     """,
     note="Markov transition matrix, CUSTOM-STATEFUL form: the batch "
     "replay of streaming/stateful.py:"
-    "markov_pairs_stateful (applyInPandasWithState, state = the last "
-    "event_type per user) emits each event's (prev, cur) pair — "
+    "markov_pairs_stateful (fold_stream, state = the last "
+    "event_type per user and whether it has one) emits each event's "
+    "(prev, cur) pair, dropping pairs whose cur is NULL — "
     "exactly lead() over the per-user total order, computed "
     "incrementally — and the count/row-normalize tail is an ordinary "
     "associative aggregation (streamable in update mode with no "

@@ -390,19 +390,19 @@ def w_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM winmom WHERE rn >= 7
     """,
     note="Rolling 7-observation Pearson correlation, CUSTOM-STATEFUL "
-    "form (round-8 verdict item 6): the applyInPandas replay of the "
-    "applyInPandasWithState fold in streaming/stateful.py:"
-    "rolling_corr_stateful — windowed bivariate moments are "
-    "state-incremental (last 6 (day,x,y) rows + a counter per brand), "
+    "form (round-8 verdict item 6): the fold_batch replay of the "
+    "rolling_corr step kernel (operators/folds.py) that "
+    "streaming/stateful.py:rolling_corr_stateful runs through "
+    "fold_stream — windowed bivariate moments are "
+    "state-incremental (last 6 (x,y) pairs + a counter per brand), "
     "so the stream emits each day's r the micro-batch its grain "
     "arrives. Verified against the SAME window-form oracle as "
     "w_rolling_corr, proving the per-observation integer fold (Python "
     "ints ≡ the DECIMAL(38,0) exactness class, identical IEEE tail) "
     "rather than the window rewrite; the stream==batch contract across "
     "micro-batch boundaries is tests/test_streaming.py. Scale: the "
-    "daily grain is calendar-bounded, groups are brands — per-group "
-    "applyInPandas overhead is nil (contrast rate_limit_batch's "
-    "mapInPandas form for million-key inputs).",
+    "daily grain is calendar-bounded and the replay holds one Arrow "
+    "batch at a time, whatever the series length.",
 )
 def stream_rolling_corr_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from banksy_spark.streaming.stateful import rolling_corr_batch

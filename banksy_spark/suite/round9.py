@@ -149,9 +149,10 @@ from banksy_spark.suite.round5o import _BB_WIN, _DAILY_DUCK, _daily  # noqa: E40
                     ROWS BETWEEN {_BB_WIN - 1} PRECEDING AND CURRENT ROW)
     )
     """,
-    note=f"Bollinger bands, CUSTOM-STATEFUL form: the applyInPandas "
-    "replay of streaming/stateful.py:bollinger_stateful "
-    f"(applyInPandasWithState, state = last {_BB_WIN - 1} integer "
+    note=f"Bollinger bands, CUSTOM-STATEFUL form: the fold_batch "
+    "replay of the bollinger step kernel (operators/folds.py) that "
+    "streaming/stateful.py:bollinger_stateful runs through fold_stream "
+    f"(state = last {_BB_WIN - 1} integer "
     "observations per series) — completes the streaming-twin arc of "
     "the rolling-diagnostics family (EWMA, SPRT, CUSUM, rolling-corr, "
     "now Bollinger). Verified against the SAME window-form oracle as "
@@ -160,8 +161,8 @@ from banksy_spark.suite.round5o import _BB_WIN, _DAILY_DUCK, _daily  # noqa: E40
     "operation order), so stream, replay and window query are "
     "bit-identical; the cross-micro-batch contract is "
     "tests/test_streaming.py. Scale: daily grain upstream, few "
-    "calendar-bounded series keys — applyInPandas per-group overhead "
-    "is nil here.",
+    "calendar-bounded series keys; the replay holds one Arrow batch "
+    "at a time.",
 )
 def stream_bollinger_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from banksy_spark.streaming.stateful import bollinger_batch

@@ -43,7 +43,7 @@ HEADLINE = [
     "j_anti_subquery",        # anti-join vs derived key set
     "a_salted_sum",           # two-stage salted aggregation
     "llm_ann_recall",         # recall@3 of IVF+LSH vs brute-force truth
-    "stream_rate_limit_stateful",  # applyInPandas per-key quota replay
+    "stream_rate_limit_stateful",  # fold_batch per-key quota replay
     "llm_dedup_spans",        # C4-style span dedup: global window + reassembly
     "llm_decontam_overlap",   # 13-gram eval-overlap decontamination
     "llm_bm25_topk",          # BM25 retrieval: tf/df agg + top-k window

@@ -23,8 +23,11 @@ from banksy_spark.operators.folds import (
     EWMA,
     HOLT,
     KM,
+    RATE_LIMIT,
+    bollinger,
     capped_sessions,
     fold_batch,
+    rolling_corr,
 )
 
 
@@ -216,23 +219,40 @@ def test_fold_batch_carry_crosses_arrow_batches_and_resets_per_key(spark):
     """64-row Arrow batches over three interleaved 10k-row keys: each
     key spans ~157 batches and, in one partition, the key changes
     mid-batch. A carry reset per batch, or one not reset per key,
-    changes the bits."""
-    gap, cap = 10, 100
-    rng = random.Random(23)
+    changes the bits; so does a step that mutates its list carry in
+    place (every key restarts from the same ``init`` object)."""
+    gap, cap, day_len, win = 10, 100, 300, 20
+    rng, rng_xy = random.Random(23), random.Random(29)
     rows, t = [], 0
     for i in range(30_000):
         t += rng.randrange(1, 15)
-        rows.append((i % 3, i, rng.uniform(-1e3, 1e3), t))
-    want_e, want_s = {}, {}
+        x, y = rng_xy.randrange(0, 50), rng_xy.randrange(-1000, 1000)
+        rows.append((i % 3, i, rng.uniform(-1e3, 1e3), t, t // day_len, x, y))
+    want_e, want_s, want_n, want_c, want_b = {}, {}, {}, {}, {}
     for k in range(3):
         acc, sid, prev, anchor = 0.0, 0, None, None
-        for _k, i, x, ts in rows[k::3]:
-            acc = acc * 0.75 + 0.25 * x
+        day, n, xs, ys = None, 0, [], []
+        for _k, i, v, ts, d, x, y in rows[k::3]:
+            acc = acc * 0.75 + 0.25 * v
             want_e[i] = repr(acc)
             if prev is None or ts - prev > gap or ts - anchor > cap:
                 sid, anchor = sid + 1, ts
             prev = ts
             want_s[i] = sid
+            n = n + 1 if d == day else 1
+            day = d
+            want_n[i] = n
+            xs.append(x)
+            ys.append(y)
+            wx, wy = xs[-7:], ys[-7:]
+            da = 7 * sum(a * a for a in wx) - sum(wx) ** 2
+            db = 7 * sum(b * b for b in wy) - sum(wy) ** 2
+            num = 7 * sum(a * b for a, b in zip(wx, wy)) - sum(wx) * sum(wy)
+            ok = len(xs) >= 7 and da > 0 and db > 0
+            want_c[i] = repr(float(num) / math.sqrt(float(da) * float(db)) if ok else None)
+            wb = xs[-win:]
+            kb, s1, s2 = len(wb), sum(wb), sum(a * a for a in wb)
+            want_b[i] = repr(float(s1) / kb + 2.0 * math.sqrt(float(kb * s2 - s1 * s1)) / kb)
 
     conf = {
         "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
@@ -243,7 +263,9 @@ def test_fold_batch_carry_crosses_arrow_batches_and_resets_per_key(spark):
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
-        df = spark.createDataFrame(rows, "k INT, i INT, value DOUBLE, ts_us BIGINT")
+        df = spark.createDataFrame(
+            rows, "k INT, i INT, value DOUBLE, ts_us BIGINT, day BIGINT, x BIGINT, y BIGINT"
+        ).withColumn("cents", F.col("x"))
         got_e = {
             r.i: repr(r.ewma)
             for r in fold_batch(df, EWMA, "k", ("i",)).collect()
@@ -252,12 +274,26 @@ def test_fold_batch_carry_crosses_arrow_batches_and_resets_per_key(spark):
             r.i: r.session_id
             for r in fold_batch(df, capped_sessions(gap, cap), "k", ("ts_us", "i")).collect()
         }
+        got_n = {
+            r.i: r.nth_today for r in fold_batch(df, RATE_LIMIT, "k", ("i",)).collect()
+        }
+        got_c = {
+            r.i: repr(r.corr7) for r in fold_batch(df, rolling_corr(7), "k", ("i",)).collect()
+        }
+        got_b = {
+            r.i: repr(r.upper_band)
+            for r in fold_batch(df, bollinger(win), "k", ("i",)).collect()
+        }
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
     assert max(want_s.values()) > 100  # many sessions per key
+    assert max(want_n.values()) > 10  # day runs span Arrow batches
     assert got_e == want_e
     assert got_s == want_s
+    assert got_n == want_n
+    assert got_c == want_c
+    assert got_b == want_b
 
 
 def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
@@ -305,6 +341,63 @@ def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
     assert q.awaitTermination(120), "stream did not finish in time"
     stream = spark.sql("SELECT * FROM ewma_null").collect()
     assert {(r.user_id, r.event_id): r.ewma for r in stream} == want
+
+
+def test_markov_pairs_with_null_type_match_lead_in_batch_and_stream(spark, tmp_path):
+    """For one user's a, NULL, b the oracle's lead() pairs are (a, NULL)
+    and (NULL, b), and ``WHERE to_type IS NOT NULL`` keeps only (NULL,
+    b); a NULL-free user pairs as usual. The batch and stream twins
+    must emit exactly those pairs."""
+    import collections
+
+    from banksy_spark.streaming.core import read_events_stream
+    from banksy_spark.streaming.stateful import markov_pairs_batch, markov_pairs_stateful
+
+    t0 = datetime.datetime(2024, 1, 1)
+    users = [1, 1, 1, 2, 2, 2]
+    types = ["a", None, "b", "view", "click", "purchase"]
+    table = pa.table(
+        {
+            "event_id": pa.array(range(6), pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(minutes=m) for m in range(6)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array(users, pa.int64()),
+            "event_type": pa.array(types),
+            "value": pa.array([1.0] * 6, pa.float64()),
+            "props": pa.array(["{}"] * 6),
+        }
+    )
+    (tmp_path / "in").mkdir()
+    pq.write_table(table, tmp_path / "in" / "0.parquet")
+
+    want: collections.Counter = collections.Counter()
+    for u in set(users):
+        seq = [ty for uu, ty in zip(users, types) if uu == u]
+        for cur, nxt in zip(seq, seq[1:]):  # lead() over (ts, event_id)
+            if nxt is not None:
+                want[(cur, nxt)] += 1
+    assert want[(None, "b")] == 1
+
+    batch = spark.read.parquet(str(tmp_path / "in"))
+    got = collections.Counter(
+        (r.from_type, r.to_type) for r in markov_pairs_batch(batch).collect()
+    )
+    assert got == want
+
+    q = (
+        markov_pairs_stateful(read_events_stream(spark, str(tmp_path / "in")))
+        .writeStream.format("memory")
+        .queryName("markov_null")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish in time"
+    stream = spark.sql("SELECT * FROM markov_null").collect()
+    assert collections.Counter((r.from_type, r.to_type) for r in stream) == want
 
 
 def test_kernels_reach_workers_that_cannot_import_the_package(tmp_path):

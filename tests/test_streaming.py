@@ -152,7 +152,7 @@ def test_stateful_limiter_equals_batch_twin(spark, tmp_path):
 
     batch = T(spark, SF_SMOKE, "events").filter(F.col("event_type") == "error")
     want = {
-        (r.event_id, str(r.day), r.nth_today)
+        (r.event_id, r.day, r.nth_today)
         for r in rate_limit_batch(batch).collect()
     }
     assert got == want and len(got) > 0
@@ -258,35 +258,21 @@ def test_incremental_lsh_dedup_stream_equals_batch(spark, tmp_path):
     assert len(want) > 0 and any(v[0] for v in want.values()), "fixture has real dups"
 
 
-def test_transform_with_state_first_seen_across_batches(spark, tmp_path):
+def test_first_seen_stream_emits_each_user_once_across_batches(spark, tmp_path):
     """First-seen dedup emits each user exactly once even when the same
     data arrives in two micro-batches (two file copies,
-    maxFilesPerTrigger=1). The incremental run ALWAYS executes via the
-    applyInPandasWithState twin (first_seen_stream_gs); the typed-state
-    transformWithStateInPandas form additionally runs when its protocol
-    dependency (google.protobuf) exists — the plan/schema build is
-    asserted either way."""
+    maxFilesPerTrigger=1)."""
     src = tmp_path / "tws_in"
     src.mkdir()
     shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
     shutil.copy(f"{SF_SMOKE}/events.parquet", src / "b.parquet")
 
-    from banksy_spark.streaming.transform_state import (
-        first_seen_batch,
-        first_seen_stream,
-        first_seen_stream_gs,
-    )
+    from banksy_spark.streaming.stateful import first_seen_batch, first_seen_stream
     from banksy_spark.suite.registry import T
 
     batch = T(spark, SF_SMOKE, "events")
     want = {(r["user_id"], r["event_id"]) for r in first_seen_batch(batch).collect()}
     assert len(want) == batch.select("user_id").distinct().count()
-
-    # typed-state plan builds regardless (analysis catches schema errors)
-    stream = read_events_stream(spark, str(src))
-    tws = first_seen_stream(stream)
-    assert tws.isStreaming
-    assert [f.name for f in tws.schema.fields] == ["user_id", "event_id", "ts"]
 
     def run(df, name, ckpt):
         q = (
@@ -303,18 +289,10 @@ def test_transform_with_state_first_seen_across_batches(spark, tmp_path):
             for r in spark.sql(f"SELECT * FROM {name}").collect()
         }
 
-    got = run(first_seen_stream_gs(read_events_stream(spark, str(src))),
+    got = run(first_seen_stream(read_events_stream(spark, str(src))),
               "gs_first_seen", "ckpt_gs")
     assert got == want
     assert len(got) == batch.select("user_id").distinct().count()
-
-    try:
-        import google.protobuf  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False  # typed-state runtime gated; GS twin ran above
-    if has_protobuf:
-        assert run(tws, "tws_first_seen", "ckpt_tws") == want
 
 
 def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
@@ -405,7 +383,7 @@ def test_stateful_attribution_stream_equals_batch(spark, tmp_path):
     one per batch, the carried touchpoint crossing the boundary."""
     import time as _time
 
-    from banksy_spark.streaming.attribution import attribution_stream
+    from banksy_spark.streaming.stateful import attribution_stream
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.registry import T
 

@@ -4,7 +4,7 @@ over a TOTAL order, with every window partitioned.
 The naive form — ``row_number() OVER (ORDER BY k)`` with no PARTITION BY
 — is the canonical 100 TB scale-killer: Spark plans it as
 ``Exchange SinglePartition`` + Sort + Window, i.e. ONE task sorts and
-numbers the whole table.  This module is the reusable two-phase
+numbers the whole table.  This module is the reusable
 decomposition (the same one ``o_global_rownum`` proved against its
 naive-form oracle, suite/round4.py):
 
@@ -23,21 +23,26 @@ naive-form oracle, suite/round4.py):
     can be further **sub-split by the secondary sort key** without
     breaking global monotonicity (see ``tools/bench_skew.py`` for the
     measured zipfian behaviour).
- 2. **Per-bucket prefix aggregates** (counts, exact sums) come from
-    ONE bounded driver collect of the ≤``2·n_buckets+1``-row directory
-    (map-side-combined, column-pruned — the same cost class as
-    ``repartitionByRange``'s sampling), folded into literal lookup
-    maps.  The main plan is then a single pipeline with no directory
-    joins or broadcast builds on the critical path.  The grouped
-    variants (string group keys) instead persist their directory and
-    broadcast-join it (``materialize_directory``); ``bucketize``/
-    ``offsets_table`` expose the driver-folded directory to prefix-max
-    consumers like the skyline.
- 3. Each ordinal is then ``bucket_offset + intra-bucket window`` where
-    the window is ``PARTITION BY bucket`` — bounded partitions, no
-    single-partition WINDOW anywhere in the plan (tests/
-    test_ordinals.py asserts this on the physical plan; the grand
-    total's scalar aggregate is map-side-combined and scale-free).
+ 2. **One directory aggregate** (``_dir_agg``): per-(group, bucket,
+    sub) counts and exact sums, map-side-combined over a column-pruned
+    scan, collected to the driver in ONE bounded job (≤``2·n_buckets+1``
+    cells per group — the same cost class as ``repartitionByRange``'s
+    sampling).
+ 3. **One driver-side fold** (``_prefixes``) turns the directory into
+    per-cell exclusive prefixes, and **one renderer** (``_lookup``)
+    writes each as a literal lookup map keyed by ``bucket·2^16+sub``.
+ 4. Each ordinal is then ``cell prefix + intra-cell window`` where the
+    window is ``PARTITION BY (group, bucket, sub)`` (``_attach``) —
+    bounded partitions, no single-partition WINDOW anywhere in the plan
+    (tests/test_ordinals.py asserts this on the physical plan), and no
+    directory join or broadcast build on the critical path.
+
+``global_ordinals``, ``grouped_ordinals`` and ``multi_ordinals`` are
+front ends of that one pipeline; ``bucketize`` exposes steps 1-2 and
+``Bucketing.prefix`` step 3 to prefix-max consumers like the skyline.
+Only ``grouped_ordinals`` over a directory too large to inline (or a
+group key a literal cannot render) falls back to a persisted,
+broadcast-joined directory (``materialize_directory``).
 
 Exactness rules (registry.py docstring): running sums are only offered
 for DECIMAL / integral inputs, where per-bucket partial sums are
@@ -56,8 +61,8 @@ the distributed form the suite's rank-family queries ride on.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
-from decimal import Decimal
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -151,20 +156,12 @@ _ROWS_PER_TASK = 65536
 # maps to one key; LocalRelation/createDataFrame plans are exempted
 # below because their canonical form omits the data) plus the sampling
 # parameters.  Assumes inputs are immutable
-# within a session, exactly like ``DataFrame.cache``; ``clear`` /
-# ``set_stats_cache(False)`` are the escape hatches, and the poisoning
-# test (tests/test_ordinals.py) proves bit-exact results under a
-# deliberately wrong cache entry.  At 100 TB this is the difference
+# within a session, exactly like ``DataFrame.cache``; ``clear_stats_cache``
+# empties it, and the poisoning test (tests/test_ordinals.py) proves
+# bit-exact results under a deliberately wrong cache entry.  At 100 TB this is the difference
 # between one sampling scan per query and one per table lifetime.
 _STATS_CACHE: dict[str, tuple] = {}
 _STATS_CACHE_MAX = 256
-_stats_cache_on = True
-
-
-def set_stats_cache(enabled: bool) -> None:
-    """Toggle sketch memoization (on by default)."""
-    global _stats_cache_on
-    _stats_cache_on = bool(enabled)
 
 
 def clear_stats_cache() -> None:
@@ -183,8 +180,6 @@ def _memo_action(df: DataFrame, tag: str, compute, stable_key: str | None = None
     stably (query name + sf_dir) opts in here. Same safety contract as
     the cache itself: a wrong entry can only unbalance buckets, never
     change a result (tests/test_ordinals.py poisoning test)."""
-    if not _stats_cache_on:
-        return compute()
     import hashlib
 
     if stable_key is not None:
@@ -216,8 +211,8 @@ def memoized_count(df: DataFrame, tag: str) -> int:
     a table's row count as a plan literal (e.g. SemDeDup's corpus-
     scaled K): one bounded driver count per (canonical plan, tag) per
     session, replayed afterwards. Inherits the cache's documented
-    semantics — LocalRelation inputs bypass it, ``set_stats_cache``/
-    ``clear_stats_cache`` govern it — without coupling callers to the
+    semantics — LocalRelation inputs bypass it, ``clear_stats_cache``
+    empties it — without coupling callers to the
     private ``_memo_action`` helper (round-8 ADVICE)."""
     return int(_memo_action(df, tag, df.count))
 
@@ -373,6 +368,38 @@ def _hot_values(raw: list[float]) -> list[float]:
     return hot
 
 
+def _sub_col(v1: str, c2: str, c2t: str, hot_cuts) -> Column:
+    """Sub-bucket id: each hot leading value ``hv`` of ``hot_cuts``
+    (``[(hv, secondary cut points)]``) splits by its secondary-key
+    cuts; every other row is zero.
+
+    NULL secondary values sort NULLS FIRST under asc / NULLS LAST under
+    desc in the intra-bucket window; sub-bucket -1 matches BOTH (the
+    directory order negates sub ids for desc), mirroring the leading
+    key's -1 NULL bucket.
+
+    The all-rows-zero sub-bucket must NOT be a foldable literal:
+    Catalyst folds `lit(0)` out of the window/aggregate partition
+    requirements while the explicit repartition keeps it, so the
+    "shared exchange" breaks — Spark inserts a redundant full
+    re-exchange of the fact before the window plus re-exchanges of
+    every directory-aggregate branch (measured: +1 fact shuffle and
+    +3 directory shuffles per call in the no-skew case).  `hash(v)%1`
+    is a deterministic zero that stays an attribute."""
+    branches = []
+    for hv, cuts in hot_cuts:
+        cuts = sorted({x for x in cuts if x is not None})
+        if cuts:
+            sid = (
+                f"(CASE WHEN {_ident(c2)} IS NULL THEN -1 "
+                f"ELSE {_le_count_sql(_as_double_sql(c2, c2t), cuts)} END)"
+            )
+            branches.append(f"WHEN {v1} = {_sql_double(hv)} THEN {sid}")
+    if not branches:
+        return F.expr(f"(hash({v1}) % 1)")
+    return F.expr("CASE " + " ".join(branches) + " ELSE 0 END")
+
+
 def _bucket_cols(
     df: DataFrame,
     parsed: list[tuple[str, bool]],
@@ -430,23 +457,12 @@ def _bucket_cols(
     eff = min(n_buckets, max(2, (n_rows + rows_per_bucket - 1) // rows_per_bucket))
     raw = _subsample(raw, n_buckets, eff)
     hot = _hot_values(raw)
-    bounds = sorted(set(raw))
-    b = F.expr(_bucket_sql(v1, bounds))
-
-    # The all-rows-zero sub-bucket must NOT be a foldable literal:
-    # Catalyst folds `lit(0)` out of the window/aggregate partition
-    # requirements while the explicit repartition keeps it, so the
-    # "shared exchange" breaks — Spark inserts a redundant full
-    # re-exchange of the fact before the window plus re-exchanges of
-    # every directory-aggregate branch (measured: +1 fact shuffle and
-    # +3 directory shuffles per call in the no-skew case).  `hash(v)%1`
-    # is a deterministic zero that stays an attribute.
-    sub = F.expr(f"(hash({v1}) % 1)")
+    b = F.expr(_bucket_sql(v1, sorted(set(raw))))
+    c2, c2t, sub_rows = None, "", []
     if skew_split and hot and len(parsed) > 1:
-        c2, asc2 = parsed[1]
+        c2 = parsed[1][0]
         c2t = dtypes.get(c2, "")
-        splittable = not c2t.startswith(_REJECT_TYPES)
-        if splittable:
+        if not c2t.startswith(_REJECT_TYPES):
             kmax = 2 + max(sum(1 for q in raw if q == v) for v in hot)
 
             def compute_sub():
@@ -469,57 +485,76 @@ def _bucket_cols(
                 compute_sub,
                 stable_key=stats_key,
             )
-            v2 = _as_double_sql(c2, c2t)
-            branches = []
-            for hv, gosb in sub_rows:
-                sbounds = sorted({x for x in gosb if x is not None})
-                if sbounds:
-                    # NULL secondary values sort NULLS FIRST under asc /
-                    # NULLS LAST under desc in the intra-bucket window;
-                    # sub-bucket -1 matches BOTH (the directory order
-                    # negates sub ids for desc), mirroring the leading
-                    # key's -1 NULL bucket.
-                    sid = (
-                        f"(CASE WHEN {_ident(c2)} IS NULL THEN -1 "
-                        f"ELSE {_le_count_sql(v2, sbounds)} END)"
-                    )
-                    branches.append(
-                        f"WHEN {v1} = {_sql_double(hv)} THEN {sid}"
-                    )
-            if branches:
-                sub = F.expr("CASE " + " ".join(branches) + " ELSE 0 END")
-    return b, sub, n_rows
+    return b, _sub_col(v1, c2, c2t, sub_rows), n_rows
 
 
-def bucket_frame(
-    df: DataFrame,
-    order: Sequence[str],
-    *,
-    n_buckets: int = 64,
-    rel_err: float = 1e-2,
-    skew_split: bool = True,
-    parallelism: int | None = None,
-    rows_per_bucket: int = _ROWS_PER_TASK,
-) -> tuple[DataFrame, list[tuple[str, bool]], DataFrame]:
-    """Attach the (bucket, sub-bucket) columns WITHOUT collecting a
-    directory — the entry point for consumers that fold their own
-    in-plan prefix over the directory aggregate (see j_skyline_pareto's
-    prefix-max). The frame comes back repartitioned on the bucket keys
-    (data-scaled unless ``parallelism`` pins it).  Returns (bucketed
-    frame, parsed order spec, PRE-repartition keyed frame): consumers
-    should aggregate their directory from the pre frame (map-side
-    combine, pruned scan) and wrap it in ``materialize_directory`` so
-    its branches don't replan the fact scan."""
-    parsed = _parse_order(order)
-    _check_reserved(df.columns)
-    bexpr, sexpr, n_rows = _bucket_cols(
-        df, parsed, n_buckets=n_buckets, rel_err=rel_err,
-        skew_split=skew_split, rows_per_bucket=rows_per_bucket,
+def _dir_agg(pre: DataFrame, group_cols: Sequence[str], aggs: dict) -> DataFrame:
+    """THE directory aggregate: per-(group…, bucket, sub) row count
+    ``_gocnt`` plus ``aggs`` ({name: aggregate}), taken from the
+    PRE-exchange frame so it partial-aggregates map-side on the scan
+    partitions (a tiny shuffle, column-pruned scan)."""
+    return pre.groupBy(*group_cols, _B, _S).agg(
+        F.count(F.lit(1)).alias("_gocnt"), *[e.alias(n) for n, e in aggs.items()]
     )
-    n_part = parallelism or _auto_parallelism(df.sparkSession, n_rows)
-    pre = df.withColumn(_B, bexpr).withColumn(_S, sexpr)
-    bucketed = pre.repartition(n_part, _B, _S)
-    return bucketed, parsed, pre
+
+
+def _in_order(cells: list, parsed: list[tuple[str, bool]]) -> list:
+    """Directory cells ``(bucket, sub, …)`` in GLOBAL sort order: bucket
+    ids follow the leading key's direction, sub ids the secondary's."""
+    asc1 = parsed[0][1]
+    asc2 = parsed[1][1] if len(parsed) > 1 else True
+    return sorted(
+        cells, key=lambda c: (c[0] if asc1 else -c[0], c[1] if asc2 else -c[1])
+    )
+
+
+def _prefixes(cells: list, measure, fmt, combine=operator.add):
+    """THE driver-side fold: over ``cells`` in global order, each cell's
+    exclusive prefix of ``measure(cell)`` under ``combine`` (NULL values
+    skipped; ``None`` until the first value) as ``[(cell key,
+    fmt(prefix))]``, plus ``fmt`` of the fold over every cell."""
+    acc, pairs = None, []
+    for c in cells:
+        pairs.append((c[0] * 65536 + c[1], fmt(acc)))
+        v = measure(c)
+        if v is not None:
+            acc = v if acc is None else combine(acc, v)
+    return pairs, fmt(acc)
+
+
+def _map_sql(pairs) -> str:
+    return "map(" + ",".join(f"{k},{v}" for k, v in pairs) + ")"
+
+
+def _lookup(pairs, keys: Sequence[str], empty_sql: str) -> Column:
+    """THE literal-map renderer: ``element_at(map(k1, v1, …), key)``,
+    one ``element_at`` per key in ``keys`` for nested maps, as ONE SQL
+    string (a create_map of 2·|directory| F.lit calls costs ~1s of py4j
+    chatter on a 379-row directory).  ``empty_sql`` stands in for an
+    empty directory."""
+    if not pairs:
+        return F.expr(empty_sql)
+    sql = _map_sql(pairs)
+    for k in keys:
+        sql = f"element_at({sql}, {k})"
+    return F.expr(sql)
+
+
+def _sql_value(v, tsql: str) -> str:
+    """Exact SQL literal of a directory value (the string form
+    round-trips DECIMAL and integral values exactly)."""
+    return f"CAST(NULL AS {tsql})" if v is None else f"CAST('{v}' AS {tsql})"
+
+
+def _widen(f: SQLT.StructField) -> SQLT.DataType:
+    """Prefix sums of per-bucket sums need headroom: widen decimals to
+    precision 38, integrals to long; everything else keeps its type."""
+    t = f.dataType
+    if isinstance(t, SQLT.DecimalType):
+        return SQLT.DecimalType(38, t.scale)
+    if isinstance(t, (SQLT.ByteType, SQLT.ShortType, SQLT.IntegerType, SQLT.LongType)):
+        return SQLT.LongType()
+    return t
 
 
 @dataclass
@@ -537,14 +572,17 @@ class Bucketing:
     def total_count(self) -> int:
         return sum(r[2] for r in self.directory)
 
-    def agg_total(self, name: str):
-        vals = [r[3][name] for r in self.directory if r[3][name] is not None]
-        if not vals:
-            return None
-        return sum(vals[1:], vals[0])
-
-    def local_window(self) -> Window:
-        return Window.partitionBy(_B, _S).orderBy(*_sort_cols(self.parsed))
+    def prefix(self, name: str, combine) -> Column:
+        """Per-cell fold under ``combine`` of the aggregate ``name`` over
+        every STRICTLY earlier cell (NULL for the first), as one
+        literal-map lookup on ``BUCKET_KEYS`` — e.g. ``combine=max``
+        gives the skyline's cross-bucket dominance carry."""
+        t = {f.name: f for f in self.agg_fields}[name].dataType
+        tsql = t.simpleString().upper()
+        pairs, _ = _prefixes(
+            self.directory, lambda c: c[3][name], lambda v: _sql_value(v, tsql), combine
+        )
+        return _lookup(pairs, [f"{_B} * 65536 + {_S}"], f"CAST(NULL AS {tsql})")
 
 
 def bucketize(
@@ -571,7 +609,8 @@ def bucketize(
     # agg names live only in the driver directory (never in an output
     # frame), so internal `_go*` names are fine — only _B/_S collide.
     _check_reserved(df.columns)
-    if aggs and ({_B, _S, "_gocnt"} & set(aggs)):
+    aggs = aggs or {}
+    if {_B, _S, "_gocnt"} & set(aggs):
         # _gocnt is the directory's internal row counter: an agg under
         # that name would shadow it in the Row lookup below and corrupt
         # offsets/totals silently
@@ -581,105 +620,13 @@ def bucketize(
         skew_split=skew_split, rows_per_bucket=rows_per_bucket,
     )
     bucketed = df.withColumn(_B, bexpr).withColumn(_S, sexpr)
-    asc1 = parsed[0][1]
-    aggs = aggs or {}
-    agg_exprs = [F.count(F.lit(1)).alias("_gocnt")] + [
-        e.alias(n) for n, e in aggs.items()
-    ]
-    bdir = bucketed.groupBy(_B, _S).agg(*agg_exprs)
-    rows = bdir.collect()
+    bdir = _dir_agg(bucketed, [], aggs)
+    directory = _in_order(
+        [(r[_B], r[_S], r["_gocnt"], {n: r[n] for n in aggs}) for r in bdir.collect()],
+        parsed,
+    )
     agg_fields = [f for f in bdir.schema.fields if f.name in aggs]
-
-    def _key(r):
-        gb = r[_B] if asc1 else -r[_B]
-        gs = r[_S]
-        if len(parsed) > 1 and not parsed[1][1]:
-            gs = -gs
-        return (gb, gs)
-
-    directory = [
-        (r[_B], r[_S], r["_gocnt"], {n: r[n] for n in aggs})
-        for r in sorted(rows, key=_key)
-    ]
     return Bucketing(df=bucketed, parsed=parsed, directory=directory, agg_fields=agg_fields)
-
-
-def _widen(f: SQLT.StructField) -> SQLT.DataType:
-    """Prefix sums of per-bucket sums need headroom: widen decimals to
-    precision 38, integrals to long; everything else keeps its type."""
-    t = f.dataType
-    if isinstance(t, SQLT.DecimalType):
-        return SQLT.DecimalType(38, t.scale)
-    if isinstance(t, (SQLT.ByteType, SQLT.ShortType, SQLT.IntegerType, SQLT.LongType)):
-        return SQLT.LongType()
-    return t
-
-
-def offsets_table(
-    bk: Bucketing,
-    spark,
-    *,
-    count_offset: str | None = "_gooff",
-    sum_offsets: dict[str, str] | None = None,
-    max_prefix: dict[str, str] | None = None,
-) -> DataFrame:
-    """Broadcastable literal table keyed by (bucket, sub-bucket).
-
-    - ``count_offset``: rows strictly before the bucket (global rn base)
-    - ``sum_offsets``: {agg_name: out} exclusive prefix sum of an exact
-      per-bucket aggregate
-    - ``max_prefix``: {agg_name: out} max over all STRICTLY earlier
-      buckets (every value there is strictly below this bucket's range —
-      the skyline's cross-bucket dominance carrier), NULL for the first
-    """
-    sum_offsets = sum_offsets or {}
-    max_prefix = max_prefix or {}
-    fields = [
-        SQLT.StructField(_B, SQLT.IntegerType(), False),
-        SQLT.StructField(_S, SQLT.IntegerType(), False),
-    ]
-    by_name = {f.name: f for f in bk.agg_fields}
-    if count_offset:
-        fields.append(SQLT.StructField(count_offset, SQLT.LongType(), False))
-    for n, out in sum_offsets.items():
-        fields.append(SQLT.StructField(out, _widen(by_name[n]), True))
-    for n, out in max_prefix.items():
-        fields.append(SQLT.StructField(out, by_name[n].dataType, True))
-
-    out_rows = []
-    run_cnt = 0
-    run_sum: dict[str, object] = {n: None for n in sum_offsets}
-    run_max: dict[str, object] = {n: None for n in max_prefix}
-    for gb, gs, cnt, avals in bk.directory:
-        row = [gb, gs]
-        if count_offset:
-            row.append(run_cnt)
-        for n in sum_offsets:
-            row.append(run_sum[n])
-        for n in max_prefix:
-            row.append(run_max[n])
-        out_rows.append(tuple(row))
-        run_cnt += cnt
-        for n in sum_offsets:
-            v = avals[n]
-            if v is not None:
-                run_sum[n] = v if run_sum[n] is None else run_sum[n] + v
-        for n in max_prefix:
-            v = avals[n]
-            if v is not None:
-                run_max[n] = v if run_max[n] is None else max(run_max[n], v)
-    # exclusive prefix: a None sum offset means "zero so far"
-    zero = {n: Decimal(0) if isinstance(_widen(by_name[n]), SQLT.DecimalType) else 0
-            for n in sum_offsets}
-    fixed = []
-    for r in out_rows:
-        r = list(r)
-        base = 2 + (1 if count_offset else 0)
-        for i, n in enumerate(sum_offsets):
-            if r[base + i] is None:
-                r[base + i] = zero[n]
-        fixed.append(tuple(r))
-    return F.broadcast(spark.createDataFrame(fixed, SQLT.StructType(fields)))
 
 
 def ntile_expr(rn: Column, total: int, n: int) -> Column:
@@ -696,7 +643,6 @@ def ntile_expr(rn: Column, total: int, n: int) -> Column:
     lo = F.floor((rn - 1) / F.lit(q + 1)).cast("int") + 1
     hi = F.lit(r) + F.floor((rn - 1 - cut) / F.lit(q)).cast("int") + 1
     return F.when(rn <= cut, lo).otherwise(hi)
-
 
 
 def _idiv(a: Column, b: Column) -> Column:
@@ -728,6 +674,139 @@ def _earlier_cond(parsed: list[tuple[str, bool]]) -> Column:
     first = (bb < ab) if asc1 else (bb > ab)
     second = (bs < as_) if asc2 else (bs > as_)
     return first | ((bb == ab) & second)
+
+
+def _exact_sum_cols(df: DataFrame, pairs) -> list[str]:
+    """Value columns of running/grand sums, type-checked: only DECIMAL
+    and integral sums are associative-exact under per-bucket
+    regrouping (module docstring's exactness rule)."""
+    dtypes = dict(df.dtypes)
+    for vc, _ in pairs:
+        t = dtypes[vc]
+        if not (t.startswith("decimal") or t in ("int", "bigint", "smallint", "tinyint")):
+            raise TypeError(
+                f"running/grand sum over non-exact type {t} ({vc}): "
+                "per-bucket regrouping would drift ulps vs a sequential "
+                "oracle — cast to DECIMAL first"
+            )
+    return sorted({vc for vc, _ in pairs})
+
+
+def _running_sum(off: Column, vc: str, w) -> Column:
+    """``off`` + the intra-cell running sum of ``vc``, with naive-window
+    NULL parity: SUM ... ROWS UNBOUNDED PRECEDING is NULL only while
+    EVERY preceding value is NULL — the offset stays NULL until some
+    earlier cell held a value and coalesces JOINTLY with the intra-cell
+    running sum, not per-term."""
+    run = F.sum(vc).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return F.when(off.isNull() & run.isNull(), F.lit(None)).otherwise(
+        F.coalesce(off, F.lit(0)) + F.coalesce(run, F.lit(0))
+    )
+
+
+def _attach(
+    out: DataFrame,
+    parsed: list[tuple[str, bool]],
+    cells: dict,
+    sum_fields: dict | None = None,
+    *,
+    group: str | None = None,
+    g_dtype: str = "",
+    keys: tuple[str, str] = (_B, _S),
+    rn_tmp: str = "_gorn",
+    row_number: str | None = None,
+    ntile: tuple[int, str] | None = None,
+    cumsum: Sequence[tuple[str, str]] = (),
+    count_out: str | None = None,
+    totals: Sequence[tuple[str, str]] = (),
+) -> DataFrame:
+    """The shared tail of every literal-map ordinal.
+
+    ``cells`` is the collected directory, ``{group value: [(bucket, sub,
+    count, {"_gosum_<col>": sum})]}`` (the single group ``None`` when
+    ungrouped); ``out`` is the frame already repartitioned on ``(group,
+    *keys)``.  Each measure folds per group (``_prefixes``), renders as
+    one literal-map lookup (``_lookup``) — nested ``group → cell`` when
+    grouped — and lands as ``cell prefix + intra-cell window``; the
+    per-group grand values are plain literals when ungrouped and a flat
+    ``group → value`` map otherwise.  Every window is partitioned by
+    ``(group, *keys)``: bounded partitions, no joins.  The bucket keys
+    (and ``rn_tmp``, the row number an NTILE-only call needs) are
+    dropped."""
+    b, s = keys
+    ckey = f"{b} * 65536 + {s}"
+    if group is None:
+
+        def at_cell(per: dict, empty: str) -> Column:
+            return _lookup(per[None], [ckey], empty)
+
+        def at_group(per: dict, empty: str) -> Column:
+            return F.expr(per[None])
+
+    else:
+        if g_dtype == "string":
+
+            def g_sql(v) -> str:
+                return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+            g_expr = _ident(group)
+        else:
+
+            def g_sql(v) -> str:
+                return f"{int(v)}L"
+
+            g_expr = f"CAST({_ident(group)} AS BIGINT)"
+
+        def at_cell(per: dict, empty: str) -> Column:
+            pairs = [(g_sql(g), _map_sql(inner)) for g, inner in per.items()]
+            return _lookup(pairs, [g_expr, ckey], empty)
+
+        def at_group(per: dict, empty: str) -> Column:
+            return _lookup([(g_sql(g), v) for g, v in per.items()], [g_expr], empty)
+
+    ordered = {g: _in_order(cs, parsed) for g, cs in cells.items()}
+
+    def fold(measure, fmt):
+        folded = {g: _prefixes(cs, measure, fmt) for g, cs in ordered.items()}
+        return (
+            {g: f[0] for g, f in folded.items()},
+            {g: f[1] for g, f in folded.items()},
+        )
+
+    w = Window.partitionBy(*([group] if group else []), b, s).orderBy(
+        *_sort_cols(parsed)
+    )
+    offs, counts = fold(lambda c: c[2], lambda v: f"{v or 0}L")
+    rn_name = row_number or (rn_tmp if ntile else None)
+    if rn_name:
+        out = out.withColumn(
+            rn_name, at_cell(offs, "CAST(0 AS BIGINT)") + F.row_number().over(w)
+        )
+    if ntile:
+        n, tname = ntile
+        rn = F.col(rn_name)
+        out = out.withColumn(
+            tname,
+            ntile_expr(rn, sum(c[2] for c in cells[None]), n)
+            if group is None
+            else ntile_expr_col(rn, at_group(counts, "CAST(NULL AS BIGINT)"), n),
+        )
+    for vc, oname in cumsum:
+        tsql = _widen(sum_fields[f"_gosum_{vc}"]).simpleString().upper()
+        sums, _ = fold(lambda c: c[3][f"_gosum_{vc}"], lambda v: _sql_value(v, tsql))
+        out = out.withColumn(
+            oname, _running_sum(at_cell(sums, f"CAST(NULL AS {tsql})"), vc, w)
+        )
+    if count_out:
+        out = out.withColumn(count_out, at_group(counts, "CAST(NULL AS BIGINT)"))
+    for vc, oname in totals:
+        tsql = _widen(sum_fields[f"_gosum_{vc}"]).simpleString().upper()
+        _, tots = fold(lambda c: c[3][f"_gosum_{vc}"], lambda v: _sql_value(v, tsql))
+        out = out.withColumn(oname, at_group(tots, f"CAST(NULL AS {tsql})"))
+    drop = [b, s]
+    if ntile and not row_number:
+        drop.append(rn_tmp)
+    return out.drop(*drop)
 
 
 def global_ordinals(
@@ -762,6 +841,13 @@ def global_ordinals(
       / grand sums attached as literals (no ``OVER ()`` window).
     - ``parallelism``: pin the bucket-exchange task count; default
       scales to the measured row count (``_auto_parallelism``).
+
+    The main plan is a single pipeline — scan → project(map lookups) →
+    one hash exchange → per-bucket sort+window — with NO directory
+    joins, broadcast builds, or extra query stages on the critical path
+    (measured ~2× faster than the in-plan triangular-join form at
+    sf0.1; the same two-bounded-driver-jobs economics as
+    repartitionByRange).
     """
     if spark is None:
         spark = df.sparkSession
@@ -772,24 +858,7 @@ def global_ordinals(
         [row_number, total_count, ntile[1] if ntile else None]
         + [o for _, o in cumsum + totals],
     )
-    for vc, _ in list(cumsum) + list(totals):
-        t = dict(df.dtypes)[vc]
-        if not (t.startswith("decimal") or t in ("int", "bigint", "smallint", "tinyint")):
-            raise TypeError(
-                f"running/grand sum over non-exact type {t} ({vc}): "
-                "per-bucket regrouping would drift ulps vs a sequential "
-                "oracle — cast to DECIMAL first"
-            )
-    # Directory as DRIVER LITERALS (the multi_ordinals design): one
-    # bounded collect of the ≤(2n+1)·ksub-row per-bucket aggregate
-    # (map-side combined, column-pruned scan), folded into literal
-    # lookup MAPS keyed by b·2^16+s.  The main plan is then a single
-    # pipeline — scan → project(map lookups) → one hash exchange →
-    # per-bucket sort+window — with NO directory joins, broadcast
-    # builds, or extra query stages on the critical path (measured ~2×
-    # faster than the in-plan triangular-join form at sf0.1; the same
-    # two-bounded-driver-jobs economics as repartitionByRange).
-    sum_cols = sorted({v for v, _ in cumsum + totals})
+    sum_cols = _exact_sum_cols(df, cumsum + totals)
     bk = bucketize(
         df,
         order,
@@ -799,81 +868,23 @@ def global_ordinals(
         skew_split=skew_split,
         rows_per_bucket=rows_per_bucket,
     )
-    parsed = bk.parsed
-    total = bk.total_count
     # Pin the bucket exchange, scaled to the data: AQE would coalesce
     # this small-bytes shuffle to a couple of partitions and serialize
     # the per-bucket sorts, while the session default (200) makes a
     # 15k-row post-agg frame pay a 200-task sort wave.  total_count is
     # the directory's EXACT row count — no second sizing pass.
-    n_part = parallelism or _auto_parallelism(spark, total)
-    out = bk.df.repartition(n_part, _B, _S)
-
-    def _lit_map(pairs: list[tuple[int, str]], empty_sql: str) -> Column:
-        """One literal SQL map (a create_map of 2·|directory| F.lit
-        calls costs ~1s of py4j chatter — same note as multi_ordinals)."""
-        if not pairs:
-            return F.expr(empty_sql)
-        body = ",".join(f"{k},{v}" for k, v in pairs)
-        return F.expr(f"element_at(map({body}), {_B} * 65536 + {_S})")
-
-    w = Window.partitionBy(_B, _S).orderBy(*_sort_cols(parsed))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rn_name = row_number or ("_gorn" if ntile else None)
-    if rn_name:
-        run_cnt, pairs = 0, []
-        for gb, gs, cnt, _ in bk.directory:
-            pairs.append((gb * 65536 + gs, f"{run_cnt}L"))
-            run_cnt += cnt
-        out = out.withColumn(
-            rn_name, _lit_map(pairs, "CAST(0 AS BIGINT)") + F.row_number().over(w)
-        )
-    if ntile:
-        n, tname = ntile
-        out = out.withColumn(tname, ntile_expr(F.col(rn_name), total, n))
-    by_name = {f.name: f for f in bk.agg_fields}
-    for vc, oname in cumsum:
-        # naive-window NULL parity: SUM ... ROWS UNBOUNDED PRECEDING is
-        # NULL only while EVERY preceding value is NULL — the literal
-        # offset stays NULL until some earlier bucket held a value and
-        # coalesces JOINTLY with the intra-bucket running sum, not
-        # per-term.  Exactness: the values are DECIMAL/integral (the
-        # type guard above), so the string literals round-trip exact.
-        tsql = _widen(by_name[f"_gosum_{vc}"]).simpleString().upper()
-        run_sum, pairs = None, []
-        for gb, gs, _, avals in bk.directory:
-            lit = (
-                f"CAST(NULL AS {tsql})"
-                if run_sum is None
-                else f"CAST('{run_sum}' AS {tsql})"
-            )
-            pairs.append((gb * 65536 + gs, lit))
-            v = avals[f"_gosum_{vc}"]
-            if v is not None:
-                run_sum = v if run_sum is None else run_sum + v
-        off = _lit_map(pairs, f"CAST(NULL AS {tsql})")
-        run = F.sum(vc).over(wrun)
-        out = out.withColumn(
-            oname,
-            F.when(off.isNull() & run.isNull(), F.lit(None)).otherwise(
-                F.coalesce(off, F.lit(0)) + F.coalesce(run, F.lit(0))
-            ),
-        )
-    if total_count:
-        out = out.withColumn(total_count, F.lit(total).cast("long"))
-    for vc, oname in totals:
-        tsql = _widen(by_name[f"_gosum_{vc}"]).simpleString().upper()
-        tv = bk.agg_total(f"_gosum_{vc}")
-        out = out.withColumn(
-            oname,
-            F.expr(f"CAST(NULL AS {tsql})")
-            if tv is None
-            else F.expr(f"CAST('{tv}' AS {tsql})"),
-        )
-    drop = [_B, _S]
-    if ntile and not row_number:
-        drop.append("_gorn")
-    return out.drop(*drop)
+    n_part = parallelism or _auto_parallelism(spark, bk.total_count)
+    return _attach(
+        bk.df.repartition(n_part, _B, _S),
+        bk.parsed,
+        {None: bk.directory},
+        {f.name: f for f in bk.agg_fields},
+        row_number=row_number,
+        ntile=ntile,
+        cumsum=cumsum,
+        count_out=total_count,
+        totals=totals,
+    )
 
 
 def multi_ordinals(
@@ -897,9 +908,10 @@ def multi_ordinals(
     recomputing a longer chain), this runs THREE bounded driver jobs
     total: one stacked quantile+count aggregate, one stacked
     percentile_approx over every dimension's hot values, and one
-    exploded (dim, bucket) directory count.  The final plan is k
-    broadcast joins + k partitioned windows over the original frame —
-    same shape, none of the chained re-sampling.
+    exploded (dim, bucket) directory count.  Each dimension's directory
+    then runs through the shared literal-map tail (``_attach``): k
+    partitioned windows over one projection, no joins — same shape as
+    k ``global_ordinals`` calls, none of the chained re-sampling.
     """
     if spark is None:
         spark = df.sparkSession
@@ -939,7 +951,7 @@ def multi_ordinals(
     hots = [_hot_values(raw) for raw in raws]
 
     # job 2 (only if any hot): stacked per-(dim, value) secondary cuts
-    sub_cuts: dict[tuple[int, float], list[float]] = {}
+    hot_cuts: dict[int, list] = {i: [] for i in range(k)}
     if skew_split:
         stack = []
         kmax = 2
@@ -947,7 +959,7 @@ def multi_ordinals(
             if not hot or len(parsed) < 2:
                 continue
             c2 = parsed[1][0]
-            if dtypes.get(c2, "").startswith(("string", "binary", "array", "struct")):
+            if dtypes.get(c2, "").startswith(_REJECT_TYPES):
                 continue
             kmax = max(
                 kmax, 2 + max(sum(1 for q in raws[i] if q == v) for v in hot)
@@ -976,379 +988,58 @@ def multi_ordinals(
             for gd, gval, gsb in _memo_action(
                 frame, f"hotstack|{kmax}", compute_stacked
             ):
-                cuts = sorted({x for x in gsb if x is not None})
-                if cuts:
-                    sub_cuts[(gd, gval)] = cuts
+                hot_cuts[gd].append((gval, gsb))
 
     # bucket expressions per dimension (SQL text — one expr() call per
     # column instead of thousands of py4j Column-op round-trips)
     bcols, scols = [], []
     for i, parsed in enumerate(parsed_all):
-        c1 = parsed[0][0]
-        v1 = _as_double_sql(c1, dtypes.get(c1, ""))
-        bounds = sorted(set(raws[i]))
-        bcols.append(F.expr(_bucket_sql(v1, bounds)).alias(f"_gb{i}"))
-        branches = []
-        for (dim, v), cuts in sub_cuts.items():
-            if dim != i:
-                continue
-            c2 = parsed[1][0]
-            # NULL secondary → sub-bucket -1 (NULLS FIRST asc / LAST
-            # desc parity, same rationale as _bucket_cols)
-            v2 = _as_double_sql(c2, dtypes.get(c2, ""))
-            sid = (
-                f"(CASE WHEN {_ident(c2)} IS NULL THEN -1 "
-                f"ELSE {_le_count_sql(v2, cuts)} END)"
-            )
-            branches.append(f"WHEN {v1} = {_sql_double(v)} THEN {sid}")
-        sub = (
-            F.expr("CASE " + " ".join(branches) + " ELSE 0 END")
-            if branches
-            # non-foldable zero: a lit(0) sub key folds out of the
-            # window requirements but not the repartition, forcing a
-            # redundant re-exchange (see _bucket_cols)
-            else F.expr(f"(hash({v1}) % 1)")
-        )
+        v1 = _as_double_sql(leads[i], dtypes.get(leads[i], ""))
+        bcols.append(F.expr(_bucket_sql(v1, sorted(set(raws[i])))).alias(f"_gb{i}"))
+        c2 = parsed[1][0] if len(parsed) > 1 else None
+        sub = _sub_col(v1, c2, dtypes.get(c2, ""), hot_cuts[i])
         scols.append(sub.alias(f"_gs{i}"))
     bucketed = df.select("*", *bcols, *scols)
 
-    # job 3: one exploded directory count for every dimension
+    # job 3: one directory aggregate over every dimension's exploded cells
     stacked = bucketed.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(i).alias("d"),
-                        F.col(f"_gb{i}").alias("b"),
-                        F.col(f"_gs{i}").alias("s"),
+                        F.lit(i).alias("_gd"),
+                        F.col(f"_gb{i}").alias(_B),
+                        F.col(f"_gs{i}").alias(_S),
                     )
                     for i in range(k)
                 ]
             )
         ).alias("z")
-    ).groupBy("z.d", "z.b", "z.s").agg(F.count(F.lit(1)).alias("c"))
-    rows = stacked.collect()
+    ).select("z.*")
+    rows = _dir_agg(stacked, ["_gd"], {}).collect()
 
-    # each dimension's ≤(2n+1)·ksub-row offset directory becomes a
-    # LITERAL map keyed by b*2^16+s — no join at all, so k dimensions
-    # stack as k partitioned windows over one projection (and the
-    # sequential same-frame join pattern that trips Spark's analyzer
-    # never appears)
+    # pin each dimension's window exchange, data-scaled (same
+    # AQE-coalesce rationale as global_ordinals)
+    n_part = parallelism or _auto_parallelism(spark, n_rows)
     out = bucketed
-    for i, (spec, parsed) in enumerate(zip(specs, parsed_all)):
-        asc1 = parsed[0][1]
-        asc2 = parsed[1][1] if len(parsed) > 1 else True
-        dim_rows = [r for r in rows if r["d"] == i]
-        dim_rows.sort(
-            key=lambda r: (r["b"] if asc1 else -r["b"], r["s"] if asc2 else -r["s"])
+    for i, spec in enumerate(specs):
+        keys = (f"_gb{i}", f"_gs{i}")
+        cells = [(r[_B], r[_S], r["_gocnt"], {}) for r in rows if r["_gd"] == i]
+        out = _attach(
+            out.repartition(n_part, *keys),
+            parsed_all[i],
+            {None: cells},
+            keys=keys,
+            rn_tmp=f"_grn{i}",
+            row_number=spec.get("row_number"),
+            ntile=spec.get("ntile"),
         )
-        run, pairs = 0, []
-        for r in dim_rows:
-            pairs.append(f"{r['b'] * 65536 + r['s']},{run}L")
-            run += r["c"]
-        total = run
-        # literal map as ONE SQL string (a create_map of 2·|directory|
-        # F.lit calls costs ~1s of py4j chatter on a 379-row directory)
-        off_col = (
-            F.expr(
-                f"CAST(element_at(map({','.join(pairs)}), "
-                f"`_gb{i}` * 65536 + `_gs{i}`) AS BIGINT)"
-            )
-            if pairs
-            else F.lit(0).cast("long")
-        )
-        w = Window.partitionBy(f"_gb{i}", f"_gs{i}").orderBy(*_sort_cols(parsed))
-        rn_name = spec.get("row_number") or f"_grn{i}"
-        # pin each dimension's window exchange, data-scaled (same
-        # AQE-coalesce rationale as global_ordinals)
-        n_part = parallelism or _auto_parallelism(spark, n_rows)
-        out = out.repartition(n_part, f"_gb{i}", f"_gs{i}")
-        out = out.withColumn(rn_name, off_col + F.row_number().over(w))
-        if spec.get("ntile"):
-            n, tname = spec["ntile"]
-            out = out.withColumn(tname, ntile_expr(F.col(rn_name), total, n))
-        drop = [f"_gb{i}", f"_gs{i}"]
-        if not spec.get("row_number"):
-            drop.append(rn_name)
-        out = out.drop(*drop)
     return out
 
 
-def grouped_row_number(
-    df: DataFrame,
-    group_col: str,
-    order_within: Sequence[str],
-    out: str,
-    *,
-    n_buckets: int = 64,
-    rel_err: float = 1e-2,
-    parallelism: int | None = None,
-    rows_per_bucket: int = _ROWS_PER_TASK,
-) -> DataFrame:
-    """``ROW_NUMBER() OVER (PARTITION BY group ORDER BY …)`` when the
-    groups are FEW and HUGE — without one-task-per-group windows.
-
-    A plain partitioned window is the right plan when groups are many
-    (users, orders); when the partition key has low cardinality (length
-    bands, shards, days), each group lands on ONE task and a 100 TB
-    band sorts on a single core.  This decomposition range-buckets by
-    the numeric ``group_col`` (hot groups — detected as repeated
-    quantiles — sub-split by the first ``order_within`` column), sorts
-    each bounded bucket once, and repairs the per-group numbering from
-    a tiny (bucket, sub, group) directory:
-
-        rn = intra_bucket_rn - rows_of_earlier_groups_in_this_bucket
-                             + rows_of_this_group_in_earlier_buckets
-
-    Because the bucket id is a pure function of the group value, only
-    hot-group sub-splits ever contribute the third term.  The directory
-    aggregate partial-aggregates map-side on the scan partitions (a
-    tiny shuffle, persisted once — see ``materialize_directory``) and
-    both correction terms come from one broadcast triangular join over
-    the ≤(groups + sub-splits)-row directory.
-
-    ``group_col`` must be numeric/date/timestamp and non-NULL (NULL
-    groups would need a NULL-safe triangular comparison; no suite query
-    has them — validated only by documentation, like the naive form's
-    NULL partition).  ``order_within`` uses the ordinal spec ("-col"
-    for DESC).  Consumer: llm_length_batching (suite/round4f.py).
-    """
-    full_order = [group_col] + list(order_within)
-    parsed = _parse_order(full_order)
-    if not parsed[0][1]:
-        raise ValueError("grouped_row_number: pass group_col without '-'")
-    _check_reserved(df.columns, [out])
-    bexpr, sexpr, n_rows = _bucket_cols(
-        df, parsed, n_buckets=n_buckets, rel_err=rel_err,
-        skew_split=True, rows_per_bucket=rows_per_bucket,
-    )
-    spark = df.sparkSession
-    n_part = parallelism or _auto_parallelism(spark, n_rows)
-    pre = df.withColumn(_B, bexpr).withColumn(_S, sexpr)
-    bucketed = pre.repartition(n_part, _B, _S)
-
-    # FAST PATH — integral group values (llm_length_batching's bands):
-    # collect the bounded (bucket, sub, group) directory and fold BOTH
-    # correction terms into one per-(group, cell) literal adjustment,
-    # ``rn = intra_cell_rn + adj``, where adj = rows of this group in
-    # earlier cells − rows of earlier groups in this cell.  Same shape
-    # as the other literal-map ordinals: single pipeline, no joins.
-    dtypes = dict(df.dtypes)
-    if dtypes.get(group_col) in ("int", "bigint", "smallint", "tinyint"):
-        # persist+count before collect: bounds driver memory against a
-        # high-cardinality group column (see grouped_ordinals fast path)
-        gdir = pre.groupBy(_B, _S, group_col).agg(
-            F.count(F.lit(1)).alias("_gocnt")
-        ).persist()
-        try:
-            rows = gdir.collect() if gdir.count() <= 4096 else None
-        finally:
-            gdir.unpersist()
-        if rows is not None and all(r[group_col] is not None for r in rows):
-            asc2 = parsed[1][1] if len(parsed) > 1 else True
-            cells: dict = {}
-            for r in rows:
-                cells.setdefault(
-                    (r[_B], r[_S]), []
-                ).append((int(r[group_col]), r["_gocnt"]))
-            running: dict = {}
-            per_group: dict = {}
-            for cell in sorted(cells, key=lambda c: (c[0], c[1] if asc2 else -c[1])):
-                glist = sorted(cells[cell])  # leading order is group ASC
-                intra = 0
-                for g, c in glist:
-                    adj_val = running.get(g, 0) - intra
-                    per_group.setdefault(g, []).append(
-                        (cell[0] * 65536 + cell[1], f"{adj_val}L")
-                    )
-                    intra += c
-                for g, c in glist:
-                    running[g] = running.get(g, 0) + c
-            if per_group:
-                outer = ",".join(
-                    f"{g}L,map({','.join(f'{k},{v}' for k, v in inner)})"
-                    for g, inner in per_group.items()
-                )
-                adj_col = F.expr(
-                    f"element_at(element_at(map({outer}), "
-                    f"CAST({_ident(group_col)} AS BIGINT)), {_B} * 65536 + {_S})"
-                )
-            else:
-                adj_col = F.lit(0).cast("long")
-            w_lit = Window.partitionBy(_B, _S).orderBy(*_sort_cols(parsed))
-            return bucketed.withColumn(
-                out, F.row_number().over(w_lit) + adj_col
-            ).drop(_B, _S)
-
-    # GENERAL PATH — persisted directory + broadcast triangular join
-    trip = materialize_directory(
-        pre.groupBy(_B, _S, group_col).agg(F.count(F.lit(1)).alias("_gocnt"))
-    )
-    a, b = trip.alias("a"), trip.alias("b")
-    ga, gb = F.col(f"a.{group_col}"), F.col(f"b.{group_col}")
-    same_bucket = (F.col(f"b.{_B}") == F.col(f"a.{_B}")) & (
-        F.col(f"b.{_S}") == F.col(f"a.{_S}")
-    )
-    cond = (same_bucket & (gb < ga)) | (_earlier_cond(parsed) & (gb == ga))
-    adj = (
-        a.join(F.broadcast(b), cond, "left")
-        .groupBy(
-            F.col(f"a.{_B}").alias(_B),
-            F.col(f"a.{_S}").alias(_S),
-            ga.alias("_gogrp"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.when(same_bucket, F.col("b._gocnt"))), F.lit(0)
-            ).alias("_gointra"),
-            F.coalesce(
-                F.sum(F.when(~same_bucket, F.col("b._gocnt"))), F.lit(0)
-            ).alias("_gocross"),
-        )
-    )
-    w = Window.partitionBy(_B, _S).orderBy(*_sort_cols(parsed))
-    bk, ad = bucketed.alias("l"), adj.alias("r")
-    joined = (
-        bk.join(
-            F.broadcast(ad),
-            (F.col(f"l.{_B}") == F.col(f"r.{_B}"))
-            & (F.col(f"l.{_S}") == F.col(f"r.{_S}"))
-            & (F.col(f"l.{group_col}") == F.col("r._gogrp")),
-        )
-        .drop(F.col(f"r.{_B}"))
-        .drop(F.col(f"r.{_S}"))
-    )
-    return (
-        joined.withColumn(
-            out,
-            F.row_number().over(w) - F.col("_gointra") + F.col("_gocross"),
-        )
-        .drop(_B, _S, "_gogrp", "_gointra", "_gocross")
-    )
-
-
-def _grouped_ordinals_literal(
-    bucketed: DataFrame,
-    gc: str,
-    g_dtype: str,
-    parsed: list[tuple[str, bool]],
-    lit_rows: list,
-    dir_fields: dict,
-    *,
-    row_number: str | None,
-    group_count: str | None,
-    ntile: tuple[int, str] | None,
-    cumsum: list[tuple[str, str]],
-    group_totals: list[tuple[str, str]],
-) -> DataFrame:
-    """grouped_ordinals' literal-map fast path: the collected (group,
-    bucket, sub) directory folds into NESTED literal maps —
-    ``element_at(element_at(outer, group), b·2^16+s)`` — so every
-    per-group measure is a pure projection over the one bucket
-    exchange.  Lookup cost per row is a ≤|groups|-entry outer probe
-    plus a ≤(2n+1)-entry inner probe of int keys (the multi_ordinals
-    literal-map trade, nested)."""
-    asc1 = parsed[0][1]
-    asc2 = parsed[1][1] if len(parsed) > 1 else True
-    by_group: dict = {}
-    for r in lit_rows:
-        by_group.setdefault(r[gc], []).append(r)
-    for rs in by_group.values():
-        rs.sort(key=lambda r: (r[_B] if asc1 else -r[_B], r[_S] if asc2 else -r[_S]))
-
-    if g_dtype == "string":
-        def g_sql(v) -> str:
-            return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-        g_expr = _ident(gc)
-    else:
-        def g_sql(v) -> str:
-            return f"{int(v)}L"
-
-        g_expr = f"CAST({_ident(gc)} AS BIGINT)"
-    ckey = f"{_B} * 65536 + {_S}"
-
-    def nested(per_group: dict, empty_sql: str) -> Column:
-        if not per_group:
-            return F.expr(empty_sql)
-        outer = ",".join(
-            f"{g_sql(g)},map({','.join(f'{k},{v}' for k, v in inner)})"
-            for g, inner in per_group.items()
-        )
-        return F.expr(f"element_at(element_at(map({outer}), {g_expr}), {ckey})")
-
-    def flat(per_group: dict, empty_sql: str) -> Column:
-        if not per_group:
-            return F.expr(empty_sql)
-        outer = ",".join(f"{g_sql(g)},{v}" for g, v in per_group.items())
-        return F.expr(f"element_at(map({outer}), {g_expr})")
-
-    out = bucketed
-    w = Window.partitionBy(gc, _B, _S).orderBy(*_sort_cols(parsed))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rn_name = row_number or ("_gorn" if ntile else None)
-    if rn_name:
-        offs = {}
-        for g, rs in by_group.items():
-            run, inner = 0, []
-            for r in rs:
-                inner.append((r[_B] * 65536 + r[_S], f"{run}L"))
-                run += r["_gocnt"]
-            offs[g] = inner
-        out = out.withColumn(
-            rn_name, nested(offs, "CAST(0 AS BIGINT)") + F.row_number().over(w)
-        )
-    need_tot = group_count or ntile
-    if need_tot:
-        tots = {
-            g: f"{sum(r['_gocnt'] for r in rs)}L" for g, rs in by_group.items()
-        }
-        tot_col = flat(tots, "CAST(NULL AS BIGINT)")
-    if ntile:
-        n, tname = ntile
-        out = out.withColumn(tname, ntile_expr_col(F.col(rn_name), tot_col, n))
-    for vc, oname in cumsum:
-        # same naive-window NULL parity as global_ordinals, per group
-        tsql = _widen(dir_fields[f"_gosum_{vc}"]).simpleString().upper()
-        offs = {}
-        for g, rs in by_group.items():
-            run_sum, inner = None, []
-            for r in rs:
-                lit = (
-                    f"CAST(NULL AS {tsql})"
-                    if run_sum is None
-                    else f"CAST('{run_sum}' AS {tsql})"
-                )
-                inner.append((r[_B] * 65536 + r[_S], lit))
-                v = r[f"_gosum_{vc}"]
-                if v is not None:
-                    run_sum = v if run_sum is None else run_sum + v
-            offs[g] = inner
-        off = nested(offs, f"CAST(NULL AS {tsql})")
-        run = F.sum(vc).over(wrun)
-        out = out.withColumn(
-            oname,
-            F.when(off.isNull() & run.isNull(), F.lit(None)).otherwise(
-                F.coalesce(off, F.lit(0)) + F.coalesce(run, F.lit(0))
-            ),
-        )
-    if group_count:
-        out = out.withColumn(group_count, tot_col)
-    for vc, oname in group_totals:
-        tsql = _widen(dir_fields[f"_gosum_{vc}"]).simpleString().upper()
-        gtots = {}
-        for g, rs in by_group.items():
-            vals = [r[f"_gosum_{vc}"] for r in rs if r[f"_gosum_{vc}"] is not None]
-            gtots[g] = (
-                f"CAST(NULL AS {tsql})"
-                if not vals
-                else f"CAST('{sum(vals[1:], vals[0])}' AS {tsql})"
-            )
-        out = out.withColumn(oname, flat(gtots, f"CAST(NULL AS {tsql})"))
-    drop = [_B, _S]
-    if ntile and not row_number:
-        drop.append("_gorn")
-    return out.drop(*drop)
+# Largest directory (cells over all groups) grouped_ordinals inlines as
+# literal maps; above it the persisted-directory join design runs.
+_LITERAL_CELLS = 4096
 
 
 def grouped_ordinals(
@@ -1372,24 +1063,25 @@ def grouped_ordinals(
     BY group ORDER BY …)`` — when the partition key has LOW CARDINALITY
     over a FACT-scale frame, the shape where the plain window puts a
     100 TB group on one task (3 return flags over lineitem, 4 languages
-    over a corpus).
+    over a corpus, 256-char length bands over documents).
 
-    Unlike ``grouped_row_number`` (which range-buckets by a numeric
-    group value), this buckets by the leading ORDER column — so groups
-    can be ANY equality-comparable type (strings included), and every
-    window partition ``(group, bucket, sub)`` is bounded by the BUCKET
-    size regardless of how skewed the groups are:
+    Rows bucket by the leading ORDER column, never by the group value —
+    so groups can be ANY equality-comparable type (strings included),
+    and every window partition ``(group, bucket, sub)`` is bounded by
+    the BUCKET size regardless of how skewed the groups are:
 
       1. one (memoized) sampled sketch of the order column buckets
          every row monotonically; the frame repartitions ONCE on
          ``(group…, bucket, sub)``;
       2. the per-cell directory — count plus any exact sums — is a
          grouped aggregate with map-side partial aggregation (a tiny
-         shuffle of ≤tasks·cells rows, persisted once for every
-         consumer branch);
-      3. per-cell exclusive prefixes WITHIN each group come from one
-         broadcast triangular join over the ≤|groups|·(2n+1)-row
-         directory; per-group grand totals from its re-aggregate;
+         shuffle of ≤tasks·cells rows);
+      3. a single string/integral group column's directory of
+         ≤``_LITERAL_CELLS`` cells folds on the driver into nested
+         literal maps (``_attach``); otherwise the directory is
+         persisted once and per-cell exclusive prefixes come from one
+         broadcast triangular join over it, per-group grand totals
+         from its re-aggregate;
       4. each ordinal is ``cell_offset + intra-cell window`` with the
          window partitioned by ``(group…, bucket, sub)``.
 
@@ -1423,14 +1115,7 @@ def grouped_ordinals(
         + [o for _, o in cumsum + group_totals],
     )
     dtypes = dict(df.dtypes)
-    for vc, _ in cumsum + group_totals:
-        t = dtypes[vc]
-        if not (t.startswith("decimal") or t in ("int", "bigint", "smallint", "tinyint")):
-            raise TypeError(
-                f"grouped running/grand sum over non-exact type {t} ({vc}): "
-                "per-bucket regrouping would drift ulps vs a sequential "
-                "oracle — cast to DECIMAL first"
-            )
+    sum_cols = _exact_sum_cols(df, cumsum + group_totals)
     parsed = _parse_order(order)
     bexpr, sexpr, n_rows = _bucket_cols(
         df, parsed, n_buckets=n_buckets, rel_err=rel_err,
@@ -1441,67 +1126,50 @@ def grouped_ordinals(
     n_part = parallelism or _auto_parallelism(spark, n_rows)
     pre = df.withColumn(_B, bexpr).withColumn(_S, sexpr)
     bucketed = pre.repartition(n_part, *group_cols, _B, _S)
-    sum_cols = sorted({v for v, _ in cumsum + group_totals})
+    aggs = {f"_gosum_{vc}": F.sum(vc) for vc in sum_cols}
 
-    # FAST PATH — single group column of string/integral type (every
-    # suite consumer): collect the bounded (group, bucket, sub)
-    # directory and fold it into nested literal maps, exactly like
-    # global_ordinals — the main plan becomes scan → project(nested
-    # map lookups) → one hash exchange → per-cell sort+window, with no
-    # directory joins or broadcast builds.  A cap guards against
-    # misuse on high-cardinality groups (this operator is for FEW huge
-    # groups); over the cap — or for multi-column / exotic group key
-    # types — the general persisted-directory join design below runs.
-    lit_rows = None
-    if len(group_cols) == 1 and dtypes[group_cols[0]] in (
+    # LITERAL PATH — single group column of string/integral type (every
+    # suite consumer but one): the main plan becomes scan →
+    # project(nested map lookups) → one hash exchange → per-cell
+    # sort+window.  The cap guards against misuse on high-cardinality
+    # groups (this operator is for FEW huge groups), bounded BEFORE
+    # pulling rows: persist+count materializes the aggregate once
+    # executor-side (spillable), the count is exact and tiny, and the
+    # conditional collect reads the cached blocks — no second fact scan,
+    # and no CollectLimitExec incremental job waves (the known
+    # limit().collect() trap).
+    gc = group_cols[0]
+    if len(group_cols) == 1 and dtypes[gc] in (
         "string", "int", "bigint", "smallint", "tinyint",
     ):
-        cap = 4096
-        dir_df = pre.groupBy(group_cols[0], _B, _S).agg(
-            F.count(F.lit(1)).alias("_gocnt"),
-            *[F.sum(vc).alias(f"_gosum_{vc}") for vc in sum_cols],
-        )
-        # Bound the collect BEFORE pulling rows: a high-cardinality
-        # group column (an ID passed by mistake) would otherwise stream
-        # |groups|x|cells| rows into the driver and OOM it ahead of the
-        # post-hoc cap check.  persist+count materializes the aggregate
-        # once executor-side (spillable), the count is exact and tiny,
-        # and the conditional collect reads the cached blocks — no
-        # second fact scan, and no CollectLimitExec incremental job
-        # waves (the known limit().collect() trap).
-        dir_df = dir_df.persist()
+        dir_df = _dir_agg(pre, group_cols, aggs).persist()
         try:
-            if dir_df.count() <= cap:
-                got = dir_df.collect()
-                if all(r[group_cols[0]] is not None for r in got):
-                    lit_rows = got
-                    dir_fields = {f.name: f for f in dir_df.schema.fields}
+            rows = dir_df.collect() if dir_df.count() <= _LITERAL_CELLS else None
         finally:
             dir_df.unpersist()
-    if lit_rows is not None:
-        return _grouped_ordinals_literal(
-            bucketed,
-            group_cols[0],
-            dtypes[group_cols[0]],
-            parsed,
-            lit_rows,
-            dir_fields,
-            row_number=row_number,
-            group_count=group_count,
-            ntile=ntile,
-            cumsum=cumsum,
-            group_totals=group_totals,
-        )
+        if rows is not None and all(r[gc] is not None for r in rows):
+            cells: dict = {}
+            for r in rows:
+                cells.setdefault(r[gc], []).append(
+                    (r[_B], r[_S], r["_gocnt"], {n: r[n] for n in aggs})
+                )
+            return _attach(
+                bucketed,
+                parsed,
+                cells,
+                {f.name: f for f in dir_df.schema.fields},
+                group=gc,
+                g_dtype=dtypes[gc],
+                row_number=row_number,
+                ntile=ntile,
+                cumsum=cumsum,
+                count_out=group_count,
+                totals=group_totals,
+            )
 
-    # GENERAL PATH — directory from the PRE-repartition frame (map-side
-    # partial agg + tiny shuffle), persisted once for every downstream
-    # branch (see materialize_directory)
-    counts = materialize_directory(
-        pre.groupBy(*group_cols, _B, _S).agg(
-            F.count(F.lit(1)).alias("_gocnt"),
-            *[F.sum(vc).alias(f"_gosum_{vc}") for vc in sum_cols],
-        )
-    )
+    # JOIN PATH — the directory, persisted once for every downstream
+    # branch (see materialize_directory), broadcast-joined back
+    counts = materialize_directory(_dir_agg(pre, group_cols, aggs))
     a, b = counts.alias("a"), counts.alias("b")
     same_group = F.lit(True)
     for g in group_cols:
@@ -1531,7 +1199,6 @@ def grouped_ordinals(
         out = out.join(F.broadcast(tot), group_cols)
 
     w = Window.partitionBy(*group_cols, _B, _S).orderBy(*_sort_cols(parsed))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rn_name = row_number or ("_gorn" if ntile else None)
     if rn_name:
         out = out.withColumn(rn_name, F.col("_gooff") + F.row_number().over(w))
@@ -1541,15 +1208,7 @@ def grouped_ordinals(
             tname, ntile_expr_col(F.col(rn_name), F.col("_gotot"), n)
         )
     for vc, oname in cumsum:
-        # same naive-window NULL parity as global_ordinals
-        off = F.col(f"_gooffs_{vc}")
-        run = F.sum(vc).over(wrun)
-        out = out.withColumn(
-            oname,
-            F.when(off.isNull() & run.isNull(), F.lit(None)).otherwise(
-                F.coalesce(off, F.lit(0)) + F.coalesce(run, F.lit(0))
-            ),
-        )
+        out = out.withColumn(oname, _running_sum(F.col(f"_gooffs_{vc}"), vc, w))
     if group_count:
         out = out.withColumn(group_count, F.col("_gotot"))
     for vc, oname in group_totals:

@@ -361,22 +361,22 @@ def a_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-document padding waste — the standard trick that cuts padded-token "
     "waste in training/inference dataloaders (vs global batching, where "
     "every batch pads to the corpus max). All-integer arithmetic: band, "
-    "rank, batch id, waste. Scale (round 7, substituted): the in-band "
-    "rank rides operators/ordinals.py grouped_row_number — bands are "
-    "FEW and HUGE at 100 TB (a plain PARTITION BY bucket window gives "
-    "one task per band), so rows range-bucket by band, a HOT band is "
-    "detected as a repeated quantile and sub-split by n_chars, and the "
-    "in-band rank is repaired from the driver-collected (bucket, sub, "
-    "band) directory folded into one literal adjustment map — a single "
+    "rank, batch id, waste. Scale: the in-band rank rides "
+    "operators/ordinals.py grouped_ordinals — bands are FEW and HUGE at "
+    "100 TB (a plain PARTITION BY bucket window gives one task per "
+    "band), so rows range-bucket by n_chars (a hot length is detected "
+    "as a repeated quantile and sub-split by doc_id), and the in-band "
+    "rank is repaired from the driver-collected (band, bucket, sub) "
+    "directory folded into one nested literal offset map — a single "
     "pipeline: one fact shuffle, no joins.",
 )
 def llm_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import grouped_row_number
+    from banksy_spark.operators.ordinals import grouped_ordinals
 
     d = T(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", F.expr("n_chars DIV 256").alias("bucket")
     )
-    b = grouped_row_number(d, "bucket", ["n_chars", "doc_id"], "rn")
+    b = grouped_ordinals(d, ["bucket"], ["n_chars", "doc_id"], row_number="rn")
     batched = b.select(
         "doc_id", "n_chars", "bucket", F.expr("(rn - 1) DIV 8").alias("batch_id")
     )

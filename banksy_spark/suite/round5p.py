@@ -58,12 +58,6 @@ from banksy_spark.suite.registry import T, query
     "angular-partition form is the d>2 extension).",
 )
 def j_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import (
-        BUCKET_KEYS,
-        _auto_parallelism,
-        bucketize,
-    )
-
     p = T(spark, sf_dir, "part").select(
         "p_partkey",
         "p_size",
@@ -71,60 +65,53 @@ def j_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
         ).alias("cents"),
     )
-    # bucket on cents ONLY (no tiebreak → no hot-value sub-split):
-    # every bucket boundary then separates strictly-different prices,
-    # so "max over strictly earlier buckets" == "max over some strictly
-    # cheaper parts" — the dominance carry stays exact. The prefix max
-    # is the ≤129-number bucket directory prefix-folded on the driver
-    # into ONE literal lookup map (the literal-map ordinal design):
-    # no join, no broadcast build, a single exchange in the whole plan.
-    bk = bucketize(p, ["cents"], aggs={"mx": F.max("p_size")}, skew_split=False)
-    run_max, pairs = None, []
-    for gb, gs, _, avals in bk.directory:
-        pairs.append(
-            (gb * 65536 + gs, "CAST(NULL AS INT)" if run_max is None else str(run_max))
-        )
-        v = avals["mx"]
-        if v is not None:
-            run_max = v if run_max is None else max(run_max, v)
-    _B, _S = BUCKET_KEYS
-    pre_max = (
-        F.expr(
-            "element_at(map("
-            + ",".join(f"{k},{v}" for k, v in pairs)
-            + f"), {_B} * 65536 + {_S})"
-        )
-        if pairs
-        else F.lit(None).cast("int")
-    )
-    n_part = _auto_parallelism(spark, bk.total_count)
-    d = bk.df.repartition(n_part, *BUCKET_KEYS).withColumn("pre_max", pre_max)
-    w_cheaper = (
-        Window.partitionBy(*BUCKET_KEYS)
-        .orderBy("cents")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    # equal prices always share a bucket (the bucket id is a pure
-    # function of cents), so the same-price peer max is a RANGE frame
-    # of width 0 on the SAME bucket window — no second exchange over
-    # the part table (round-6 had a full Window.partitionBy("cents")).
-    w_same = (
-        Window.partitionBy(*BUCKET_KEYS).orderBy("cents").rangeBetween(0, 0)
-    )
-    fr = d.select(
-        "p_partkey",
-        "p_size",
-        "cents",
-        F.greatest(
-            F.max("p_size").over(w_cheaper), F.col("pre_max")
-        ).alias("best_cheaper"),
-        F.max("p_size").over(w_same).alias("best_same"),
-    )
-    return fr.filter(
-        (F.col("best_cheaper").isNull() | (F.col("best_cheaper") < F.col("p_size")))
-        & (F.col("best_same") == F.col("p_size"))
-    ).select(
+    return pareto_front(p, "cents", "p_size").select(
         "p_partkey",
         "p_size",
         (F.col("cents").cast("double") / F.lit(100.0)).alias("price"),
+    )
+
+
+def pareto_front(points: DataFrame, price: str, size: str) -> DataFrame:
+    """The rows of ``points`` no other row dominates on (lower integer
+    ``price``, higher ``size``), with ``best_cheaper``/``best_same``
+    (the max size over strictly cheaper / same-price rows) attached.
+
+    Bucketed on ``price`` ONLY (no tiebreak → no hot-value sub-split):
+    every bucket boundary then separates strictly-different prices, so
+    "max over strictly earlier buckets" == "max over some strictly
+    cheaper rows" — the dominance carry stays exact.  The carry is the
+    ≤129-number bucket directory prefix-folded on the driver into ONE
+    literal lookup map (``Bucketing.prefix``): no join, no broadcast
+    build, a single exchange in the whole plan."""
+    from banksy_spark.operators.ordinals import (
+        BUCKET_KEYS,
+        _auto_parallelism,
+        bucketize,
+    )
+
+    bk = bucketize(points, [price], aggs={"mx": F.max(size)}, skew_split=False)
+    n_part = _auto_parallelism(points.sparkSession, bk.total_count)
+    d = bk.df.repartition(n_part, *BUCKET_KEYS).withColumn(
+        "pre_max", bk.prefix("mx", max)
+    )
+    w_cheaper = (
+        Window.partitionBy(*BUCKET_KEYS)
+        .orderBy(price)
+        .rangeBetween(Window.unboundedPreceding, -1)
+    )
+    # equal prices always share a bucket (the bucket id is a pure
+    # function of the price), so the same-price peer max is a RANGE
+    # frame of width 0 on the SAME bucket window — no second exchange.
+    w_same = Window.partitionBy(*BUCKET_KEYS).orderBy(price).rangeBetween(0, 0)
+    fr = d.select(
+        *points.columns,
+        F.greatest(F.max(size).over(w_cheaper), F.col("pre_max")).alias(
+            "best_cheaper"
+        ),
+        F.max(size).over(w_same).alias("best_same"),
+    )
+    return fr.filter(
+        (F.col("best_cheaper").isNull() | (F.col("best_cheaper") < F.col(size)))
+        & (F.col("best_same") == F.col(size))
     )

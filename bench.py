@@ -320,8 +320,8 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
     }
-    # Full per-query detail first (the builder's BENCH_local_* records
-    # capture this line verbatim) ...
+    # Full per-query detail first (a saved bench record captures this
+    # line verbatim) ...
     print(json.dumps(full))
     # ... and to a file (r14, VERDICT r13 item 1): the driver keeps only
     # the last ~2000 chars of stdout, which front-truncates the ~9KB

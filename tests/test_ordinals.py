@@ -314,45 +314,6 @@ def test_reserved_names_rejected(spark):
         )
 
 
-def test_grouped_row_number_matches_naive(spark):
-    from banksy_spark.operators.ordinals import grouped_row_number
-
-    # few huge groups incl. one hot group with 60% of rows (the shape a
-    # plain PARTITION BY window serializes onto one task)
-    rows = [(3, float(i % 113), i) for i in range(6000)] + [
-        (i % 7, float(i % 211), 10_000 + i) for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "g int, x double, k bigint").repartition(8)
-    got = grouped_row_number(
-        df, "g", ["x", "k"], "rn", n_buckets=16, rows_per_bucket=256
-    ).select("k", "rn")
-    w = Window.partitionBy("g").orderBy("x", "k")
-    want = df.select("k", F.row_number().over(w).alias("rn"))
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_grouped_row_number_desc_and_plan(spark):
-    from banksy_spark.operators.ordinals import grouped_row_number
-
-    rows = [(i % 5, float(i % 211), i) for i in range(4000)]
-    df = spark.createDataFrame(rows, "g int, x double, k bigint").repartition(8)
-    got = grouped_row_number(df, "g", ["-x", "k"], "rn", n_buckets=16, rows_per_bucket=256)
-    w = Window.partitionBy("g").orderBy(F.col("x").desc(), "k")
-    want = df.select("k", F.row_number().over(w).alias("rn"))
-    assert got.select("k", "rn").exceptAll(want).count() == 0
-    assert want.exceptAll(got.select("k", "rn")).count() == 0
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan
-    # the (bucket, sub, group) directory must SHARE the bucket exchange:
-    # every hash exchange in the plan partitions on the bucket keys
-    # (the identical subtree prints once per consumer pre-AQE; runtime
-    # reuse dedupes it), never on the group key or anything else
-    import re as _re
-
-    parts = _re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert parts and all("_gob" in p and "_gosub" in p for p in parts), plan
-
-
 def test_ntile_col_form_matches_literal_form(spark):
     # in-plan (column-total) NTILE vs the literal-total formula vs Spark
     from banksy_spark.operators.ordinals import ntile_expr_col
@@ -409,17 +370,7 @@ def test_stats_cache_hit_and_poison_invariance(spark):
     ).select("o_orderkey", "rn")
     assert got2.exceptAll(want).count() == 0 and want.exceptAll(got2).count() == 0
     assert len(O._STATS_CACHE) == n_entries  # replayed, not recomputed
-
-    # escape hatch: disabling the cache bypasses the poisoned entry
-    O.set_stats_cache(False)
-    try:
-        got3 = global_ordinals(
-            o, ["price", "o_orderkey"], row_number="rn", n_buckets=16
-        ).select("o_orderkey", "rn")
-        assert got3.exceptAll(want).count() == 0
-    finally:
-        O.set_stats_cache(True)
-        O.clear_stats_cache()
+    O.clear_stats_cache()
 
 
 def _lineitem(spark):
@@ -461,6 +412,19 @@ def test_grouped_ordinals_matches_naive(spark):
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
+    # few huge int groups incl. one hot group with 60% of the rows (the
+    # shape a plain PARTITION BY window serializes onto one task)
+    rows = [(3, float(i % 113), i) for i in range(6000)] + [
+        (i % 7, float(i % 211), 10_000 + i) for i in range(4000)
+    ]
+    df = spark.createDataFrame(rows, "g int, x double, k bigint").repartition(8)
+    got = grouped_ordinals(
+        df, ["g"], ["x", "k"], row_number="rn", n_buckets=16, rows_per_bucket=256
+    ).select("k", "rn")
+    w = Window.partitionBy("g").orderBy("x", "k")
+    want = df.select("k", F.row_number().over(w).alias("rn"))
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
 
 def test_grouped_ordinals_desc_and_multi_group(spark):
     from banksy_spark.operators.ordinals import grouped_ordinals
@@ -482,6 +446,24 @@ def test_grouped_ordinals_desc_and_multi_group(spark):
         "l_orderkey", "l_linenumber", F.row_number().over(wo).alias("rn")
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+    # single int group, desc order (the literal path)
+    rows = [(i % 5, float(i % 211), i) for i in range(4000)]
+    df = spark.createDataFrame(rows, "g int, x double, k bigint").repartition(8)
+    got = grouped_ordinals(
+        df, ["g"], ["-x", "k"], row_number="rn", n_buckets=16, rows_per_bucket=256
+    )
+    w = Window.partitionBy("g").orderBy(F.col("x").desc(), "k")
+    want = df.select("k", F.row_number().over(w).alias("rn"))
+    assert got.select("k", "rn").exceptAll(want).count() == 0
+    assert want.exceptAll(got.select("k", "rn")).count() == 0
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition" not in plan
+    # the one fact exchange partitions on (group, bucket, sub)
+    import re as _re
+
+    parts = _re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert parts and all("_gob" in p and "_gosub" in p for p in parts), plan
 
 
 def test_grouped_ordinals_plan_partitioned(spark):
@@ -590,16 +572,12 @@ def test_grouped_ordinals_cap_falls_back_to_join_design(spark):
     want = df.select("g", "k", F.row_number().over(wo).alias("rn"))
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
-
-def test_grouped_row_number_double_group_falls_back(spark):
     # non-integral group values can't become literal map keys exactly —
-    # must take the general persisted-directory join path, bit-identically
-    from banksy_spark.operators.ordinals import grouped_row_number
-
+    # must take the join path too, bit-identically
     rows = [(float(i % 5) / 2.0, float(i % 211), i) for i in range(4000)]
     df = spark.createDataFrame(rows, "g double, x double, k bigint").repartition(8)
-    got = grouped_row_number(
-        df, "g", ["x", "k"], "rn", n_buckets=16, rows_per_bucket=256
+    got = grouped_ordinals(
+        df, ["g"], ["x", "k"], row_number="rn", n_buckets=16, rows_per_bucket=256
     )
     assert "Join" in got._jdf.queryExecution().executedPlan().toString()
     w = Window.partitionBy("g").orderBy("x", "k")

@@ -45,29 +45,56 @@ def test_tumbling_daily_stream_equals_batch(spark, events_dir, tmp_path):
 
 
 def test_stateful_rate_limit_across_batches(spark, tmp_path):
-    """applyInPandasWithState: quota state persists across micro-batches
-    (two copies of the events file, maxFilesPerTrigger=1 → 2 batches)."""
+    """applyInPandasWithState: the quota a day consumed in one
+    micro-batch carries into the next. The stream runs once over one
+    copy of the events file, then a second copy lands and the query
+    restarts on the same checkpoint, so the second run's batch sees the
+    same day again. The stream keeps only the busiest error day: the
+    (day, n) carry restarts on a day change, so replaying earlier days
+    would legitimately start them over."""
     import shutil
+
+    from banksy_spark.streaming.stateful import rate_limit_stateful
+    from banksy_spark.suite.registry import T
+
+    errors = T(spark, SF_SMOKE, "events").filter(F.col("event_type") == "error")
+    busiest = (
+        errors.groupBy("user_id", F.to_date("ts").alias("day"))
+        .count()
+        .orderBy(F.desc("count"), "day", "user_id")
+        .first()
+    )
+    # the limiter must act: one user-day holds >= 2 errors, so two
+    # copies of it exceed the quota of 3 unless the carry survives
+    assert busiest["count"] >= 2
 
     src = tmp_path / "multi_in"
     src.mkdir()
     shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
-
-    from banksy_spark.streaming.stateful import rate_limit_stateful
-
-    stream = read_events_stream(spark, str(src)).filter(F.col("event_type") == "error")
-    limited = rate_limit_stateful(stream)
-    q = (
-        limited.writeStream.format("memory")
-        .queryName("stateful_rl")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
+    stream = read_events_stream(spark, str(src)).filter(
+        (F.col("event_type") == "error") & (F.to_date("ts") == F.lit(busiest["day"]))
     )
-    assert q.awaitTermination(120), 'stream did not finish in time'
-    out = spark.sql("SELECT * FROM stateful_rl")
-    assert out.count() > 0
+    out_dir = str(tmp_path / "rl_out")
+
+    def run():
+        q = (
+            rate_limit_stateful(stream)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt_state"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream did not finish in time"
+        assert sum(p["numInputRows"] for p in q.recentProgress) > 0
+
+    run()
+    first = spark.read.parquet(out_dir).count()
+    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "b.parquet")
+    run()
+    out = spark.read.parquet(out_dir)
+    assert out.count() >= first > 0
     per_day = out.groupBy("user_id", "day").count()
     assert per_day.agg(F.max("count")).first()[0] <= 3
     # nth_today is a proper 1..3 counter within each (user, day)

@@ -187,32 +187,15 @@ def main() -> None:
     max_share = max(c for _, _, c, _ in bk.directory) / N_BIG
 
     # --- distributed skyline at fact scale (VERDICT r6 item 3) --------
-    # 40M (price=salt_src, size=v) points through the j_skyline_pareto
-    # shape: range-bucketed sorted pass + driver-folded prefix maxima.
-    # The executed plan must contain no single-partition stage.
-    from banksy_spark.operators.ordinals import offsets_table
+    # 40M (price=salt_src, size=v) points through the code j_skyline_pareto
+    # ships (suite/round5p.py pareto_front): range-bucketed sorted pass +
+    # the driver-folded prefix-max literal map. The executed plan must
+    # contain no single-partition stage.
+    from banksy_spark.suite.round5p import pareto_front
 
     def skyline():
         pts = big.select(F.col("salt_src").alias("cents"), F.col("v"))
-        kb = bucketize(pts, ["cents"], aggs={"mx": F.max("v")}, skew_split=False)
-        off = offsets_table(
-            kb, spark, count_offset=None, max_prefix={"mx": "pre_max"}
-        )
-        d = kb.df.join(off, ["_gob", "_gosub"])
-        w_ch = (
-            Window.partitionBy("_gob", "_gosub")
-            .orderBy("cents")
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        w_same = Window.partitionBy("cents")
-        fr = d.select(
-            "cents", "v",
-            F.greatest(F.max("v").over(w_ch), F.col("pre_max")).alias("bc"),
-            F.max("v").over(w_same).alias("bs"),
-        ).filter(
-            (F.col("bc").isNull() | (F.col("bc") < F.col("v")))
-            & (F.col("bs") == F.col("v"))
-        )
+        fr = pareto_front(pts, "cents", "v")
         plan = fr._jdf.queryExecution().executedPlan().toString()
         assert "Exchange SinglePartition" not in plan, "skyline plan regressed"
         drain(fr)

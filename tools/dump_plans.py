@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Dump explain("formatted") for named queries (no execution).
 
-    python tools/dump_plans.py --out plans/r13 --suffix _before name ...
+    python tools/dump_plans.py --out /tmp/plans --suffix _before name ...
 """
 
 from __future__ import annotations

@@ -412,8 +412,12 @@ def test_grouped_ordinals_matches_naive(spark):
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
+
+def test_grouped_ordinals_hot_int_group_matches_naive(spark):
     # few huge int groups incl. one hot group with 60% of the rows (the
     # shape a plain PARTITION BY window serializes onto one task)
+    from banksy_spark.operators.ordinals import grouped_ordinals
+
     rows = [(3, float(i % 113), i) for i in range(6000)] + [
         (i % 7, float(i % 211), 10_000 + i) for i in range(4000)
     ]
@@ -447,7 +451,11 @@ def test_grouped_ordinals_desc_and_multi_group(spark):
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
+
+def test_grouped_ordinals_int_group_desc_and_plan(spark):
     # single int group, desc order (the literal path)
+    from banksy_spark.operators.ordinals import grouped_ordinals
+
     rows = [(i % 5, float(i % 211), i) for i in range(4000)]
     df = spark.createDataFrame(rows, "g int, x double, k bigint").repartition(8)
     got = grouped_ordinals(
@@ -572,8 +580,12 @@ def test_grouped_ordinals_cap_falls_back_to_join_design(spark):
     want = df.select("g", "k", F.row_number().over(wo).alias("rn"))
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
+
+def test_grouped_ordinals_double_group_falls_back(spark):
     # non-integral group values can't become literal map keys exactly —
     # must take the join path too, bit-identically
+    from banksy_spark.operators.ordinals import grouped_ordinals
+
     rows = [(float(i % 5) / 2.0, float(i % 211), i) for i in range(4000)]
     df = spark.createDataFrame(rows, "g double, x double, k bigint").repartition(8)
     got = grouped_ordinals(

@@ -1,28 +1,27 @@
-"""Connected components over an edge list (duplicate-cluster
-resolution for fuzzy dedup — suite.llm_extra.llm_dedup_clusters).
+"""Graph operators: connected components (duplicate-cluster resolution
+for fuzzy dedup — suite.llm_extra.llm_dedup_clusters), BFS distances,
+and forest ancestry / bill-of-materials rollup.
 
 Two forms:
 
-- :func:`connected_components` — **convergence-guaranteed** alternating
-  large-star / small-star (Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14). Runs a driver-side loop with an
-  explicit edge-set fixed-point check, so the answer is exact for ANY
-  graph shape — a chain of duplicates with diameter 1000 converges just
-  as surely as a near-clique, in O(log^2 n) rounds (O(log n) observed).
-  Lineage is truncated with a lazy ``localCheckpoint`` every
-  iteration, materialized by the convergence probe itself — the probe
-  is ONE driver job per iteration (a left join folding the new edge
-  count and the novel-edge count into a single aggregate), so the
-  plan never deepens and each round costs exactly one job.
+- bounded lazy forms — :func:`bfs_distances`, :func:`ancestor_unroll`:
+  a fixed number of rounds unrolled into one plan, no action at build
+  time, each carrying a detector that says whether the budget covered
+  the input.
+- converged forms — :func:`connected_components`, :func:`bfs_converged`,
+  :func:`ancestors_converged`, :func:`weighted_rollup_converged`: one
+  driver loop (:func:`_fixpoint`) iterates a step to a verified fixed
+  point. Each round cuts lineage with a lazy ``localCheckpoint`` that
+  the round's ONE probe job fills while counting the rows still
+  changing, so the plan never deepens and a round costs one job.
+  ``max_iter`` is a runaway backstop, not a correctness budget: the
+  loop raises rather than return an unconverged answer.
 
-- :func:`label_propagation_cc` — the bounded-depth lazy form (min-label
-  propagation over the open neighborhood for a *fixed* number of
-  rounds). Correct only for components whose min-label eccentricity is
-  <= ``rounds``; kept for plan-depth experiments and as the
-  under-merge counterexample in tests. Production dedup uses the
-  converged form above.
-
-Algorithm (converged form), with edges canonically oriented big->small:
+Connected components alternate large-star / small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14), exact for ANY
+graph shape — a chain of duplicates with diameter 1000 converges just
+as surely as a near-clique, in O(log^2 n) rounds (O(log n) observed).
+With edges canonically oriented big->small:
 
 - large-star: every node u computes m = min(N(u) ∪ {u}) over its FULL
   neighborhood; every strictly-larger neighbor v > u re-attaches to m.
@@ -34,18 +33,48 @@ Algorithm (converged form), with edges canonically oriented big->small:
   component's minimum id (Kiveris et al. Thm 1-3), so "edge set
   unchanged" is a sound and complete stopping rule.
 
-Scale: each iteration is two groupBy-min + two joins keyed on node id
-over the EDGE list (for dedup: the LSH collision pairs, tiny relative
-to the corpus). The convergence check is one left join + aggregate
-over the same edge list (new count and novel count in one pass).
+Scale: each round is two groupBy-min + two joins keyed on node id over
+the EDGE list (for dedup: the LSH collision pairs, tiny relative to the
+corpus); the probe is one full join of the old and new edge sets.
 State never exceeds one edge per non-root node after the first
-small-star, so iterations get *cheaper* as the loop proceeds.
+small-star, so rounds get *cheaper* as the loop proceeds. Edge sets of
+at most :data:`DRIVER_EDGES` edges skip the loop for a driver-side
+union-find.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# connected_components solves canonical edge sets up to this size with
+# a driver-side union-find (500k ≈ 8 MB of long pairs); larger ones
+# take the distributed loop. Tests patch it to force either path.
+DRIVER_EDGES = 500_000
+
+
+def _fixpoint(
+    name: str,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    changing: Callable[[DataFrame, DataFrame], int],
+    max_iter: int,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state := step(state)`` until ``changing(old, new)`` —
+    one action, the count of rows still changing — reads 0. That action
+    also fills the new state's lazy checkpoint. Returns
+    ``(state, n_rounds)``; raises at ``max_iter`` rounds."""
+    for i in range(max_iter):
+        nxt = step(state).localCheckpoint(eager=False)
+        n_changing = changing(state, nxt)
+        state = nxt
+        if n_changing == 0:
+            return state, i + 1
+    raise RuntimeError(f"{name} did not converge in max_iter={max_iter} rounds")
 
 
 def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -60,12 +89,48 @@ def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star then one small-star over edges oriented a > b."""
+    # --- large-star: v > u re-attaches to min(N(u) ∪ {u}) ------------
+    und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    mins = (
+        und.groupBy("a")
+        .agg(F.min("b").alias("mn"))
+        .select("a", F.least("a", "mn").alias("m"))
+    )
+    ls = (
+        und.join(mins, "a")
+        .filter(F.col("b") > F.col("a"))
+        .select(F.col("b").alias("a"), F.col("m").alias("b"))
+        .distinct()
+    )
+    # --- small-star: v <= u (and u) re-attach to the min -------------
+    # ls is oriented a > b, so min(N(a) ∪ {a}) = min(b).
+    mins2 = ls.groupBy("a").agg(F.min("b").alias("m"))
+    return (
+        ls.join(mins2, "a")
+        .select(F.col("b").alias("a"), F.col("m").alias("b"))
+        .union(mins2.select("a", F.col("m").alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _edges_moved(old: DataFrame, new: DataFrame) -> int:
+    """Edges in exactly one of two distinct edge sets — 0 iff equal."""
+    return (
+        new.select("a", "b", F.lit(1).alias("_new"))
+        .join(old.select("a", "b", F.lit(1).alias("_old")), ["a", "b"], "full")
+        .filter(F.col("_new").isNull() | F.col("_old").isNull())
+        .count()
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_threshold: int = 500_000,
 ) -> DataFrame:
     """Label every node of the undirected graph given by ``pairs`` with
     its component's minimum node id — exact for any graph, via
@@ -73,21 +138,16 @@ def connected_components(
     point. Returns columns ``(node, lab)``; every node appearing in
     ``pairs`` (either side, self-loops included) gets exactly one row.
 
-    ``max_iter`` is a runaway backstop, not a correctness budget: the
-    loop raises rather than silently returning an under-merged answer
-    if the fixed point is somehow not reached (the algorithm's bound is
-    O(log^2 n) rounds, so 50 covers any graph that fits on a cluster).
-
-    ``driver_threshold``: when the canonical edge set has at most this
-    many edges (default 500k ≈ 8 MB of long pairs), the fixed point is
-    computed with a driver-side union-find (O(E·α)) and shipped back as
-    ONE broadcast join — zero loop iterations, no per-round shuffles.
-    This is the same bounded-driver-directory discipline as the ordinal
-    operator: dedup collision graphs are orders of magnitude smaller
-    than the corpus that produced them, so the common case pays a
-    single bounded collect instead of O(log n) shuffle rounds, while
-    graphs past the bound take the distributed loop unchanged. Pass
-    ``driver_threshold=0`` to force the distributed path.
+    When the canonical edge set has at most :data:`DRIVER_EDGES` edges,
+    the fixed point is computed with a driver-side union-find (O(E·α))
+    and shipped back as ONE broadcast join — zero loop rounds, no
+    per-round shuffles. This is the same bounded-driver-directory
+    discipline as the ordinal operator: dedup collision graphs are
+    orders of magnitude smaller than the corpus that produced them, so
+    the common case pays a single bounded collect, while graphs past
+    the bound take the distributed loop (the algorithm's bound is
+    O(log^2 n) rounds, so ``max_iter=50`` covers any graph that fits
+    on a cluster).
     """
     # One materialization of the pair list, shared by the node set and
     # the edge set — without this the caller's (possibly expensive)
@@ -101,11 +161,14 @@ def connected_components(
         p.select(F.col("s").alias("node"))
         .union(p.select(F.col("d").alias("node")))
         .distinct()
-        .persist()
     )
     e = _canonical_edges(p, "s", "d").localCheckpoint(eager=False)
     n_edges = e.count()  # materializes both lazy checkpoints
-    if 0 < n_edges <= driver_threshold:
+    if n_edges > DRIVER_EDGES:
+        e, _ = _fixpoint(
+            "connected_components", e, _star_round, _edges_moved, max_iter
+        )
+    elif n_edges:
         # Bounded driver union-find: attach the larger root under the
         # smaller, so every set's final root IS its minimum node id.
         parent: dict = {}
@@ -128,80 +191,17 @@ def connected_components(
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        from pyspark.sql import types as _T
-
         ntype = e.schema["a"].dataType
         lab_df = pairs.sparkSession.createDataFrame(
             [(x, find(x)) for x in seen],
-            _T.StructType(
-                [
-                    _T.StructField("node", ntype),
-                    _T.StructField("lab", ntype),
-                ]
+            T.StructType(
+                [T.StructField("node", ntype), T.StructField("lab", ntype)]
             ),
         )
-        labels = nodes.join(F.broadcast(lab_df), "node", "left").select(
+        return nodes.join(F.broadcast(lab_df), "node", "left").select(
             "node", F.coalesce("lab", "node").alias("lab")
         )
-        nodes.unpersist()
-        return labels
-    if n_edges:
-        for _ in range(max_iter):
-            # --- large-star: v > u re-attaches to min(N(u) ∪ {u}) ----
-            und = e.union(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            mins = (
-                und.groupBy("a")
-                .agg(F.min("b").alias("mn"))
-                .select("a", F.least("a", "mn").alias("m"))
-            )
-            ls = (
-                und.join(mins, "a")
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .distinct()
-            )
-            # --- small-star: v <= u (and u) re-attach to the min -----
-            # ls is oriented a > b, so min(N(a) ∪ {a}) = min(b).
-            mins2 = ls.groupBy("a").agg(F.min("b").alias("m"))
-            ss = (
-                ls.join(mins2, "a")
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .union(mins2.select("a", F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            # --- fixed point? |ss| == |e| and ss \ e == ∅ ⇒ ss == e --
-            # one driver job per iteration: the left join against the
-            # previous (distinct) edge set yields exactly |ss| rows, so
-            # COUNT(*) is the new edge count and the null-probe count is
-            # |ss \ e|; the same job materializes ss's lazy checkpoint.
-            stats = (
-                ss.join(
-                    e.select("a", "b", F.lit(1).alias("_ine")),
-                    ["a", "b"],
-                    "left",
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count(F.when(F.col("_ine").isNull(), 1)).alias("novel"),
-                )
-                .first()
-            )
-            n_new = stats["n"]
-            changed = n_new != n_edges or stats["novel"] != 0
-            e, n_edges = ss, n_new
-            if not changed:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations — graph larger than the O(log^2 n) backstop "
-                "allows, raise max_iter"
-            )
-    labels = (
+    return (
         nodes.join(
             e.select(F.col("a").alias("node"), F.col("b").alias("lab")),
             "node",
@@ -210,55 +210,42 @@ def connected_components(
         .groupBy("node")
         .agg(F.min(F.coalesce("lab", "node")).alias("lab"))
     )
-    nodes.unpersist()
-    return labels
 
 
-def label_propagation_cc(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    rounds: int = 8,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
-    """Bounded-depth min-label propagation (the pre-round-5 form).
-
-    Correct only for components whose minimum-label eccentricity is
-    <= ``rounds``; a longer chain silently under-merges — which is why
-    the suite queries now use :func:`connected_components` instead.
-    Kept as the lazy fixed-plan-depth variant (no driver loop, no
-    action at build time) and as the counterexample operator in
-    tests/test_scale_ops.py.
-
-    ``checkpoint_every``: truncate lineage with ``localCheckpoint``
-    every N rounds; results are identical (tested).
-    """
-    und = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")).union(
-        pairs.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    )
-    nodes = und.select(F.col("s").alias("node")).distinct().persist()
-    edges = und.union(
-        nodes.select(F.col("node").alias("s"), F.col("node").alias("d"))
-    ).persist()
-    labels = nodes.withColumn("lab", F.col("node"))
-    for i in range(rounds):
-        labels = (
-            edges.join(labels.withColumnRenamed("node", "_d"), F.col("d") == F.col("_d"))
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.min("lab").alias("lab"))
+def _bfs_step(dist: DataFrame, edges: DataFrame) -> DataFrame:
+    """Expand every ``(node, dist)`` along ``(u, v)`` edges and keep each
+    node's MIN distance — the Pregel step as a join+agg pair."""
+    return (
+        dist.unionByName(
+            dist.join(edges, dist.node == edges.u).select(
+                F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
+            )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            labels = labels.localCheckpoint(eager=False)
-    return labels
+        .groupBy("node")
+        .agg(F.min("dist").alias("dist"))
+    )
+
+
+def _improved(nxt: DataFrame, dist: DataFrame) -> DataFrame:
+    """Rows of ``nxt`` that are new or closer than in ``dist``."""
+    return nxt.join(dist.withColumnRenamed("dist", "old"), "node", "left").filter(
+        F.col("old").isNull() | (F.col("dist") < F.col("old"))
+    )
+
+
+def _bfs_source(edges: DataFrame, source: int) -> DataFrame:
+    return edges.sparkSession.range(1).select(
+        F.lit(source).cast("bigint").alias("node"),
+        F.lit(0).cast("bigint").alias("dist"),
+    )
 
 
 def bfs_distances(
     edges: DataFrame, source: int = 0, rounds: int = 4
 ) -> DataFrame:
     """Bounded-depth BFS from ``source`` over a symmetric ``(u, v)``
-    edge list: ``rounds`` unrolled expand-along-edges + MIN-regroup
-    iterations (the Pregel step as a join+agg pair, each frontier
-    persisted so round k doesn't replay rounds 1..k-1).
+    edge list: ``rounds`` unrolled :func:`_bfs_step` iterations, each
+    frontier persisted so round k doesn't replay rounds 1..k-1.
 
     Depth-exceeded detector (VERDICT r4 item 7): the output carries a
     ``frontier_delta`` column — the number of nodes one MORE round
@@ -269,35 +256,17 @@ def bfs_distances(
 
     Scale: each round shuffles on node id only; the probe round is the
     same plan run once more, reduced to a 1-row broadcast count."""
-    spark = edges.sparkSession
-    dist = spark.range(1).select(
-        F.lit(source).cast("bigint").alias("node"),
-        F.lit(0).cast("bigint").alias("dist"),
-    )
+    dist = _bfs_source(edges, source)
     for i in range(rounds):
-        grown = dist.unionByName(
-            dist.join(edges, dist.node == edges.u).select(
-                F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-            )
-        )
-        dist = grown.groupBy("node").agg(F.min("dist").alias("dist")).persist()
+        dist = _bfs_step(dist, edges).persist()
         # each round references `dist` twice, so the un-truncated plan
         # doubles per round (2^rounds leaf copies — analysis-time OOM
         # past ~8 rounds); a lineage cut every 3 rounds caps the fan-out
         # at 8 while keeping the 4-round suite query fully lazy
         if (i + 1) % 3 == 0 and i + 1 < rounds:
             dist = dist.localCheckpoint(eager=False)
-    probe = dist.unionByName(
-        dist.join(edges, dist.node == edges.u).select(
-            F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-        )
-    ).groupBy("node").agg(F.min("dist").alias("dist"))
-    delta = (
-        probe.join(
-            dist.withColumnRenamed("dist", "old"), "node", "left"
-        )
-        .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-        .agg(F.count("*").cast("bigint").alias("frontier_delta"))
+    delta = _improved(_bfs_step(dist, edges), dist).agg(
+        F.count("*").cast("bigint").alias("frontier_delta")
     )
     return dist.crossJoin(F.broadcast(delta))
 
@@ -338,45 +307,74 @@ def bfs_converged(
     edges: DataFrame, source: int = 0, max_iter: int = 64
 ) -> tuple[DataFrame, int]:
     """BFS distances iterated until the frontier is exhausted — the
-    convergence-guaranteed sibling of :func:`bfs_distances`, same loop
-    discipline as :func:`connected_components`: expand + MIN-regroup
-    per round, a lazy ``localCheckpoint`` (materialized by the round's
-    single convergence-count job) to keep the plan flat, stop
-    when one more round would change nothing (the same test the
-    bounded form exposes as its ``frontier_delta`` detector). Returns
-    ``((node, dist), n_rounds)``; raises at ``max_iter`` rather than
-    return silently-short distances — reachable eccentricity bounds
-    rounds, and 64 covers any graph whose diameter fits a real
-    workload (raise it for pathological paths)."""
-    spark = edges.sparkSession
-    dist = spark.range(1).select(
-        F.lit(source).cast("bigint").alias("node"),
-        F.lit(0).cast("bigint").alias("dist"),
+    convergence-guaranteed sibling of :func:`bfs_distances`: the same
+    step run by :func:`_fixpoint`, stopping when no node is new or
+    improved (the test the bounded form exposes as its
+    ``frontier_delta`` detector). Returns ``((node, dist), n_rounds)``;
+    raises at ``max_iter`` rather than return silently-short distances
+    — reachable eccentricity bounds rounds, and 64 covers any graph
+    whose diameter fits a real workload (raise it for pathological
+    paths)."""
+    return _fixpoint(
+        "bfs_converged",
+        _bfs_source(edges, source),
+        lambda dist: _bfs_step(dist, edges),
+        lambda dist, nxt: _improved(nxt, dist).count(),
+        max_iter,
+    )
+
+
+def _pointer_jump(
+    name: str,
+    edges: DataFrame,
+    acc: str,
+    edge_value: Column,
+    unit: int,
+    combine: Callable[[Column, Column], Column],
+    max_iter: int,
+) -> tuple[DataFrame, int]:
+    """Resolve every node of a ``(node, parent)`` forest to its root by
+    pointer jumping (path doubling), folding ``acc`` along the path:
+    each round every pending pointer jumps to its pointer's pointer and
+    ``combine``s the two accumulated values, so a chain of depth h
+    resolves in ceil(log2 h) + 1 rounds (NOT h rounds — the same O(log)
+    discipline as large-star/small-star). A non-root starts at
+    ``edge_value``, a root at ``unit`` (``combine``'s identity); it
+    stops when no pointer is pending. Returns ``((node, ptr, acc,
+    done), n_rounds)`` with ``ptr`` the root. A cycle never resolves;
+    the ``max_iter`` raise is the detector (2^50 depth is beyond any
+    acyclic data)."""
+    state = edges.select(
+        "node",
+        F.coalesce("parent", F.col("node")).alias("ptr"),
+        F.when(F.col("parent").isNull(), F.lit(unit))
+        .otherwise(edge_value)
+        .cast("bigint")
+        .alias(acc),
+        F.col("parent").isNull().alias("done"),
     ).localCheckpoint(eager=False)
-    n_rounds = 0
-    for _ in range(max_iter):
-        n_rounds += 1
-        nxt = (
-            dist.unionByName(
-                dist.join(edges, dist.node == edges.u).select(
-                    F.col("v").alias("node"), (F.col("dist") + 1).alias("dist")
-                )
-            )
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+
+    # done=True ⇒ ptr IS the root and acc the whole path's fold
+    def jump(state: DataFrame) -> DataFrame:
+        hop = state.select(
+            F.col("node").alias("_p"),
+            F.col("ptr").alias("p_ptr"),
+            F.col(acc).alias("p_acc"),
+            F.col("done").alias("p_done"),
         )
-        changed = (
-            nxt.join(dist.withColumnRenamed("dist", "old"), "node", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .count()
+        return state.join(hop, state.ptr == hop._p, "left").select(
+            "node",
+            F.when(F.col("done"), F.col("ptr"))
+            .otherwise(F.coalesce("p_ptr", "ptr"))
+            .alias("ptr"),
+            F.when(F.col("done"), F.col(acc))
+            .otherwise(combine(F.col(acc), F.coalesce("p_acc", F.lit(unit))))
+            .alias(acc),
+            (F.col("done") | F.coalesce("p_done", F.lit(True))).alias("done"),
         )
-        dist = nxt
-        if changed == 0:
-            return dist, n_rounds
-    raise RuntimeError(
-        f"bfs_converged did not exhaust the frontier in {max_iter} rounds "
-        "— graph diameter exceeds the backstop, raise max_iter"
+
+    return _fixpoint(
+        name, state, jump, lambda _old, nxt: nxt.filter(~F.col("done")).count(), max_iter
     )
 
 
@@ -385,51 +383,12 @@ def ancestors_converged(
 ) -> tuple[DataFrame, int]:
     """Root + depth for EVERY node of a (node, parent) forest of
     arbitrary depth — the convergence-guaranteed sibling of
-    :func:`ancestor_unroll`, via pointer jumping (path doubling): each
-    round every unfinished pointer jumps to its pointer's pointer and
-    accumulates the hop count, so a chain of depth h resolves in
-    ceil(log2 h) + 1 rounds (NOT h rounds — the same O(log) discipline
-    as large-star/small-star). Stop when no pointer is still mid-tree.
-    Returns ``((node, root, depth), n_rounds)``. Cycles would never
-    finish; the max_iter raise is the detector (2^50 depth is beyond
-    any acyclic data)."""
-    state = edges.select(
-        "node",
-        F.coalesce("parent", F.col("node")).alias("ptr"),
-        F.when(F.col("parent").isNull(), 0).otherwise(1).cast("bigint").alias("d"),
-        F.col("parent").isNull().alias("done"),
-    ).localCheckpoint(eager=False)
-    # done=True ⇒ ptr IS the root and d the exact depth
-    n_rounds = 0
-    for _ in range(max_iter):
-        pending = state.filter(~F.col("done")).count()
-        if pending == 0:
-            return state.select("node", F.col("ptr").alias("root"), F.col("d").alias("depth")), n_rounds
-        n_rounds += 1
-        hop = state.select(
-            F.col("node").alias("_p"),
-            F.col("ptr").alias("p_ptr"),
-            F.col("d").alias("p_d"),
-            F.col("done").alias("p_done"),
-        )
-        state = (
-            state.join(hop, state.ptr == hop._p, "left")
-            .select(
-                "node",
-                F.when(F.col("done"), F.col("ptr"))
-                .otherwise(F.coalesce("p_ptr", "ptr"))
-                .alias("ptr"),
-                F.when(F.col("done"), F.col("d"))
-                .otherwise(F.col("d") + F.coalesce("p_d", F.lit(0)))
-                .alias("d"),
-                (F.col("done") | F.coalesce("p_done", F.lit(True))).alias("done"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    raise RuntimeError(
-        f"ancestors_converged did not resolve in {max_iter} rounds — "
-        f"either a cycle in the parent relation or depth > 2^{max_iter}"
+    :func:`ancestor_unroll`, via :func:`_pointer_jump` summing hop
+    counts. Returns ``((node, root, depth), n_rounds)``."""
+    state, n = _pointer_jump(
+        "ancestors_converged", edges, "d", F.lit(1), 0, operator.add, max_iter
     )
+    return state.select("node", F.col("ptr").alias("root"), F.col("d").alias("depth")), n
 
 
 def weighted_rollup_converged(
@@ -439,54 +398,11 @@ def weighted_rollup_converged(
     (node, parent, w) forest — the bill-of-materials companion of
     :func:`ancestors_converged`: ``mult`` is the product of per-edge
     quantities from the node up to its root (1 for roots), so one unit
-    of ``node`` expands to ``mult`` units of ``root``. Same pointer
-    jumping: each round a pending pointer jumps to its pointer's
-    pointer and MULTIPLIES the accumulated weights (products are
+    of ``node`` expands to ``mult`` units of ``root``. Products are
     associative, so path doubling composes them exactly like the hop
-    counts). Integer weights stay integer — no float drift across
+    counts. Integer weights stay integer — no float drift across
     rounds. Returns ``((node, root, mult), n_rounds)``."""
-    from pyspark.sql import functions as F
-
-    state = edges.select(
-        "node",
-        F.coalesce("parent", F.col("node")).alias("ptr"),
-        F.when(F.col("parent").isNull(), F.lit(1))
-        .otherwise(F.col("w"))
-        .cast("bigint")
-        .alias("m"),
-        F.col("parent").isNull().alias("done"),
-    ).localCheckpoint(eager=False)
-    n_rounds = 0
-    for _ in range(max_iter):
-        if state.filter(~F.col("done")).count() == 0:
-            return (
-                state.select(
-                    "node", F.col("ptr").alias("root"), F.col("m").alias("mult")
-                ),
-                n_rounds,
-            )
-        n_rounds += 1
-        hop = state.select(
-            F.col("node").alias("_p"),
-            F.col("ptr").alias("p_ptr"),
-            F.col("m").alias("p_m"),
-            F.col("done").alias("p_done"),
-        )
-        state = (
-            state.join(hop, state.ptr == hop._p, "left")
-            .select(
-                "node",
-                F.when(F.col("done"), F.col("ptr"))
-                .otherwise(F.coalesce("p_ptr", "ptr"))
-                .alias("ptr"),
-                F.when(F.col("done"), F.col("m"))
-                .otherwise(F.col("m") * F.coalesce("p_m", F.lit(1)))
-                .alias("m"),
-                (F.col("done") | F.coalesce("p_done", F.lit(True))).alias("done"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    raise RuntimeError(
-        f"weighted_rollup_converged did not resolve in {max_iter} rounds — "
-        f"either a cycle in the parent relation or depth > 2^{max_iter}"
+    state, n = _pointer_jump(
+        "weighted_rollup_converged", edges, "m", F.col("w"), 1, operator.mul, max_iter
     )
+    return state.select("node", F.col("ptr").alias("root"), F.col("m").alias("mult")), n

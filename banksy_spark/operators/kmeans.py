@@ -1,7 +1,8 @@
 """Distributed spherical k-means trained to convergence (the iterated
 form of suite.round5.ml_kmeans_step — same per-iteration plan, driver
-loop + assignment-stability stopping rule, the exact shape of the
-convergence-guaranteed connected-components operator in graph.py).
+loop + assignment-stability stopping rule, the shape of graph.py's
+``_fixpoint`` loop, but returning ``converged=False`` at ``max_iter``
+instead of raising).
 
 Determinism contract (pytest-verified bit-exact vs a pure-Python
 replica, tests/test_scale_ops.py):

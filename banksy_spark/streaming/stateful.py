@@ -67,7 +67,14 @@ def _within_quota(folded: DataFrame, max_per_day: int) -> DataFrame:
 def rate_limit_stateful(events: DataFrame, max_per_day: int = 3) -> DataFrame:
     """Per-user daily quota over a (possibly streaming) events frame: the
     first ``max_per_day`` events of each calendar day pass, in (ts,
-    event_id) order. State is one (day, count) pair per user."""
+    event_id) order. State is one (day, count) pair per user.
+
+    Known gap: because only the latest day is carried, an event for an
+    earlier day that arrives in a later micro-batch (late or replayed
+    data) restarts that day's count at 1 and can pass up to
+    ``max_per_day`` more. The quota holds only under ``fold_stream``'s
+    contract that a user's timeline does not interleave across
+    batches."""
     folded = fold_stream(_by_day(events), RATE_LIMIT, "user_id", ("ts", "event_id"))
     return _within_quota(folded, max_per_day)
 

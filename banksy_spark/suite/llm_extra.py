@@ -39,9 +39,8 @@ _EST_DUCK = " + ".join(
 # large-star/small-star operator (operators/graph.py): it iterates to a
 # verified edge-set fixed point, so ANY dup-graph shape — including a
 # diameter-1000 chain an adversarial corpus could produce — resolves
-# exactly. The pre-round-5 fixed-round label propagation survives as
-# label_propagation_cc, with its under-merge failure mode pinned as a
-# counterexample in tests/test_scale_ops.py.
+# exactly. tests/test_scale_ops.py pins a 64-node chain that fixed-round
+# label propagation under-merges and this operator resolves.
 
 
 @query(

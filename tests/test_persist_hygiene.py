@@ -48,6 +48,10 @@ PERSISTING = [
     "llm_corpus_clean",
     # round-13 cached bounded frame (6-row cells, CUPED discipline)
     "ml_cuped_stratified",
+    # bounded BFS: a persist per round, a lineage cut every third round
+    "graph_bfs_distance",
+    # pointer jumping: the fixpoint loop's per-round lineage cuts
+    "j_bom_rollup",
 ]
 
 

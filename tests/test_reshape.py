@@ -75,24 +75,19 @@ def test_union_all(spark):
 
 
 def test_connected_components_chain_and_clique(spark):
-    """Min-label propagation labels a 7-node chain (diameter 6 — worse
+    """Connected components labels a 7-node chain (diameter 6 — worse
     than any LSH near-clique) and a separate triangle correctly, and
-    leaves the two components distinct."""
+    leaves the two components distinct; a second graph mixes a chain,
+    an edge and a lone self-loop node."""
     from banksy_spark.operators.graph import connected_components
 
     edges = [(i, i + 1) for i in range(10, 16)]          # chain 10..16
     edges += [(30, 31), (31, 32), (30, 32)]              # triangle
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {r.node: r.lab for r in connected_components(df).collect()}
-    assert got == {**{i: 10 for i in range(10, 17)}, **{i: 30 for i in (30, 31, 32)}}
-
-
-def test_label_propagation_insufficient_rounds_detectable(spark):
-    """With rounds < eccentricity the far end of a chain keeps a stale
-    label — the bounded-depth failure mode the converged operator
-    (large-star/small-star) eliminates."""
-    from banksy_spark.operators.graph import label_propagation_cc
-
-    df = spark.createDataFrame([(i, i + 1) for i in range(5)], "src bigint, dst bigint")
-    got = {r.node: r.lab for r in label_propagation_cc(df, rounds=2).collect()}
-    assert got[5] != 0 and got[2] == 0
+    small = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)]
+    for pairs, want in [
+        (edges, {**{i: 10 for i in range(10, 17)}, **{i: 30 for i in (30, 31, 32)}}),
+        (small, {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}),
+    ]:
+        df = spark.createDataFrame(pairs, "src bigint, dst bigint")
+        got = {r.node: r.lab for r in connected_components(df).collect()}
+        assert got == want

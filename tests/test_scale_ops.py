@@ -121,20 +121,18 @@ def test_incremental_view_merge_handles_disjoint_groups(spark):
     assert direct.exceptAll(merged).count() == 0
 
 
-def test_cc_converges_where_fixed_budget_under_merges(spark):
+def test_cc_converges_where_fixed_budget_under_merges(spark, monkeypatch):
     """The judge-mandated counterexample (VERDICT r4 #1): a 64-node
-    chain dup-graph has min-label eccentricity 63, so the pre-round-5
-    fixed 6-round propagation provably under-merges it, while the
+    chain dup-graph has min-label eccentricity 63, so a fixed 6-round
+    min-label propagation provably under-merges it, while the
     convergence-guaranteed large-star/small-star operator resolves it
     exactly (oracle: transitive closure = everything labels to node 0).
     Ids are adversarially permuted so pointer-jumping-style shortcuts
     can't accidentally rescue the bounded form."""
     import random
 
-    from banksy_spark.operators.graph import (
-        connected_components,
-        label_propagation_cc,
-    )
+    from banksy_spark.operators import graph
+    from banksy_spark.operators.graph import connected_components
 
     rng = random.Random(7)
     perm = list(range(64))
@@ -142,31 +140,38 @@ def test_cc_converges_where_fixed_budget_under_merges(spark):
     edges = [(perm[i], perm[i + 1]) for i in range(63)]
     df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
 
-    bounded = {r.node: r.lab for r in label_propagation_cc(df, rounds=6).collect()}
+    # 6 rounds of min-label propagation over the closed neighborhood
+    adj = {n: {n} for n in range(64)}
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    bounded = {n: n for n in adj}
+    for _ in range(6):
+        bounded = {n: min(bounded[m] for m in adj[n]) for n in adj}
     assert any(lab != 0 for lab in bounded.values()), (
         "fixture too easy: 6 rounds solved the chain — deepen it"
     )
 
     # both execution paths: bounded driver union-find (default — 63
-    # edges is far under the threshold) and the distributed
-    # large-star/small-star loop (forced via driver_threshold=0)
+    # edges is far under DRIVER_EDGES) and the distributed
+    # large-star/small-star loop (forced by patching DRIVER_EDGES to 0)
     exact = {r.node: r.lab for r in connected_components(df).collect()}
     assert exact == {i: 0 for i in range(64)}
-    dist = {
-        r.node: r.lab
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
+    dist = {r.node: r.lab for r in connected_components(df).collect()}
     assert dist == exact
 
 
-def test_cc_driver_and_distributed_paths_agree(spark):
-    """The driver union-find fast path (bounded collect below
-    ``driver_threshold``) must produce bit-identical labels to the
+def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """The driver union-find fast path (bounded collect up to
+    ``DRIVER_EDGES``) must produce bit-identical labels to the
     distributed large-star/small-star loop on a graph mixing a long
     chain, a clique, self-loops (node set membership without edges),
-    and a random sparse blob with several components."""
+    and a random sparse blob with several components — and on a pair
+    list of only self-loops (no canonical edge at all)."""
     import random
 
+    from banksy_spark.operators import graph
     from banksy_spark.operators.graph import connected_components
 
     rng = random.Random(11)
@@ -176,14 +181,21 @@ def test_cc_driver_and_distributed_paths_agree(spark):
     edges += [
         (rng.randint(200, 260), rng.randint(200, 260)) for _ in range(80)
     ]
-    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-    drv = {r.node: r.lab for r in connected_components(df).collect()}
-    dist = {
-        r.node: r.lab
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
+    loops = [(5, 5), (3, 3), (5, 5)]
+    dfs = [
+        spark.createDataFrame(pairs, "src BIGINT, dst BIGINT")
+        for pairs in (edges, loops)
+    ]
+
+    def labels(df):
+        return {r.node: r.lab for r in connected_components(df).collect()}
+
+    drv = [labels(df) for df in dfs]
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
+    dist = [labels(df) for df in dfs]
     assert drv == dist
-    assert drv[50] == 0 and drv[105] == 100 and drv[999] == 999
+    assert drv[0][50] == 0 and drv[0][105] == 100 and drv[0][999] == 999
+    assert drv[1] == {5: 5, 3: 3}
 
 
 def test_ann_recall_floor_at_pinned_nprobe(spark):
@@ -384,6 +396,9 @@ def test_converged_bfs_and_ancestry_match_python(spark):
     got = {r["node"]: r["dist"] for r in dist.collect()}
     assert got == {i: i for i in range(40)}
     assert rounds >= 39  # one frontier hop per round on a path
+    # a source with no out-edges: only itself, at distance 0
+    lone, _ = bfs_converged(edges, source=99)
+    assert [tuple(r) for r in lone.collect()] == [(99, 0)]
 
     # random forest: 200 nodes, parent < node (acyclic by construction)
     rng = random.Random(11)
@@ -411,6 +426,13 @@ def test_converged_bfs_and_ancestry_match_python(spark):
     assert pj_rounds <= math.ceil(math.log2(max(2, max_depth))) + 2, (
         f"pointer jumping took {pj_rounds} rounds for depth {max_depth}"
     )
+
+    # a forest of roots only: nothing pending, every node its own root
+    roots = spark.createDataFrame(
+        [(n, None) for n in (3, 1, 2)], "node bigint, parent bigint"
+    )
+    out, _ = ancestors_converged(roots)
+    assert {tuple(r) for r in out.collect()} == {(n, n, 0) for n in (1, 2, 3)}
 
 
 def test_ancestors_converged_detects_cycles(spark):
@@ -475,6 +497,14 @@ def test_weighted_rollup_matches_python_and_is_logarithmic(spark):
 
     max_depth = max(depth(n) for n in parents)
     assert rounds <= math.ceil(math.log2(max(2, max_depth))) + 2
+
+    # a forest of roots only: nothing pending, every multiplier 1
+    roots = spark.createDataFrame(
+        [(n, None, None) for n in (3, 1, 2)],
+        "node bigint, parent bigint, w bigint",
+    )
+    out, _ = weighted_rollup_converged(roots)
+    assert {tuple(r) for r in out.collect()} == {(n, n, 1) for n in (1, 2, 3)}
 
     cyc = spark.createDataFrame(
         [(1, 2, 2), (2, 1, 2), (9, None, None)],

@@ -104,25 +104,6 @@ def test_jsonl_tolerant_quarantines_bad_lines(spark, tmp_path):
     assert {r.game for r in good.collect()} == {"A@B", "C@D"}
 
 
-def test_connected_components_checkpointing_identical(spark):
-    """The converged operator and the bounded lazy form (with and
-    without lineage checkpointing) agree on a graph both can solve."""
-    from banksy_spark.operators.graph import (
-        connected_components,
-        label_propagation_cc,
-    )
-
-    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)]
-    df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT")
-    plain = {r.node: r.lab for r in connected_components(df).collect()}
-    lazy = {r.node: r.lab for r in label_propagation_cc(df).collect()}
-    ckpt = {
-        r.node: r.lab
-        for r in label_propagation_cc(df, checkpoint_every=2).collect()
-    }
-    assert plain == lazy == ckpt and plain[4] == 1
-
-
 def test_dsv2_scrape_source_stream_equals_batch(spark, tmp_path):
     """VERDICT r4 item 6: the DSv2 scrape source (rate limit + validity
     predicate + give-up timeout) must deliver exactly what the batch

@@ -1,17 +1,17 @@
 """Connected-components scale benchmark (round 7): prove both paths.
 
 Round 7 gave ``operators.graph.connected_components`` a bounded
-driver union-find fast path (edge sets ≤ ``driver_threshold``) next to
+driver union-find fast path (edge sets ≤ ``graph.DRIVER_EDGES``) next to
 the distributed large-star/small-star loop. The suite exercises the
 driver path (LSH collision graphs are tiny) and pytest pins the two
 paths bit-equal on small fixtures; this tool measures BOTH at a scale
 no fixture reaches:
 
-  dist_sec   distributed loop (driver_threshold=0) on a multi-million-
+  dist_sec   distributed loop (DRIVER_EDGES = 0) on a multi-million-
              edge graph mixing a 100k-node chain (diameter 1e5 — the
              log-round worst case for star rounds), 1k dense 50-node
              circulant clusters, and a random sparse soup over 1M ids
-  drv_sec    driver union-find on the same graph with the threshold
+  drv_sec    driver union-find on the same graph with DRIVER_EDGES
              raised above |E|
   equal      exact label equality of the two paths, verified IN SPARK
              (full-outer join, zero disagreeing rows), not by sampling
@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from banksy_spark.operators.graph import connected_components  # noqa: E402
+from banksy_spark.operators import graph  # noqa: E402
 from banksy_spark.session import get_spark  # noqa: E402
 
 CHAIN_N = 100_000          # one path component: diameter 1e5
@@ -85,16 +85,14 @@ def main() -> None:
     n_edges = e.count()
 
     t0 = time.time()
-    dist = connected_components(e, driver_threshold=0).localCheckpoint(
-        eager=False
-    )
+    graph.DRIVER_EDGES = 0
+    dist = graph.connected_components(e).localCheckpoint(eager=False)
     n_dist = dist.count()
     dist_sec = round(time.time() - t0, 1)
 
     t0 = time.time()
-    drv = connected_components(e, driver_threshold=n_edges + 1).localCheckpoint(
-        eager=False
-    )
+    graph.DRIVER_EDGES = n_edges + 1
+    drv = graph.connected_components(e).localCheckpoint(eager=False)
     n_drv = drv.count()
     drv_sec = round(time.time() - t0, 1)
 

@@ -37,9 +37,7 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def normalize_odds(
-    raw: DataFrame, bookies: list[str], probe_bookie: str | None = None
-) -> DataFrame:
+def normalize_odds(raw: DataFrame, bookies: list[str]) -> DataFrame:
     """Wide scraped odds → canonical long odds table (FIXTURES.md A6):
     (Sport, game_id, Team, bet_type, info ∈ {Line, Payout},
     <bookie> × N).
@@ -49,11 +47,10 @@ def normalize_odds(
     game ids (:103-119), Line/Payout row expansion (:122-133), odds
     token fixes 'EVEN'→'+100' / 'o'→'+' / 'u'→'-' (:172-181).
 
-    ``probe_bookie`` selects which bookie column the bet-type classifier
-    inspects; default is ``bookies[0]``. The reference hard-wires the
-    Bet365 column (arbitrage_scanner.py:90-99) regardless of column
-    order — pass ``probe_bookie="Bet365"`` for exact reference parity
-    when the first bookie differs.
+    The bet-type classifier inspects the first bookie column,
+    ``bookies[0]``. The reference hard-wires the Bet365 column
+    (arbitrage_scanner.py:90-99); exact reference parity comes from
+    listing Bet365 first in ``bookies``.
     """
     # 1. stray header rows: the scrape repeats the header as data
     df = raw.filter((F.col("Team") != "Team") & (F.col("Team") != "") & F.col("Team").isNotNull())
@@ -72,7 +69,7 @@ def normalize_odds(
 
     # 4. classify bet type from the probe bookie's cleaned value (:90-99;
     #    the rstrip at :86-87 runs before the classifier)
-    probe = F.expr(f"trim(TRAILING ' +' FROM {_ident(probe_bookie or bookies[0])})")
+    probe = F.expr(f"trim(TRAILING ' +' FROM {_ident(bookies[0])})")
     bet_type = (
         F.when(probe.rlike("[ou]"), "Over/Under")
         .when(F.length(probe).isin(4, 5), "ML")

@@ -109,8 +109,8 @@ def ohlc_candles(events: "DataFrame", watermark: str = "2 hours") -> "DataFrame"
 
 
 def session_window_counts(events: "DataFrame", watermark: str = "2 hours") -> "DataFrame":
-    """Native session windows (30-min gap) per user — identical logic to
-    the batch query suite.corpus.stream_session_window_native; on a
+    """Native session windows (30-min gap) per user — the batch query
+    suite.corpus.stream_session_window_native calls this function; on a
     stream the watermark lets the engine finalize and evict merged
     session state."""
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
@@ -183,9 +183,9 @@ def purchase_attribution_stream(
 
 
 def file_stats_manifest(orders: "DataFrame", file_rows: int = 2048) -> "DataFrame":
-    """Incremental min/max file-stats manifest — identical logic to the
-    batch query suite.round12.o_manifest_prune's manifest CTE (and
-    suite.round11.o_file_skipping_stats): per synthetic file
+    """Incremental min/max file-stats manifest — the batch queries
+    suite.round11.o_file_skipping_stats and suite.round12.o_manifest_prune
+    call this function for their manifest: per synthetic file
     (orderkey-range ingestion batch), row count plus min/max of the
     clustering key and the date column. Every aggregate is associative
     and mergeable (count, min, max), so the streaming state per file is
@@ -204,11 +204,26 @@ def file_stats_manifest(orders: "DataFrame", file_rows: int = 2048) -> "DataFram
     )
 
 
+# Epanechnikov kernel (bandwidth 8.0 = the grid pitch) on squared
+# distance, quantized to an integer ppm grid BEFORE summation: FLOOR
+# of a per-row IEEE double is deterministic in both engines, and the
+# aggregate is then an order-independent BIGINT sum (a raw double SUM
+# would be addition-order-dependent and could diverge between engines).
+_KDE_WQ = (
+    "CAST(FLOOR(GREATEST(CAST(0 AS DOUBLE),"
+    " 1 - ((px - (CAST(jx AS DOUBLE) + 0.5) * 8.0)"
+    " * (px - (CAST(jx AS DOUBLE) + 0.5) * 8.0)"
+    " + (py - (CAST(jy AS DOUBLE) + 0.5) * 8.0)"
+    " * (py - (CAST(jy AS DOUBLE) + 0.5) * 8.0)) / 64.0)"
+    " * 1000000) AS BIGINT)"
+)
+
+
 def kde_cell_density(pts: "DataFrame") -> "DataFrame":
-    """Incremental grid-blocked Epanechnikov KDE — identical logic to
-    the batch query suite.round13c.a_kde_epanechnikov (same quantized
-    kernel expression, imported from there): each point scatters to its
-    3x3 cell ring map-side, and the per-cell density is a SUM of
+    """Incremental grid-blocked Epanechnikov KDE — the batch query
+    suite.round13c.a_kde_epanechnikov calls this function (and its
+    oracle uses the same quantized kernel text, _KDE_WQ): each point
+    scatters to its 3x3 cell ring map-side, and the per-cell density is a SUM of
     per-row FLOOR-quantized integer ppm weights — associative and
     mergeable, so the streaming state per cell is ONE bounded
     (density_ppm, n_pts) row updated in place across micro-batches.
@@ -216,8 +231,6 @@ def kde_cell_density(pts: "DataFrame") -> "DataFrame":
     ingest time instead of re-scanning the fact. Runs unchanged on a
     batch frame (the stream==batch pytest twin). Input: (px double,
     py double)."""
-    from banksy_spark.suite.round13c import _KDE_WQ
-
     scat = (
         pts.select(
             F.floor(F.col("px") / 8.0).cast("bigint").alias("ix"),

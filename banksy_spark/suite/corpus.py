@@ -18,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from banksy_spark.streaming.core import session_window_counts
 from banksy_spark.suite.llm import _POLY_DUCK, _POLY_SPARK
+from banksy_spark.suite.llm_extra import _LANG_RANK_DUCK, _lang_hash_ranked
 from banksy_spark.suite.registry import T, fan_out, query
 
 # --- Span-level exact dedup (C4-style) -------------------------------------
@@ -628,13 +630,7 @@ _MIX_TARGET = 200  # total docs to draw across strata
       SELECT lang, CAST(floor(sqrt(n_s) / z * {_MIX_TARGET}) AS BIGINT) AS quota
       FROM counts CROSS JOIN tot
     ),
-    ranked AS (
-      SELECT doc_id, lang,
-             row_number() OVER (
-               PARTITION BY lang
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-      FROM documents
-    )
+    {_LANG_RANK_DUCK}
     SELECT r.doc_id, r.lang, CAST(r.rn AS BIGINT) AS samp_rank, q.quota
     FROM ranked r JOIN quota q USING (lang)
     WHERE r.rn <= q.quota
@@ -668,21 +664,8 @@ def llm_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("quota"),
         )
     )
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
-    # few huge strata over the corpus: hash-order rank via
-    # grouped_ordinals through a monotone numeric prefix of the hex
-    # hash (13 hex digits = 52 bits, exact in DOUBLE; hex-lex == numeric)
-    keyed = d.withColumn(
-        "h", F.md5(F.col("doc_id").cast("string").cast("binary"))
-    ).withColumn(
-        "pfx", F.expr("CAST(conv(substring(h, 1, 13), 16, 10) AS DOUBLE)")
-    )
-    ranked = grouped_ordinals(
-        keyed, ["lang"], ["pfx", "h", "doc_id"], row_number="samp_rank"
-    )
     return (
-        ranked.withColumn("samp_rank", F.col("samp_rank").cast("bigint"))
+        _lang_hash_ranked(d)
         .join(F.broadcast(quota), "lang")
         .filter(F.col("samp_rank") <= F.col("quota"))
         .select("doc_id", "lang", "samp_rank", "quota")
@@ -812,22 +795,16 @@ _SESSION_GAP_US = 1_800_000_000  # 30 minutes
     "One shuffle on user_id.",
 )
 def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = T(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    return session_window_counts(T(spark, sf_dir, "events"))
 
 
 # --- PQ recall vs exact ground truth ---------------------------------------
 
-from banksy_spark.suite.llm import _DOT_DUCK, _NORM_DUCK, llm_ann_bruteforce  # noqa: E402
+from banksy_spark.suite.llm import (  # noqa: E402
+    _BF_RANK_DUCK,
+    _NORM_DUCK,
+    llm_ann_bruteforce,
+)
 
 
 @query(
@@ -837,12 +814,7 @@ from banksy_spark.suite.llm import _DOT_DUCK, _NORM_DUCK, llm_ann_bruteforce  # 
     n AS (SELECT vec_id, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
     bf AS (
       SELECT qid, neighbor_id FROM (
-        SELECT q.qid, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='n.v')} / (q.qn * n.nrm) DESC, n.vec_id)
-                 AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 8) q
-        JOIN n ON n.vec_id <> q.qid
+        {_BF_RANK_DUCK}
       ) WHERE rnk <= {_PQ_TOPK}
     ),
     truth AS (SELECT qid, COUNT(*) AS n_truth FROM bf GROUP BY qid),

@@ -22,7 +22,7 @@ element, Spark's aggregate with 0; identical for these folds since
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, fan_out, query
@@ -146,18 +146,37 @@ def llm_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The composite document quality score (length + stopword ratio +
+# lexical diversity) over per-doc token counts, in both dialects.
+_QUALITY_COUNTS_DUCK = """len(string_split(text, ' ')) AS n_tok,
+             len(list_distinct(string_split(text, ' '))) AS n_distinct,
+             len(list_filter(string_split(text, ' '), t -> t IN ('a', 'the'))) AS n_stop"""
+_QUALITY_SCORE_DUCK = """0.4 * LEAST(1.0, n_tok / 100.0)
+             + 0.3 * (1.0 - n_stop / CAST(n_tok AS DOUBLE))
+             + 0.3 * (n_distinct / CAST(n_tok AS DOUBLE))"""
+
+
+def _quality() -> Column:
+    """Spark form of the quality score over a ``text`` column."""
+    toks = F.split("text", " ")
+    n_tok = F.size(toks)
+    n_distinct = F.size(F.array_distinct(toks))
+    n_stop = F.size(F.expr("filter(split(text, ' '), t -> t IN ('a', 'the'))"))
+    return (
+        0.4 * F.least(F.lit(1.0), n_tok / 100.0)
+        + 0.3 * (1.0 - n_stop / n_tok.cast("double"))
+        + 0.3 * (n_distinct / n_tok.cast("double"))
+    )
+
+
 @query(
     "llm_quality_score",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           0.4 * LEAST(1.0, n_tok / 100.0)
-             + 0.3 * (1.0 - n_stop / CAST(n_tok AS DOUBLE))
-             + 0.3 * (n_distinct / CAST(n_tok AS DOUBLE)) AS quality
+           {_QUALITY_SCORE_DUCK} AS quality
     FROM (
       SELECT doc_id,
-             len(string_split(text, ' ')) AS n_tok,
-             len(list_distinct(string_split(text, ' '))) AS n_distinct,
-             len(list_filter(string_split(text, ' '), t -> t IN ('a', 'the'))) AS n_stop
+             {_QUALITY_COUNTS_DUCK}
       FROM documents
     )
     """,
@@ -166,15 +185,7 @@ def llm_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n_tok = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    n_stop = F.size(F.expr("filter(split(text, ' '), t -> t IN ('a', 'the'))"))
-    quality = (
-        0.4 * F.least(F.lit(1.0), n_tok / 100.0)
-        + 0.3 * (1.0 - n_stop / n_tok.cast("double"))
-        + 0.3 * (n_distinct / n_tok.cast("double"))
-    )
+    quality = _quality()
     return d.select("doc_id", quality.alias("quality"))
 
 
@@ -538,6 +549,48 @@ _NORM_SPARK = "sqrt(aggregate(transform({v}, x -> x * x), 0D, (acc, v) -> acc + 
 _DOT_DUCK = "list_reduce([{a}[i] * {b}[i] for i in generate_series(1, len({a}))], (x, y) -> x + y)"
 _NORM_DUCK = "sqrt(list_reduce([{v}[i] * {v}[i] for i in generate_series(1, len({v}))], (x, y) -> x + y))"
 
+# Oracle fragments shared by the ANN family (DuckDB text, one copy each).
+# e/n: the embeddings as DOUBLE lists with their L2 norms.
+_EN_DUCK = f"""e AS (
+      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      FROM embeddings
+    ),
+    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e)"""
+# exact cosine rank of every vector for each of the 8 query ids
+_BF_RANK_DUCK = f"""SELECT q.qid, n.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.qid ORDER BY
+                 {_DOT_DUCK.format(a='q.qv', b='n.v')} / (q.qn * n.nrm) DESC, n.vec_id) AS rnk
+        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 8) q
+        JOIN n ON n.vec_id <> q.qid"""
+# nprobe=1 IVF: cosine rank within the query's own cell (over `assigned`)
+_IVF_RANK_DUCK = f"""SELECT q.vec_id AS qid, a.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.vec_id ORDER BY
+                 {_DOT_DUCK.format(a='q.v', b='a.v')} / (q.nrm * a.nrm) DESC, a.vec_id) AS rnk
+        FROM (SELECT * FROM assigned WHERE vec_id < 8) q
+        JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.vec_id"""
+# sign-of-dims-1..3 LSH bucket, and the cosine rank within the bucket
+_NB_DUCK = """nb AS (
+      SELECT vec_id, v, nrm,
+             (CASE WHEN v[1] > 0 THEN 4 ELSE 0 END
+              + CASE WHEN v[2] > 0 THEN 2 ELSE 0 END
+              + CASE WHEN v[3] > 0 THEN 1 ELSE 0 END) AS bucket
+      FROM n
+    )"""
+_LSH_RANK_DUCK = f"""SELECT q.qid, c.vec_id AS neighbor_id,
+               row_number() OVER (PARTITION BY q.qid ORDER BY
+                 {_DOT_DUCK.format(a='q.qv', b='c.v')} / (q.qn * c.nrm) DESC, c.vec_id) AS rnk
+        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id < 8) q
+        JOIN nb c USING (bucket)
+        WHERE c.vec_id <> q.qid"""
+# rank of each centroid cell by cosine to vector e (rk = 1: its own cell)
+_CELL_RANK_DUCK = """row_number() OVER (
+                 PARTITION BY e.vec_id
+                 ORDER BY list_reduce([e.v[i] * c.centroid[i]
+                                       for i in generate_series(1, len(e.v))],
+                                      (x, y) -> x + y) / (e.nrm * c.cnorm) DESC,
+                          c.cell) AS rk
+        FROM n e CROSS JOIN centn c"""
+
 
 @query(
     "llm_ann_bruteforce",
@@ -637,11 +690,7 @@ def llm_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_embed_near_dup",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e)
+    WITH {_EN_DUCK}
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label,
            {_DOT_DUCK.format(a='a.v', b='b.v')} / (a.nrm * b.nrm) AS cosine
     FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
@@ -867,7 +916,7 @@ def llm_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select("doc_id", red.alias("redacted"), n_mail.alias("n_emails"))
 
 
-_CENT_DUCK = """
+_CENT_DUCK = f"""
     cent AS (
       SELECT label, list(c ORDER BY pos) AS centroid
       FROM (
@@ -892,13 +941,7 @@ _CENT_DUCK = """
       SELECT vec_id, label, v, nrm, cell
       FROM (
         SELECT e.vec_id, e.label, e.v, e.nrm, c.cell,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_reduce([e.v[i] * c.centroid[i]
-                                       for i in generate_series(1, len(e.v))],
-                                      (x, y) -> x + y) / (e.nrm * c.cnorm) DESC,
-                          c.cell) AS rk
-        FROM n e CROSS JOIN centn c
+               {_CELL_RANK_DUCK}
       ) WHERE rk = 1
     )
 """
@@ -957,11 +1000,7 @@ def ivf_parts(
 @query(
     "llm_ann_ivf",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
+    WITH {_EN_DUCK},
     {_CENT_DUCK}
     SELECT q.vec_id AS qid, a.vec_id AS neighbor_id, q.cell,
            CAST(row_number() OVER (PARTITION BY q.vec_id ORDER BY
@@ -1000,45 +1039,22 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_ann_recall",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
+    WITH {_EN_DUCK},
     bf AS (
       SELECT qid, neighbor_id FROM (
-        SELECT q.qid, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='n.v')} / (q.qn * n.nrm) DESC, n.vec_id) AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 8) q
-        JOIN n ON n.vec_id <> q.qid
+        {_BF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
-    nb AS (
-      SELECT vec_id, v, nrm,
-             (CASE WHEN v[1] > 0 THEN 4 ELSE 0 END
-              + CASE WHEN v[2] > 0 THEN 2 ELSE 0 END
-              + CASE WHEN v[3] > 0 THEN 1 ELSE 0 END) AS bucket
-      FROM n
-    ),
+    {_NB_DUCK},
     lsh AS (
       SELECT qid, neighbor_id FROM (
-        SELECT q.qid, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='c.v')} / (q.qn * c.nrm) DESC, c.vec_id) AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id < 8) q
-        JOIN nb c USING (bucket)
-        WHERE c.vec_id <> q.qid
+        {_LSH_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     {_CENT_DUCK},
     ivf AS (
       SELECT qid, neighbor_id FROM (
-        SELECT q.vec_id AS qid, a.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_DOT_DUCK.format(a='q.v', b='a.v')} / (q.nrm * a.nrm) DESC, a.vec_id) AS rnk
-        FROM (SELECT * FROM assigned WHERE vec_id < 8) q
-        JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.vec_id
+        {_IVF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     truth AS (SELECT qid, COUNT(*) AS n_truth FROM bf GROUP BY qid),

@@ -20,11 +20,16 @@ from pyspark.sql import functions as F
 
 from banksy_spark.suite.llm import (
     _band_pairs,
+    _BF_RANK_DUCK,
+    _CELL_RANK_DUCK,
     _DOT_DUCK,
     _DOT_SPARK,
+    _EN_DUCK,
+    _IVF_RANK_DUCK,
+    _LSH_RANK_DUCK,
     _lsh_oracle_ctes,
     _lsh_sigs,
-    _NORM_DUCK,
+    _NB_DUCK,
     ivf_parts,
 )
 from banksy_spark.suite.registry import T, query
@@ -181,19 +186,43 @@ def llm_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOMAIN_QUOTAS = [("en", 60), ("de", 40), ("fr", 40), ("es", 30), ("zh", 30)]
 
 
+# each doc's rank within its language under the content-blind md5 order
+_LANG_RANK_DUCK = """ranked AS (
+      SELECT doc_id, lang,
+             row_number() OVER (
+               PARTITION BY lang
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+      FROM documents
+    )"""
+
+
+def _lang_hash_ranked(d: DataFrame) -> DataFrame:
+    """Spark form of _LANG_RANK_DUCK: (doc_id, lang) rows with their
+    BIGINT ``samp_rank`` within lang under the md5(doc_id string)
+    order. Few huge strata over the corpus, so the rank rides
+    grouped_ordinals (bucket-bounded sorts) through a monotone numeric
+    prefix of the hex hash (13 hex digits = 52 bits, exact in DOUBLE;
+    hex-lex == numeric) and no task ever owns a stratum."""
+    from banksy_spark.operators.ordinals import grouped_ordinals
+
+    keyed = d.withColumn(
+        "h", F.md5(F.col("doc_id").cast("string").cast("binary"))
+    ).withColumn(
+        "pfx", F.expr("CAST(conv(substring(h, 1, 13), 16, 10) AS DOUBLE)")
+    )
+    ranked = grouped_ordinals(
+        keyed, ["lang"], ["pfx", "h", "doc_id"], row_number="samp_rank"
+    )
+    return ranked.withColumn("samp_rank", F.col("samp_rank").cast("bigint"))
+
+
 @query(
     "llm_domain_mix",
     oracle=f"""
     WITH quota(lang, quota) AS (VALUES
       {", ".join(f"('{lang}', {q})" for lang, q in DOMAIN_QUOTAS)}
     ),
-    ranked AS (
-      SELECT doc_id, lang,
-             row_number() OVER (
-               PARTITION BY lang
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-      FROM documents
-    )
+    {_LANG_RANK_DUCK}
     SELECT doc_id, lang, CAST(rn AS BIGINT) AS samp_rank
     FROM ranked JOIN quota USING (lang)
     WHERE rn <= quota
@@ -207,24 +236,12 @@ DOMAIN_QUOTAS = [("en", 60), ("de", 40), ("fr", 40), ("es", 30), ("zh", 30)]
     "stratum.",
 )
 def llm_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
     d = T(spark, sf_dir, "documents").select("doc_id", "lang")
     quota = spark.createDataFrame(DOMAIN_QUOTAS, "lang string, quota int")
-    # the note's promised 100 TB two-pass form, made real: the stratum
-    # rank rides grouped_ordinals (bucket-bounded sorts; hex hash order
-    # through a monotone 13-hex-digit numeric prefix), so no task ever
-    # owns a stratum — the quota filter then broadcasts as before
-    keyed = d.withColumn(
-        "h", F.md5(F.col("doc_id").cast("string").cast("binary"))
-    ).withColumn(
-        "pfx", F.expr("CAST(conv(substring(h, 1, 13), 16, 10) AS DOUBLE)")
-    )
-    ranked = grouped_ordinals(
-        keyed, ["lang"], ["pfx", "h", "doc_id"], row_number="samp_rank"
-    )
+    # the note's promised 100 TB two-pass form, made real: the quota
+    # filter broadcasts over the bucket-bounded stratum rank
     return (
-        ranked.withColumn("samp_rank", F.col("samp_rank").cast("bigint"))
+        _lang_hash_ranked(d)
         .join(F.broadcast(quota), "lang")
         .filter(F.col("samp_rank") <= F.col("quota"))
         .select("doc_id", "lang", "samp_rank")
@@ -239,22 +256,12 @@ from banksy_spark.suite.llm import _CENT_DUCK  # noqa: E402  (shares the centroi
 @query(
     "llm_ann_ivf_multiprobe",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
+    WITH {_EN_DUCK},
     {_CENT_DUCK},
     q2 AS (
       SELECT vec_id AS qid, v AS qv, nrm AS qn, cell FROM (
         SELECT e.vec_id, e.v, e.nrm, c.cell,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_reduce([e.v[i] * c.centroid[i]
-                                       for i in generate_series(1, len(e.v))],
-                                      (x, y) -> x + y) / (e.nrm * c.cnorm) DESC,
-                          c.cell) AS rk
-        FROM n e CROSS JOIN centn c
+               {_CELL_RANK_DUCK}
         WHERE e.vec_id < 8
       ) WHERE rk <= 2
     )
@@ -302,31 +309,17 @@ def llm_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_ann_recall_multiprobe",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
+    WITH {_EN_DUCK},
     bf AS (
       SELECT qid, neighbor_id FROM (
-        SELECT q.qid, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='n.v')} / (q.qn * n.nrm) DESC, n.vec_id) AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 8) q
-        JOIN n ON n.vec_id <> q.qid
+        {_BF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     {_CENT_DUCK},
     probes AS (
       SELECT vec_id AS qid, v AS qv, nrm AS qn, cell, rk FROM (
         SELECT e.vec_id, e.v, e.nrm, c.cell,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY list_reduce([e.v[i] * c.centroid[i]
-                                       for i in generate_series(1, len(e.v))],
-                                      (x, y) -> x + y) / (e.nrm * c.cnorm) DESC,
-                          c.cell) AS rk
-        FROM n e CROSS JOIN centn c
+               {_CELL_RANK_DUCK}
         WHERE e.vec_id < 8
       ) WHERE rk <= 6
     ),
@@ -420,7 +413,6 @@ def llm_ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 from banksy_spark.suite.llm import (  # noqa: E402
     _CENT_DUCK,
     _DOT_DUCK,
-    _NORM_DUCK,
     llm_ann_ivf,
     llm_ann_lsh_bucketed,
 )
@@ -432,36 +424,17 @@ _RRF_TOPK = 5
 @query(
     "llm_rank_fusion",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
-    nb AS (
-      SELECT vec_id, v, nrm,
-             (CASE WHEN v[1] > 0 THEN 4 ELSE 0 END
-              + CASE WHEN v[2] > 0 THEN 2 ELSE 0 END
-              + CASE WHEN v[3] > 0 THEN 1 ELSE 0 END) AS bucket
-      FROM n
-    ),
+    WITH {_EN_DUCK},
+    {_NB_DUCK},
     lsh AS (
       SELECT qid, neighbor_id, rnk FROM (
-        SELECT q.qid, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='c.v')} / (q.qn * c.nrm) DESC, c.vec_id) AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id < 8) q
-        JOIN nb c USING (bucket)
-        WHERE c.vec_id <> q.qid
+        {_LSH_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     {_CENT_DUCK},
     ivf AS (
       SELECT qid, neighbor_id, rnk FROM (
-        SELECT q.vec_id AS qid, a.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_DOT_DUCK.format(a='q.v', b='a.v')} / (q.nrm * a.nrm) DESC, a.vec_id) AS rnk
-        FROM (SELECT * FROM assigned WHERE vec_id < 8) q
-        JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.vec_id
+        {_IVF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     fused AS (

@@ -71,16 +71,15 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def fan_out(
-    df: DataFrame, min_parts: int | None = None, force: bool = False
-) -> DataFrame:
+def fan_out(df: DataFrame, force: bool = False) -> DataFrame:
     """Scale-adaptive parallelism floor for CPU-heavy per-row work.
 
     A small parquet file scans as ONE partition (sf0.1's documents table
     is a single 594 KB file → 1 task), so expression-heavy pipelines —
     shingling, MinHash, deletion neighborhoods, frame decoding — run on
     one core of the machine. This round-robin-repartitions the frame up
-    to the session's default parallelism, but ONLY when the optimizer's
+    to the session's default parallelism (the one target for every
+    call site), but ONLY when the optimizer's
     input-size estimate says the scan cannot already fill that many
     splits (estimated bytes < defaultParallelism × maxPartitionBytes —
     the same threshold at which the file-split planner itself would
@@ -135,7 +134,7 @@ def fan_out(
     insensitive).
     """
     spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     max_split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
     if not force:
         est_bytes = int(

@@ -29,24 +29,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from banksy_spark.suite.registry import T, fan_out, query
+from banksy_spark.suite.registry import T, query
+from banksy_spark.suite.round4 import _CAPPED_DUCK, _MARKOV_DUCK
+from banksy_spark.suite.round8 import (
+    _CONT_MIN_CAND,
+    _containment_oracle,
+    _containment_pairs,
+)
 
 
 @query(
     "stream_capped_balance_stateful",
-    oracle="""
-    SELECT event_id, user_id,
-           list_reduce(list_prepend(CAST(0 AS DOUBLE), l),
-               (acc, x) -> GREATEST(CAST(0 AS DOUBLE),
-                                    LEAST(CAST(100 AS DOUBLE), acc + x)))
-             AS capped_balance
-    FROM (
-      SELECT event_id, user_id,
-             list(value - 50e0) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS l
-      FROM events
-    )
-    """,
+    oracle=_CAPPED_DUCK,
     note="Capped running sum, CUSTOM-STATEFUL form: the batch replay "
     "of streaming/stateful.py:capped_balance_stateful "
     "(applyInPandasWithState, state = ONE double per user — the clamp "
@@ -75,21 +69,7 @@ def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "stream_markov_stateful",
-    oracle="""
-    WITH seq AS (
-      SELECT event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS to_type
-      FROM events
-    ),
-    cnt AS (
-      SELECT from_type, to_type, COUNT(*) AS n FROM seq
-      WHERE to_type IS NOT NULL GROUP BY 1, 2
-    )
-    SELECT from_type, to_type, n,
-           CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
-    FROM cnt
-    """,
+    oracle=_MARKOV_DUCK,
     note="Markov transition matrix, CUSTOM-STATEFUL form: the batch "
     "replay of streaming/stateful.py:"
     "markov_pairs_stateful (fold_stream, state = the last "
@@ -128,38 +108,15 @@ def stream_markov_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "llm_dedup_containment_g5",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
+    oracle=_containment_oracle(
+        """sh AS (
       SELECT DISTINCT doc_id,
              md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' '
                  || w[i+3] || ' ' || w[i+4]) AS h
       FROM w, unnest(generate_series(1, len(w) - 4)) AS t(i)
+    )""",
+        _CONT_MIN_CAND,
     ),
-    sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    mk AS (SELECT doc_id, MIN(h) AS mk FROM sh GROUP BY doc_id),
-    cand AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM mk a JOIN mk b ON a.mk = b.mk AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.a_id, c.b_id, COUNT(*) AS inter
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.a_id
-      JOIN sh sb ON sb.doc_id = c.b_id AND sb.h = sa.h
-      GROUP BY c.a_id, c.b_id
-    )
-    SELECT i.a_id, i.b_id, CAST(i.inter AS BIGINT) AS inter,
-           CAST(za.sz AS BIGINT) AS sz_a, CAST(zb.sz AS BIGINT) AS sz_b,
-           CAST(i.inter AS DOUBLE) / za.sz AS cont_a_in_b,
-           CAST(i.inter AS DOUBLE) / zb.sz AS cont_b_in_a
-    FROM inter i
-    JOIN sz za ON za.doc_id = i.a_id
-    JOIN sz zb ON zb.doc_id = i.b_id
-    WHERE 5 * i.inter >= 4 * za.sz OR 5 * i.inter >= 4 * zb.sz
-    """,
     note="Containment dedup over word 5-shingles — the MEASURED scale "
     "path for the containment family (round-9 verdict item 4; docs "
     "under 5 words are out of scope by construction, same as the "
@@ -181,57 +138,7 @@ def stream_markov_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     "verification.",
 )
 def llm_dedup_containment_g5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        T(spark, sf_dir, "documents").select(
-            "doc_id", F.split("text", " ").alias("w")
-        )
-    )
-    sh = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.expr(
-                "transform(slice(w, 1, greatest(size(w) - 4, 0)), "
-                "(x, j) -> concat_ws(' ', x, w[j + 1], w[j + 2], "
-                "w[j + 3], w[j + 4]))"
-            )).alias("_p", "s"),
-        )
-        .select("doc_id", F.md5(F.col("s").cast("binary")).alias("h"))
-        .distinct()
-        # persist: the shingle table feeds FOUR consumers (sz, mk, and
-        # both verify sides) — unpersisted, the explode+md5+distinct
-        # pipeline executed four times per run (r13 opt; same
-        # write-sigs-to-a-table posture as llm._lsh_sigs at 100 TB).
-        .persist()
-    )
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    mk = sh.groupBy("doc_id").agg(F.min("h").alias("mk"))
-    a, b = mk.alias("a"), mk.alias("b")
-    cand = a.join(
-        b, (F.col("a.mk") == F.col("b.mk")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-    sa = sh.select(F.col("doc_id").alias("a_id"), "h")
-    sb = sh.select(F.col("doc_id").alias("b_id"), "h")
-    inter = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "h"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    za = sz.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
-    zb = sz.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
-    keep = (5 * F.col("inter") >= 4 * F.col("sz_a")) | (
-        5 * F.col("inter") >= 4 * F.col("sz_b")
-    )
-    return (
-        inter.join(za, "a_id")
-        .join(zb, "b_id")
-        .filter(keep)
-        .select(
-            "a_id", "b_id", "inter", "sz_a", "sz_b",
-            (F.col("inter").cast("double") / F.col("sz_a")).alias("cont_a_in_b"),
-            (F.col("inter").cast("double") / F.col("sz_b")).alias("cont_b_in_a"),
-        )
-    )
+    return _containment_pairs(spark, sf_dir, n=5, k=1)
 
 
 # --- k-core decomposition (fixed-depth peeling) ------------------------------

@@ -22,23 +22,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from banksy_spark.streaming.core import file_stats_manifest
 from banksy_spark.suite.registry import T, fan_out, query
 
 _FILE_ROWS = 2048  # synthetic file grain: ~one ingestion batch per 2048 keys
 _KEY_LO, _KEY_HI = 10_000, 14_000
 _DATE_LO, _DATE_HI = "1996-01-01", "1996-03-31"
 
-
-@query(
-    "o_file_skipping_stats",
-    oracle=f"""
-    WITH manifest AS (
+# the oracle form of streaming.core.file_stats_manifest
+_MANIFEST_DUCK = f"""manifest AS (
       SELECT o_orderkey // {_FILE_ROWS} AS file_id,
              CAST(COUNT(*) AS BIGINT) AS n_rows,
              MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
              MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
       FROM orders GROUP BY 1
-    )
+    )"""
+
+
+@query(
+    "o_file_skipping_stats",
+    oracle=f"""
+    WITH {_MANIFEST_DUCK}
     SELECT file_id, n_rows, min_key, max_key, min_date, max_date,
            (max_key < {_KEY_LO} OR min_key > {_KEY_HI}) AS skip_key_scan,
            (max_date < DATE '{_DATE_LO}' OR min_date > DATE '{_DATE_HI}')
@@ -61,15 +65,7 @@ _DATE_LO, _DATE_HI = "1996-01-01", "1996-03-31"
 )
 def o_file_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    manifest = o.groupBy(
-        F.expr(f"o_orderkey DIV {_FILE_ROWS}").alias("file_id")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-        F.min("o_orderdate").alias("min_date"),
-        F.max("o_orderdate").alias("max_date"),
-    )
+    manifest = file_stats_manifest(o, _FILE_ROWS)
     return manifest.select(
         "file_id",
         "n_rows",

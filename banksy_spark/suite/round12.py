@@ -30,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from banksy_spark.streaming.core import file_stats_manifest
 from banksy_spark.suite.registry import T, query
+from banksy_spark.suite.round11 import _FILE_ROWS, _MANIFEST_DUCK
 
 # --- Point-in-polygon (crossing number over a literal polygon set) ---------
 
@@ -133,8 +135,6 @@ def f_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Manifest pruning: per-query files-read / rows-scanned from stats ------
 
-_FILE_ROWS = 2048  # same synthetic file grain as o_file_skipping_stats
-
 # (query_id, key_lo, key_hi, date_lo, date_hi) — None = unbounded dim.
 # A file is skipped for a query iff ANY bounded dimension is disjoint
 # from the file's [min, max] stats range.
@@ -166,13 +166,7 @@ def _prune_oracle() -> str:
         for qid, klo, khi, dlo, dhi in _PRUNE_QUERIES
     )
     return f"""
-    WITH manifest AS (
-      SELECT o_orderkey // {_FILE_ROWS} AS file_id,
-             CAST(COUNT(*) AS BIGINT) AS n_rows,
-             MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
-             MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
-      FROM orders GROUP BY 1
-    ), per_q AS (
+    WITH {_MANIFEST_DUCK}, per_q AS (
       {arms}
     )
     SELECT query_id,
@@ -214,15 +208,7 @@ def _prune_oracle() -> str:
 )
 def o_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    manifest = o.groupBy(
-        F.expr(f"o_orderkey DIV {_FILE_ROWS}").alias("file_id")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-        F.min("o_orderdate").alias("min_date"),
-        F.max("o_orderdate").alias("max_date"),
-    )
+    manifest = file_stats_manifest(o, _FILE_ROWS)
     stack_args = ", ".join(
         f"'{qid}', {_skip_sql(klo, khi, dlo, dhi)}"
         for qid, klo, khi, dlo, dhi in _PRUNE_QUERIES
@@ -425,6 +411,21 @@ _PG_POLY_SQL = """
 """
 
 
+def _nation_rhombi(
+    spark: SparkSession, sf_dir: str, prefix: str = ""
+) -> DataFrame:
+    """Spark form of _PG_POLY_SQL (DIV is Spark's integer division, //
+    DuckDB's — the only dialect split). A ``prefix`` names the columns
+    {prefix}_id, {prefix}cx, {prefix}cy, {prefix}dx, {prefix}dy."""
+    return T(spark, sf_dir, "nation").selectExpr(
+        f"n_nationkey AS {prefix + '_id' if prefix else 'poly_id'}",
+        f"CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS {prefix}cx",
+        f"CAST(10.5 AS DOUBLE) + (n_nationkey DIV 5) * 18 AS {prefix}cy",
+        f"CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS {prefix}dx",
+        f"CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS {prefix}dy",
+    )
+
+
 
 @query(
     "j_polygon_grid_join",
@@ -488,13 +489,7 @@ _PG_POLY_SQL = """
     "engines.",
 )
 def j_polygon_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    polys = T(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS poly_id",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS cx",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey DIV 5) * 18 AS cy",
-        "CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS dx",
-        "CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS dy",
-    )
+    polys = _nation_rhombi(spark, sf_dir)
     edges = polys.selectExpr(
         "poly_id",
         "stack(4, cx + dx, cy, cx, cy + dy,"

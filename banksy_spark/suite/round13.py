@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, query
+from banksy_spark.suite.round12 import _PG_POLY_SQL, _nation_rhombi
 
 # ---------------------------------------------------------------------------
 # Shared experimentation snippets. Identical text in both engines; the
@@ -470,32 +471,37 @@ _TRAJ_SEGS = f"""
         AND ABS(sy2 - sy1) <= CAST({_TRAJ_MAX_STEP!r} AS DOUBLE)
 """
 
-# Fence polygons: the round-12 nation-derived rhombi (integer-exact
-# x.5 vertices, no horizontal edges) — oracle text below; the Spark
-# side repeats it with DIV for integer division (the only dialect
-# split, same as round12's _PG_POLY_SQL).
-_TRAJ_POLY_ORACLE = """
-      SELECT n_nationkey AS poly_id,
-             CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS cx,
-             CAST(10.5 AS DOUBLE) + (n_nationkey // 5) * 18 AS cy,
-             CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS dx,
-             CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS dy
-      FROM nation
+
+# The 4 numbered edges (edge_id, x1, y1, x2, y2) of each rhombus in
+# ``polys`` (poly_id, cx, cy, dx, dy), CCW from the +x vertex.
+_EDGES_DUCK = """
+      SELECT poly_id, 0 AS edge_id, cx + dx AS x1, cy AS y1,
+             cx AS x2, cy + dy AS y2 FROM polys
+      UNION ALL SELECT poly_id, 1, cx, cy + dy, cx - dx, cy FROM polys
+      UNION ALL SELECT poly_id, 2, cx - dx, cy, cx, cy - dy FROM polys
+      UNION ALL SELECT poly_id, 3, cx, cy - dy, cx + dx, cy FROM polys
 """
+
+
+def _rhombus_edges(polys: DataFrame) -> DataFrame:
+    """Spark form of _EDGES_DUCK: one literal-arity stack, no union."""
+    return polys.selectExpr(
+        "poly_id",
+        "stack(4,"
+        " 0, cx + dx, cy, cx, cy + dy,"
+        " 1, cx, cy + dy, cx - dx, cy,"
+        " 2, cx - dx, cy, cx, cy - dy,"
+        " 3, cx, cy - dy, cx + dx, cy"
+        ") AS (edge_id, x1, y1, x2, y2)",
+    )
 
 
 @query(
     "j_trajectory_fence_crossing",
     oracle=f"""
     WITH segs AS ({_TRAJ_SEGS.replace("__EVENTS__", "events")}),
-    polys AS ({_TRAJ_POLY_ORACLE}),
-    edges AS (
-      SELECT poly_id, 0 AS edge_id, cx + dx AS x1, cy AS y1,
-             cx AS x2, cy + dy AS y2 FROM polys
-      UNION ALL SELECT poly_id, 1, cx, cy + dy, cx - dx, cy FROM polys
-      UNION ALL SELECT poly_id, 2, cx - dx, cy, cx, cy - dy FROM polys
-      UNION ALL SELECT poly_id, 3, cx, cy - dy, cx + dx, cy FROM polys
-    ),
+    polys AS ({_PG_POLY_SQL}),
+    edges AS ({_EDGES_DUCK}),
     ecover AS (
       SELECT e.*, ix.i AS ix, iy.i AS iy
       FROM edges e,
@@ -554,22 +560,8 @@ def j_trajectory_fence_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = spark.sql(_TRAJ_SEGS.replace("__EVENTS__", "{e}"), e=e)
     # same rhombus spec as the oracle's polys CTE (// is DuckDB's
     # integer division, DIV is Spark's — the only dialect split)
-    polys = T(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS poly_id",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS cx",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey DIV 5) * 18 AS cy",
-        "CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS dx",
-        "CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS dy",
-    )
-    edges = polys.selectExpr(
-        "poly_id",
-        "stack(4,"
-        " 0, cx + dx, cy, cx, cy + dy,"
-        " 1, cx, cy + dy, cx - dx, cy,"
-        " 2, cx - dx, cy, cx, cy - dy,"
-        " 3, cx, cy - dy, cx + dx, cy"
-        ") AS (edge_id, x1, y1, x2, y2)",
-    )
+    polys = _nation_rhombi(spark, sf_dir)
+    edges = _rhombus_edges(polys)
 
     def cover(df: DataFrame, xa: str, xb: str, ya: str, yb: str) -> DataFrame:
         return df.select(
@@ -913,13 +905,7 @@ _POV_RELATION = """
     "codegen — never catalog x catalog.",
 )
 def j_polygon_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apolys = T(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS a_id",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS acx",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey DIV 5) * 18 AS acy",
-        "CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS adx",
-        "CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS ady",
-    )
+    apolys = _nation_rhombi(spark, sf_dir, prefix="a")
     bpolys = T(spark, sf_dir, "supplier").selectExpr(*_B_POLY_SPARK)
 
     def cover(df: DataFrame, cx: str, cy: str, dx: str, dy: str) -> DataFrame:

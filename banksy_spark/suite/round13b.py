@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from banksy_spark.suite.registry import T, query
+from banksy_spark.suite.round12 import _PG_POLY_SQL, _nation_rhombi
+from banksy_spark.suite.round13 import _EDGES_DUCK, _rhombus_edges
 
 # --- graph_label_propagation -------------------------------------------------
 
@@ -178,32 +180,12 @@ _NE_PTS = """
       FROM __EVENTS__
 """
 
-# Fence polygons: the round-12/13 nation-derived rhombi (oracle text;
-# the Spark side repeats it with DIV — the only dialect split).
-_NE_POLY_ORACLE = """
-      SELECT n_nationkey AS poly_id,
-             CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS cx,
-             CAST(10.5 AS DOUBLE) + (n_nationkey // 5) * 18 AS cy,
-             CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS dx,
-             CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS dy
-      FROM nation
-"""
-
-_NE_EDGES = """
-      SELECT poly_id, 0 AS edge_id, cx + dx AS x1, cy AS y1,
-             cx AS x2, cy + dy AS y2 FROM polys
-      UNION ALL SELECT poly_id, 1, cx, cy + dy, cx - dx, cy FROM polys
-      UNION ALL SELECT poly_id, 2, cx - dx, cy, cx, cy - dy FROM polys
-      UNION ALL SELECT poly_id, 3, cx, cy - dy, cx + dx, cy FROM polys
-"""
-
-
 @query(
     "j_nearest_edge_join",
     oracle=f"""
     WITH pts AS ({_NE_PTS.replace("__EVENTS__", "events")}),
-    polys AS ({_NE_POLY_ORACLE}),
-    edges AS ({_NE_EDGES}),
+    polys AS ({_PG_POLY_SQL}),
+    edges AS ({_EDGES_DUCK}),
     ecover AS (
       SELECT e.*, ix.i AS ix, iy.i AS iy
       FROM edges e,
@@ -265,22 +247,8 @@ def j_nearest_edge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(FLOOR(px / {_NE_CELL}) AS BIGINT) AS ix",
         f"CAST(FLOOR(py / {_NE_CELL}) AS BIGINT) AS iy",
     )
-    polys = T(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS poly_id",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey % 5) * 40 AS cx",
-        "CAST(10.5 AS DOUBLE) + (n_nationkey DIV 5) * 18 AS cy",
-        "CAST(3.5 AS DOUBLE) + (n_nationkey % 7) AS dx",
-        "CAST(2.5 AS DOUBLE) + (n_nationkey % 5) AS dy",
-    )
-    edges = polys.selectExpr(
-        "poly_id",
-        "stack(4,"
-        " 0, cx + dx, cy, cx, cy + dy,"
-        " 1, cx, cy + dy, cx - dx, cy,"
-        " 2, cx - dx, cy, cx, cy - dy,"
-        " 3, cx, cy - dy, cx + dx, cy"
-        ") AS (edge_id, x1, y1, x2, y2)",
-    )
+    polys = _nation_rhombi(spark, sf_dir)
+    edges = _rhombus_edges(polys)
     ecover = edges.select(
         "*",
         F.explode(

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from banksy_spark.streaming.core import _KDE_WQ, kde_cell_density
 from banksy_spark.suite.registry import T, query
 from banksy_spark.suite.round13 import _CENTS
 
@@ -577,20 +578,6 @@ def ml_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KDE_CELL = 8.0  # grid pitch; ALSO the bandwidth h, which makes the
                  # one-ring scatter EXACT (see note)
 
-# Epanechnikov kernel on squared distance, quantized to an integer
-# ppm grid BEFORE summation: FLOOR of a per-row IEEE double is
-# deterministic in both engines, and the aggregate is then an
-# order-independent BIGINT sum (a raw double SUM would be
-# addition-order-dependent and could diverge between engines).
-_KDE_WQ = (
-    "CAST(FLOOR(GREATEST(CAST(0 AS DOUBLE),"
-    " 1 - ((px - (CAST(jx AS DOUBLE) + 0.5) * 8.0)"
-    " * (px - (CAST(jx AS DOUBLE) + 0.5) * 8.0)"
-    " + (py - (CAST(jy AS DOUBLE) + 0.5) * 8.0)"
-    " * (py - (CAST(jy AS DOUBLE) + 0.5) * 8.0)) / 64.0)"
-    " * 1000000) AS BIGINT)"
-)
-
 _KDE_PTS = """
       SELECT value AS px, CAST(user_id % 100 AS DOUBLE) AS py
       FROM __EVENTS__
@@ -643,38 +630,7 @@ _KDE_PTS = """
 def a_kde_epanechnikov(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "events")
     pts = spark.sql(_KDE_PTS.replace("__EVENTS__", "{e}"), e=e)
-    scat = (
-        pts.select(
-            F.floor(F.col("px") / 8.0).cast("bigint").alias("ix"),
-            F.floor(F.col("py") / 8.0).cast("bigint").alias("iy"),
-            "px",
-            "py",
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx_i")
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy_i")
-        )
-        .select(
-            "ix",
-            "iy",
-            (F.col("ix") + F.col("dx_i")).alias("jx"),
-            (F.col("iy") + F.col("dy_i")).alias("jy"),
-            "px",
-            "py",
-        )
-    )
-    dens = scat.groupBy("jx", "jy").agg(
-        F.sum(F.expr(_KDE_WQ)).cast("bigint").alias("density_ppm"),
-        F.sum(
-            F.when(
-                (F.col("jx") == F.col("ix")) & (F.col("jy") == F.col("iy")), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_pts"),
-    )
+    dens = kde_cell_density(pts)
     return dens.filter(F.col("n_pts") > 0).select(
         F.col("jx").alias("ix"), F.col("jy").alias("iy"), "n_pts", "density_ppm"
     )

@@ -970,9 +970,8 @@ def a_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Markov transition matrix over event sequences -------------------------
 
 
-@query(
-    "stream_markov_transitions",
-    oracle="""
+# also the oracle of the fold-form twin, round10.stream_markov_stateful
+_MARKOV_DUCK = """
     WITH seq AS (
       SELECT event_type AS from_type,
              LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -986,7 +985,12 @@ def a_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT from_type, to_type, n,
            CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
     FROM cnt
-    """,
+    """
+
+
+@query(
+    "stream_markov_transitions",
+    oracle=_MARKOV_DUCK,
     note="First-order Markov transition matrix over per-user event sequences: "
     "lead() pairs each event with its successor (tie-broken total order), pair "
     "counts aggregate, and probabilities row-normalize by a window over the "
@@ -1186,20 +1190,48 @@ def llm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _flag_ranked(li: DataFrame, group_count: str | None = None) -> DataFrame:
+    """(flag, x = l_extendedprice, l_orderkey, l_linenumber) with the
+    row number ``rk`` of x within its l_returnflag over the tie-broken
+    order (x, l_orderkey, l_linenumber), plus the group size when
+    ``group_count`` names it. Only 3 flags over all of lineitem:
+    grouped_ordinals keeps every sort partition bucket-bounded instead
+    of one-task-per-flag."""
+    from banksy_spark.operators.ordinals import grouped_ordinals
+
+    return grouped_ordinals(
+        li.select(
+            F.col("l_returnflag").alias("flag"),
+            F.col("l_extendedprice").alias("x"),
+            "l_orderkey",
+            "l_linenumber",
+        ),
+        ["flag"],
+        ["x", "l_orderkey", "l_linenumber"],
+        row_number="rk",
+        group_count=group_count,
+    )
+
+
+# l_extendedprice ranked within l_returnflag over the tie-broken total
+# order, with the group size — the DuckDB form of _flag_ranked
+_FLAG_RANK_DUCK = """ranked AS (
+      SELECT l_returnflag AS flag, l_extendedprice AS x,
+             ROW_NUMBER() OVER (PARTITION BY l_returnflag
+                 ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rk,
+             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
+      FROM lineitem
+    )"""
+
+
 # --- Feature engineering: exact quantile binning ---------------------------
 
 # Nearest-rank (ceil(p*n)) quartile bounds per l_returnflag group, then
 # bin assignment by broadcast join — the QuantileDiscretizer shape with
 # exact, reproducible bounds instead of approxQuantile's epsilon.
 
-_QB_DUCK_BOUNDS = """
-    ranked AS (
-      SELECT l_returnflag AS flag, l_extendedprice AS x,
-             ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                 ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rk,
-             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-      FROM lineitem
-    ),
+_QB_DUCK_BOUNDS = f"""
+    {_FLAG_RANK_DUCK},
     bounds AS (
       SELECT flag,
              MIN(CASE WHEN rk = (n + 3) // 4 THEN x END) AS q1,
@@ -1231,23 +1263,8 @@ _QB_DUCK_BOUNDS = """
     "side.",
 )
 def ml_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
     li = T(spark, sf_dir, "lineitem")
-    # 3 flags over all of lineitem: grouped_ordinals keeps every sort
-    # partition bucket-bounded instead of one-task-per-flag.
-    ranked = grouped_ordinals(
-        li.select(
-            F.col("l_returnflag").alias("flag"),
-            F.col("l_extendedprice").alias("x"),
-            "l_orderkey",
-            "l_linenumber",
-        ),
-        ["flag"],
-        ["x", "l_orderkey", "l_linenumber"],
-        row_number="rk",
-        group_count="n",
-    )
+    ranked = _flag_ranked(li, group_count="n")
     bounds = ranked.groupBy("flag").agg(
         F.min(F.when(F.col("rk") == F.expr("(n + 3) DIV 4"), F.col("x"))).alias("q1"),
         F.min(F.when(F.col("rk") == F.expr("(n + 1) DIV 2"), F.col("x"))).alias("q2"),
@@ -1316,14 +1333,8 @@ def ml_zscore_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_winsorize",
-    oracle="""
-    WITH ranked AS (
-      SELECT l_returnflag AS flag, l_extendedprice AS x,
-             ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                 ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rk,
-             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-      FROM lineitem
-    ),
+    oracle=f"""
+    WITH {_FLAG_RANK_DUCK},
     bounds AS (
       SELECT flag,
              MIN(CASE WHEN rk = (n + 19) // 20 THEN x END) AS lo,
@@ -1347,22 +1358,8 @@ def ml_zscore_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partition except the 2-number bounds row.",
 )
 def ml_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
     li = T(spark, sf_dir, "lineitem")
-    # few-huge-groups rank: bucket-bounded, not one-task-per-flag
-    ranked = grouped_ordinals(
-        li.select(
-            F.col("l_returnflag").alias("flag"),
-            F.col("l_extendedprice").alias("x"),
-            "l_orderkey",
-            "l_linenumber",
-        ),
-        ["flag"],
-        ["x", "l_orderkey", "l_linenumber"],
-        row_number="rk",
-        group_count="n",
-    )
+    ranked = _flag_ranked(li, group_count="n")
     bounds = ranked.groupBy("flag").agg(
         F.min(F.when(F.col("rk") == F.expr("(n + 19) DIV 20"), F.col("x"))).alias("lo"),
         F.min(F.when(F.col("rk") == F.expr("(19 * n + 19) DIV 20"), F.col("x"))).alias("hi"),
@@ -1787,9 +1784,9 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Capped running sum (clamped recurrence — windows can't, folds can) ----
 
 
-@query(
-    "w_capped_running_sum",
-    oracle="""
+# also the oracle of the fold-form twin,
+# round10.stream_capped_balance_stateful
+_CAPPED_DUCK = """
     SELECT event_id, user_id,
            list_reduce(list_prepend(CAST(0 AS DOUBLE), l),
                (acc, x) -> GREATEST(CAST(0 AS DOUBLE),
@@ -1801,7 +1798,12 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS l
       FROM events
     )
-    """,
+    """
+
+
+@query(
+    "w_capped_running_sum",
+    oracle=_CAPPED_DUCK,
     note="Capped running sum (inventory / token-bucket balance): acc' = "
     "clamp(acc + delta, 0, 100). The clamp makes the recurrence NON-LINEAR — "
     "no window frame or prefix-sum trick expresses it (unlike plain cumsum), "
@@ -1915,21 +1917,8 @@ def a_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exchange.",
 )
 def a_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
     li = T(spark, sf_dir, "lineitem")
-    # few-huge-groups rank: bucket-bounded, not one-task-per-flag
-    ranked = grouped_ordinals(
-        li.select(
-            F.col("l_returnflag").alias("flag"),
-            F.col("l_extendedprice").alias("x"),
-            "l_orderkey",
-            "l_linenumber",
-        ),
-        ["flag"],
-        ["x", "l_orderkey", "l_linenumber"],
-        row_number="rk",
-    )
+    ranked = _flag_ranked(li)
     dec = F.col("x").cast("decimal(18,2)")
     agg = ranked.groupBy("flag").agg(
         F.count("*").alias("n"),
@@ -1947,14 +1936,8 @@ def a_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "a_interpolated_percentiles",
-    oracle="""
-    WITH ranked AS (
-      SELECT l_returnflag AS flag, l_extendedprice AS x,
-             ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                 ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rk,
-             COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-      FROM lineitem
-    )
+    oracle=f"""
+    WITH {_FLAG_RANK_DUCK}
     SELECT flag,
            lo50 + (0.5e0 * (n_ - 1) - floor(0.5e0 * (n_ - 1))) * (hi50 - lo50)
              AS p50_cont,
@@ -1981,21 +1964,7 @@ def a_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a_interpolated_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
-    from banksy_spark.operators.ordinals import grouped_ordinals
-
-    # few-huge-groups rank: bucket-bounded, not one-task-per-flag
-    ranked = grouped_ordinals(
-        li.select(
-            F.col("l_returnflag").alias("flag"),
-            F.col("l_extendedprice").alias("x"),
-            "l_orderkey",
-            "l_linenumber",
-        ),
-        ["flag"],
-        ["x", "l_orderkey", "l_linenumber"],
-        row_number="rk",
-        group_count="n",
-    )
+    ranked = _flag_ranked(li, group_count="n")
 
     # h = p(n-1) depends only on n, constant within the group
     agg = ranked.groupBy("flag").agg(

@@ -98,11 +98,8 @@ def j_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CDC_MOD = 16  # boundary when token-hash % 16 == 0 → ~16-token chunks
 
-
-@query(
-    "llm_cdc_chunks",
-    oracle=f"""
-    WITH tk AS (
+_CDC_CTES = f"""
+    tk AS (
       SELECT doc_id,
              unnest(string_split(text, ' ')) AS tok,
              unnest(generate_series(1, len(string_split(text, ' ')))) AS pos
@@ -110,7 +107,7 @@ _CDC_MOD = 16  # boundary when token-hash % 16 == 0 → ~16-token chunks
     ),
     fl AS (
       SELECT doc_id, tok, pos,
-             CASE WHEN ({_POLY_DUCK.format(s="tok")}) % {_CDC_MOD} = 0
+             CASE WHEN ({{poly_tok}}) % {_CDC_MOD} = 0
                   THEN 1 ELSE 0 END AS is_b
       FROM tk
     ),
@@ -121,15 +118,31 @@ _CDC_MOD = 16  # boundary when token-hash % 16 == 0 → ~16-token chunks
                       0) AS chunk_id
       FROM fl
     ),
-    agg AS (
+    chunk_agg AS (
       SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
              CAST(COUNT(*) AS BIGINT) AS n_tokens,
              string_agg(tok, ' ' ORDER BY pos) AS chunk_text
       FROM ch GROUP BY doc_id, chunk_id
+    ),
+    hashes AS (
+      SELECT doc_id, chunk_id, n_tokens, chunk_text,
+             ({{poly_chunk}}) AS chunk_hash
+      FROM chunk_agg
+    )"""
+
+
+def _cdc_ctes() -> str:
+    return _CDC_CTES.format(
+        poly_tok=_POLY_DUCK.format(s="tok"),
+        poly_chunk=_POLY_DUCK.format(s="chunk_text"),
     )
-    SELECT doc_id, chunk_id, n_tokens, chunk_text,
-           ({_POLY_DUCK.format(s="chunk_text")}) AS chunk_hash
-    FROM agg
+
+
+@query(
+    "llm_cdc_chunks",
+    oracle=f"""
+    WITH {_cdc_ctes()}
+    SELECT doc_id, chunk_id, n_tokens, chunk_text, chunk_hash FROM hashes
     """,
     note="Content-defined chunking: a token ends a chunk when its shared "
     f"polynomial hash ≡ 0 (mod {_CDC_MOD}) — boundaries depend only on "
@@ -299,45 +312,6 @@ def ml_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CDC_MAX_DF = 10  # chunk hashes in more docs than this are boilerplate
 _CDC_JACCARD = 0.5
 
-_CDC_CTES = f"""
-    tk AS (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             unnest(generate_series(1, len(string_split(text, ' ')))) AS pos
-      FROM documents
-    ),
-    fl AS (
-      SELECT doc_id, tok, pos,
-             CASE WHEN ({{poly_tok}}) % {_CDC_MOD} = 0
-                  THEN 1 ELSE 0 END AS is_b
-      FROM tk
-    ),
-    ch AS (
-      SELECT doc_id, tok, pos,
-             COALESCE(SUM(is_b) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0) AS chunk_id
-      FROM fl
-    ),
-    chunk_agg AS (
-      SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-             CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-      FROM ch GROUP BY doc_id, chunk_id
-    ),
-    hashes AS (
-      SELECT doc_id, chunk_id, n_tokens, chunk_text,
-             ({{poly_chunk}}) AS chunk_hash
-      FROM chunk_agg
-    )"""
-
-
-def _cdc_ctes() -> str:
-    return _CDC_CTES.format(
-        poly_tok=_POLY_DUCK.format(s="tok"),
-        poly_chunk=_POLY_DUCK.format(s="chunk_text"),
-    )
-
 
 @query(
     "llm_dedup_cdc",
@@ -444,17 +418,16 @@ def cusum_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     return daily, stats
 
 
-
-@query(
-    "w_cusum_changepoint",
-    oracle="""
-    WITH daily AS (
+# the priority-daily revenue-cents directory (cusum_parts' daily frame)
+_DAILY_DUCK = """
       SELECT o_orderpriority AS pri, o_orderdate AS day,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
                AS cents
       FROM orders GROUP BY 1, 2
-    ),
-    stats AS (
+"""
+
+# its per-priority mean and population sigma (cusum_parts' stats frame)
+_DAILY_STATS_DUCK = """stats AS (
       SELECT pri,
              CAST(CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
                / COUNT(*) AS mu,
@@ -468,7 +441,14 @@ def cusum_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
                          AS DOUBLE) / COUNT(*))
              ) AS sigma
       FROM daily GROUP BY pri
-    ),
+    )"""
+
+
+@query(
+    "w_cusum_changepoint",
+    oracle=f"""
+    WITH daily AS ({_DAILY_DUCK}),
+    {_DAILY_STATS_DUCK},
     seq AS (
       SELECT d.pri, d.day, d.cents, s.mu, s.sigma,
              list(CAST(d.cents AS DOUBLE)) OVER (

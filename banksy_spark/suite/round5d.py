@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, query
-from banksy_spark.suite.round5 import cusum_parts
+from banksy_spark.suite.round5 import _DAILY_DUCK, cusum_parts
 
 # --- linear interpolation of sparse values ---------------------------------
 
@@ -181,13 +181,8 @@ def w_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "w_holt_linear",
-    oracle="""
-    WITH RECURSIVE daily AS (
-      SELECT o_orderpriority AS pri, o_orderdate AS day,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH RECURSIVE daily AS ({_DAILY_DUCK}),
     idx AS (
       SELECT pri, day, cents, CAST(cents AS DOUBLE) AS x,
              ROW_NUMBER() OVER (PARTITION BY pri ORDER BY day) AS t

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, query
-from banksy_spark.suite.round5 import cusum_parts
+from banksy_spark.suite.round5 import _DAILY_DUCK, _DAILY_STATS_DUCK, cusum_parts
 
 # --- exact phrase search via positional index ------------------------------
 
@@ -137,28 +137,9 @@ def j_bom_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "w_control_chart",
-    oracle="""
-    WITH daily AS (
-      SELECT o_orderpriority AS pri, o_orderdate AS day,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1, 2
-    ),
-    stats AS (
-      SELECT pri,
-             CAST(CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
-               / COUNT(*) AS mu,
-             sqrt(
-               CAST(CAST(SUM(CAST(cents AS DECIMAL(38,0))
-                              * CAST(cents AS DECIMAL(38,0))) AS VARCHAR)
-                    AS DOUBLE) / COUNT(*)
-               - (CAST(CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS VARCHAR)
-                       AS DOUBLE) / COUNT(*))
-                 * (CAST(CAST(SUM(CAST(cents AS DECIMAL(38,0))) AS VARCHAR)
-                         AS DOUBLE) / COUNT(*))
-             ) AS sigma
-      FROM daily GROUP BY pri
-    )
+    oracle=f"""
+    WITH daily AS ({_DAILY_DUCK}),
+    {_DAILY_STATS_DUCK}
     SELECT pri, day, cents,
            abs(CAST(cents AS DOUBLE) - mu) > 3e0 * sigma AS beyond_3s,
            SUM(CASE WHEN CAST(cents AS DOUBLE) > mu THEN 1 ELSE 0 END)

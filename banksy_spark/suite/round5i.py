@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, query
+from banksy_spark.suite.round5 import _DAILY_DUCK
 
 # --- exact ROC-AUC ---------------------------------------------------------
 
@@ -164,13 +165,8 @@ def ml_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "a_changepoint_binseg",
-    oracle="""
-    WITH daily AS (
-      SELECT o_orderpriority AS pri, o_orderdate AS day,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH daily AS ({_DAILY_DUCK}),
     pre AS (
       SELECT pri, day, cents,
              ROW_NUMBER() OVER w AS k,

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from banksy_spark.suite.llm import (
+    _QUALITY_COUNTS_DUCK,
+    _QUALITY_SCORE_DUCK,
+    _quality,
+)
 from banksy_spark.suite.registry import T, query
 
 _CAP = 60          # per-source quota (llm_domain_cap's rule)
@@ -37,15 +42,10 @@ _QUALITY_MIN = 0.5  # composite-quality floor (llm_quality_score's metric)
     ),
     scored AS (
       SELECT doc_id, text, lang,
-             0.4 * LEAST(1.0, n_tok / 100.0)
-               + 0.3 * (1.0 - n_stop / CAST(n_tok AS DOUBLE))
-               + 0.3 * (n_distinct / CAST(n_tok AS DOUBLE)) AS quality
+             {_QUALITY_SCORE_DUCK} AS quality
       FROM (
         SELECT doc_id, text, lang,
-               len(string_split(text, ' ')) AS n_tok,
-               len(list_distinct(string_split(text, ' '))) AS n_distinct,
-               len(list_filter(string_split(text, ' '),
-                               t -> t IN ('a', 'the'))) AS n_stop
+               {_QUALITY_COUNTS_DUCK}
         FROM capped
       )
     ),
@@ -97,15 +97,7 @@ def llm_e2e_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _CAP)
         .drop("rk", "n_chars")
     )
-    toks = F.split("text", " ")
-    n_tok = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    n_stop = F.size(F.expr("filter(split(text, ' '), t -> t IN ('a', 'the'))"))
-    quality = (
-        0.4 * F.least(F.lit(1.0), n_tok / 100.0)
-        + 0.3 * (1.0 - n_stop / n_tok.cast("double"))
-        + 0.3 * (n_distinct / n_tok.cast("double"))
-    )
+    quality = _quality()
     kept = capped.withColumn("quality", quality).filter(
         F.col("quality") >= _QUALITY_MIN
     )

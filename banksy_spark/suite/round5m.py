@@ -14,21 +14,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from banksy_spark.suite.llm import (
+    _QUALITY_COUNTS_DUCK,
+    _QUALITY_SCORE_DUCK,
+    _quality,
+)
 from banksy_spark.suite.registry import T, query
 
 _K = 5
 
-_QUALITY_DUCK = """
+_QUALITY_DUCK = f"""
       SELECT doc_id, lang,
-             0.4 * LEAST(1.0, n_tok / 100.0)
-               + 0.3 * (1.0 - n_stop / CAST(n_tok AS DOUBLE))
-               + 0.3 * (n_distinct / CAST(n_tok AS DOUBLE)) AS quality
+             {_QUALITY_SCORE_DUCK} AS quality
       FROM (
         SELECT doc_id, lang,
-               len(string_split(text, ' ')) AS n_tok,
-               len(list_distinct(string_split(text, ' '))) AS n_distinct,
-               len(list_filter(string_split(text, ' '),
-                               t -> t IN ('a', 'the'))) AS n_stop
+               {_QUALITY_COUNTS_DUCK}
         FROM documents
       )
 """
@@ -66,15 +66,7 @@ _QUALITY_DUCK = """
 )
 def llm_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n_tok = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    n_stop = F.size(F.expr("filter(split(text, ' '), t -> t IN ('a', 'the'))"))
-    quality = (
-        0.4 * F.least(F.lit(1.0), n_tok / 100.0)
-        + 0.3 * (1.0 - n_stop / n_tok.cast("double"))
-        + 0.3 * (n_distinct / n_tok.cast("double"))
-    )
+    quality = _quality()
     scored = d.select("doc_id", "lang", quality.alias("quality"))
     w_top = Window.partitionBy("lang").orderBy(F.desc("quality"), F.col("doc_id"))
     w_bot = Window.partitionBy("lang").orderBy(F.asc("quality"), F.col("doc_id"))

@@ -14,13 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from banksy_spark.suite.registry import T, query
-
-_DAILY_DUCK = """
-      SELECT o_orderpriority AS pri, o_orderdate AS day,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-               AS cents
-      FROM orders GROUP BY 1, 2
-"""
+from banksy_spark.suite.round5 import _DAILY_DUCK
 
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,9 +91,8 @@ def a_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BB_WIN = 20  # trailing frame
 
 
-@query(
-    "w_bollinger_bands",
-    oracle=f"""
+# also the oracle of the fold-form twin, round9.stream_bollinger_stateful
+_BOLLINGER_DUCK = f"""
     WITH daily AS ({_DAILY_DUCK})
     SELECT pri, day, cents,
            CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / k AS mid,
@@ -123,7 +116,12 @@ _BB_WIN = 20  # trailing frame
       WINDOW wk AS (PARTITION BY pri ORDER BY day
                     ROWS BETWEEN {_BB_WIN - 1} PRECEDING AND CURRENT ROW)
     )
-    """,
+    """
+
+
+@query(
+    "w_bollinger_bands",
+    oracle=_BOLLINGER_DUCK,
     note=f"Bollinger bands over the daily revenue series: trailing-"
     f"{_BB_WIN} mean ± 2σ with breakout flags — the rolling-window "
     "complement of w_control_chart's global-σ limits. The rolling "

@@ -384,22 +384,28 @@ def ml_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # symmetric Jaccard under-scores. tau = 4/5, integer-exact comparison.
 
 
-@query(
-    "llm_dedup_containment",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
+_CONT_SH3 = """sh AS (
       SELECT DISTINCT doc_id, md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS h
       FROM w, unnest(generate_series(1, len(w) - 2)) AS t(i)
-    ),
-    sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    mk AS (SELECT doc_id, MIN(h) AS mk FROM sh GROUP BY doc_id),
+    )"""
+
+_CONT_MIN_CAND = """mk AS (SELECT doc_id, MIN(h) AS mk FROM sh GROUP BY doc_id),
     cand AS (
       SELECT a.doc_id AS a_id, b.doc_id AS b_id
       FROM mk a JOIN mk b ON a.mk = b.mk AND a.doc_id < b.doc_id
+    )"""
+
+
+def _containment_oracle(sh: str, cand: str) -> str:
+    """DuckDB text of the containment pipeline around one query's
+    shingle CTE ``sh`` and candidate CTEs (``mk``, ``cand``)."""
+    return f"""
+    WITH w AS (
+      SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ),
+    {sh},
+    sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+    {cand},
     inter AS (
       SELECT c.a_id, c.b_id, COUNT(*) AS inter
       FROM cand c
@@ -415,7 +421,85 @@ def ml_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sz za ON za.doc_id = i.a_id
     JOIN sz zb ON zb.doc_id = i.b_id
     WHERE 5 * i.inter >= 4 * za.sz OR 5 * i.inter >= 4 * zb.sz
-    """,
+    """
+
+
+def _containment_pairs(
+    spark: SparkSession, sf_dir: str, n: int, k: int
+) -> DataFrame:
+    """Containment near-dup pairs over word ``n``-shingles: a persisted
+    md5 shingle table, each doc's ``k`` smallest hashes as candidate
+    keys, exact intersection over candidate pairs only, and the
+    integer tau=4/5 gate."""
+    d = fan_out(
+        T(spark, sf_dir, "documents").select(
+            "doc_id", F.split("text", " ").alias("w")
+        )
+    )
+    gram = ", ' ', ".join(["x"] + [f"w[j + {i}]" for i in range(1, n)])
+    sh = (
+        d.select(
+            "doc_id",
+            F.posexplode(F.expr(
+                f"transform(slice(w, 1, greatest(size(w) - {n - 1}, 0)), "
+                f"(x, j) -> concat({gram}))"
+            )).alias("_p", "s"),
+        )
+        .select("doc_id", F.md5(F.col("s").cast("binary")).alias("h"))
+        .distinct()
+        # persist: the shingle table feeds FOUR consumers (sz, mk, and
+        # both verify sides) — unpersisted, the explode+md5+distinct
+        # pipeline executed four times per run (r13 opt; same
+        # write-sigs-to-a-table posture as llm._lsh_sigs at 100 TB).
+        .persist()
+    )
+    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    if k == 1:
+        key, mk = "mk", sh.groupBy("doc_id").agg(F.min("h").alias("mk"))
+    else:
+        wk = Window.partitionBy("doc_id").orderBy("h")
+        key, mk = "h", (
+            sh.withColumn("rk", F.row_number().over(wk))
+            .filter(F.col("rk") <= k)
+            .select("doc_id", "h")
+        )
+    a, b = mk.alias("a"), mk.alias("b")
+    cand = a.join(
+        b,
+        (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+    if k > 1:
+        # a pair sharing several of its k keys is verified once
+        cand = cand.distinct()
+    sa = sh.select(F.col("doc_id").alias("a_id"), "h")
+    sb = sh.select(F.col("doc_id").alias("b_id"), "h")
+    inter = (
+        cand.join(sa, "a_id")
+        .join(sb, ["b_id", "h"])
+        .groupBy("a_id", "b_id")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    za = sz.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
+    zb = sz.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
+    out = inter.join(za, "a_id").join(zb, "b_id")
+    keep = (5 * F.col("inter") >= 4 * F.col("sz_a")) | (
+        5 * F.col("inter") >= 4 * F.col("sz_b")
+    )
+    return out.filter(keep).select(
+        "a_id",
+        "b_id",
+        "inter",
+        "sz_a",
+        "sz_b",
+        (F.col("inter").cast("double") / F.col("sz_a")).alias("cont_a_in_b"),
+        (F.col("inter").cast("double") / F.col("sz_b")).alias("cont_b_in_a"),
+    )
+
+
+@query(
+    "llm_dedup_containment",
+    oracle=_containment_oracle(_CONT_SH3, _CONT_MIN_CAND),
     note="Containment near-dup detection (asymmetric): "
     "C(A,B) = |shingles(A) ∩ shingles(B)| / |A| flags a document "
     "CONTAINED in a larger one (boilerplate-wrapped copies, quoted "
@@ -431,70 +515,14 @@ def ml_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(k buckets/doc, same plan shape, recall up, still linear).",
 )
 def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        T(spark, sf_dir, "documents").select(
-            "doc_id", F.split("text", " ").alias("w")
-        )
-    )
-    sh = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.expr(
-                "transform(slice(w, 1, greatest(size(w) - 2, 0)), "
-                "(x, j) -> concat(x, ' ', w[j + 1], ' ', w[j + 2]))"
-            )).alias("_p", "s"),
-        )
-        .select("doc_id", F.md5(F.col("s").cast("binary")).alias("h"))
-        .distinct()
-        # persist: the shingle table feeds FOUR consumers (sz, mk, and
-        # both verify sides) — unpersisted, the explode+md5+distinct
-        # pipeline executed four times per run (r13 opt; same
-        # write-sigs-to-a-table posture as llm._lsh_sigs at 100 TB).
-        .persist()
-    )
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    mk = sh.groupBy("doc_id").agg(F.min("h").alias("mk"))
-    a, b = mk.alias("a"), mk.alias("b")
-    cand = a.join(b, (F.col("a.mk") == F.col("b.mk")) & (F.col("a.doc_id") < F.col("b.doc_id"))).select(
-        F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-    )
-    sa = sh.select(F.col("doc_id").alias("a_id"), "h")
-    sb = sh.select(F.col("doc_id").alias("b_id"), "h")
-    inter = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "h"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    za = sz.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
-    zb = sz.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
-    out = inter.join(za, "a_id").join(zb, "b_id")
-    keep = (5 * F.col("inter") >= 4 * F.col("sz_a")) | (
-        5 * F.col("inter") >= 4 * F.col("sz_b")
-    )
-    return out.filter(keep).select(
-        "a_id",
-        "b_id",
-        "inter",
-        "sz_a",
-        "sz_b",
-        (F.col("inter").cast("double") / F.col("sz_a")).alias("cont_a_in_b"),
-        (F.col("inter").cast("double") / F.col("sz_b")).alias("cont_b_in_a"),
-    )
+    return _containment_pairs(spark, sf_dir, n=3, k=1)
 
 
 @query(
     "llm_dedup_containment_k3",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS h
-      FROM w, unnest(generate_series(1, len(w) - 2)) AS t(i)
-    ),
-    sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    mk AS (
+    oracle=_containment_oracle(
+        _CONT_SH3,
+        """mk AS (
       SELECT doc_id, h FROM (
         SELECT doc_id, h,
                ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY h) AS rk
@@ -504,23 +532,8 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand AS (
       SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
       FROM mk a JOIN mk b ON a.h = b.h AND a.doc_id < b.doc_id
+    )""",
     ),
-    inter AS (
-      SELECT c.a_id, c.b_id, COUNT(*) AS inter
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.a_id
-      JOIN sh sb ON sb.doc_id = c.b_id AND sb.h = sa.h
-      GROUP BY c.a_id, c.b_id
-    )
-    SELECT i.a_id, i.b_id, CAST(i.inter AS BIGINT) AS inter,
-           CAST(za.sz AS BIGINT) AS sz_a, CAST(zb.sz AS BIGINT) AS sz_b,
-           CAST(i.inter AS DOUBLE) / za.sz AS cont_a_in_b,
-           CAST(i.inter AS DOUBLE) / zb.sz AS cont_b_in_a
-    FROM inter i
-    JOIN sz za ON za.doc_id = i.a_id
-    JOIN sz zb ON zb.doc_id = i.b_id
-    WHERE 5 * i.inter >= 4 * za.sz OR 5 * i.inter >= 4 * zb.sz
-    """,
     note="Containment with WIDENED candidates: each document indexes its "
     "k=3 smallest shingle hashes (vs the single min in "
     "llm_dedup_containment), so two docs collide when ANY of their "
@@ -533,63 +546,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "turns (llm_ann_ivf_multiprobe).",
 )
 def llm_dedup_containment_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = fan_out(
-        T(spark, sf_dir, "documents").select(
-            "doc_id", F.split("text", " ").alias("w")
-        )
-    )
-    sh = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.expr(
-                "transform(slice(w, 1, greatest(size(w) - 2, 0)), "
-                "(x, j) -> concat(x, ' ', w[j + 1], ' ', w[j + 2]))"
-            )).alias("_p", "s"),
-        )
-        .select("doc_id", F.md5(F.col("s").cast("binary")).alias("h"))
-        .distinct()
-        # persist: the shingle table feeds FOUR consumers (sz, mk, and
-        # both verify sides) — unpersisted, the explode+md5+distinct
-        # pipeline executed four times per run (r13 opt; same
-        # write-sigs-to-a-table posture as llm._lsh_sigs at 100 TB).
-        .persist()
-    )
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    wk = Window.partitionBy("doc_id").orderBy("h")
-    mk = (
-        sh.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "h")
-    )
-    a, b = mk.alias("a"), mk.alias("b")
-    cand = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("a_id"), "h")
-    sb = sh.select(F.col("doc_id").alias("b_id"), "h")
-    inter = (
-        cand.join(sa, "a_id")
-        .join(sb, ["b_id", "h"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    za = sz.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
-    zb = sz.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
-    out = inter.join(za, "a_id").join(zb, "b_id")
-    keep = (5 * F.col("inter") >= 4 * F.col("sz_a")) | (
-        5 * F.col("inter") >= 4 * F.col("sz_b")
-    )
-    return out.filter(keep).select(
-        "a_id",
-        "b_id",
-        "inter",
-        "sz_a",
-        "sz_b",
-        (F.col("inter").cast("double") / F.col("sz_a")).alias("cont_a_in_b"),
-        (F.col("inter").cast("double") / F.col("sz_b")).alias("cont_b_in_a"),
-    )
+    return _containment_pairs(spark, sf_dir, n=3, k=3)
 
 
 # --- Brier score ------------------------------------------------------------

@@ -31,7 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from banksy_spark.suite.llm import _CENT_DUCK, _DOT_DUCK, _NORM_DUCK
+from banksy_spark.suite.llm import (
+    _BF_RANK_DUCK,
+    _CENT_DUCK,
+    _EN_DUCK,
+    _IVF_RANK_DUCK,
+)
 from banksy_spark.suite.registry import T, fan_out, query
 
 # Cramer's rule for the 3x3 normal equations [[n,s1,s2],[s1,s11,s12],
@@ -269,9 +274,9 @@ _CORR7 = (
 )
 
 
-@query(
-    "w_rolling_corr",
-    oracle=f"""
+# the window-form oracle of w_rolling_corr and its fold-form twin
+# stream_rolling_corr_stateful
+_ROLLING_CORR_DUCK = f"""
     WITH daily AS (
       SELECT p.p_brand AS brand,
              CAST(l.l_shipdate AS DATE) AS day,
@@ -298,7 +303,34 @@ _CORR7 = (
            CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
            {_CORR7} AS corr7
     FROM winmom WHERE rn >= 7
-    """,
+    """
+
+
+def _brand_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The calendar-bounded brand x day directory: exact BIGINT daily
+    quantity (x) and revenue-cents (y) sums for three brands."""
+    li = T(spark, sf_dir, "lineitem").select(
+        "l_partkey", "l_shipdate", "l_quantity", "l_extendedprice"
+    )
+    pt = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .filter(F.col("p_brand").isin("Brand#11", "Brand#22", "Brand#3"))
+        .groupBy(
+            F.col("p_brand").alias("brand"),
+            F.col("l_shipdate").cast("date").alias("day"),
+        )
+        .agg(
+            F.sum(F.round("l_quantity", 0).cast("bigint")).alias("x"),
+            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
+            .alias("y"),
+        )
+    )
+
+
+@query(
+    "w_rolling_corr",
+    oracle=_ROLLING_CORR_DUCK,
     note="Rolling 7-observation Pearson correlation between daily "
     "quantity and daily revenue per brand — the bivariate member of "
     "the bollinger/ewma/control-chart rolling-diagnostic family "
@@ -314,26 +346,10 @@ _CORR7 = (
     "brand — never a self-join, never a fact-sized window.",
 )
 def w_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_quantity", "l_extendedprice"
-    )
-    pt = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
     dec = "decimal(38,0)"
-    daily = (
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .filter(F.col("p_brand").isin("Brand#11", "Brand#22", "Brand#3"))
-        .groupBy(
-            F.col("p_brand").alias("brand"),
-            F.col("l_shipdate").cast("date").alias("day"),
-        )
-        .agg(
-            F.sum(F.round("l_quantity", 0).cast("bigint"))
-            .cast(dec)
-            .alias("x"),
-            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-            .cast(dec)
-            .alias("y"),
-        )
+    daily = _brand_daily(spark, sf_dir).select(
+        "brand", "day", F.col("x").cast(dec).alias("x"),
+        F.col("y").cast(dec).alias("y"),
     )
     w = Window.partitionBy("brand").orderBy("day")
     w7 = w.rowsBetween(-6, 0)
@@ -361,34 +377,7 @@ def w_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_rolling_corr_stateful",
-    oracle=f"""
-    WITH daily AS (
-      SELECT p.p_brand AS brand,
-             CAST(l.l_shipdate AS DATE) AS day,
-             CAST(CAST(SUM(CAST(ROUND(l.l_quantity) AS BIGINT)) AS BIGINT)
-               AS DECIMAL(38,0)) AS x,
-             CAST(CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
-               AS BIGINT) AS DECIMAL(38,0)) AS y
-      FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-      WHERE p.p_brand IN ('Brand#11', 'Brand#22', 'Brand#3')
-      GROUP BY 1, 2
-    ), winmom AS (
-      SELECT brand, day, x, y,
-             ROW_NUMBER() OVER w AS rn,
-             CAST(COUNT(*) OVER w7 AS DECIMAL(38,0)) AS nw,
-             SUM(x) OVER w7 AS sx, SUM(y) OVER w7 AS sy,
-             SUM(x * x) OVER w7 AS sxx, SUM(y * y) OVER w7 AS syy,
-             SUM(x * y) OVER w7 AS sxy
-      FROM daily
-      WINDOW w AS (PARTITION BY brand ORDER BY day),
-             w7 AS (PARTITION BY brand ORDER BY day
-                    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-    )
-    SELECT brand, day,
-           CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
-           {_CORR7} AS corr7
-    FROM winmom WHERE rn >= 7
-    """,
+    oracle=_ROLLING_CORR_DUCK,
     note="Rolling 7-observation Pearson correlation, CUSTOM-STATEFUL "
     "form (round-8 verdict item 6): the fold_batch replay of the "
     "rolling_corr step kernel (operators/folds.py) that "
@@ -407,25 +396,8 @@ def w_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_rolling_corr_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from banksy_spark.streaming.stateful import rolling_corr_batch
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_quantity", "l_extendedprice"
-    )
-    pt = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    daily = (
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .filter(F.col("p_brand").isin("Brand#11", "Brand#22", "Brand#3"))
-        .groupBy(
-            F.col("p_brand").alias("brand"),
-            F.col("l_shipdate").cast("date").alias("day"),
-        )
-        .agg(
-            F.sum(F.round("l_quantity", 0).cast("bigint")).alias("x"),
-            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-            .alias("y"),
-        )
-        .select(
-            "brand", F.col("day").cast("string").alias("day"), "x", "y"
-        )
+    daily = _brand_daily(spark, sf_dir).select(
+        "brand", F.col("day").cast("string").alias("day"), "x", "y"
     )
     return rolling_corr_batch(daily, window=7).select(
         "brand",
@@ -663,25 +635,8 @@ _TAU_B = (
     "at ANY corpus size; the directory self-join broadcasts.",
 )
 def ml_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_quantity", "l_extendedprice"
-    )
-    pt = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    daily = (
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .filter(F.col("p_brand").isin("Brand#11", "Brand#22", "Brand#3"))
-        .groupBy(
-            F.col("p_brand").alias("brand"),
-            F.col("l_shipdate").cast("date").alias("day"),
-        )
-        .agg(
-            F.sum(F.round("l_quantity", 0).cast("bigint")).alias("x"),
-            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint"))
-            .alias("y"),
-        )
-        # same materialize-once rule as a_theil_sen_monthly's directory
-        .localCheckpoint()
-    )
+    # same materialize-once rule as a_theil_sen_monthly's directory
+    daily = _brand_daily(spark, sf_dir).localCheckpoint()
     # fan_out: the probe side is a few thousand directory rows in ONE
     # coalesced partition, but the broadcast pair join fans each row
     # out ~|days| ways — partitioning must scale with the OUTPUT of
@@ -1028,28 +983,16 @@ _IDCG = f"(t1 * {_D1} + t2 * {_D2} + t3 * {_D3})"
 @query(
     "llm_ann_ndcg",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    n AS (SELECT vec_id, label, v, {_NORM_DUCK.format(v='v')} AS nrm FROM e),
+    WITH {_EN_DUCK},
     bf AS (
       SELECT qid, neighbor_id, rnk FROM (
-        SELECT q.qid, n.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.qid ORDER BY
-                 {_DOT_DUCK.format(a='q.qv', b='n.v')} / (q.qn * n.nrm) DESC, n.vec_id) AS rnk
-        FROM (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n WHERE vec_id < 8) q
-        JOIN n ON n.vec_id <> q.qid
+        {_BF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     {_CENT_DUCK},
     ivf AS (
       SELECT qid, neighbor_id, rnk FROM (
-        SELECT q.vec_id AS qid, a.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_DOT_DUCK.format(a='q.v', b='a.v')} / (q.nrm * a.nrm) DESC, a.vec_id) AS rnk
-        FROM (SELECT * FROM assigned WHERE vec_id < 8) q
-        JOIN assigned a ON a.cell = q.cell AND a.vec_id <> q.vec_id
+        {_IVF_RANK_DUCK}
       ) WHERE rnk <= 3
     ),
     graded AS (

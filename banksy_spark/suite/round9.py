@@ -119,36 +119,12 @@ def j_similarity_ppjoin_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Streaming Bollinger twin ------------------------------------------------
 
-from banksy_spark.suite.round5o import _BB_WIN, _DAILY_DUCK, _daily  # noqa: E402
+from banksy_spark.suite.round5o import _BB_WIN, _BOLLINGER_DUCK, _daily  # noqa: E402
 
 
 @query(
     "stream_bollinger_stateful",
-    oracle=f"""
-    WITH daily AS ({_DAILY_DUCK})
-    SELECT pri, day, cents,
-           CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / k AS mid,
-           CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / k
-             - 2e0 * sqrt(CAST(CAST(k * s2 - s1 * s1 AS VARCHAR) AS DOUBLE))
-                   / k AS lower_band,
-           CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / k
-             + 2e0 * sqrt(CAST(CAST(k * s2 - s1 * s1 AS VARCHAR) AS DOUBLE))
-                   / k AS upper_band,
-           CAST(cents AS DOUBLE) >
-             CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / k
-               + 2e0 * sqrt(CAST(CAST(k * s2 - s1 * s1 AS VARCHAR) AS DOUBLE))
-                     / k AS breakout_up
-    FROM (
-      SELECT pri, day, cents,
-             COUNT(*) OVER wk AS k,
-             SUM(CAST(cents AS DECIMAL(38,0))) OVER wk AS s1,
-             SUM(CAST(cents AS DECIMAL(38,0))
-                 * CAST(cents AS DECIMAL(38,0))) OVER wk AS s2
-      FROM daily
-      WINDOW wk AS (PARTITION BY pri ORDER BY day
-                    ROWS BETWEEN {_BB_WIN - 1} PRECEDING AND CURRENT ROW)
-    )
-    """,
+    oracle=_BOLLINGER_DUCK,
     note=f"Bollinger bands, CUSTOM-STATEFUL form: the fold_batch "
     "replay of the bollinger step kernel (operators/folds.py) that "
     "streaming/stateful.py:bollinger_stateful runs through fold_stream "

@@ -52,6 +52,9 @@ PERSISTING = [
     "graph_bfs_distance",
     # pointer jumping: the fixpoint loop's per-round lineage cuts
     "j_bom_rollup",
+    # the one persisted shingle table behind all three containment
+    # queries (round8._containment_pairs)
+    "llm_dedup_containment_k3",
 ]
 
 

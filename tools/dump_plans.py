@@ -2,15 +2,35 @@
 """Dump explain("formatted") for named queries (no execution).
 
     python tools/dump_plans.py --out /tmp/plans --suffix _before name ...
+
+The text is normalized so that two processes building the same plan
+write byte-identical files: expression ids (``#123``), exchange
+``plan_id=…`` and the RDD id and JVM call site in ``Scan ExistingRDD``
+arguments differ between processes and are replaced by fixed tokens.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # MapPartitionsRDD[3] at localCheckpoint at NativeMethodAccessorImpl.java:0
+    (re.compile(r"(\w+RDD)\[\d+\] at (\w+) at [^,\]]*?:\d+"), r"\1[N] at \2 at <site>"),
+)
+
+
+def normalize(plan: str) -> str:
+    """Replace the per-process tokens of an explain string."""
+    for pat, token in _VOLATILE:
+        plan = pat.sub(token, plan)
+    return plan
 
 
 def main() -> int:
@@ -32,7 +52,7 @@ def main() -> int:
         df = REGISTRY[name].fn(spark, args.sf)
         txt = df._jdf.queryExecution().explainString(mode)
         with open(os.path.join(args.out, f"{name}{args.suffix}.txt"), "w") as f:
-            f.write(txt)
+            f.write(normalize(txt))
         print("dumped", name)
     spark.stop()
     return 0

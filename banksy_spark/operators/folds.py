@@ -1,5 +1,6 @@
 """Ordered per-key folds: each recurrence is written once, as a step
-kernel, and run by one batch driver and one stream driver.
+kernel, and run by one function, :func:`fold`, on bounded and
+streaming frames alike.
 
 Every operator here that emits one row per input row is a left fold
 whose per-row update reads the previous row's state. For EWMA, CUSUM,
@@ -12,32 +13,31 @@ stream can run them with a bounded carry. Each is one :class:`Fold`:
 - ``step(carry, *cols) -> (carry, outs)`` folds ONE key's rows in sort
   order. ``cols`` are the ``inputs`` columns as Python lists; ``outs``
   holds one list per ``outputs`` column, aligned with the input rows.
-  The carry is a tuple shaped like ``state``, so the stream driver
-  stores it in ``GroupState`` as is. A step never mutates its carry in
-  place: ``fold_batch`` starts every key from the same ``init`` object.
+  The carry is a tuple shaped like ``state``, so a stream stores it in
+  ``GroupState`` as is. A step never mutates its carry in place: a
+  bounded fold starts every key from the same ``init`` object.
 - Python floats are IEEE binary64 with the same +,-,*,/ rounding as the
   JVM and DuckDB, so a step that replays the oracle's operation order
   yields the oracle's bits; each step states the order it keeps, and
   the DuckDB oracle hashes plus tests/test_folds.py pin it.
 
-Two drivers run every kernel; both emit the input columns followed by
-the step's outputs:
+:func:`fold` emits the input columns followed by the step's outputs and
+picks its plan from ``df.isStreaming`` (``applyInPandasWithState``
+rejects bounded frames, and a stream has no total order to sort):
 
-- :func:`fold_batch` — ``repartition(key)`` → ``sortWithinPartitions(key,
+- bounded — ``repartition(key)`` → ``sortWithinPartitions(key,
   *order)`` → ``mapInPandas``. A key's rows sit in one partition, in
   order, but may span Arrow batches, so the iterator carries the carry
   across batches and resets it when the key changes. Memory is one
   Arrow batch whatever the series length: no series is ever collected
   into one row.
-- :func:`fold_stream` — ``groupBy(key).applyInPandasWithState``. Spark
-  clusters a micro-batch's rows by key but hands a key's chunks over in
-  arbitrary order, so the group is concatenated and sorted before the
-  step; the carry lives in ``GroupState``. Across micro-batches the
-  ingestion contract holds the order: a key's timeline must not
-  interleave across batches (time-split files in modification order
-  locally; a source partitioned by the key in production).
-
-``applyInPandasWithState`` rejects batch frames, hence two drivers.
+- streaming — ``groupBy(key).applyInPandasWithState``. Spark clusters a
+  micro-batch's rows by key but hands a key's chunks over in arbitrary
+  order, so the group is concatenated and sorted before the step; the
+  carry lives in ``GroupState``. Across micro-batches the ingestion
+  contract holds the order: a key's timeline must not interleave across
+  batches (time-split files in modification order locally; a source
+  partitioned by the key in production).
 """
 
 from __future__ import annotations
@@ -70,24 +70,35 @@ def _names(ddl: str) -> list[str]:
     return [c.split()[0] for c in ddl.split(",")]
 
 
-def _schema(df: DataFrame, fold: Fold) -> str:
+def _schema(df: DataFrame, kernel: Fold) -> str:
     cols = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema]
-    return ", ".join([*cols, fold.outputs])
+    return ", ".join([*cols, kernel.outputs])
 
 
-def fold_batch(
-    df: DataFrame, fold: Fold, key: str | None, order: tuple[str, ...]
+def fold(
+    df: DataFrame, kernel: Fold, key: str | None, order: tuple[str, ...]
 ) -> DataFrame:
-    """Run ``fold`` per ``key`` over a bounded frame in ``order``;
-    ``key=None`` folds the whole frame as one series."""
-    names = _names(fold.outputs)
+    """Run ``kernel`` per ``key`` over ``df`` in ``order``; on a stream
+    the carry is kept in the state store across micro-batches.
+    ``key=None`` folds a bounded frame as one series."""
+    if not df.isStreaming:
+        return _fold_batch(df, kernel, key, order)
+    if key is None:
+        raise ValueError("a streaming fold needs a key: a stream has no single series order")
+    return _fold_stream(df, kernel, key, order)
+
+
+def _fold_batch(
+    df: DataFrame, kernel: Fold, key: str | None, order: tuple[str, ...]
+) -> DataFrame:
+    names = _names(kernel.outputs)
 
     def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry, last = fold.init, None
+        carry, last = kernel.init, None
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            cols = [pdf[c].tolist() for c in fold.inputs]
+            cols = [pdf[c].tolist() for c in kernel.inputs]
             if key is None:
                 keys, starts = None, [0]
             else:
@@ -97,8 +108,8 @@ def fold_batch(
             outs: list[list] = [[] for _ in names]
             for s, e in zip(starts, [*starts[1:], len(pdf)]):
                 if keys is not None and (s or keys[s] != last):
-                    carry, last = fold.init, keys[s]
-                carry, part = fold.step(carry, *(c[s:e] for c in cols))
+                    carry, last = kernel.init, keys[s]
+                carry, part = kernel.step(carry, *(c[s:e] for c in cols))
                 for o, p in zip(outs, part):
                     o.extend(p)
             yield pdf.assign(**dict(zip(names, outs)))
@@ -107,32 +118,30 @@ def fold_batch(
         placed = df.repartition(1).sortWithinPartitions(*order)
     else:
         placed = df.repartition(key).sortWithinPartitions(key, *order)
-    return placed.mapInPandas(run, _schema(df, fold))
+    return placed.mapInPandas(run, _schema(df, kernel))
 
 
-def fold_stream(
-    df: DataFrame, fold: Fold, key: str, order: tuple[str, ...]
+def _fold_stream(
+    df: DataFrame, kernel: Fold, key: str, order: tuple[str, ...]
 ) -> DataFrame:
-    """Run ``fold`` per ``key`` over a (possibly streaming) frame, the
-    carry kept in the state store across micro-batches."""
-    names = _names(fold.outputs)
+    names = _names(kernel.outputs)
 
     def group(
         _key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        carry = tuple(state.get) if state.exists else fold.init
+        carry = tuple(state.get) if state.exists else kernel.init
         chunks = [pdf for pdf in pdfs if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True)
             pdf = pdf.sort_values(list(order), ignore_index=True)
-            carry, outs = fold.step(carry, *(pdf[c].tolist() for c in fold.inputs))
+            carry, outs = kernel.step(carry, *(pdf[c].tolist() for c in kernel.inputs))
             yield pdf.assign(**dict(zip(names, outs)))
         state.update(carry)
 
     return df.groupBy(key).applyInPandasWithState(
         group,
-        outputStructType=_schema(df, fold),
-        stateStructType=fold.state,
+        outputStructType=_schema(df, kernel),
+        stateStructType=kernel.state,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

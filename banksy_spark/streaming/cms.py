@@ -1,6 +1,7 @@
-"""Incremental count-min-sketch maintenance: a foreachBatch pipeline
-keeps the 4x64 counter grid of suite.round4.a_heavy_hitters_cms in a
-stored table, merging each micro-batch's partial grid by (r, cell) sum.
+"""Count-min sketch cells and their incremental maintenance: a
+foreachBatch pipeline keeps the 4x64 counter grid of
+suite.round4.a_heavy_hitters_cms in a stored table, merging each
+micro-batch's partial grid by (r, cell) sum.
 
 This is the IVM pattern (suite a_incremental_view) applied to a sketch:
 because CMS cells are plain sums, merge == recompute exactly, and the
@@ -20,7 +21,34 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from banksy_spark.suite.round4 import cms_cells
+_CMS_W = 64  # counters per row
+_CMS_AB = [(31, 7), (37, 11), (41, 13), (43, 17)]  # (A, B) per hash row
+_CMS_P = 1_000_000_007
+
+
+def _cms_cell_spark(col: str, r: int) -> F.Column:
+    a, b = _CMS_AB[r]
+    return ((F.col(col) * a + b) % _CMS_P) % _CMS_W
+
+
+def _cms_cell_structs(col: str) -> F.Column:
+    return F.array(
+        *[
+            F.struct(F.lit(r).alias("r"), _cms_cell_spark(col, r).alias("cell"))
+            for r in range(4)
+        ]
+    )
+
+
+def cms_cells(keyed: DataFrame, col: str = "user_id") -> DataFrame:
+    """(r, cell, cnt) counter grid of the count-min sketch over ``col``
+    — the mergeable unit: grids from any partition/batch/day combine by
+    summing cnt per (r, cell)."""
+    return (
+        keyed.select(F.explode(_cms_cell_structs(col)).alias("c"))
+        .groupBy(F.col("c.r").alias("r"), F.col("c.cell").alias("cell"))
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
 def merge_cms_batch(spark: SparkSession, batch: DataFrame, store_path: str) -> None:

@@ -5,7 +5,7 @@ logic with the batch layer — the same DataFrame functions run in both
 modes, which is the §3.3 design goal.  The daily notification rate
 limit (:434-461) has two stream forms elsewhere: the scan app's
 committed alert log (``streaming.app``) and the state-store limiter
-for event streams (``streaming.stateful.rate_limit_stateful``).
+for event streams (``streaming.stateful.rate_limit``).
 
 Scale: the streaming state keys are (user_id, day) — the same shuffle
 keys as the batch queries, so a 1000-executor cluster partitions state

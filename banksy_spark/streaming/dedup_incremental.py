@@ -8,8 +8,8 @@ joined against the accumulated band store (every earlier document's
 buckets), and a document is a duplicate iff it collides with any
 earlier document — "earliest wins", matching the batch min-id
 canonical rule. The batch and streaming paths share one signature
-derivation (suite.llm.sigs_from_docs / band_explode), the §3.3
-stream-equals-batch design goal.
+derivation (operators/minhash.py sigs_from_docs / band_explode), the
+§3.3 stream-equals-batch design goal.
 
 Ingestion model: document ids are assigned monotonically at ingest
 (the usual log/offset model), so "already in the store" ≡ "smaller
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from banksy_spark.suite.llm import _lsh_sigs, _band_pairs, band_explode, sigs_from_docs
+from banksy_spark.operators.minhash import band_explode, sigs_from_docs
 
 DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
@@ -103,22 +103,3 @@ def incremental_lsh_dedup(
         .start()
     )
 
-
-def batch_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin: the same earliest-wins canonicalization computed in
-    one pass from the all-at-once band-collision pairs."""
-    sigs = _lsh_sigs(spark, sf_dir, with_hs=False)
-    canon = (
-        _band_pairs(sigs)
-        .groupBy(F.col("doc_b").alias("doc_id"))
-        .agg(F.min("doc_a").alias("dup_of"))
-    )
-    return (
-        sigs.select("doc_id")
-        .join(canon, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            F.coalesce("dup_of", "doc_id").alias("canonical_id"),
-        )
-    )

@@ -1,13 +1,15 @@
-"""Custom stateful streaming operators: per-key state kept in Spark's
-state store across micro-batches (SURVEY.md §2.9).
+"""Custom stateful operators: per-key state kept in Spark's state store
+across micro-batches (SURVEY.md §2.9), written once for bounded and
+streaming frames.
 
 Every operator here that emits one row per input row is a step kernel
-in ``operators/folds.py``: :func:`~banksy_spark.operators.folds.fold_stream`
-keeps its carry in the state store, and its batch twin runs the same
-kernel through :func:`~banksy_spark.operators.folds.fold_batch` so the
-DuckDB oracle can check it. Each entry point is a ``select`` → fold →
-``where``/``select`` wrapper; tests/test_streaming.py proves every
-stream equal to its batch twin across micro-batches.
+in ``operators/folds.py`` wrapped as input ``select`` → ``folds.fold``
+→ ``where``/``select``. ``fold`` picks its plan from ``isStreaming``: a
+stream keeps the carry in the state store, a bounded frame folds each
+sorted partition in one ``mapInPandas`` pass. The suite queries call
+these same functions on bounded frames, so the DuckDB oracle checks the
+logic the stream runs; tests/test_streaming.py runs each operator on a
+two-micro-batch stream and on the bounded frame and compares them.
 
 The rate limiter is the streaming form of the reference's notification
 limiter (arbitrage_scanner.py:434-461): per user it remembers how many
@@ -34,86 +36,54 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from banksy_spark.operators.folds import (
-    ATTRIBUTION,
-    CUSUM,
-    EWMA,
-    FIRST_SEEN,
-    HOLT,
-    MARKOV,
-    RATE_LIMIT,
-    bollinger,
-    capped_balance,
-    capped_sessions,
-    fold_batch,
-    fold_stream,
-    rolling_corr,
-    sprt,
-)
+from banksy_spark.operators import folds
 
 # --- Daily rate limit ---------------------------------------------------------
 
 
-def _by_day(events: DataFrame) -> DataFrame:
-    return events.select("event_id", "user_id", "ts", F.to_date("ts").alias("day"))
+def rate_limit(events: DataFrame, max_per_day: int = 3) -> DataFrame:
+    """Per-user daily quota: the first ``max_per_day`` events of each
+    calendar day pass, in (ts, event_id) order. On a stream the state
+    is one (day, count) pair per user.
 
-
-def _within_quota(folded: DataFrame, max_per_day: int) -> DataFrame:
+    Known gap: because only the latest day is carried, an event for an
+    earlier day that arrives in a later micro-batch (late or replayed
+    data) restarts that day's count at 1 and can pass up to
+    ``max_per_day`` more. The quota holds only under ``fold``'s stream
+    contract that a user's timeline does not interleave across
+    batches."""
+    by_day = events.select("event_id", "user_id", "ts", F.to_date("ts").alias("day"))
+    folded = folds.fold(by_day, folds.RATE_LIMIT, "user_id", ("ts", "event_id"))
     return folded.where(F.col("nth_today") <= max_per_day).select(
         "event_id", "user_id", "day", "nth_today"
     )
 
 
-def rate_limit_stateful(events: DataFrame, max_per_day: int = 3) -> DataFrame:
-    """Per-user daily quota over a (possibly streaming) events frame: the
-    first ``max_per_day`` events of each calendar day pass, in (ts,
-    event_id) order. State is one (day, count) pair per user.
-
-    Known gap: because only the latest day is carried, an event for an
-    earlier day that arrives in a later micro-batch (late or replayed
-    data) restarts that day's count at 1 and can pass up to
-    ``max_per_day`` more. The quota holds only under ``fold_stream``'s
-    contract that a user's timeline does not interleave across
-    batches."""
-    folded = fold_stream(_by_day(events), RATE_LIMIT, "user_id", ("ts", "event_id"))
-    return _within_quota(folded, max_per_day)
-
-
-def rate_limit_batch(events: DataFrame, max_per_day: int = 3) -> DataFrame:
-    """Batch twin of :func:`rate_limit_stateful`: the same kernel through
-    ``fold_batch``, whose mapInPandas shape keeps million-user inputs off
-    the per-group ``applyInPandas`` overhead (measured 7.3 s vs <2 s at
-    sf0.1)."""
-    folded = fold_batch(_by_day(events), RATE_LIMIT, "user_id", ("ts", "event_id"))
-    return _within_quota(folded, max_per_day)
-
-
 # --- SPRT experiment monitor -------------------------------------------------
 
 
-def sprt_monitor_stateful(
+def sprt_monitor(
     events: DataFrame,
     p0: float = 0.15,
     p1: float = 0.25,
     alpha: float = 0.05,
     beta: float = 0.05,
 ) -> DataFrame:
-    """Streaming Wald SPRT per day: the early-stopping experiment
-    monitor that fires its accept/reject decision the moment the
-    running purchase-rate LLR crosses a Wald boundary — no waiting for
-    the day to close. State is one (n, k, decided) triple per day;
+    """Wald SPRT per day: the early-stopping experiment monitor that
+    fires its accept/reject decision the moment the running
+    purchase-rate LLR crosses a Wald boundary — on a stream, no waiting
+    for the day to close. State is one (n, k, decided) triple per day;
     decided days keep counting but never re-emit.
 
-    Batch twin: ``ml_sprt_sequential`` (oracle-checked); the parity
-    test replays the same events through both paths.
-    """
+    Window-form reference: ``ml_sprt_sequential`` (oracle-checked); the
+    parity test replays the same events through both."""
     keyed = events.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         "ts",
         "event_id",
         "event_type",
     )
-    folded = fold_stream(keyed, sprt(p0, p1, alpha, beta), "day", ("ts", "event_id"))
+    folded = folds.fold(keyed, folds.sprt(p0, p1, alpha, beta), "day", ("ts", "event_id"))
     return folded.where(F.col("decision").isNotNull()).select(
         "day",
         F.col("n").alias("n_at_decision"),
@@ -123,161 +93,128 @@ def sprt_monitor_stateful(
     )
 
 
-# --- Rolling bivariate correlation -------------------------------------------
+# --- Rolling bivariate correlation, Bollinger bands ---------------------------
 
 _RC_COLS = ("brand", "day", "x", "y")
 
 
-def _full_windows(folded: DataFrame, window: int) -> DataFrame:
-    return folded.where(F.col("rn") >= window).select(*_RC_COLS, "corr7")
-
-
-def rolling_corr_stateful(daily: DataFrame, window: int = 7) -> DataFrame:
-    """Streaming rolling 7-observation Pearson correlation per brand —
-    the state-incremental twin of the oracle-checked ``w_rolling_corr``
+def rolling_corr(daily: DataFrame, window: int = 7) -> DataFrame:
+    """Rolling 7-observation Pearson correlation per brand — the
+    state-incremental form of the oracle-checked ``w_rolling_corr``
     (suite/round8b.py): windowed moments fold one daily observation at
     a time, so the state store carries only the last ``window - 1``
     (x, y) pairs + a row counter per brand, not the series.
 
-    Input: a (possibly streaming) frame of DAILY grains
-    (brand string, day string 'yyyy-MM-dd', x bigint, y bigint) — at
-    100 TB the daily aggregate runs upstream (watermarked windowed agg
-    or a foreachBatch rollup) and THIS operator sees one row per
-    (brand, day), i.e. calendar-bounded state and traffic.
+    Input: DAILY grains (brand string, day string 'yyyy-MM-dd', x
+    bigint, y bigint) — at 100 TB the daily aggregate runs upstream
+    (watermarked windowed agg or a foreachBatch rollup) and a stream
+    sees one row per (brand, day), i.e. calendar-bounded state and
+    traffic.
     """
-    folded = fold_stream(daily.select(*_RC_COLS), rolling_corr(window), "brand", ("day",))
-    return _full_windows(folded, window)
+    folded = folds.fold(
+        daily.select(*_RC_COLS), folds.rolling_corr(window), "brand", ("day",)
+    )
+    return folded.where(F.col("rn") >= window).select(*_RC_COLS, "corr7")
 
 
-def rolling_corr_batch(daily: DataFrame, window: int = 7) -> DataFrame:
-    """Batch replay of :func:`rolling_corr_stateful`: the same kernel
-    through ``fold_batch``, so the DuckDB window-form oracle can
-    value-check the per-observation fold the state store runs
-    incrementally."""
-    folded = fold_batch(daily.select(*_RC_COLS), rolling_corr(window), "brand", ("day",))
-    return _full_windows(folded, window)
-
-
-# --- Rolling Bollinger bands --------------------------------------------------
-
-_BB_COLS = ("pri", "day", "cents")
-
-
-def bollinger_stateful(daily: DataFrame, window: int = 20) -> DataFrame:
-    """Streaming Bollinger bands per series key — the state-incremental
-    twin of the oracle-checked ``w_bollinger_bands``: the state store
-    carries only the last ``window - 1`` integer observations per key.
-    Input: a (possibly streaming) daily frame (pri string, day string
-    'yyyy-MM-dd', cents bigint); at 100 TB the daily rollup runs
-    upstream, so state and traffic are calendar-bounded per key."""
-    return fold_stream(daily.select(*_BB_COLS), bollinger(window), "pri", ("day",))
-
-
-def bollinger_batch(daily: DataFrame, window: int = 20) -> DataFrame:
-    """Batch replay of :func:`bollinger_stateful`: the same kernel
-    through ``fold_batch``, so the DuckDB window-form oracle
-    value-checks the per-observation fold the state store runs
-    incrementally."""
-    return fold_batch(daily.select(*_BB_COLS), bollinger(window), "pri", ("day",))
+def bollinger(daily: DataFrame, window: int = 20) -> DataFrame:
+    """Bollinger bands per series key — the state-incremental form of
+    the oracle-checked ``w_bollinger_bands``: the state store carries
+    only the last ``window - 1`` integer observations per key. Input: a
+    daily frame (pri string, day string 'yyyy-MM-dd', cents bigint); at
+    100 TB the daily rollup runs upstream, so state and traffic are
+    calendar-bounded per key."""
+    return folds.fold(
+        daily.select("pri", "day", "cents"), folds.bollinger(window), "pri", ("day",)
+    )
 
 
 # --- EWMA, CUSUM, Holt, sessions, capped balance, Markov pairs ---------------
 
 
-def ewma_stream(events: DataFrame) -> DataFrame:
-    """Per-user incremental EWMA (alpha=0.25, zero-seeded, (ts,
-    event_id) order) — the streaming twin of ``w_ewma``; state is one
-    double per user."""
-    out = fold_stream(
-        events.select("user_id", "event_id", "ts", "value"),
-        EWMA,
+def ewma(events: DataFrame) -> DataFrame:
+    """Per-user EWMA (alpha=0.25, zero-seeded, (ts, event_id) order) —
+    ``w_ewma``; on a stream the state is one double per user."""
+    out = folds.fold(
+        events.select("event_id", "user_id", "ts", "value"),
+        folds.EWMA,
         "user_id",
         ("ts", "event_id"),
     )
-    return out.select("user_id", "event_id", "ewma")
+    return out.select("event_id", "user_id", "ewma")
 
 
-def cusum_stream(
-    daily: DataFrame, params: dict[str, tuple[float, float]]
-) -> DataFrame:
-    """Incremental CUSUM over a (pri, day, cents) stream — the twin of
-    ``w_cusum_changepoint``. (mu, sigma) per key are TRAINED on history
-    (``suite.round5.cusum_parts``) and frozen as detector constants: the
-    standard fit-offline/monitor-online split of a sequential test.
-    State is one double per key."""
-    fitted = daily.sparkSession.createDataFrame(
-        [(k, mu, sigma) for k, (mu, sigma) in params.items()],
-        "pri string, mu double, sigma double",
-    )
-    out = fold_stream(
+def cusum(daily: DataFrame, fitted: DataFrame) -> DataFrame:
+    """One-sided CUSUM over a (pri, day, cents) series — the fold of
+    ``w_cusum_changepoint``. ``fitted`` holds (pri, mu, sigma), TRAINED
+    on history (``suite.round5.cusum_parts``) and frozen as detector
+    constants: the standard fit-offline/monitor-online split of a
+    sequential test. On a stream the state is one double per key."""
+    out = folds.fold(
         daily.select("pri", "day", "cents").join(fitted, "pri"),
-        CUSUM,
+        folds.CUSUM,
         "pri",
         ("day",),
     )
     return out.select("pri", "day", "cents", "s_pos", "drift")
 
 
-def holt_stream(daily: DataFrame) -> DataFrame:
-    """Incremental Holt level+trend over a (pri, day, cents) stream —
-    the twin of ``w_holt_linear``; state is (t, level, trend) per key."""
-    return fold_stream(daily.select("pri", "day", "cents"), HOLT, "pri", ("day",))
+def holt(daily: DataFrame) -> DataFrame:
+    """Holt level+trend over a (pri, day, cents) series — the fold of
+    ``w_holt_linear``; on a stream the state is (t, level, trend) per
+    key."""
+    return folds.fold(daily.select("pri", "day", "cents"), folds.HOLT, "pri", ("day",))
 
 
-def capped_sessions_stream(events: DataFrame) -> DataFrame:
-    """Per-user incremental gap+cap session assignment — the twin of
-    ``w_capped_sessions``: session id, last-event µs and session-start
-    anchor µs carry across micro-batches, so a session spanning a batch
-    boundary is neither re-opened nor re-capped."""
-    from banksy_spark.suite.round5e import _CAP_US, _GAP_US
+_GAP_US = 1800 * 1_000_000  # 30-min inactivity gap
+_CAP_US = 4 * 3600 * 1_000_000  # 4-hour max session length
 
-    out = fold_stream(
-        events.select("user_id", "event_id", F.unix_micros("ts").alias("ts_us")),
-        capped_sessions(_GAP_US, _CAP_US),
+
+def capped_sessions(events: DataFrame) -> DataFrame:
+    """Per-user gap+cap session assignment — the fold of
+    ``w_capped_sessions``: on a stream, session id, last-event µs and
+    session-start anchor µs carry across micro-batches, so a session
+    spanning a batch boundary is neither re-opened nor re-capped."""
+    out = folds.fold(
+        events.select("event_id", "user_id", F.unix_micros("ts").alias("ts_us")),
+        folds.capped_sessions(_GAP_US, _CAP_US),
         "user_id",
         ("ts_us", "event_id"),
     )
-    return out.select("user_id", "event_id", "session_id")
+    return out.select("event_id", "user_id", "session_id")
 
 
-_CB_COLS = ("event_id", "user_id", "ts", "value")
-
-
-def capped_balance_stateful(
+def capped_balance(
     events: DataFrame, cap: float = 100.0, offset: float = 50.0
 ) -> DataFrame:
-    """Streaming token-bucket balance per user — the state-incremental
-    twin of the oracle-checked ``w_capped_running_sum``. State is ONE
-    double per user regardless of history length (the clamp saturates,
-    so no buffer is ever needed) — the classic streaming primitive:
-    rate limiters, inventory levels, prepaid balances. Input columns:
+    """Token-bucket balance per user — the fold form of the
+    oracle-checked ``w_capped_running_sum``. State is ONE double per
+    user regardless of history length (the clamp saturates, so no
+    buffer is ever needed) — the classic streaming primitive: rate
+    limiters, inventory levels, prepaid balances. Input columns:
     event_id bigint, user_id bigint, ts timestamp, value double."""
-    out = fold_stream(
-        events.select(*_CB_COLS),
-        capped_balance(cap, offset),
+    out = folds.fold(
+        events.select("event_id", "user_id", "ts", "value"),
+        folds.capped_balance(cap, offset),
         "user_id",
         ("ts", "event_id"),
     )
     return out.select("event_id", "user_id", "capped_balance")
 
 
-def capped_balance_batch(
-    events: DataFrame, cap: float = 100.0, offset: float = 50.0
-) -> DataFrame:
-    """Batch replay of :func:`capped_balance_stateful`: the same kernel
-    through ``fold_batch``, whose mapInPandas shape replaced a per-group
-    ``applyInPandas`` whose invocation overhead dominated at ~1.5k users
-    (3.25 s vs 1.2 s at sf0.1)."""
-    out = fold_batch(
-        events.select(*_CB_COLS),
-        capped_balance(cap, offset),
+def markov_pairs(events: DataFrame) -> DataFrame:
+    """First-order transition pairs per user — the state-incremental
+    form of ``stream_markov_transitions``'s lead() stage. State is the
+    last event_type per user and whether there was one (a NULL type is
+    a real predecessor). Transition COUNTS need no further state: they
+    are an ordinary associative groupBy over the emitted pairs, which
+    is why the operator emits pairs."""
+    folded = folds.fold(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        folds.MARKOV,
         "user_id",
         ("ts", "event_id"),
     )
-    return out.select("event_id", "user_id", "capped_balance")
-
-
-def _markov_pairs(folded: DataFrame) -> DataFrame:
     # the oracle's lead() pairs: every row but a key's first, dropping
     # the pair whose successor (this row's own type) is NULL
     paired = F.col("has_prev") & F.col("event_type").isNotNull()
@@ -286,42 +223,17 @@ def _markov_pairs(folded: DataFrame) -> DataFrame:
     )
 
 
-_MK_COLS = ("user_id", "ts", "event_id", "event_type")
-
-
-def markov_pairs_stateful(events: DataFrame) -> DataFrame:
-    """Streaming first-order transition pairs per user — the
-    state-incremental twin of ``stream_markov_transitions``'s lead()
-    stage. State is the last event_type per user and whether there
-    was one (a NULL type is a real predecessor). Transition COUNTS
-    need no further state: they are an ordinary associative groupBy
-    over the emitted pairs, which is why the operator emits pairs."""
-    folded = fold_stream(
-        events.select(*_MK_COLS), MARKOV, "user_id", ("ts", "event_id")
-    )
-    return _markov_pairs(folded)
-
-
-def markov_pairs_batch(events: DataFrame) -> DataFrame:
-    """Batch replay of :func:`markov_pairs_stateful`: the same kernel
-    through ``fold_batch``."""
-    folded = fold_batch(
-        events.select(*_MK_COLS), MARKOV, "user_id", ("ts", "event_id")
-    )
-    return _markov_pairs(folded)
-
-
 # --- Last-touch attribution, first-seen dedup --------------------------------
 
 
-def attribution_stream(events: DataFrame) -> DataFrame:
-    """Per-user incremental last-touch attribution: the window pass of
-    the registered query ``stream_attribution`` (7-day lookback, (ts,
+def attribution(events: DataFrame) -> DataFrame:
+    """Per-user last-touch attribution: the window pass of the
+    registered query ``stream_attribution`` (7-day lookback, (ts,
     event_id) order) run with the latest click/view touchpoint (type +
     event-time µs) carried across micro-batches. Emits one row per
     attributed purchase; tests/test_streaming.py proves they
     re-aggregate to the batch query's per-channel totals exactly."""
-    folded = fold_stream(
+    folded = folds.fold(
         events.select(
             "user_id",
             "event_id",
@@ -329,7 +241,7 @@ def attribution_stream(events: DataFrame) -> DataFrame:
             F.unix_micros("ts").alias("ts_us"),
             "value",
         ),
-        ATTRIBUTION,
+        folds.ATTRIBUTION,
         "user_id",
         ("ts_us", "event_id"),
     )
@@ -338,17 +250,17 @@ def attribution_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def first_seen_stream(events: DataFrame) -> DataFrame:
-    """Streaming first-seen dedup: each user's earliest event by (ts,
-    event_id) in the first micro-batch that sees the user, emitted once
-    over the life of the stream; every later occurrence is suppressed.
-    The unbounded-state cousin of ``dropDuplicatesWithinWatermark``
-    (streaming.core): no watermark bounds the memory, the state store
-    keeps one boolean per user ever seen — the shape of a "have we ever
-    ingested this id" gate."""
-    folded = fold_stream(
+def first_seen(events: DataFrame) -> DataFrame:
+    """First-seen dedup: each user's earliest event by (ts, event_id);
+    on a stream, in the first micro-batch that sees the user, emitted
+    once over the life of the stream, every later occurrence
+    suppressed. The unbounded-state cousin of
+    ``dropDuplicatesWithinWatermark`` (streaming.core): no watermark
+    bounds the memory, the state store keeps one boolean per user ever
+    seen — the shape of a "have we ever ingested this id" gate."""
+    folded = folds.fold(
         events.select("user_id", "event_id", "ts"),
-        FIRST_SEEN,
+        folds.FIRST_SEEN,
         "user_id",
         ("ts", "event_id"),
     )
@@ -356,10 +268,10 @@ def first_seen_stream(events: DataFrame) -> DataFrame:
 
 
 def first_seen_batch(events: DataFrame) -> DataFrame:
-    """Window-form reference for :func:`first_seen_stream`: each user's
-    earliest row by (ts, event_id) — what the stream emits when a
-    user's earliest event arrives in the first micro-batch that sees
-    the user (a source replayed in event-time order)."""
+    """Window-form reference for :func:`first_seen`: each user's
+    earliest row by (ts, event_id) — what a stream emits when a user's
+    earliest event arrives in the first micro-batch that sees the user
+    (a source replayed in event-time order)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         events.select("user_id", "event_id", "ts")
@@ -548,27 +460,23 @@ def _make_reservoir(k: int):
     return _fold
 
 
-def reservoir_stateful(scored: DataFrame, k: int = 50) -> DataFrame:
-    """Streaming per-shard A-ES reservoir over a ``(shard, doc_id,
-    weight, es_key)`` stream: state is at most ``k`` rows per shard
-    REGARDLESS of stream length — the bounded-memory weighted sample
-    the batch query llm_sample_reservoir takes in one pass. Shard
-    reservoirs merge downstream by union + re-truncate (the same
-    mergeability the fold itself exploits per batch)."""
-    return scored.groupBy("shard").applyInPandasWithState(
-        _make_reservoir(k),
-        outputStructType=_RV_OUT_SCHEMA,
-        stateStructType=_RV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def reservoir_batch(scored: DataFrame, k: int = 50) -> DataFrame:
-    """Batch replay of :func:`reservoir_stateful`: the same
-    merge-and-truncate over each complete shard via applyInPandas, so a
-    per-shard-window DuckDB oracle can value-check the ordering the
-    state-store variant runs incrementally."""
+def reservoir(scored: DataFrame, k: int = 50) -> DataFrame:
+    """Per-shard A-ES reservoir over a ``(shard, doc_id, weight,
+    es_key)`` frame: at most ``k`` rows per shard REGARDLESS of input
+    length — the bounded-memory weighted sample the batch query
+    llm_sample_reservoir takes in one pass. Shard reservoirs merge
+    downstream by union + re-truncate (the same mergeability the fold
+    itself exploits per batch). On a stream the reservoir is state and
+    re-emits per micro-batch; a bounded frame merges each complete
+    shard once through the same :func:`_merge_truncate`."""
+    if scored.isStreaming:
+        return scored.groupBy("shard").applyInPandasWithState(
+            _make_reservoir(k),
+            outputStructType=_RV_OUT_SCHEMA,
+            stateStructType=_RV_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
     def replay(key, pdf):  # no type hints: applyInPandas infers
         return _reservoir_frame(key[0], *_merge_truncate([], 0, pdf, k))

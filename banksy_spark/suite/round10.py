@@ -13,10 +13,10 @@ twins (round-9 verdict item 6).
 Both follow the round-9 Bollinger discipline — the state store form
 (applyInPandasWithState, cross-micro-batch pytest), the batch replay
 (registered here), and the window-form DuckDB oracle are all
-bit-identical. Each recurrence is one step kernel in
-operators/folds.py: the stream runs it through fold_stream, the batch
-replay through fold_batch (repartition + sortWithinPartitions +
-mapInPandas rather than per-group applyInPandas, whose invocation
+bit-identical. Each is one function in streaming/stateful.py around a
+step kernel of operators/folds.py, whose ``fold`` runs a stream with
+the state store and the batch replay as repartition +
+sortWithinPartitions + mapInPandas (not per-group applyInPandas, whose invocation
 overhead dominated at ~1.5k users: 3.25→0.75 s and 3.17→1.08 s at
 sf0.1). State carried across Arrow batches within a user-hashed
 sorted partition is exactly the state the store carries across
@@ -42,17 +42,17 @@ from banksy_spark.suite.round8 import (
     "stream_capped_balance_stateful",
     oracle=_CAPPED_DUCK,
     note="Capped running sum, CUSTOM-STATEFUL form: the batch replay "
-    "of streaming/stateful.py:capped_balance_stateful "
-    "(applyInPandasWithState, state = ONE double per user — the clamp "
+    "of streaming/stateful.py:capped_balance "
+    "(on a stream, state = ONE double per user — the clamp "
     "saturates, so unlike every windowed twin no buffer is needed; "
     "this is the token-bucket/inventory-balance primitive). Verified "
     "against the SAME list_reduce oracle as w_capped_running_sum: the "
     "fold applies one IEEE add then min/max per event in the oracle's "
     "operation order, so stream, replay and the window-collect form "
     "are bit-identical; the cross-micro-batch contract is "
-    "tests/test_streaming.py. Stream and replay run ONE step kernel "
-    "(operators/folds.py); the replay drives it with fold_batch "
-    "(repartition+sortWithinPartitions+mapInPandas: per-group "
+    "tests/test_streaming.py. Stream and replay are ONE function; on a "
+    "bounded frame operators/folds.py:fold drives its step kernel with "
+    "repartition+sortWithinPartitions+mapInPandas (per-group "
     "applyInPandas invocation overhead dominated at ~1.5k users — "
     "3.25 s vs 1.2 s at sf0.1 — while the Python fold itself is "
     "~30 ms/200k rows). "
@@ -61,10 +61,9 @@ from banksy_spark.suite.round8 import (
     "collect_list frame.",
 )
 def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.streaming.stateful import capped_balance_batch
+    from banksy_spark.streaming.stateful import capped_balance
 
-    e = T(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    return capped_balance_batch(e)
+    return capped_balance(T(spark, sf_dir, "events"))
 
 
 @query(
@@ -72,7 +71,7 @@ def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=_MARKOV_DUCK,
     note="Markov transition matrix, CUSTOM-STATEFUL form: the batch "
     "replay of streaming/stateful.py:"
-    "markov_pairs_stateful (fold_stream, state = the last "
+    "markov_pairs (on a stream, state = the last "
     "event_type per user and whether it has one) emits each event's "
     "(prev, cur) pair, dropping pairs whose cur is NULL — "
     "exactly lead() over the per-user total order, computed "
@@ -80,20 +79,17 @@ def stream_capped_balance_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     "associative aggregation (streamable in update mode with no "
     "further state). Verified against the SAME lead()-window oracle "
     "as stream_markov_transitions; integer counts and one "
-    "BIGINT/BIGINT->DOUBLE division, bit-exact. Stream and replay run "
-    "ONE step kernel (operators/folds.py), the replay through "
-    "fold_batch like capped_balance_batch. Scale: "
+    "BIGINT/BIGINT->DOUBLE division, bit-exact. Stream and replay are "
+    "ONE function, run through operators/folds.py:fold like "
+    "capped_balance. Scale: "
     "state is one string per active user; pair traffic shuffles once "
     "on user_id then aggregates map-side onto the tiny |types|^2 "
     "matrix.",
 )
 def stream_markov_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.streaming.stateful import markov_pairs_batch
+    from banksy_spark.streaming.stateful import markov_pairs
 
-    e = T(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type"
-    )
-    pairs = markov_pairs_batch(e)
+    pairs = markov_pairs(T(spark, sf_dir, "events"))
     cnt = pairs.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
     from pyspark.sql import Window
 

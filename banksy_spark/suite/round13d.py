@@ -470,9 +470,9 @@ _RV_SHARDS = 8
            CAST(n_seen AS BIGINT) AS n_seen
     FROM r WHERE smp_rank <= {_RES_K}
     """,
-    note=f"Per-shard A-ES reservoir, CUSTOM-STATEFUL form: the "
-    "applyInPandas replay of the applyInPandasWithState fold in "
-    "streaming/stateful.py:reservoir_stateful — each of "
+    note=f"Per-shard A-ES reservoir, CUSTOM-STATEFUL form: "
+    "streaming/stateful.py:reservoir on a bounded frame (the "
+    "applyInPandas replay of its applyInPandasWithState fold) — each of "
     f"{_RV_SHARDS} hash shards maintains its top-{_RES_K} docs by the "
     "SAME transcendental-free A-ES key as llm_sample_reservoir, and "
     "the merge-and-truncate step the fold runs per micro-batch is "
@@ -489,7 +489,7 @@ _RV_SHARDS = 8
     "top-k before the exchange).",
 )
 def stream_reservoir_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.streaming.stateful import reservoir_batch
+    from banksy_spark.streaming.stateful import reservoir
 
     d = spark.sql(
         _RES_D.replace("__DOCS__", "{d}"), d=T(spark, sf_dir, "documents")
@@ -500,6 +500,6 @@ def stream_reservoir_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w AS weight",
         f"{_RES_KEY} AS es_key",
     )
-    return reservoir_batch(scored, k=_RES_K).select(
+    return reservoir(scored, k=_RES_K).select(
         "shard", "doc_id", "weight", "es_key", "smp_rank", "n_seen"
     )

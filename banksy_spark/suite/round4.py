@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from banksy_spark.streaming.cms import _CMS_AB, _CMS_P, _CMS_W, _cms_cell_structs, cms_cells
 from banksy_spark.suite.llm import _POLY_DUCK, _POLY_SPARK
 from banksy_spark.suite.registry import T, fan_out, query
 
@@ -237,56 +238,27 @@ def llm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first element, so the oracle prepends the 0.0 seed to align with Spark's "
     "fold; every prefix of a left fold IS the shorter fold, so one pass per "
     "user emitting each intermediate acc equals the oracle's per-row prefix "
-    "folds). Spark runs the EWMA step kernel of operators/folds.py through "
-    "fold_batch: repartition by user, sort within partitions, one mapInPandas "
-    "pass carrying the accumulator across Arrow batches. Scale: one exchange "
+    "folds). Spark runs streaming/stateful.py:ewma, the EWMA step kernel of "
+    "operators/folds.py through fold: repartition by user, sort within "
+    "partitions, one mapInPandas pass carrying the accumulator across Arrow "
+    "batches; the same function keeps the accumulator in the state store on "
+    "a stream. Scale: one exchange "
     "on user_id; O(1) state per user and O(Arrow batch) memory, linear time, "
     "whatever a user's history length.",
 )
 def w_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.folds import EWMA, fold_batch
+    from banksy_spark.streaming.stateful import ewma
 
-    e = T(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    out = fold_batch(e, EWMA, "user_id", ("ts", "event_id"))
-    return out.select("event_id", "user_id", "ewma")
+    return ewma(T(spark, sf_dir, "events"))
 
 
 # --- Count-min-sketch heavy hitters ----------------------------------------
 
-_CMS_W = 64  # counters per row
-_CMS_AB = [(31, 7), (37, 11), (41, 13), (43, 17)]  # (A, B) per hash row
-_CMS_P = 1_000_000_007
-
-
-def _cms_cell_spark(col: str, r: int) -> F.Column:
-    a, b = _CMS_AB[r]
-    return ((F.col(col) * a + b) % _CMS_P) % _CMS_W
-
 
 def _cms_cell_duck(col: str, r: int) -> str:
+    """DuckDB text of streaming/cms.py's hash row ``r``."""
     a, b = _CMS_AB[r]
     return f"((({col} * {a} + {b}) % {_CMS_P}) % {_CMS_W})"
-
-
-def _cms_cell_structs(col: str) -> F.Column:
-    return F.array(
-        *[
-            F.struct(F.lit(r).alias("r"), _cms_cell_spark(col, r).alias("cell"))
-            for r in range(4)
-        ]
-    )
-
-
-def cms_cells(keyed: DataFrame, col: str = "user_id") -> DataFrame:
-    """(r, cell, cnt) counter grid of the count-min sketch over ``col``
-    — the mergeable unit: grids from any partition/batch/day combine by
-    summing cnt per (r, cell). Reused by the incremental streaming
-    maintainer (streaming.cms)."""
-    return (
-        keyed.select(F.explode(_cms_cell_structs(col)).alias("c"))
-        .groupBy(F.col("c.r").alias("r"), F.col("c.cell").alias("cell"))
-        .agg(F.count("*").alias("cnt"))
-    )
 
 
 @query(

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from banksy_spark.suite.llm import _band_pairs, _lsh_oracle_ctes, sigs_from_docs
+from banksy_spark.suite.llm import _band_pairs, _lsh_oracle_ctes
 from banksy_spark.suite.registry import T, query
 
 # --- Year-over-year revenue growth -----------------------------------------

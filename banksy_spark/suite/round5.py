@@ -394,8 +394,8 @@ def llm_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cusum_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Shared derivation for the batch query and the streaming twin
-    (streaming/stateful.py:cusum_stream test): per-(priority, day)
+    """Shared derivation for the batch query and the stream test of
+    streaming/stateful.py:cusum: per-(priority, day)
     revenue cents and per-priority (mu, sigma) from exact DECIMAL
     moments."""
     o = T(spark, sf_dir, "orders")
@@ -472,21 +472,19 @@ _DAILY_STATS_DUCK = """stats AS (
     "series, drift flagged when S_t > 4 sigma — the classic sequential "
     "drift test (Page 1954) a pipeline runs on data-quality metrics. CUSUM "
     "is recursive, so like w_ewma both engines compute it as an ordered "
-    "fold — identical IEEE sequence, bit-exact. Spark runs the CUSUM step "
-    "kernel of operators/folds.py through fold_batch (one mapInPandas pass "
-    "per sorted partition, O(1) state per series); its streaming twin "
-    "cusum_stream runs the same kernel through fold_stream. "
+    "fold — identical IEEE sequence, bit-exact. Spark runs "
+    "streaming/stateful.py:cusum, the CUSUM step kernel of operators/folds.py "
+    "through fold (one mapInPandas pass per sorted partition, O(1) state per "
+    "series); the same function runs on a stream with the state store. "
     "mu/sigma come from exact DECIMAL(38,0) sums of integer cents "
     "(VARCHAR-routed to double); x_t is integer cents cast to double. "
     "Scale: one exchange on the series key; memory is one Arrow batch "
     "whatever the series length.",
 )
 def w_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.folds import CUSUM, fold_batch
+    from banksy_spark.streaming.stateful import cusum
 
-    daily, stats = cusum_parts(spark, sf_dir)
-    out = fold_batch(daily.join(stats, "pri"), CUSUM, "pri", ("day",))
-    return out.select("pri", "day", "cents", "s_pos", "drift")
+    return cusum(*cusum_parts(spark, sf_dir))
 
 
 # --- Interval-set overlap join (bucketed range join) -----------------------

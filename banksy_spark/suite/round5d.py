@@ -206,20 +206,21 @@ def w_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-priority daily revenue series — the trend-aware upgrade of "
     "w_ewma, initialised l₁=x₁, b₁=0, α=β=0.5 (exactly representable, "
     "so both engines' folds are identical IEEE halving sequences). "
-    "Spark runs the HOLT step kernel of operators/folds.py through "
-    "fold_batch: ONE linear-time pass per sorted partition carrying O(1) "
+    "Spark runs streaming/stateful.py:holt, the HOLT step kernel of "
+    "operators/folds.py through fold: ONE linear-time pass per sorted "
+    "partition carrying O(1) "
     "state (t, l, b) across Arrow batches; the oracle "
     "folds each row's expanding prefix, and every prefix of a left fold "
     "IS the shorter fold. forecast_next = l + b is the one-step-ahead "
     "prediction a pipeline alerts on. Scale: one exchange on the series "
-    "key, memory one Arrow batch; unbounded series use the streaming "
-    "twin holt_stream (same kernel through fold_stream).",
+    "key, memory one Arrow batch; an unbounded series runs the same "
+    "holt function as a stream, its state in the state store.",
 )
 def w_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.operators.folds import HOLT, fold_batch
+    from banksy_spark.streaming.stateful import holt
 
     daily, _ = cusum_parts(spark, sf_dir)
-    return fold_batch(daily, HOLT, "pri", ("day",))
+    return holt(daily)
 
 
 # --- nearest-in-time (bidirectional as-of) join ----------------------------

@@ -11,9 +11,8 @@ quota sampling, partition-skew diagnostics, and capped sessionization.
 - w_capped_sessions: sessionization with BOTH a 30-min inactivity gap
   and a 4-hour max-session-length cap. The cap makes the recurrence a
   true fold (the running session-start anchor feeds its own update), so
-  Spark runs a step kernel through the batch fold driver
-  (operators/folds.py, as w_cusum_changepoint) and the oracle is a
-  recursive CTE.
+  Spark runs a step kernel through ``fold`` (operators/folds.py, as
+  w_cusum_changepoint) and the oracle is a recursive CTE.
 """
 
 from __future__ import annotations
@@ -21,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from banksy_spark.operators.folds import capped_sessions, fold_batch
+from banksy_spark.streaming.stateful import _CAP_US, _GAP_US, capped_sessions
 from banksy_spark.suite.registry import T, query
 
 # --- exact rolling median --------------------------------------------------
@@ -183,9 +182,6 @@ def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- capped sessionization (gap + max-length rule) -------------------------
 
-_GAP_US = 1800 * 1_000_000  # 30-min inactivity gap
-_CAP_US = 4 * 3600 * 1_000_000  # 4-hour max session length
-
 
 @query(
     "w_capped_sessions",
@@ -219,18 +215,13 @@ _CAP_US = 4 * 3600 * 1_000_000  # 4-hour max session length
     "this a true recurrence: whether this event starts a new session "
     "depends on the running session-start anchor, which its own updates "
     "feed — NOT expressible as lag + running sum (stream_sessionize's "
-    "shape). Spark runs the capped-sessions step kernel of "
-    "operators/folds.py through fold_batch (one linear-time mapInPandas "
-    "pass per sorted partition, O(1) state per user); the oracle walks a "
-    "recursive CTE. Integer-µs comparisons, so both engines branch "
-    "identically. Scale: one exchange on user_id, memory one Arrow batch; "
-    "the unbounded-history form is capped_sessions_stream (same kernel "
-    "through fold_stream).",
+    "shape). Spark runs streaming/stateful.py:capped_sessions, the "
+    "capped-sessions step kernel of operators/folds.py through fold (one "
+    "linear-time mapInPandas pass per sorted partition, O(1) state per "
+    "user); the oracle walks a recursive CTE. Integer-µs comparisons, so "
+    "both engines branch identically. Scale: one exchange on user_id, "
+    "memory one Arrow batch; on an unbounded stream the same function "
+    "keeps the carry in the state store.",
 )
 def w_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = T(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
-    )
-    fold = capped_sessions(_GAP_US, _CAP_US)
-    out = fold_batch(e, fold, "user_id", ("ts_us", "event_id"))
-    return out.select("event_id", "user_id", "session_id")
+    return capped_sessions(T(spark, sf_dir, "events"))

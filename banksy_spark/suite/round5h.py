@@ -67,7 +67,7 @@ from banksy_spark.suite.round4d import _BFS_N
     "each distinct death time S(t) multiplies by (1 - d_t/n_t), with "
     "n_t the suffix-sum of deaths ≥ t. The running product is an "
     "ordered SCALAR fold — Spark runs the KM step kernel once over the "
-    "curve with O(1) state (operators/folds.py fold_batch, one key, linear "
+    "curve with O(1) state (operators/folds.py fold, one key, linear "
     "time), DuckDB folds each row's expanding "
     "prefix (a scalar accumulator, so the round5d struct-field hazard "
     "does not apply); both multiply identical IEEE factors in identical "
@@ -89,9 +89,9 @@ def a_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     risk = ev.withColumn("n_at_risk", F.sum("d").over(w_suffix))
-    from banksy_spark.operators.folds import KM, fold_batch
+    from banksy_spark.operators.folds import KM, fold
 
-    return fold_batch(risk, KM, None, ("t",))
+    return fold(risk, KM, None, ("t",))
 
 
 # --- Gini split scoring ----------------------------------------------------

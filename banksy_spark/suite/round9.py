@@ -125,9 +125,9 @@ from banksy_spark.suite.round5o import _BB_WIN, _BOLLINGER_DUCK, _daily  # noqa:
 @query(
     "stream_bollinger_stateful",
     oracle=_BOLLINGER_DUCK,
-    note=f"Bollinger bands, CUSTOM-STATEFUL form: the fold_batch "
-    "replay of the bollinger step kernel (operators/folds.py) that "
-    "streaming/stateful.py:bollinger_stateful runs through fold_stream "
+    note=f"Bollinger bands, CUSTOM-STATEFUL form: the batch replay of "
+    "streaming/stateful.py:bollinger, the bollinger step kernel "
+    "(operators/folds.py) the same function runs on a stream "
     f"(state = last {_BB_WIN - 1} integer "
     "observations per series) — completes the streaming-twin arc of "
     "the rolling-diagnostics family (EWMA, SPRT, CUSUM, rolling-corr, "
@@ -141,7 +141,7 @@ from banksy_spark.suite.round5o import _BB_WIN, _BOLLINGER_DUCK, _daily  # noqa:
     "at a time.",
 )
 def stream_bollinger_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.streaming.stateful import bollinger_batch
+    from banksy_spark.streaming.stateful import bollinger
 
     # _daily's day is a session-UTC timestamp (midnight) — route it
     # through the fold as its canonical string and restore the SAME
@@ -149,7 +149,7 @@ def stream_bollinger_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily(spark, sf_dir).select(
         "pri", F.col("day").cast("string").alias("day"), "cents"
     )
-    return bollinger_batch(daily, window=_BB_WIN).select(
+    return bollinger(daily, window=_BB_WIN).select(
         "pri",
         F.col("day").cast("timestamp").alias("day"),
         "cents",

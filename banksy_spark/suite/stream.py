@@ -82,17 +82,16 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 3
     """,
     note="§2.9 stateful rate limit, custom-operator form: the quota replay "
-    "(banksy_spark.streaming.stateful.rate_limit_batch — the RATE_LIMIT step kernel "
-    "through fold_batch; the stream, rate_limit_stateful, runs the same kernel through "
-    "fold_stream) verified against the same window-form oracle as stream_rate_limit. "
+    "(banksy_spark.streaming.stateful.rate_limit — the RATE_LIMIT step kernel "
+    "through operators/folds.py:fold; the same function runs a stream with the state "
+    "store) verified against the same window-form oracle as stream_rate_limit. "
     "Proves the Arrow-batched per-key quota logic, not just the window rewrite "
     "(arbitrage_scanner.py:434-461).",
 )
 def stream_rate_limit_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from banksy_spark.streaming.stateful import rate_limit_batch
+    from banksy_spark.streaming.stateful import rate_limit
 
-    e = T(spark, sf_dir, "events")
-    return rate_limit_batch(e, max_per_day=3)
+    return rate_limit(T(spark, sf_dir, "events"), max_per_day=3)
 
 
 @query(

@@ -127,3 +127,27 @@ def test_driver_window_is_exactly_fifty_valid_names():
     missing = [n for n in front if n not in suite.REGISTRY]
     assert not missing, f"_FRONT names not in registry: {missing}"
     assert list(suite.REGISTRY)[:50] == front
+
+
+def test_streaming_and_operators_do_not_import_the_suite():
+    """The suite sits on top of streaming/ and operators/: a module in
+    either layer that imports ``banksy_spark.suite`` pulls the whole
+    query registry (and its testdata readers) into a library import."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "banksy_spark"
+    offenders = []
+    for layer in ("streaming", "operators"):
+        for path in sorted((root / layer).glob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.ImportFrom):
+                    names = [node.module or ""]
+                    names += [f"{node.module}.{a.name}" for a in node.names]
+                elif isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                else:
+                    continue
+                if any(n.startswith("banksy_spark.suite") for n in names):
+                    offenders.append(f"{layer}/{path.name}:{node.lineno}")
+    assert not offenders, f"imports of banksy_spark.suite: {offenders}"

@@ -1,9 +1,10 @@
-"""operators/folds.py: each step kernel, run by ``fold_batch``, must be
-BIT-IDENTICAL to the aggregate-HOF array_append expression the folds
-once were (the JVM reference for the oracle's operation order), on
-series far longer than any testdata key produces; the carry must
-survive Arrow-batch boundaries and reset on key changes; a NULL value
-must read the same through the batch and the stream driver."""
+"""operators/folds.py: each step kernel, run by ``fold`` on a bounded
+frame, must be BIT-IDENTICAL to the aggregate-HOF array_append
+expression the folds once were (the JVM reference for the oracle's
+operation order), on series far longer than any testdata key produces;
+the carry must survive Arrow-batch boundaries and reset on key changes;
+a NULL value must read the same on a bounded frame and on a stream;
+``fold`` must return the same rows from both."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from banksy_spark.operators.folds import (
@@ -26,7 +28,7 @@ from banksy_spark.operators.folds import (
     RATE_LIMIT,
     bollinger,
     capped_sessions,
-    fold_batch,
+    fold,
     rolling_corr,
 )
 
@@ -37,12 +39,12 @@ def _one_series_df(spark, values):
     )
 
 
-def _fold_one_series(spark, fold, ddl, rows):
-    """``fold`` through fold_batch over ONE key, rows in list order."""
+def _fold_one_series(spark, kernel, ddl, rows):
+    """``kernel`` through ``fold`` over ONE bounded key, rows in list order."""
     df = spark.createDataFrame(
         [(1, i, *r) for i, r in enumerate(rows)], f"k INT, i INT, {ddl}"
     )
-    return fold_batch(df, fold, "k", ("i",)).orderBy("i").collect()
+    return fold(df, kernel, "k", ("i",)).orderBy("i").collect()
 
 
 def test_ewma_scan_matches_old_fold(spark):
@@ -203,7 +205,7 @@ def test_scan_edge_cases(spark):
 
     def run(rows):
         df = spark.createDataFrame(rows, ddl)
-        return {n: fold_batch(df, f, "k", ("i",)).collect() for n, f in folds.items()}
+        return {n: fold(df, f, "k", ("i",)).collect() for n, f in folds.items()}
 
     empty = run([])
     assert all(len(rows) == 0 for rows in empty.values())
@@ -268,21 +270,21 @@ def test_fold_batch_carry_crosses_arrow_batches_and_resets_per_key(spark):
         ).withColumn("cents", F.col("x"))
         got_e = {
             r.i: repr(r.ewma)
-            for r in fold_batch(df, EWMA, "k", ("i",)).collect()
+            for r in fold(df, EWMA, "k", ("i",)).collect()
         }
         got_s = {
             r.i: r.session_id
-            for r in fold_batch(df, capped_sessions(gap, cap), "k", ("ts_us", "i")).collect()
+            for r in fold(df, capped_sessions(gap, cap), "k", ("ts_us", "i")).collect()
         }
         got_n = {
-            r.i: r.nth_today for r in fold_batch(df, RATE_LIMIT, "k", ("i",)).collect()
+            r.i: r.nth_today for r in fold(df, RATE_LIMIT, "k", ("i",)).collect()
         }
         got_c = {
-            r.i: repr(r.corr7) for r in fold_batch(df, rolling_corr(7), "k", ("i",)).collect()
+            r.i: repr(r.corr7) for r in fold(df, rolling_corr(7), "k", ("i",)).collect()
         }
         got_b = {
             r.i: repr(r.upper_band)
-            for r in fold_batch(df, bollinger(win), "k", ("i",)).collect()
+            for r in fold(df, bollinger(win), "k", ("i",)).collect()
         }
     finally:
         for k, v in saved.items():
@@ -300,9 +302,9 @@ def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
     """A NULL value reaches the EWMA kernel as NaN: that row and every
     later row of the key read NULL — the DuckDB oracle's shape (list()
     keeps the NULL, list_reduce propagates it) — in w_ewma's batch path
-    and in ewma_stream alike; other keys are untouched."""
+    and in ewma on a stream alike; other keys are untouched."""
     from banksy_spark.streaming.core import read_events_stream
-    from banksy_spark.streaming.stateful import ewma_stream
+    from banksy_spark.streaming.stateful import ewma
     from banksy_spark.suite import REGISTRY
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -330,7 +332,7 @@ def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
     assert {(r.user_id, r.event_id): r.ewma for r in batch} == want
 
     q = (
-        ewma_stream(read_events_stream(spark, str(stream_dir)))
+        ewma(read_events_stream(spark, str(stream_dir)))
         .writeStream.format("memory")
         .queryName("ewma_null")
         .outputMode("append")
@@ -346,12 +348,12 @@ def test_null_value_reads_the_same_in_batch_and_stream(spark, tmp_path):
 def test_markov_pairs_with_null_type_match_lead_in_batch_and_stream(spark, tmp_path):
     """For one user's a, NULL, b the oracle's lead() pairs are (a, NULL)
     and (NULL, b), and ``WHERE to_type IS NOT NULL`` keeps only (NULL,
-    b); a NULL-free user pairs as usual. The batch and stream twins
-    must emit exactly those pairs."""
+    b); a NULL-free user pairs as usual. markov_pairs must emit exactly
+    those pairs on a bounded frame and on a stream."""
     import collections
 
     from banksy_spark.streaming.core import read_events_stream
-    from banksy_spark.streaming.stateful import markov_pairs_batch, markov_pairs_stateful
+    from banksy_spark.streaming.stateful import markov_pairs
 
     t0 = datetime.datetime(2024, 1, 1)
     users = [1, 1, 1, 2, 2, 2]
@@ -382,12 +384,12 @@ def test_markov_pairs_with_null_type_match_lead_in_batch_and_stream(spark, tmp_p
 
     batch = spark.read.parquet(str(tmp_path / "in"))
     got = collections.Counter(
-        (r.from_type, r.to_type) for r in markov_pairs_batch(batch).collect()
+        (r.from_type, r.to_type) for r in markov_pairs(batch).collect()
     )
     assert got == want
 
     q = (
-        markov_pairs_stateful(read_events_stream(spark, str(tmp_path / "in")))
+        markov_pairs(read_events_stream(spark, str(tmp_path / "in")))
         .writeStream.format("memory")
         .queryName("markov_null")
         .outputMode("append")
@@ -400,12 +402,55 @@ def test_markov_pairs_with_null_type_match_lead_in_batch_and_stream(spark, tmp_p
     assert collections.Counter((r.from_type, r.to_type) for r in stream) == want
 
 
+def _one_file_stream(spark, df, tmp_path):
+    """``df`` written as one parquet file and read back as a stream: one
+    micro-batch holding every row."""
+    df.coalesce(1).write.parquet(str(tmp_path / "in"))
+    return spark.readStream.schema(df.schema).parquet(str(tmp_path / "in"))
+
+
+def test_fold_on_a_stream_needs_a_key(spark, tmp_path):
+    """``key=None`` folds a bounded frame as one series; a stream has no
+    single series order, so ``fold`` refuses it before planning."""
+    df = spark.createDataFrame([(1, 0, 1.0)], "k INT, i INT, value DOUBLE")
+    stream = _one_file_stream(spark, df, tmp_path)
+    assert stream.isStreaming
+    with pytest.raises(ValueError, match="key"):
+        fold(stream, EWMA, None, ("i",))
+    assert fold(df, EWMA, None, ("i",)).count() == 1
+
+
+def test_fold_returns_the_same_rows_from_a_stream_and_a_bounded_frame(spark, tmp_path):
+    """One function, two plans: on a one-micro-batch stream (state store)
+    and on the same bounded frame (sorted mapInPandas) ``fold`` returns
+    identical rows, bits included, for several interleaved keys."""
+    rng = random.Random(31)
+    df = spark.createDataFrame(
+        [(i % 4, i, rng.uniform(-1e3, 1e3)) for i in range(400)],
+        "k INT, i INT, value DOUBLE",
+    )
+    stream = fold(_one_file_stream(spark, df, tmp_path), EWMA, "k", ("i",))
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("fold_one_batch")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish in time"
+    got = spark.sql("SELECT * FROM fold_one_batch").collect()
+    want = fold(df, EWMA, "k", ("i",)).collect()
+    assert len(want) == 400
+    assert sorted(got, key=lambda r: r.i) == sorted(want, key=lambda r: r.i)
+
+
 def test_kernels_reach_workers_that_cannot_import_the_package(tmp_path):
     """A Python worker started outside the repo root cannot import
     banksy_spark, so kernels and drivers must travel by value."""
     from pyspark import cloudpickle
 
-    blob = cloudpickle.dumps((EWMA, capped_sessions(10, 100), fold_batch))
+    blob = cloudpickle.dumps((EWMA, capped_sessions(10, 100), fold))
     code = (
         "import pickle, sys\n"
         "e, s, _ = pickle.loads(sys.stdin.buffer.read())\n"

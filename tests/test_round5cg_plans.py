@@ -49,7 +49,7 @@ def test_holt_single_fold_exchange(spark):
     plan = _plan(spark, "w_holt_linear")
     # one series-key exchange for the fold; no window per row
     assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan  # one fold_batch pass, no explode
+    assert "MapInPandas" in plan  # one bounded fold pass, no explode
 
 
 def test_capped_sessions_fold_shape(spark):

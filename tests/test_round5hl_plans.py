@@ -18,7 +18,7 @@ def _plan(spark, name: str) -> str:
 def test_survival_km_single_events_scan(spark):
     plan = _plan(spark, "a_survival_km")
     assert len(re.findall(r"FileScan parquet [^\n]*events", plan)) == 1
-    assert "MapInPandas" in plan  # one fold_batch pass, no explode
+    assert "MapInPandas" in plan  # one bounded fold pass, no explode
 
 
 def test_gini_split_one_pass_over_orders(spark):

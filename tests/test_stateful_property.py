@@ -1,5 +1,6 @@
-"""Property-based checks for the round-10 stateful twins: the capped
-balance and Markov pairing must equal a trivially-correct pure-Python
+"""Property-based checks for the round-10 stateful operators on bounded
+frames: the capped balance and Markov pairing must equal a
+trivially-correct pure-Python
 reference on ARBITRARY event frames — exact saturation boundaries
 (values landing the balance on exactly 0.0 or 100.0), long negative
 runs, timestamp ties (broken by event_id), single-event users, and
@@ -15,7 +16,7 @@ import datetime
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from banksy_spark.streaming.stateful import capped_balance_batch, markov_pairs_batch
+from banksy_spark.streaming.stateful import capped_balance, markov_pairs
 
 # values around the clamp-relevant range: deltas are value - 50, cap 100
 _vals = st.one_of(
@@ -59,7 +60,7 @@ def test_capped_balance_matches_python_reference(spark, rows):
     df = _mk_df(spark, rows, "value", "double")
     got = {
         r.event_id: (r.user_id, r.capped_balance)
-        for r in capped_balance_batch(df).collect()
+        for r in capped_balance(df).collect()
     }
     # reference: per user ordered by (ts, event_id), clamp fold
     want = {}
@@ -84,7 +85,7 @@ def test_markov_pairs_match_python_reference(spark, rows):
 
     df = _mk_df(spark, rows, "event_type", "string")
     got = collections.Counter(
-        (r.from_type, r.to_type) for r in markov_pairs_batch(df).collect()
+        (r.from_type, r.to_type) for r in markov_pairs(df).collect()
     )
     last: dict[int, str] = {}
     want: collections.Counter = collections.Counter()

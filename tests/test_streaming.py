@@ -1,9 +1,13 @@
 """Structured Streaming slice: streaming results must equal the batch
-forms of the same logic (SURVEY §2.9)."""
+forms of the same logic (SURVEY §2.9). Each stateful operator is one
+function, run here on a stream and on the bounded frame."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,26 +24,65 @@ def events_dir(tmp_path):
     return str(d)
 
 
-def test_tumbling_daily_stream_equals_batch(spark, events_dir, tmp_path):
-    stream = read_events_stream(spark, events_dir)
-    assert stream.isStreaming
+def _drain(stream_df, tmp_path, mode="append"):
+    """Run ``stream_df`` over all of its input into a fresh memory sink
+    and return the sink as a DataFrame."""
+    name = f"sink_{uuid.uuid4().hex}"
     q = (
-        tumbling_daily_counts(stream)
-        .writeStream.format("memory")
-        .queryName("daily_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(120), 'stream did not finish in time'
-    got = {
-        (str(r.day), r.event_type): r.n_events
-        for r in spark.sql("SELECT * FROM daily_counts").collect()
-    }
+    assert q.awaitTermination(180), "stream did not finish in time"
+    return stream_df.sparkSession.table(name)
+
+
+def _file_stream(parts, tmp_path):
+    """A stream that reads each frame of ``parts`` as one micro-batch, in
+    list order: one parquet file per frame, its mtime pinned (the file
+    source orders files by mtime at ms resolution, so files written
+    within one ms could swap) and one file per trigger."""
+    src = tmp_path / "chunks"
+    src.mkdir()
+    now = time.time()
+    for i, part in enumerate(parts):
+        part.coalesce(1).write.parquet(str(tmp_path / f"chunk{i}"))
+        dst = src / f"{i}.parquet"
+        shutil.move(str(next((tmp_path / f"chunk{i}").glob("part-*.parquet"))), str(dst))
+        os.utime(dst, (now + 10 * i, now + 10 * i))
+    return (
+        parts[0].sparkSession.readStream.schema(parts[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+
+
+def _two_chunk_stream(df, tmp_path, by="ts"):
+    """``df`` as two micro-batches split at its median ``by`` value, so
+    every key whose series spans the median carries its state across
+    the batch boundary."""
+    vals = sorted(r[0] for r in df.select(by).distinct().collect())
+    cut = vals[len(vals) // 2]
+    return _file_stream([df.filter(F.col(by) <= cut), df.filter(F.col(by) > cut)], tmp_path)
+
+
+def _events(spark):
     from banksy_spark.suite.registry import T
 
-    batch = tumbling_daily_counts(T(spark, SF_SMOKE, "events"))
+    return T(spark, SF_SMOKE, "events")
+
+
+def test_tumbling_daily_stream_equals_batch(spark, events_dir, tmp_path):
+    stream = read_events_stream(spark, events_dir)
+    assert stream.isStreaming
+    got = {
+        (str(r.day), r.event_type): r.n_events
+        for r in _drain(tumbling_daily_counts(stream), tmp_path, "complete").collect()
+    }
+    batch = tumbling_daily_counts(_events(spark))
     want = {(str(r.day), r.event_type): r.n_events for r in batch.collect()}
     assert got == want and len(want) > 0
 
@@ -52,12 +95,9 @@ def test_stateful_rate_limit_across_batches(spark, tmp_path):
     same day again. The stream keeps only the busiest error day: the
     (day, n) carry restarts on a day change, so replaying earlier days
     would legitimately start them over."""
-    import shutil
+    from banksy_spark.streaming.stateful import rate_limit
 
-    from banksy_spark.streaming.stateful import rate_limit_stateful
-    from banksy_spark.suite.registry import T
-
-    errors = T(spark, SF_SMOKE, "events").filter(F.col("event_type") == "error")
+    errors = _events(spark).filter(F.col("event_type") == "error")
     busiest = (
         errors.groupBy("user_id", F.to_date("ts").alias("day"))
         .count()
@@ -78,7 +118,7 @@ def test_stateful_rate_limit_across_batches(spark, tmp_path):
 
     def run():
         q = (
-            rate_limit_stateful(stream)
+            rate_limit(stream)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .outputMode("append")
@@ -106,17 +146,9 @@ def test_dedup_within_watermark_stream(spark, events_dir, tmp_path):
     from banksy_spark.streaming.core import dedup_earliest_within_watermark
 
     stream = read_events_stream(spark, events_dir)
-    q = (
-        dedup_earliest_within_watermark(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_wm")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
+    out = _drain(dedup_earliest_within_watermark(stream), tmp_path).select(
+        "user_id", "event_type"
     )
-    assert q.awaitTermination(120), 'stream did not finish in time'
-    out = spark.sql("SELECT user_id, event_type FROM dedup_wm")
     # exactly one row per observed (user, event_type) key
     assert out.count() == out.distinct().count() > 0
 
@@ -127,19 +159,9 @@ def test_stream_stream_interval_join_equals_batch(spark, events_dir, tmp_path):
     stream = read_events_stream(spark, events_dir)
     purchases = stream.filter(F.col("event_type") == "purchase")
     clicks = stream.filter(F.col("event_type") == "click")
-    q = (
-        purchase_attribution_stream(purchases, clicks)
-        .writeStream.format("memory")
-        .queryName("attribution")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), 'stream did not finish in time'
     got = {
         (r.purchase_id, r.click_id)
-        for r in spark.sql("SELECT * FROM attribution").collect()
+        for r in _drain(purchase_attribution_stream(purchases, clicks), tmp_path).collect()
     }
     # batch twin over the same file
     from banksy_spark.suite import REGISTRY
@@ -148,40 +170,18 @@ def test_stream_stream_interval_join_equals_batch(spark, events_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_stateful_limiter_equals_batch_twin(spark, tmp_path):
-    """The applyInPandasWithState limiter and its applyInPandas batch
-    twin (the oracle-checked suite form) agree on a single batch."""
-    import shutil
+def test_stateful_limiter_equals_batch_twin(spark, events_dir, tmp_path):
+    """The limiter returns the same rows on a one-batch stream and on
+    the bounded frame (the oracle-checked suite form)."""
+    from banksy_spark.streaming.stateful import rate_limit
 
-    from banksy_spark.streaming.stateful import rate_limit_batch, rate_limit_stateful
-
-    src = tmp_path / "twin_in"
-    src.mkdir()
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
-
-    stream = read_events_stream(spark, str(src)).filter(F.col("event_type") == "error")
-    q = (
-        rate_limit_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("stateful_twin")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_twin"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
+    stream = read_events_stream(spark, events_dir).filter(F.col("event_type") == "error")
     got = {
         (r.event_id, r.day, r.nth_today)
-        for r in spark.sql("SELECT * FROM stateful_twin").collect()
+        for r in _drain(rate_limit(stream), tmp_path).collect()
     }
-
-    from banksy_spark.suite.registry import T
-
-    batch = T(spark, SF_SMOKE, "events").filter(F.col("event_type") == "error")
-    want = {
-        (r.event_id, r.day, r.nth_today)
-        for r in rate_limit_batch(batch).collect()
-    }
+    batch = _events(spark).filter(F.col("event_type") == "error")
+    want = {(r.event_id, r.day, r.nth_today) for r in rate_limit(batch).collect()}
     assert got == want and len(got) > 0
 
 
@@ -189,23 +189,11 @@ def test_hopping_window_stream_equals_batch(spark, events_dir, tmp_path):
     from banksy_spark.streaming import hopping_hourly_sums
 
     stream = read_events_stream(spark, events_dir)
-    q = (
-        hopping_hourly_sums(stream)
-        .writeStream.format("memory")
-        .queryName("hopping_sums")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hop"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
     got = {
         (str(r.win_start), r.event_type): r.n_events
-        for r in spark.sql("SELECT * FROM hopping_sums").collect()
+        for r in _drain(hopping_hourly_sums(stream), tmp_path, "complete").collect()
     }
-    from banksy_spark.suite.registry import T
-
-    batch = hopping_hourly_sums(T(spark, SF_SMOKE, "events"))
+    batch = hopping_hourly_sums(_events(spark))
     want = {(str(r.win_start), r.event_type): r.n_events for r in batch.collect()}
     assert got == want and len(want) > 0
 
@@ -214,23 +202,11 @@ def test_session_window_stream_equals_batch(spark, events_dir, tmp_path):
     from banksy_spark.streaming import session_window_counts
 
     stream = read_events_stream(spark, events_dir)
-    q = (
-        session_window_counts(stream)
-        .writeStream.format("memory")
-        .queryName("session_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
     got = {
         (r.user_id, str(r.session_start)): (str(r.session_end), r.n_events)
-        for r in spark.sql("SELECT * FROM session_counts").collect()
+        for r in _drain(session_window_counts(stream), tmp_path, "complete").collect()
     }
-    from banksy_spark.suite.registry import T
-
-    batch = session_window_counts(T(spark, SF_SMOKE, "events"))
+    batch = session_window_counts(_events(spark))
     want = {
         (r.user_id, str(r.session_start)): (str(r.session_end), r.n_events)
         for r in batch.collect()
@@ -238,16 +214,36 @@ def test_session_window_stream_equals_batch(spark, events_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def _batch_canonical(spark, sf_dir):
+    """The incremental dedup's batch form: the same earliest-wins
+    canonicalization computed in one pass from the all-at-once
+    band-collision pairs."""
+    from banksy_spark.suite.llm import _band_pairs, _lsh_sigs
+
+    sigs = _lsh_sigs(spark, sf_dir, with_hs=False)
+    canon = (
+        _band_pairs(sigs)
+        .groupBy(F.col("doc_b").alias("doc_id"))
+        .agg(F.min("doc_a").alias("dup_of"))
+    )
+    return (
+        sigs.select("doc_id")
+        .join(canon, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("dup_of").isNotNull().alias("is_dup"),
+            F.coalesce("dup_of", "doc_id").alias("canonical_id"),
+        )
+    )
+
+
 def test_incremental_lsh_dedup_stream_equals_batch(spark, tmp_path):
     # Ingest the corpus as 3 ordered parquet drops; the per-batch
     # store-probe decisions must equal the all-at-once batch
     # canonicalization (earliest-wins via min band-collider).
-    import os
-
     import pandas as pd
 
     from banksy_spark.streaming.dedup_incremental import (
-        batch_canonical,
         incremental_lsh_dedup,
         read_docs_stream,
     )
@@ -279,7 +275,7 @@ def test_incremental_lsh_dedup_stream_equals_batch(spark, tmp_path):
     }
     want = {
         r.doc_id: (r.is_dup, r.canonical_id)
-        for r in batch_canonical(spark, SF_ORACLE).collect()
+        for r in _batch_canonical(spark, SF_ORACLE).collect()
     }
     assert got == want
     assert len(want) > 0 and any(v[0] for v in want.values()), "fixture has real dups"
@@ -289,85 +285,33 @@ def test_first_seen_stream_emits_each_user_once_across_batches(spark, tmp_path):
     """First-seen dedup emits each user exactly once even when the same
     data arrives in two micro-batches (two file copies,
     maxFilesPerTrigger=1)."""
-    src = tmp_path / "tws_in"
-    src.mkdir()
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "b.parquet")
+    from banksy_spark.streaming.stateful import first_seen, first_seen_batch
 
-    from banksy_spark.streaming.stateful import first_seen_batch, first_seen_stream
-    from banksy_spark.suite.registry import T
-
-    batch = T(spark, SF_SMOKE, "events")
+    batch = _events(spark)
     want = {(r["user_id"], r["event_id"]) for r in first_seen_batch(batch).collect()}
     assert len(want) == batch.select("user_id").distinct().count()
+    assert {(r["user_id"], r["event_id"]) for r in first_seen(batch).collect()} == want
 
-    def run(df, name, ckpt):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180), "stream did not finish in time"
-        return {
-            (r["user_id"], r["event_id"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-
-    got = run(first_seen_stream(read_events_stream(spark, str(src))),
-              "gs_first_seen", "ckpt_gs")
+    stream = _file_stream([batch, batch], tmp_path)
+    got = {(r["user_id"], r["event_id"]) for r in _drain(first_seen(stream), tmp_path).collect()}
     assert got == want
     assert len(got) == batch.select("user_id").distinct().count()
 
 
 def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
-    """The applyInPandasWithState EWMA must reproduce the batch fold
-    (w_ewma) exactly when the stream delivers each user's timeline in
+    """The EWMA must return the same bits on a stream as on the bounded
+    frame (w_ewma) when the stream delivers each user's timeline in
     order: events time-split into two files, processed one per batch
     in modification order — the acc carries across the batch boundary."""
-    import time as _time
+    from banksy_spark.streaming.stateful import ewma
 
-    from banksy_spark.streaming.stateful import ewma_stream
-    from banksy_spark.suite.registry import T
-
-    batch = T(spark, SF_SMOKE, "events")
-    mid = batch.agg(F.expr("percentile_approx(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    early = batch.filter(F.col("ts").cast("double") <= mid)
-    late = batch.filter(F.col("ts").cast("double") > mid)
-    src = tmp_path / "ewma_in"
-    src.mkdir()
-    early.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "e1"))
-    _time.sleep(1.1)  # file-source orders by modification time
-    late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "e2"))
-    for i, d in enumerate(("e1", "e2")):
-        for f in (tmp_path / d).glob("*.parquet"):
-            shutil.copy(f, src / f"{i}.parquet")
-            _time.sleep(1.1)
-
-    stream = read_events_stream(spark, str(src))
-    q = (
-        ewma_stream(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ewma"))
-        .option("maxFilesPerTrigger", 1)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in time"
+    batch = _events(spark)
+    stream = _two_chunk_stream(batch, tmp_path)
     got = {
         (r["user_id"], r["event_id"]): r["ewma"]
-        for r in spark.sql("SELECT * FROM ewma_stream").collect()
+        for r in _drain(ewma(stream), tmp_path).collect()
     }
-    from banksy_spark.suite import REGISTRY
-
-    want = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in REGISTRY["w_ewma"].fn(spark, SF_SMOKE).collect()
-    }
+    want = {(r["user_id"], r["event_id"]): r["ewma"] for r in ewma(batch).collect()}
     assert len(got) == len(want) > 0
     assert got == want, "incremental EWMA diverged from the batch fold"
 
@@ -376,21 +320,13 @@ def test_cms_maintenance_stream_equals_batch(spark, tmp_path):
     """The foreachBatch-maintained CMS grid must equal the one-shot
     batch grid cell-for-cell after streaming the events in two
     micro-batches (sketch merge == recompute, the IVM property)."""
-    from banksy_spark.streaming.cms import cms_maintenance_stream
-    from banksy_spark.suite.registry import T
-    from banksy_spark.suite.round4 import cms_cells
+    from banksy_spark.streaming.cms import cms_cells, cms_maintenance_stream
 
-    src = tmp_path / "cms_in"
-    src.mkdir()
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
-    shutil.copy(f"{SF_SMOKE}/events.parquet", src / "b.parquet")
+    events = _events(spark).select("user_id")
     store = str(tmp_path / "cms_store")
-
-    stream = read_events_stream(spark, str(src))
     q = (
-        cms_maintenance_stream(stream, store)
+        cms_maintenance_stream(_file_stream([events, events], tmp_path), store)
         .option("checkpointLocation", str(tmp_path / "ckpt_cms"))
-        .option("maxFilesPerTrigger", 1)
         .trigger(availableNow=True)
         .start()
     )
@@ -398,55 +334,32 @@ def test_cms_maintenance_stream_equals_batch(spark, tmp_path):
 
     got = {(r.r, r.cell): r.cnt for r in spark.read.parquet(store).collect()}
     # the stream saw the events twice (two copies) -> 2x the batch counts
-    batch = cms_cells(T(spark, SF_SMOKE, "events").select("user_id"))
-    want = {(r.r, r.cell): 2 * r.cnt for r in batch.collect()}
+    want = {(r.r, r.cell): 2 * r.cnt for r in cms_cells(events).collect()}
     assert got == want and len(got) > 0
 
 
 def test_stateful_attribution_stream_equals_batch(spark, tmp_path):
-    """The applyInPandasWithState last-touch attribution must
-    re-aggregate to the batch query's per-channel (purchases,
-    revenue-cents) exactly: events time-split into two files processed
-    one per batch, the carried touchpoint crossing the boundary."""
-    import time as _time
-
-    from banksy_spark.streaming.stateful import attribution_stream
+    """Last-touch attribution must return the same purchases on a
+    stream as on the bounded frame, and re-aggregate to the batch
+    query's per-channel (purchases, revenue-cents) exactly: events
+    time-split into two files processed one per batch, the carried
+    touchpoint crossing the boundary."""
+    from banksy_spark.streaming.stateful import attribution
     from banksy_spark.suite import REGISTRY
-    from banksy_spark.suite.registry import T
 
-    batch = T(spark, SF_SMOKE, "events")
-    mid = batch.agg(F.expr("percentile_approx(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    early = batch.filter(F.col("ts").cast("double") <= mid)
-    late = batch.filter(F.col("ts").cast("double") > mid)
-    src = tmp_path / "attr_in"
-    src.mkdir()
-    early.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "a1"))
-    _time.sleep(1.1)
-    late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "a2"))
-    for i, d in enumerate(("a1", "a2")):
-        for f in (tmp_path / d).glob("*.parquet"):
-            shutil.copy(f, src / f"{i}.parquet")
-            _time.sleep(1.1)
-
-    stream = read_events_stream(spark, str(src))
-    q = (
-        attribution_stream(stream)
-        .writeStream.format("memory")
-        .queryName("attr_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_attr"))
-        .option("maxFilesPerTrigger", 1)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in time"
+    batch = _events(spark)
+    rows = _drain(attribution(_two_chunk_stream(batch, tmp_path)), tmp_path)
+    assert set(rows.collect()) == set(attribution(batch).collect())
 
     got = {}
-    for r in spark.sql(
-        "SELECT channel, COUNT(*) AS purchases,"
-        " SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents"
-        " FROM attr_stream GROUP BY channel"
-    ).collect():
+    for r in (
+        rows.groupBy("channel")
+        .agg(
+            F.count("*").alias("purchases"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+        )
+        .collect()
+    ):
         got[r["channel"]] = (r["purchases"], r["cents"])
 
     want = {}
@@ -458,173 +371,69 @@ def test_stateful_attribution_stream_equals_batch(spark, tmp_path):
 
 
 def test_stateful_cusum_stream_equals_batch(spark, tmp_path):
-    """The applyInPandasWithState CUSUM must reproduce the batch fold
-    (w_cusum_changepoint) exactly when the daily series arrives split
+    """The CUSUM must return the same bits on a stream as on the bounded
+    frame (w_cusum_changepoint) when the daily series arrives split
     across two micro-batches: (mu, sigma) are fitted offline by
     cusum_parts and frozen as online-detector parameters — the
     standard fit-offline/monitor-online sequential-test split."""
-    import time as _time
-
-    from banksy_spark.streaming.stateful import cusum_stream
-    from banksy_spark.suite import REGISTRY
+    from banksy_spark.streaming.stateful import cusum
     from banksy_spark.suite.round5 import cusum_parts
 
     daily, stats = cusum_parts(spark, SF_SMOKE)
-    params = {r["pri"]: (r["mu"], r["sigma"]) for r in stats.collect()}
-
-    day_l = F.col("day").cast("timestamp").cast("long")
-    mid = daily.agg(F.expr(
-        "percentile_approx(CAST(CAST(day AS TIMESTAMP) AS LONG), 0.5)"
-    )).first()[0]
-    early = daily.filter(day_l <= mid)
-    late = daily.filter(day_l > mid)
-    src = tmp_path / "cusum_in"
-    src.mkdir()
-    early.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "c1"))
-    late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "c2"))
-    import os as _os
-
-    now = _time.time()
-    for i, d in enumerate(("c1", "c2")):
-        for f in (tmp_path / d).glob("*.parquet"):
-            dst = src / f"part-{i}.parquet"
-            shutil.copy(f, dst)
-            # file source orders batches by mtime at MS resolution —
-            # sub-ms copy times tie and flip batch order; pin explicitly
-            _os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema(daily.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        cusum_stream(stream, params)
-        .writeStream.format("memory")
-        .queryName("cusum_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cusum"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in time"
+    stream = _two_chunk_stream(daily, tmp_path, by="day")
     got = {
         (r["pri"], r["day"]): (r["cents"], r["s_pos"], r["drift"])
-        for r in spark.sql("SELECT * FROM cusum_out").collect()
+        for r in _drain(cusum(stream, stats), tmp_path).collect()
     }
     want = {
         (r["pri"], r["day"]): (r["cents"], r["s_pos"], r["drift"])
-        for r in REGISTRY["w_cusum_changepoint"].fn(spark, SF_SMOKE).collect()
+        for r in cusum(daily, stats).collect()
     }
     assert got == want
     assert len(want) > 100
 
 
 def test_stateful_capped_sessions_stream_equals_batch(spark, tmp_path):
-    """The applyInPandasWithState capped sessionizer must reproduce the
-    batch fold (w_capped_sessions) exactly when events arrive time-split
-    across two micro-batches: session_id, last-event time, and the
-    session-start anchor all carry across the batch boundary, so a
-    session spanning the split is neither re-opened nor re-capped."""
-    import os as _os
-    import time as _time
+    """The capped sessionizer must return the same sessions on a stream
+    as on the bounded frame (w_capped_sessions) when events arrive
+    time-split across two micro-batches: session_id, last-event time,
+    and the session-start anchor all carry across the batch boundary,
+    so a session spanning the split is neither re-opened nor
+    re-capped."""
+    from banksy_spark.streaming.stateful import capped_sessions
 
-    from banksy_spark.streaming.stateful import capped_sessions_stream
-    from banksy_spark.suite import REGISTRY
-    from banksy_spark.suite.registry import T
-
-    batch = T(spark, SF_SMOKE, "events")
-    mid = batch.agg(F.expr("percentile_approx(CAST(ts AS DOUBLE), 0.5)")).first()[0]
-    early = batch.filter(F.col("ts").cast("double") <= mid)
-    late = batch.filter(F.col("ts").cast("double") > mid)
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    early.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "s1"))
-    late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "s2"))
-    now = _time.time()
-    for i, d in enumerate(("s1", "s2")):
-        for f in (tmp_path / d).glob("*.parquet"):
-            dst = src / f"part-{i}.parquet"
-            shutil.copy(f, dst)
-            _os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    stream = read_events_stream(spark, str(src))
-    q = (
-        capped_sessions_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .option("maxFilesPerTrigger", 1)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in time"
+    batch = _events(spark)
+    stream = _two_chunk_stream(batch, tmp_path)
     got = {
         (r["user_id"], r["event_id"]): r["session_id"]
-        for r in spark.sql("SELECT * FROM sess_out").collect()
+        for r in _drain(capped_sessions(stream), tmp_path).collect()
     }
     want = {
         (r["user_id"], r["event_id"]): r["session_id"]
-        for r in REGISTRY["w_capped_sessions"].fn(spark, SF_SMOKE).collect()
+        for r in capped_sessions(batch).collect()
     }
     assert len(got) == len(want) > 0
     assert got == want, "incremental capped sessions diverged from batch fold"
 
 
 def test_stateful_holt_stream_equals_batch(spark, tmp_path):
-    """The applyInPandasWithState Holt fold must reproduce the batch
-    recursion (w_holt_linear) exactly when the daily series arrives
-    split across two micro-batches: (t, level, trend) carry across the
+    """The Holt fold must return the same bits on a stream as on the
+    bounded frame (w_holt_linear) when the daily series arrives split
+    across two micro-batches: (t, level, trend) carry across the
     boundary so the first post-split point smooths against the carried
     state, not a re-initialized one."""
-    import os as _os
-    import time as _time
-
-    from banksy_spark.streaming.stateful import holt_stream
-    from banksy_spark.suite import REGISTRY
+    from banksy_spark.streaming.stateful import holt
     from banksy_spark.suite.round5 import cusum_parts
 
     daily, _stats = cusum_parts(spark, SF_SMOKE)
-    day_l = F.col("day").cast("timestamp").cast("long")
-    mid = daily.agg(F.expr(
-        "percentile_approx(CAST(CAST(day AS TIMESTAMP) AS LONG), 0.5)"
-    )).first()[0]
-    early = daily.filter(day_l <= mid)
-    late = daily.filter(day_l > mid)
-    src = tmp_path / "holt_in"
-    src.mkdir()
-    early.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "h1"))
-    late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "h2"))
-    now = _time.time()
-    for i, d in enumerate(("h1", "h2")):
-        for f in (tmp_path / d).glob("*.parquet"):
-            dst = src / f"part-{i}.parquet"
-            shutil.copy(f, dst)
-            _os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    stream = (
-        spark.readStream.schema(daily.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        holt_stream(stream)
-        .writeStream.format("memory")
-        .queryName("holt_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_holt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in time"
+    stream = _two_chunk_stream(daily, tmp_path, by="day")
     got = {
         (r["pri"], r["day"]): (r["cents"], r["level"], r["trend"])
-        for r in spark.sql("SELECT * FROM holt_out").collect()
+        for r in _drain(holt(stream), tmp_path).collect()
     }
     want = {
         (r["pri"], r["day"]): (r["cents"], r["level"], r["trend"])
-        for r in REGISTRY["w_holt_linear"].fn(spark, SF_SMOKE).collect()
+        for r in holt(daily).collect()
     }
     assert len(got) == len(want) > 0
     assert got == want, "incremental Holt diverged from the batch fold"
@@ -924,45 +733,16 @@ def test_benchmark_parse_wrappers_see_every_page(spark, monkeypatch):
 
 
 def test_stateful_sprt_equals_batch_twin_across_batches(spark, tmp_path):
-    """The streaming SPRT monitor fires the SAME decisions at the SAME
-    trial counts as the oracle-checked batch query, with the event file
-    split into two time-ordered chunks so state must carry across
-    micro-batches (maxFilesPerTrigger=1)."""
-    from banksy_spark.streaming.stateful import sprt_monitor_stateful
+    """The SPRT monitor fires the SAME decisions at the SAME trial
+    counts on a stream, on the bounded frame and in the oracle-checked
+    batch query, with the event file split into two time-ordered chunks
+    so state must carry across micro-batches (maxFilesPerTrigger=1)."""
+    from banksy_spark.streaming.stateful import sprt_monitor
 
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    cut = ev.agg(F.expr("percentile_approx(ts, 0.5)")).first()[0]
-    src = tmp_path / "sprt_in"
-    src.mkdir()
-    # two chunks in event-time order: earlier half then later half
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.parquet(str(src / "a"))
-    ev.filter(F.col("ts") > cut).coalesce(1).write.parquet(str(src / "b"))
-    import shutil
-
-    for sub, name in (("a", "0_first.parquet"), ("b", "1_second.parquet")):
-        part = next((src / sub).glob("part-*.parquet"))
-        shutil.move(str(part), str(src / name))
-        shutil.rmtree(src / sub)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sprt_monitor_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("sprt_mon")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sprt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
-    got = {
-        r.day: (r.n_at_decision, r.k_at_decision, r.decision)
-        for r in spark.sql("SELECT * FROM sprt_mon").collect()
-    }
+    ev = _events(spark)
+    rows = _drain(sprt_monitor(_two_chunk_stream(ev, tmp_path)), tmp_path).collect()
+    assert set(rows) == set(sprt_monitor(ev).collect())
+    got = {r.day: (r.n_at_decision, r.k_at_decision, r.decision) for r in rows}
     from banksy_spark.suite import REGISTRY
 
     batch = REGISTRY["ml_sprt_sequential"].fn(spark, SF_SMOKE)
@@ -984,37 +764,14 @@ def test_space_saving_heavy_hitters_guarantees(spark, tmp_path):
     bounded at capacity entries per shard."""
     from banksy_spark.streaming.stateful import heavy_hitters_stateful
 
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    cut = ev.agg(F.expr("percentile_approx(ts, 0.5)")).first()[0]
-    src = tmp_path / "hh_in"
-    src.mkdir()
-    import shutil
-
-    for flt, name in ((F.col("ts") <= cut, "0_a"), (F.col("ts") > cut, "1_b")):
-        ev.filter(flt).coalesce(1).write.parquet(str(src / name))
-        part = next((src / name).glob("part-*.parquet"))
-        shutil.move(str(part), str(src / f"{name}.parquet"))
-        shutil.rmtree(src / name)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        heavy_hitters_stateful(stream, "event_type", capacity=4, n_shards=2)
-        .writeStream.format("memory")
-        .queryName("hh_ss")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hh"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
+    ev = _events(spark)
+    stream = _two_chunk_stream(ev, tmp_path)
     # keep only the LAST emission per (shard, item): update mode re-emits
-    out = spark.sql(
-        "SELECT shard, item, est_count, max_err FROM hh_ss"
-    ).toPandas()
+    out = _drain(
+        heavy_hitters_stateful(stream, "event_type", capacity=4, n_shards=2),
+        tmp_path,
+        "update",
+    ).select("shard", "item", "est_count", "max_err").toPandas()
     # memory-sink rows are unordered; counts grow monotonically, so the
     # max est per (shard, item) IS the final summary state
     final = (
@@ -1042,11 +799,12 @@ def test_space_saving_heavy_hitters_guarantees(spark, tmp_path):
 
 
 def test_stateful_rolling_corr_equals_batch_across_batches(spark, tmp_path):
-    """The streaming rolling-corr operator emits BIT-IDENTICAL
-    (brand, day, x, y, corr7) rows to the oracle-checked window query,
-    with the daily series split into two time-ordered chunks so the
-    (buffer, counter) state must carry across micro-batches."""
-    from banksy_spark.streaming.stateful import rolling_corr_stateful
+    """The rolling-corr operator emits BIT-IDENTICAL (brand, day, x, y,
+    corr7) rows on a stream, on the bounded frame and in the
+    oracle-checked window query, with the daily series split into two
+    time-ordered chunks so the (buffer, counter) state must carry
+    across micro-batches."""
+    from banksy_spark.streaming.stateful import rolling_corr
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.registry import T
 
@@ -1069,40 +827,10 @@ def test_stateful_rolling_corr_equals_batch_across_batches(spark, tmp_path):
         .select("brand", F.col("day").cast("string").alias("day"), "x", "y")
     )
     # median ISO day as the chunk boundary (string-ordered == date-ordered)
-    days = sorted(r[0] for r in daily.select("day").distinct().collect())
-    cut = days[len(days) // 2]
-    src = tmp_path / "rc_in"
-    src.mkdir()
-    import shutil
-
-    for flt, name in (
-        (F.col("day") <= cut, "0_first.parquet"),
-        (F.col("day") > cut, "1_second.parquet"),
-    ):
-        daily.filter(flt).coalesce(1).write.parquet(str(src / "tmp"))
-        part = next((src / "tmp").glob("part-*.parquet"))
-        shutil.move(str(part), str(src / name))
-        shutil.rmtree(src / "tmp")
-
-    stream = (
-        spark.readStream.schema(daily.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        rolling_corr_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("rc_mon")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_rc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
-    got = {
-        (r.brand, r.day): (r.x, r.y, r.corr7)
-        for r in spark.sql("SELECT * FROM rc_mon").collect()
-    }
+    stream = _two_chunk_stream(daily, tmp_path, by="day")
+    rows = _drain(rolling_corr(stream), tmp_path).collect()
+    assert set(rows) == set(rolling_corr(daily).collect())
+    got = {(r.brand, r.day): (r.x, r.y, r.corr7) for r in rows}
     want = {
         (r.brand, str(r.day)): (r.x, r.y, r.corr7)
         for r in REGISTRY["w_rolling_corr"].fn(spark, SF_SMOKE).collect()
@@ -1117,50 +845,24 @@ def test_stateful_rolling_corr_equals_batch_across_batches(spark, tmp_path):
 
 
 def test_stateful_bollinger_equals_batch_across_batches(spark, tmp_path):
-    """The streaming Bollinger operator emits BIT-IDENTICAL
-    (pri, day, cents, mid, bands, breakout) rows to the oracle-checked
-    window query, with the daily series split into two time-ordered
-    chunks so the value buffer must carry across micro-batches."""
-    from banksy_spark.streaming.stateful import bollinger_stateful
+    """The Bollinger operator emits BIT-IDENTICAL (pri, day, cents, mid,
+    bands, breakout) rows on a stream, on the bounded frame and in the
+    oracle-checked window query, with the daily series split into two
+    time-ordered chunks so the value buffer must carry across
+    micro-batches."""
+    from banksy_spark.streaming.stateful import bollinger
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.round5o import _BB_WIN, _daily
 
     daily = _daily(spark, SF_SMOKE).select(
         "pri", F.col("day").cast("string").alias("day"), "cents"
     )
-    days = sorted(r[0] for r in daily.select("day").distinct().collect())
-    cut = days[len(days) // 2]
-    src = tmp_path / "bb_in"
-    src.mkdir()
-    import shutil
-
-    for flt, name in (
-        (F.col("day") <= cut, "0_first.parquet"),
-        (F.col("day") > cut, "1_second.parquet"),
-    ):
-        daily.filter(flt).coalesce(1).write.parquet(str(src / "tmp"))
-        part = next((src / "tmp").glob("part-*.parquet"))
-        shutil.move(str(part), str(src / name))
-        shutil.rmtree(src / "tmp")
-
-    stream = (
-        spark.readStream.schema(daily.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        bollinger_stateful(stream, window=_BB_WIN)
-        .writeStream.format("memory")
-        .queryName("bb_mon")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
+    stream = _two_chunk_stream(daily, tmp_path, by="day")
+    rows = _drain(bollinger(stream, window=_BB_WIN), tmp_path).collect()
+    assert set(rows) == set(bollinger(daily, window=_BB_WIN).collect())
     got = {
         (r.pri, r.day): (r.cents, r.mid, r.lower_band, r.upper_band, r.breakout_up)
-        for r in spark.sql("SELECT * FROM bb_mon").collect()
+        for r in rows
     }
     want = {
         (r.pri, str(r.day)): (r.cents, r.mid, r.lower_band, r.upper_band, r.breakout_up)
@@ -1171,58 +873,19 @@ def test_stateful_bollinger_equals_batch_across_batches(spark, tmp_path):
     assert got == want  # bit-exact floats, no tolerance
 
 
-def _events_two_chunks(spark, tmp_path, cols):
-    """The shared two-chunk split for events-table stateful twins:
-    write the normalized events as two time-ordered parquet files so
-    maxFilesPerTrigger=1 forces the state to carry across micro-batches
-    (same discipline as the Bollinger test above)."""
-    from banksy_spark.suite.registry import T
-
-    e = T(spark, SF_SMOKE, "events").select(*cols)
-    cut = e.agg(F.expr("percentile_approx(ts, 0.5)")).first()[0]
-    src = tmp_path / "ev_in"
-    src.mkdir()
-    for flt, name in (
-        (F.col("ts") <= cut, "0_first.parquet"),
-        (F.col("ts") > cut, "1_second.parquet"),
-    ):
-        e.filter(flt).coalesce(1).write.parquet(str(src / "tmp"))
-        part = next((src / "tmp").glob("part-*.parquet"))
-        shutil.move(str(part), str(src / name))
-        shutil.rmtree(src / "tmp")
-    return (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-
-
 def test_stateful_capped_balance_equals_batch_across_batches(spark, tmp_path):
-    """The streaming token bucket emits BIT-IDENTICAL
-    (event_id, user_id, capped_balance) rows to the oracle-checked
-    w_capped_running_sum, with the events split into two time-ordered
-    chunks so every user's one-double balance must carry across
-    micro-batches."""
-    from banksy_spark.streaming.stateful import capped_balance_stateful
+    """The token bucket emits BIT-IDENTICAL (event_id, user_id,
+    capped_balance) rows on a stream, on the bounded frame and in the
+    oracle-checked w_capped_running_sum, with the events split into two
+    time-ordered chunks so every user's one-double balance must carry
+    across micro-batches."""
+    from banksy_spark.streaming.stateful import capped_balance
     from banksy_spark.suite import REGISTRY
 
-    stream = _events_two_chunks(
-        spark, tmp_path, ["event_id", "user_id", "ts", "value"]
-    )
-    q = (
-        capped_balance_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("cb_mon")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
-    got = {
-        r.event_id: (r.user_id, r.capped_balance)
-        for r in spark.sql("SELECT * FROM cb_mon").collect()
-    }
+    events = _events(spark).select("event_id", "user_id", "ts", "value")
+    rows = _drain(capped_balance(_two_chunk_stream(events, tmp_path)), tmp_path).collect()
+    assert set(rows) == set(capped_balance(events).collect())
+    got = {r.event_id: (r.user_id, r.capped_balance) for r in rows}
     want = {
         r.event_id: (r.user_id, r.capped_balance)
         for r in REGISTRY["w_capped_running_sum"].fn(spark, SF_SMOKE).collect()
@@ -1232,30 +895,20 @@ def test_stateful_capped_balance_equals_batch_across_batches(spark, tmp_path):
 
 
 def test_stateful_markov_pairs_equal_batch_across_batches(spark, tmp_path):
-    """The streaming last-event pairing emits the SAME transition
-    multiset as stream_markov_transitions' lead() window, with the
-    per-user last event carried across two micro-batches."""
+    """The last-event pairing emits the SAME transition multiset on a
+    stream, on the bounded frame and in stream_markov_transitions'
+    lead() window, with the per-user last event carried across two
+    micro-batches."""
     import collections
 
-    from banksy_spark.streaming.stateful import markov_pairs_stateful
+    from banksy_spark.streaming.stateful import markov_pairs
     from banksy_spark.suite import REGISTRY
 
-    stream = _events_two_chunks(
-        spark, tmp_path, ["event_id", "user_id", "ts", "event_type"]
-    )
-    q = (
-        markov_pairs_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("mk_mon")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_mk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
-    got = collections.Counter(
-        (r.from_type, r.to_type)
-        for r in spark.sql("SELECT * FROM mk_mon").collect()
+    events = _events(spark).select("event_id", "user_id", "ts", "event_type")
+    rows = _drain(markov_pairs(_two_chunk_stream(events, tmp_path)), tmp_path).collect()
+    got = collections.Counter((r.from_type, r.to_type) for r in rows)
+    assert got == collections.Counter(
+        (r.from_type, r.to_type) for r in markov_pairs(events).collect()
     )
     want = {
         (r.from_type, r.to_type): r.n
@@ -1275,25 +928,13 @@ def test_ohlc_candles_stream_equals_batch(spark, events_dir, tmp_path):
     from banksy_spark.streaming import ohlc_candles
 
     stream = read_events_stream(spark, events_dir)
-    q = (
-        ohlc_candles(stream)
-        .writeStream.format("memory")
-        .queryName("ohlc_candles")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ohlc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
     got = {
         (str(r.hour), r.event_type): (
             r.open_value, r.high_value, r.low_value, r.close_value, r.n_events
         )
-        for r in spark.sql("SELECT * FROM ohlc_candles").collect()
+        for r in _drain(ohlc_candles(stream), tmp_path, "complete").collect()
     }
-    from banksy_spark.suite.registry import T
-
-    batch = ohlc_candles(T(spark, SF_SMOKE, "events"))
+    batch = ohlc_candles(_events(spark))
     want = {
         (str(r.hour), r.event_type): (
             r.open_value, r.high_value, r.low_value, r.close_value, r.n_events
@@ -1327,19 +968,9 @@ def test_file_stats_manifest_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    q = (
-        file_stats_manifest(stream)
-        .writeStream.format("memory")
-        .queryName("file_manifest")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_manifest"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
     got = {
         r.file_id: (r.n_rows, r.min_key, r.max_key, str(r.min_date), str(r.max_date))
-        for r in spark.sql("SELECT * FROM file_manifest").collect()
+        for r in _drain(file_stats_manifest(stream), tmp_path, "complete").collect()
     }
     want = {
         r.file_id: (r.n_rows, r.min_key, r.max_key, str(r.min_date), str(r.max_date))
@@ -1356,9 +987,8 @@ def test_kde_cell_density_stream_equals_batch(spark, tmp_path):
     oracle-checked a_kde_epanechnikov output bit-for-bit."""
     from banksy_spark.streaming import kde_cell_density
     from banksy_spark.suite import REGISTRY
-    from banksy_spark.suite.registry import T
 
-    pts = T(spark, SF_SMOKE, "events").selectExpr(
+    pts = _events(spark).selectExpr(
         "value AS px", "CAST(user_id % 100 AS DOUBLE) AS py", "event_id"
     )
     d = tmp_path / "kde_in"
@@ -1371,19 +1001,9 @@ def test_kde_cell_density_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
-    q = (
-        kde_cell_density(stream)
-        .writeStream.format("memory")
-        .queryName("kde_cells")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_kde"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
     got = {
         (r.jx, r.jy): (r.density_ppm, r.n_pts)
-        for r in spark.sql("SELECT * FROM kde_cells").collect()
+        for r in _drain(kde_cell_density(stream), tmp_path, "complete").collect()
     }
     want_batch = {
         (r.jx, r.jy): (r.density_ppm, r.n_pts)
@@ -1402,12 +1022,13 @@ def test_kde_cell_density_stream_equals_batch(spark, tmp_path):
 
 
 def test_reservoir_stateful_stream_equals_batch(spark, tmp_path):
-    """Streaming A-ES reservoir across three shuffled micro-batches:
-    per-shard state (top-50 by key) must merge-and-truncate to EXACTLY
-    the batch replay's reservoir — and therefore to the per-shard
-    window oracle of stream_reservoir_stateful. The final emission per
-    shard is selected by the monotone n_seen counter."""
-    from banksy_spark.streaming.stateful import reservoir_batch, reservoir_stateful
+    """A-ES reservoir across three shuffled micro-batches: per-shard
+    state (top-50 by key) must merge-and-truncate to EXACTLY the
+    reservoir the same operator takes of the bounded frame — and
+    therefore to the per-shard window oracle of
+    stream_reservoir_stateful. The final emission per shard is selected
+    by the monotone n_seen counter."""
+    from banksy_spark.streaming.stateful import reservoir
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.registry import T
     from banksy_spark.suite.round13d import _RES_D, _RES_KEY, _RV_SHARDS
@@ -1431,17 +1052,7 @@ def test_reservoir_stateful_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        reservoir_stateful(stream, k=50)
-        .writeStream.format("memory")
-        .queryName("rv_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_rv"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not finish in time"
-    out = spark.sql("SELECT * FROM rv_out").toPandas()
+    out = _drain(reservoir(stream, k=50), tmp_path, "update").toPandas()
     final_seen = out.groupby("shard")["n_seen"].max()
     rows = out[
         out.apply(lambda r: r.n_seen == final_seen[r.shard], axis=1)
@@ -1452,7 +1063,7 @@ def test_reservoir_stateful_stream_equals_batch(spark, tmp_path):
     }
     want = {
         (r.shard, r.smp_rank): (r.doc_id, r.weight, r.es_key)
-        for r in reservoir_batch(scored, k=50).collect()
+        for r in reservoir(scored, k=50).collect()
     }
     assert got == want and len(got) > 0
     # the registry query is the same replay, projected

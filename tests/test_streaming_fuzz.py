@@ -1,6 +1,6 @@
-"""Randomized stream==batch parity for the stateful twins.
+"""Randomized stream==batch parity for the stateful operators.
 
-test_streaming.py proves each twin on the fixed fixtures with a
+test_streaming.py proves each operator on the fixed fixtures with a
 two-chunk time split; this module re-proves the carry discipline on
 GENERATED event streams built to stress exactly what the fixtures
 can't:
@@ -170,7 +170,7 @@ def test_rolling_corr_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
     sides) and random brands give short series (< window length)."""
     from pyspark.sql import functions as F
 
-    from banksy_spark.streaming.stateful import rolling_corr_stateful
+    from banksy_spark.streaming.stateful import rolling_corr
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.registry import T
 
@@ -194,7 +194,7 @@ def test_rolling_corr_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
         .select("brand", F.col("day").cast("string").alias("day"), "x", "y")
     )
     stream = _daily_three_chunks(spark, daily, "day", tmp_path, "rcf")
-    rows = _run(spark, rolling_corr_stateful(stream), "rc_fuzz", str(tmp_path / "c5"))
+    rows = _run(spark, rolling_corr(stream), "rc_fuzz", str(tmp_path / "c5"))
     got = {(r.brand, r.day): (r.x, r.y, r.corr7) for r in rows}
     want = {
         (r.brand, str(r.day)): (int(r.x), int(r.y), r.corr7)
@@ -214,7 +214,7 @@ def test_bollinger_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
     (zero stddev → band == mid, breakout comparisons on exact ties)."""
     from pyspark.sql import functions as F
 
-    from banksy_spark.streaming.stateful import bollinger_stateful
+    from banksy_spark.streaming.stateful import bollinger
     from banksy_spark.suite import REGISTRY
     from banksy_spark.suite.round5o import _BB_WIN, _daily
 
@@ -225,7 +225,7 @@ def test_bollinger_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
     stream = _daily_three_chunks(spark, daily, "day", tmp_path, "bbf")
     rows = _run(
         spark,
-        bollinger_stateful(stream, window=_BB_WIN),
+        bollinger(stream, window=_BB_WIN),
         "bb_fuzz",
         str(tmp_path / "c6"),
     )
@@ -242,13 +242,13 @@ def test_bollinger_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
 
 
 def test_capped_balance_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
-    from banksy_spark.streaming.stateful import capped_balance_stateful
+    from banksy_spark.streaming.stateful import capped_balance
     from banksy_spark.suite import REGISTRY
 
     batch_dir, stream_dir = fuzz_stream
     stream = _read_stream(spark, stream_dir, ["event_id", "user_id", "ts", "value"])
     rows = _run(
-        spark, capped_balance_stateful(stream), "cb_fuzz", str(tmp_path / "c1")
+        spark, capped_balance(stream), "cb_fuzz", str(tmp_path / "c1")
     )
     got = {r.event_id: (r.user_id, r.capped_balance) for r in rows}
     want = {
@@ -262,14 +262,14 @@ def test_capped_balance_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
 def test_markov_pairs_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
     import collections
 
-    from banksy_spark.streaming.stateful import markov_pairs_stateful
+    from banksy_spark.streaming.stateful import markov_pairs
     from banksy_spark.suite import REGISTRY
 
     batch_dir, stream_dir = fuzz_stream
     stream = _read_stream(
         spark, stream_dir, ["event_id", "user_id", "ts", "event_type"]
     )
-    rows = _run(spark, markov_pairs_stateful(stream), "mk_fuzz", str(tmp_path / "c2"))
+    rows = _run(spark, markov_pairs(stream), "mk_fuzz", str(tmp_path / "c2"))
     got = collections.Counter((r.from_type, r.to_type) for r in rows)
     want = {
         (r.from_type, r.to_type): r.n
@@ -279,14 +279,14 @@ def test_markov_pairs_fuzz_stream_equals_query(spark, fuzz_stream, tmp_path):
 
 
 def test_rate_limit_fuzz_stream_equals_batch_replay(spark, fuzz_stream, tmp_path):
-    from banksy_spark.streaming.stateful import rate_limit_batch, rate_limit_stateful
+    from banksy_spark.streaming.stateful import rate_limit
 
     batch_dir, stream_dir = fuzz_stream
     stream = _read_stream(spark, stream_dir, ["user_id", "event_id", "ts"])
-    rows = _run(spark, rate_limit_stateful(stream), "rl_fuzz", str(tmp_path / "c3"))
+    rows = _run(spark, rate_limit(stream), "rl_fuzz", str(tmp_path / "c3"))
     got = sorted(r.event_id for r in rows)
     batch = spark.read.parquet(f"{batch_dir}/events.parquet")
-    want = sorted(r.event_id for r in rate_limit_batch(batch).collect())
+    want = sorted(r.event_id for r in rate_limit(batch).collect())
     assert got == want and len(want) > 0
 
 

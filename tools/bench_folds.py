@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Microbench for the ordered folds (operators/folds.py): time the old
 aggregate-HOF array_append fold over one series held in one row against
-the EWMA step kernel run by ``fold_batch`` over the same series as
+the EWMA step kernel run by ``fold`` over the same series as
 rows, at growing series length — quadratic vs linear scaling.
 
     python tools/bench_folds.py [--lens 1000,4000,16000,64000,256000]
@@ -29,7 +29,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from banksy_spark.operators.folds import EWMA, fold_batch
+    from banksy_spark.operators.folds import EWMA, fold
     from banksy_spark.session import get_spark
 
     spark = get_spark("banksy-bench-folds")
@@ -43,7 +43,7 @@ def main() -> int:
         " st -> st.out)"
     )
 
-    print(f"{'n':>8s} {'old_append_s':>12s} {'fold_batch_s':>12s}")
+    print(f"{'n':>8s} {'old_append_s':>12s} {'fold_s':>12s}")
     for n in lens:
         # one series of length n, deterministic values; inputs are
         # materialized so timing excludes generation
@@ -55,7 +55,7 @@ def main() -> int:
         arr = spark.range(1).select(
             F.expr(f"transform(sequence(1, {n}), i -> CAST(i % 9973 AS DOUBLE))").alias("xs")
         ).localCheckpoint()
-        runs = {"new": lambda: fold_batch(rows, EWMA, "k", ("i",))}
+        runs = {"new": lambda: fold(rows, EWMA, "k", ("i",))}
         if n <= args.old_max:
             runs["old"] = lambda: arr.select(F.size(old_expr).alias("sz"))
         times = {"old": [], "new": []}

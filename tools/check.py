@@ -3,9 +3,12 @@
 oracle side-by-side, compare row count / column names / order-insensitive
 value hash. Usage:
 
-    python tools/check.py [--sf DIR] [name ...]
+    python tools/check.py [--sf DIR] [--resume LOG] [name ...]
 
-Exit 0 iff every checked query matches.
+Exit 0 iff every checked query matches. On a 16 GB host the sf0.1
+sweep must run under --resume: llm_self_bleu's DuckDB oracle is
+OOM-killed there and takes the whole process with it, so rerun with
+--resume on the log and name the queries left after it.
 """
 
 from __future__ import annotations
@@ -14,10 +17,11 @@ import argparse
 import datetime
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -58,7 +62,9 @@ def table_digest(cols: list[str], rows) -> tuple[int, str, list[str]]:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
         "--resume",

@@ -5,8 +5,10 @@
 
 The text is normalized so that two processes building the same plan
 write byte-identical files: expression ids (``#123``), exchange
-``plan_id=…`` and the RDD id and JVM call site in ``Scan ExistingRDD``
-arguments differ between processes and are replaced by fixed tokens.
+``plan_id=…``, the RDD id and JVM call site in ``Scan ExistingRDD``
+arguments and the random view name ``spark.sql(query, df=frame)``
+gives each frame argument differ between processes and are replaced
+by fixed tokens.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ _VOLATILE = (
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     # MapPartitionsRDD[3] at localCheckpoint at NativeMethodAccessorImpl.java:0
     (re.compile(r"(\w+RDD)\[\d+\] at (\w+) at [^,\]]*?:\d+"), r"\1[N] at \2 at <site>"),
+    (re.compile(r"_pyspark_[0-9a-f]{32}"), "_pyspark_N"),
 )
 
 
